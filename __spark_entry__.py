@@ -590,9 +590,10 @@ LOUVAIN_FIXED_STEPS = 2
 def q_louvain_supersteps_fixed(spark, sf):
     """The flagship move/gate/tie-break dataflow on the DuckDB oracle surface:
     a fixed 2-superstep unroll of the REAL engine superstep (``_superstep`` —
-    the same ``_best_moves_fast`` plan the ``louvain()`` loop runs, including
-    the analytic stay-score, the max_by (score, −community) tie-break, and
-    the even/odd oscillation gate) from nation init on the supplier graph.
+    the same ``_superstep_cte`` statement the ``louvain()`` loop runs,
+    including the analytic stay-score, the max_by (score, −community)
+    tie-break, and the even/odd oscillation gate) from nation init on the
+    supplier graph.
     Cross-engine hash equality is exact because every score is one IEEE
     division away from integer arithmetic: weights and degrees are
     integer-valued doubles, so k_ic / tot sums are exact, (tot − δ·k_i)·k_i
@@ -1571,9 +1572,9 @@ def _louvain_chain_ctes(
     coexist in ONE statement for the level-boundary twin. ``gate``: "parity"
     = the even/odd direction gate; "conflict" = the r5 production gate
     (improving moves apply unless the target community is itself losing a
-    preliminary mover AND target > cur — the twin of
-    operators.louvain._conflict_apply, expressed as a DISTINCT moved-set CTE
-    + LEFT JOIN)."""
+    preliminary mover AND target > cur — the same gate function as the
+    conflict tail of operators.louvain._superstep_cte, expressed as a
+    DISTINCT moved-set CTE + LEFT JOIN instead of its marker window)."""
     ctes = [f"{tag}st0 AS MATERIALIZED ({init}\n)"]
     for i in range(n_steps):
         d = "b.nbr_comm < b.cur_comm" if i % 2 == 0 else "b.nbr_comm > b.cur_comm"
@@ -1645,8 +1646,8 @@ def _louvain_fixed_sql(
     max_by over a (score, −community) struct becomes a ROW_NUMBER rank with
     the identical tie order), unrolled ``n_steps`` times from the ``init``
     state over the ``sym`` edge relation of ``prefix``. The stay score is the
-    analytic form the fast path computes (stay_kic − (tot_cur − k_i)·k_i/S
-    with stay_kic = the own-community candidate's k_ic, 0 when absent); the
+    analytic form the engine statement computes (stay_kic −
+    (tot_cur − k_i)·k_i/S with stay_kic = the own-community candidate's k_ic, 0 when absent); the
     move gate is strict-improvement + the ``gate`` oscillation breaker
     (even/odd direction, or the r5 moved-community conflict rule)."""
     if prefix is None:

@@ -57,6 +57,21 @@ STATE_SHUFFLE_TARGET_ROWS = 32_768
 STATE_ROW_BYTES_EST = 48
 
 
+def broadcast_regime(spark: SparkSession, n_rows: int) -> bool:
+    """True while an ``n_rows``-row state is expected to BROADCAST into the
+    edge-side joins: its conservative size estimate (``STATE_ROW_BYTES_EST``
+    bytes per row) stays under the session's broadcast threshold. The one
+    regime decision every fixpoint loop's layout choices share (partition
+    scoping here, PageRank's shares layout), so they can never disagree.
+    Estimating high errs toward the shuffle regime — the safe side for
+    both decisions."""
+    try:
+        limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    except Exception:
+        limit = 10 * 1024 * 1024
+    return limit > 0 and n_rows * STATE_ROW_BYTES_EST < limit
+
+
 def state_partitions(spark: SparkSession, n_rows: int) -> int:
     """Row-proportional shuffle-partition count for the V-row STATE side of
     an iterative operator: ~``STATE_SHUFFLE_TARGET_ROWS`` rows per partition,
@@ -73,16 +88,10 @@ def state_partitions(spark: SparkSession, n_rows: int) -> int:
     happen inside the loop" premise holds only while the materialized state
     BROADCASTS into the edge-side joins; past the session's broadcast
     threshold those joins plan as shuffle joins moving E rows, which must
-    keep the cluster's full parallelism — so states whose conservative size
-    estimate (``STATE_ROW_BYTES_EST``/row) reaches the threshold get the
-    session setting unchanged. Estimating high errs toward full
-    parallelism, the safe direction on both sides of the boundary."""
+    keep the cluster's full parallelism — so outside
+    :func:`broadcast_regime` the session setting is returned unchanged."""
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        bcast_limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:
-        bcast_limit = 10 * 1024 * 1024
-    if bcast_limit <= 0 or n_rows * STATE_ROW_BYTES_EST >= bcast_limit:
+    if not broadcast_regime(spark, n_rows):
         return p
     return max(4, min(p, -(-max(n_rows, 1) // STATE_SHUFFLE_TARGET_ROWS)))
 
@@ -162,8 +171,8 @@ def swap_observed_multi(
     old: DataFrame | None, new: DataFrame, metric_cols: list[str]
 ) -> tuple[DataFrame, list[int]]:
     """:func:`swap` observing ``sum(c)`` for SEVERAL columns in the one
-    materialization pass — a batched superstep pair reads both per-superstep
-    move counts off its single Observation this way."""
+    materialization pass (the Louvain level loop reads its move count this
+    way)."""
     from pyspark.sql import Observation
 
     obs = Observation()

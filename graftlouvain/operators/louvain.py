@@ -1,4 +1,4 @@
-"""Multi-level Louvain as bulk-synchronous DataFrame supersteps (SURVEY.md §2d/§2e).
+"""Multi-level Louvain as bulk-synchronous SQL supersteps (SURVEY.md §2d/§2e).
 
 The reference's per-vertex move phase is a literal ``todo!()``
 (/root/reference/src/louvain/communities.rs:74); its semantics are
@@ -11,7 +11,7 @@ replacement (BASELINE.json north_star: "bulk-synchronous supersteps"). The
 in-repo sequential oracle (graftlouvain.oracle.louvain_seq) implements the
 SAME synchronous variant, so labels match exactly.
 
-Move rule (derivation in docstring of :func:`_superstep`): for vertex i with
+Move rule (derivation in docstring of :func:`move_scores`): for vertex i with
 degree k_i in community A, candidate community C (including A), with
 tot'_C = tot_C − k_i·[C==A]:
 
@@ -31,10 +31,8 @@ parallel-Louvain heuristics, cf. Lu, Halappanavar & Kalyanaraman 2015):
   to strictly increase forever) while provably applying ≥ 1 improving move
   per superstep whenever one exists (follow the blocked chain: each blocked
   move's target is a mover's current community with a strictly larger label
-  — finite set, contradiction). Costs one extra V-row pass over the argmax
-  output (the moved-community distinct + a left join), in exchange for NOT
-  blocking half the improving moves per superstep the way the parity gate
-  does — measured, supersteps-to-convergence drop ~35-40 %.
+  — finite set, contradiction). Measured, supersteps-to-convergence drop
+  ~35-40 % against the parity gate, which blocks half the improving moves.
 - ``gate_mode="parity"`` (r2-r4 semantics, kept fully supported): on even
   supersteps only moves to a SMALLER community id apply, on odd supersteps
   only to a LARGER one.
@@ -43,26 +41,38 @@ parallel-Louvain heuristics, cf. Lu, Halappanavar & Kalyanaraman 2015):
 strictly increases Q of each moved vertex against frozen state under either
 gate.
 
+ONE superstep definition: :func:`_superstep_cte` writes the whole gated
+superstep — both gates, salted or not — as one ``spark.sql`` statement over
+two temp views, the edge cache and the materialized state, which
+:func:`_superstep_views` registers and releases. A temp view resolves to the
+underlying logical plan WITH its stamped size statistics, so the static
+planner broadcasts every V-row side exactly as it would for the equivalent
+DataFrame composition, while one ``spark.sql`` call replaces the ~100 py4j
+round trips of building that composition Column by Column (plan build plus
+planning: median 0.32 s per superstep against 0.54 s, 2k-vertex planted
+graph, local[4] on a 4-vCPU box).
+
 Shuffle budget per superstep (the whole MPI message layer of the reference,
 messagemanager.rs, dissolves into these): one edge⋈state join, one
 groupBy(src, nbr_comm), one join on nbr_comm (community totals — computed
 straight off the state, which carries k_i), one hash-aggregate argmax on src
-(max_by — no sort). Under parity the next state is a pure projection of the
-argmax output; under the default fused conflict gate it adds ONE skinny
-shuffle (the ≤2V-row data/marker window keyed on community id — see
-:func:`_conflict_apply_fused`) and nothing edge-proportional (pinned by
+(max_by — no sort). All small sides broadcast, so under parity the
+superstep is exchange-free on the src-partitioned edge cache; the conflict
+gate adds ONE skinny shuffle (the ≤2V-row data/marker window keyed on
+community id) and nothing edge-proportional (both pinned by
 ``test_fused_conflict_superstep_plan_shape``). Either way there is exactly
-ONE materialization per superstep and the move count is a scalar aggregate
-over it. State stays hash-partitioned on vertex id (session-level partition
-count) so edge-side joins are co-partitioned.
+ONE materialization per superstep and the move count is an Observation over
+it.
 """
 
 from __future__ import annotations
 
+import itertools
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graftlouvain.functions.iterate import (
@@ -149,23 +159,11 @@ def _auto_salt(graph: LinkGraph) -> int:
 
 
 def _nbr_candidate_rows(
-    graph: LinkGraph,
-    asg_dst: DataFrame,
-    salt_buckets: int,
-    include_self_zero: bool,
+    graph: LinkGraph, asg_dst: DataFrame, salt_buckets: int
 ) -> DataFrame:
-    """(src, nbr_comm, k_ic) rows from the edge⋈assignment join, optionally
-    salted. ``include_self_zero`` keeps self-loop rows with k_ic = 0 — they
-    guarantee every vertex at least one candidate row (its own community)
-    without a union, since every LinkGraph vertex has ≥ 1 edge row."""
-    if include_self_zero:
-        e = graph.edges
-        k_ic = F.when(F.col("src") != F.col("dst"), F.col("weight")).otherwise(
-            F.lit(0.0)
-        )
-    else:
-        e = graph.edges.where(F.col("src") != F.col("dst"))
-        k_ic = F.col("weight")
+    """(src, nbr_comm, k_ic) rows from the edge⋈assignment join over the
+    non-self-loop edges, optionally salted."""
+    e = graph.edges.where(F.col("src") != F.col("dst"))
     if salt_buckets > 1:
         salted_e = e.withColumn("_salt", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
         salted_a = asg_dst.withColumn(
@@ -177,7 +175,7 @@ def _nbr_candidate_rows(
         joined = salted_e.join(salted_a, ["dst", "_salt"])
     else:
         joined = e.join(asg_dst, "dst")
-    return joined.select("src", "nbr_comm", k_ic.alias("k_ic"))
+    return joined.select("src", "nbr_comm", F.col("weight").alias("k_ic"))
 
 
 def move_scores(
@@ -223,7 +221,7 @@ def move_scores(
     asg_dst = assignments.select(
         F.col("id").alias("dst"), F.col("community").alias("nbr_comm")
     )
-    nbr_rows = _nbr_candidate_rows(graph, asg_dst, salt_buckets, include_self_zero=False)
+    nbr_rows = _nbr_candidate_rows(graph, asg_dst, salt_buckets)
     own = assignments.select(
         F.col("id").alias("src"),
         F.col("community").alias("nbr_comm"),
@@ -265,471 +263,129 @@ def move_scores(
     )
 
 
-def _community_totals(state: DataFrame) -> DataFrame:
-    """[nbr_comm, tot]: tot_C = Σ member degrees, straight off the state."""
-    return state.groupBy(F.col("community").alias("nbr_comm")).agg(
-        F.sum("k_i").alias("tot")
-    )
-
-
-# Hoisted Column-expression cache for the superstep builder, keyed by
-# (applicationId, S, gain_eps) — one entry per louvain run (S = 2m is
-# preserved exactly under coarsening, so every level shares it). Column
-# objects are immutable expression trees; building them costs ~60 py4j round
-# trips per superstep (~0.2 s of pure driver time, measured at sf0.1: build
-# 0.29 s -> 0.09 s after hoisting), while REUSING them across DataFrames is
-# free and standard. The applicationId in the key scopes entries to the
-# LIVE SparkContext: Column handles point into the JVM gateway, so a process
-# that stops and restarts Spark must never reuse Columns built against the
-# dead one (one extra py4j property read per call — noise vs the ~60 saved).
-_SS_EXPRS: dict = {}
-
-# FIXED view names for the SQL superstep fast path (louvain_level),
-# re-registered (createOrReplaceTempView) per run / per superstep and NEVER
-# dropped: ``dropTempView`` runs a CASCADING uncacheQuery that evicts every
-# cache entry appearing as a subtree of the view's plan — including the
-# EDGE CACHE — after which every later superstep re-executes the whole
-# edge-build pipeline (measured: level-0 supersteps 0.7 s → 2-3 s on the
-# run after the first drop; replacement, by contrast, measured
-# cache-neutral). One replaced view pair per session is the whole catalog
-# footprint. Concurrent louvain runs on one session would collide on the
-# names — the same already-documented single-driver constraint as the
-# session-global shuffle-partition scope-down in louvain().
-_E_VIEW = "_glouvain_edges"
-_ST_VIEW = "_glouvain_state"
-
-# A/B + safety valve for the SQL fast path (the physical plan is verified
-# identical to the DataFrame builder's, so this only gates the ~2× cheaper
-# driver-side plan construction)
-_USE_VIEW_SQL = True
-
-
-def _superstep_exprs(S: float, gain_eps: float) -> dict:
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    app = sess.sparkContext.applicationId if sess is not None else None
-    key = (app, S, gain_eps)
-    got = _SS_EXPRS.get(key)
-    if got is not None:
-        return got
-    # evict entries built against OTHER applications on miss: their Column
-    # handles pin py4j JavaObjects of dead gateways for the process lifetime
-    # (restart-heavy test runs would otherwise grow this dict unboundedly)
-    for k in [k for k in _SS_EXPRS if k[0] != app]:
-        del _SS_EXPRS[k]
-    if len(_SS_EXPRS) > 64:  # one entry per (graph, eps) — bound test churn
-        _SS_EXPRS.clear()
-    c = F.col
-    stay_gap = c("score") > c("stay_score") + F.lit(gain_eps)
-    moving = c("nbr_comm") != c("cur_comm")
-    d = {
-        "asg_dst": [c("id").alias("dst"), c("community").alias("nbr_comm")],
-        "kic_self": F.when(c("src") != c("dst"), c("weight")).otherwise(F.lit(0.0)),
-        "sum_kic": F.sum("k_ic").alias("k_ic"),
-        "tot_key": c("community").alias("nbr_comm"),
-        "tot_agg": F.sum("k_i").alias("tot"),
-        "cur": [c("id").alias("src"), c("community").alias("cur_comm"), "k_i"],
-        "score": (
-            c("k_ic")
-            - (
-                c("tot")
-                - F.when(c("nbr_comm") == c("cur_comm"), c("k_i")).otherwise(F.lit(0.0))
-            )
-            * c("k_i")
-            / F.lit(S)
-        ).alias("score"),
-        "tot_cur": [c("nbr_comm").alias("cur_comm"), c("tot").alias("tot_cur")],
-        "stay_score": (
-            c("stay_kic") - (c("tot_cur") - c("k_i")) * c("k_i") / F.lit(S)
-        ).alias("stay_score"),
-        # stay score against the UN-renamed tot relation (the fused final join
-        # reuses the cand join's broadcast of ``tot``, see _best_moves_fast)
-        "stay_score_tot": (
-            c("stay_kic") - (c("tot") - c("k_i")) * c("k_i") / F.lit(S)
-        ).alias("stay_score"),
-    }
-    ord_key = F.struct(c("score"), (-c("nbr_comm")).alias("neg"))
-    d["best_aggs"] = [
-        F.max_by("nbr_comm", ord_key).alias("nbr_comm"),
-        F.max_by("score", ord_key).alias("score"),
-        F.max("cur_comm").alias("cur_comm"),
-        F.max("k_i").alias("k_i"),
-        F.coalesce(
-            F.max(F.when(c("nbr_comm") == c("cur_comm"), c("k_ic"))), F.lit(0.0)
-        ).alias("stay_kic"),
-    ]
-    for parity, direction in (
-        ("even", c("nbr_comm") < c("cur_comm")),
-        ("odd", c("nbr_comm") > c("cur_comm")),
-    ):
-        gate = moving & stay_gap & direction
-        d[f"apply_{parity}"] = [
-            c("src").alias("id"),
-            F.when(gate, c("nbr_comm")).otherwise(c("cur_comm")).cast("long").alias(
-                "community"
-            ),
-            c("k_i"),
-            gate.cast("int").alias("_moved"),
-        ]
-    _SS_EXPRS[key] = d
-    return d
-
-
-def _best_moves_fast(
-    graph: LinkGraph,
-    state: DataFrame,
-    S: float,
-    carry_cols: tuple[str, ...] = (),
-    exprs: dict | None = None,
-) -> DataFrame:
-    """The default superstep argmax — EXCHANGE-FREE on the src-partitioned
-    edge cache (all small sides broadcast, verified 0 E-row Exchange nodes):
-
-    - self-loop rows carry k_ic = 0 instead of a unioned own-candidate table
-      (a Union erases partitioning info and forced two E-row shuffles: the
-      (src, nbr_comm) aggregation and the argmax regroup). Every vertex has
-      ≥ 1 edge row, so every vertex keeps a row — including coarse vertices
-      whose only edge is their self-loop.
-    - the stay score is computed ANALYTICALLY: stay = k_{i→cur} −
-      (tot_cur − k_i)·k_i/S with k_{i→cur} = 0 when the vertex has no
-      intra-community neighbor — the identical expression the scored own-row
-      produced (sum + 0.0 is exact in IEEE), so doubles match the
-      move_scores-based paths bit for bit.
-    - when the best candidate is the own community the gate blocks the move,
-      and on exact score ties the strict `score > stay + eps` gate blocks
-      both formulations, so dropping the explicit own candidate from the
-      argmax set never changes the applied move set (pinned by the pandas
-      equivalence test and the exact-label oracle fixtures).
-
-    Output: [src, nbr_comm, score, cur_comm, k_i, stay_score, *carry_cols].
-
-    ``carry_cols`` are extra state columns passed through unchanged (constant
-    per vertex, so they ride the argmax aggregate as ``max``) — the batched
-    superstep pair uses this to carry the FIRST superstep's move flag through
-    the second superstep's dataflow so one Observation reads both counts.
-    """
-    x = exprs if exprs is not None else _superstep_exprs(S, 1e-12)
-    asg_dst = state.select(*x["asg_dst"])
-    if _auto_salt(graph) == 1:
-        # inline unsalted join with the hoisted k_ic expression (the salted
-        # variant goes through _nbr_candidate_rows — cold path, not hoisted)
-        nbr = graph.edges.join(asg_dst, "dst").select(
-            "src", "nbr_comm", x["kic_self"].alias("k_ic")
-        )
-    else:
-        nbr = _nbr_candidate_rows(
-            graph, asg_dst, _auto_salt(graph), include_self_zero=True
-        )
-    cand = nbr.groupBy("src", "nbr_comm").agg(x["sum_kic"])
-    tot = state.groupBy(x["tot_key"]).agg(x["tot_agg"])
-    # ACCEPTED DOUBLE EXECUTION (diagnosed negative result, r4): ``tot`` is
-    # referenced twice (candidate scoring + stay-score lookup) and the V-row
-    # state groupBy runs once per reference. Both dedup mechanisms are
-    # structurally defeated by Spark's canonicalization of checkpointed
-    # state: RDDScanExec keeps its stamped ``hashpartitioning(...)`` with
-    # UN-normalized expression ids, and DeduplicateRelations clones every
-    # repeated state reference with fresh ids — so (a) the two tot broadcast
-    # exchanges never canonicalize equal (ReuseExchange never fires;
-    # verified: canonicalized plans differ only in the partitioning exprId
-    # of the leaf scan) and (b) a lazy ``tot.cache()`` is never substituted
-    # into the composed plan (CacheManager matches by sameResult, which hits
-    # the same wall; verified: zero InMemoryTableScan for tot). Eager
-    # per-superstep materialization of tot would fix it at the price of one
-    # extra scheduled job per superstep — a measured net loss at driver-gate
-    # scale and ~1-2% of superstep cost at any scale (the E-row edge join
-    # dominates; tot is V-row with map-side partial aggregation), so the
-    # double execution is accepted and recorded in BENCH/BASELINE.md §7.
-    cur = state.select(*x["cur"], *carry_cols)
-    scored = cand.join(tot, "nbr_comm").join(cur, "src").select("*", x["score"])
-    best = scored.groupBy("src").agg(
-        *x["best_aggs"],
-        *[F.max(c).alias(c) for c in carry_cols],  # constant within the group
-    )
-    # Stay-score lookup joins the SAME (possibly cached) ``tot`` relation —
-    # values unchanged vs the r3 renamed-projection form (same expressions,
-    # same doubles), so labels stay byte-identical (pinned by the exact-label
-    # oracle fixtures).
-    return best.join(tot, best["cur_comm"] == tot["nbr_comm"]).select(
-        "src", best["nbr_comm"], "score", "cur_comm", "k_i",
-        x["stay_score_tot"], *carry_cols,
-    )
-
-
-def _conflict_apply(
-    best: DataFrame, gain_eps: float, carry_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Gate + apply for ``gate_mode="conflict"`` over a best-moves relation
-    ``[src, nbr_comm, score, cur_comm, k_i, stay_score, *carry]`` →
-    ``[id, community, k_i, _moved, *carry]``.
-
-    prelim = strictly-improving move; moved-communities = DISTINCT cur_comm
-    of preliminary movers; a prelim move applies unless its target is a
-    moved community AND target > cur (see module docstring for the
-    progress/no-swap-cycle argument). The moved set is 1 row per community
-    and DISTINCT, so the left join is 1:≤1 — no row duplication. The join is
-    NOT force-broadcast: in early supersteps of a singleton init the moved
-    set is O(V) (broadcast would not survive 100 TB); when ``best`` is
-    materialized its truthful stamped size lets the static planner broadcast
-    exactly when it actually fits.
-
-    In a LAZY composition (the fixed-step driver twins) ``best`` is
-    referenced twice — DeduplicateRelations clones it and the E-row argmax
-    subtree executes twice per evaluation (the same canonicalization wall as
-    the accepted ``tot`` double execution). The production loop therefore
-    MATERIALIZES ``best`` first (one extra V-row job per superstep; the
-    E-row work runs once against the checkpointed leaf). A lazy
-    ``best.persist()`` variant was built and rejected: the clone's
-    canonicalized plan misses the CacheManager entry (state-derived
-    RDDScan exprIds again), so the join side re-ran the E-row argmax —
-    measured +50 % on the heavy supersteps at 18M edges. See
-    :func:`louvain_level`.
-    """
-    c = F.col
-    prelim = (c("nbr_comm") != c("cur_comm")) & (
-        c("score") > c("stay_score") + F.lit(gain_eps)
-    )
-    moved = best.where(prelim).select(c("cur_comm").alias("mc")).distinct()
-    gate = prelim & ((c("nbr_comm") < c("cur_comm")) | c("mc").isNull())
-    return best.join(moved, best["nbr_comm"] == moved["mc"], "left").select(
-        c("src").alias("id"),
-        F.when(gate, c("nbr_comm")).otherwise(c("cur_comm")).cast("long").alias(
-            "community"
-        ),
-        c("k_i"),
-        gate.cast("int").alias("_moved"),
-        *carry_cols,
-    )
-
-
-def _conflict_apply_fused(
-    best: DataFrame, gain_eps: float, carry_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Single-reference gate + apply for ``gate_mode="conflict"`` — same
-    gate function as :func:`_conflict_apply` (labels byte-identical, pinned
-    by ``test_conflict_apply_fused_equivalent``), but ``best`` appears in
-    the plan exactly ONCE, so the production loop no longer has to
-    materialize the argmax output before gating (one job per superstep
-    instead of two) and a lazy composition (the fixed-step driver twins) no
-    longer re-runs the E-row argmax on the moved-set side.
-
-    Mechanism: the gate needs, for each row, whether its TARGET community
-    appears as the CURRENT community of some preliminary mover — a cross-row
-    exchange keyed by community id that the join formulation expresses as
-    ``best ⋈ distinct(σ_prelim(best))`` (two references). Instead each best
-    row is exploded into (a) a DATA record keyed by its target ``nbr_comm``
-    and (b) — only when the row is itself a preliminary mover — a MARKER
-    record keyed by its current ``cur_comm``; one window ``max(marker)``
-    over the key then recovers "target community loses a member" in the
-    same pass. Conditional marker emission keeps the exploded relation at
-    V + (#preliminary movers) rows ≤ 2V, shrinking to ~V as the level
-    converges.
-
-    Cost shape vs the join form: one shuffle of ≤ 2V skinny rows plus the
-    window's in-partition sort, replacing {materialize-best job: V-row
-    checkpoint write+read} + {distinct shuffle + left join}. Skew caveat: a
-    single community targeted by a large fraction of all vertices puts its
-    data rows in ONE window group (one task sorts them); the join
-    formulation shares that hazard on the build side only when the moved
-    set cannot broadcast, so :func:`_conflict_apply` (+ eager best
-    materialize) is kept as the documented fallback — ``louvain_level``
-    exposes the choice and defaults to fused (measured: see
-    BENCH/BASELINE.md §9, round 5b).
-    """
-    c = F.col
-    prelim = (c("nbr_comm") != c("cur_comm")) & (
-        c("score") > c("stay_score") + F.lit(gain_eps)
-    )
-    data_rec = F.struct(
-        c("nbr_comm").alias("key"), F.lit(0).alias("m"), F.lit(1).alias("is_data")
-    )
-    marker_rec = F.struct(
-        c("cur_comm").alias("key"), F.lit(1).alias("m"), F.lit(0).alias("is_data")
-    )
-    recs = F.when(prelim, F.array(marker_rec, data_rec)).otherwise(F.array(data_rec))
-    two = best.select(
-        "src", "nbr_comm", "cur_comm", "k_i",
-        prelim.alias("_prelim"), *carry_cols, F.explode(recs).alias("r"),
-    ).select("*", "r.key", "r.m", "r.is_data").drop("r")
-    # max over the whole key group: 1 iff some preliminary mover is LEAVING
-    # this community (marker rows); data rows contribute 0
-    tmoved = F.max("m").over(Window.partitionBy("key"))
-    gate = c("_prelim") & ((c("nbr_comm") < c("cur_comm")) | (c("_tmoved") == 0))
-    return (
-        two.withColumn("_tmoved", tmoved)
-        .where(c("is_data") == 1)
-        .select(
-            c("src").alias("id"),
-            F.when(gate, c("nbr_comm")).otherwise(c("cur_comm")).cast("long").alias(
-                "community"
-            ),
-            c("k_i"),
-            gate.cast("int").alias("_moved"),
-            *carry_cols,
-        )
-    )
-
-
-def _best_moves_agg(scored: DataFrame) -> DataFrame:
-    """Argmax per vertex via hash aggregate (``max_by`` over a lexicographic
-    (score, −nbr_comm) struct) — the default physical path: one shuffle with
-    map-side partial aggregation and NO sort, vs the window path's
-    shuffle+sort per superstep. Tie semantics identical to the window rank
-    (score desc, then smallest community id — community ids are vertex ids,
-    hence nonnegative, so negation is order-reversing); pinned equal by
-    tests and by the exact-label oracle fixtures."""
-    ord_key = F.struct(F.col("score"), (-F.col("nbr_comm")).alias("neg"))
-    return scored.groupBy("src").agg(
-        F.max_by("nbr_comm", ord_key).alias("nbr_comm"),
-        F.max_by("score", ord_key).alias("score"),
-        F.max("cur_comm").alias("cur_comm"),  # constant within the group
-        F.max("k_i").alias("k_i"),  # constant within the group
-        F.max(
-            F.when(F.col("nbr_comm") == F.col("cur_comm"), F.col("score"))
-        ).alias("stay_score"),
-    )
-
-
-def _best_moves_window(scored: DataFrame) -> DataFrame:
-    """Argmax per vertex via window rank — alternative JVM physical path
-    (kept for the equivalence pin; the hash-aggregate path avoids its sort)."""
-    w_rank = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("nbr_comm"))
-    w_all = Window.partitionBy("src")
-    return (
-        scored.withColumn("rn", F.row_number().over(w_rank))
-        .withColumn(
-            "stay_score",
-            F.max(
-                F.when(F.col("nbr_comm") == F.col("cur_comm"), F.col("score"))
-            ).over(w_all),
-        )
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-def _best_moves_pandas(scored: DataFrame) -> DataFrame:
-    """Argmax per vertex via an Arrow-batched grouped-map UDF — the
-    north-star's "local modularity-gain moves via vectorized pandas/Arrow UDFs
-    over adjacency partitions" (BASELINE.json). Numerically identical to the
-    window path (same doubles, same smallest-community tie-break); provided as
-    an alternative physical strategy and pinned equal by tests."""
-    import pandas as pd  # noqa: F401 (Arrow path)
-
-    def argmax(pdf):
-        # sort: score desc, nbr_comm asc → first row is the deterministic best
-        pdf = pdf.sort_values(["score", "nbr_comm"], ascending=[False, True])
-        best = pdf.iloc[0]
-        stay = pdf.loc[pdf["nbr_comm"] == pdf["cur_comm"], "score"]
-        return pdf.iloc[:1].assign(
-            nbr_comm=best["nbr_comm"],
-            score=best["score"],
-            stay_score=stay.max() if len(stay) else float("-inf"),
-        )
-
-    schema = (
-        "src long, nbr_comm long, k_ic double, tot double, cur_comm long, "
-        "k_i double, score double, stay_score double"
-    )
-    cols = ["src", "nbr_comm", "k_ic", "tot", "cur_comm", "k_i", "score"]
-    return scored.select(*cols).groupBy("src").applyInPandas(argmax, schema)
-
-
-# The gated superstep as ONE SQL statement — semantically identical to
-# :func:`_superstep` (row-for-row, pinned by ``test_sql_superstep_matches_df``
-# and ``test_sql_pair_matches_df_pair``) and kept as a tested ALTERNATE
-# physical formulation, NOT the loop's path. Measured at sf0.1/local[32]:
-# the spark.sql build is indeed ~3x cheaper driver-side (0.1 s vs 0.29 s,
-# ~100 py4j round trips saved), but parameterized-SQL table arguments do not
-# carry the materialized state's stamped size statistics, so the planner
-# abandons the broadcast-everywhere physical plan the DataFrame builder gets
-# (execution 2.1-3.6 s vs 0.27-0.40 s per superstep) — a net 5-8x loss. The
-# lesson is recorded here so the next "shave the py4j floor" attempt starts
-# from the stats problem, not the template.
 def _superstep_cte(
-    sfx: str,
+    e: str,
     st: str,
     step: int,
     S: str,
     EPS: str,
-    carry: tuple[str, ...] = (),
     gate: str = "parity",
+    salt_buckets: int = 1,
 ) -> str:
-    """The CTE chain of ONE gated superstep reading state relation ``st``
-    ([id, community, k_i, *carry]); every CTE name is suffixed with ``sfx``
-    so two supersteps compose in a single WITH list (the batched pair). The
-    final relation is ``out{sfx}`` with [id, community, k_i, _moved, *carry]
-    — same expression trees node for node as :func:`_superstep`. ``carry``
-    columns are constant per vertex and ride the argmax aggregate as max().
+    """THE Louvain superstep: one SQL statement reading the edge relation
+    ``e`` ([src, dst, weight], src-partitioned cache) and the state relation
+    ``st`` ([id, community, k_i]) and returning the next state
+    [id, community, k_i, _moved]. Every caller runs it through
+    :func:`_superstep_views`.
 
-    ``gate="conflict"`` (r6) emits the FUSED conflict gate instead of the
-    even/odd direction gate: the same marker/data record explosion +
-    max-over-community-window as :func:`_conflict_apply_fused`, expression
-    for expression, so the production loop's SQL fast path (see
-    :func:`louvain_level`) produces byte-identical labels to the DataFrame
-    builder (digest-pinned by test)."""
-    d = "nbr_comm < cur_comm" if step % 2 == 0 else "nbr_comm > cur_comm"
-    cur_c = "".join(f", {c}" for c in carry)
-    best_c = "".join(f", max({c}) AS {c}" for c in carry)
-    gated_c = "".join(f", b.{c}" for c in carry)
+    - Self-loop rows carry k_ic = 0 instead of a unioned own-candidate
+      table (a Union erases partitioning info and would force two E-row
+      shuffles). Every vertex has ≥ 1 edge row, so every vertex keeps a
+      row — including coarse vertices whose only edge is their self-loop.
+    - The stay score is computed ANALYTICALLY: stay = k_{i→cur} −
+      (tot_cur − k_i)·k_i/S with k_{i→cur} = 0 when the vertex has no
+      intra-community neighbor — the identical expression a scored own-row
+      would produce (sum + 0.0 is exact in IEEE). When the best candidate
+      is the own community the gate blocks the move, and on exact score
+      ties the strict ``score > stay + eps`` test blocks it too, so the
+      explicit own candidate is never needed in the argmax set.
+    - ``salt_buckets > 1`` salts the edge⋈state join: edge rows hash their
+      ``src`` into a bucket and the (small) state side is replicated per
+      bucket, so a power-law hub's adjacency fans out over that many
+      reducers. Pure re-bucketing of a sum — labels are identical.
+    - ``gate="conflict"`` emits the conflict gate single-reference: each
+      best row explodes into a DATA record keyed by its target ``nbr_comm``
+      and — only when it is itself a preliminary mover — a MARKER record
+      keyed by its current ``cur_comm``; one ``max(m)`` window over the key
+      recovers "target community loses a member" in the same pass (≤ 2V
+      skinny rows, shrinking to ~V as the level converges). ``best`` is
+      referenced once, so one materialization covers the whole superstep.
+      Skew caveat: a single community targeted by a large fraction of all
+      vertices puts its data rows in ONE window group.
+      ``gate="parity"`` applies the even/odd direction gate keyed on
+      ``step`` instead.
+
+    ACCEPTED DOUBLE EXECUTION (diagnosed negative result, r4): ``tot`` is
+    referenced twice (candidate scoring + stay-score lookup) and the V-row
+    state groupBy runs once per reference. Both dedup mechanisms are
+    structurally defeated by Spark's canonicalization of checkpointed state:
+    RDDScanExec keeps its stamped ``hashpartitioning(...)`` with
+    UN-normalized expression ids, and DeduplicateRelations clones every
+    repeated state reference with fresh ids — so the two tot broadcast
+    exchanges never canonicalize equal (ReuseExchange never fires) and a
+    lazy ``tot.cache()`` is never substituted into the composed plan.
+    Eager per-superstep materialization of tot would cost one extra
+    scheduled job per superstep — a measured net loss — so the double
+    execution is accepted (BENCH/BASELINE.md §7; pinned by
+    ``test_superstep_tot_double_exec_diagnosis``)."""
+    if salt_buckets > 1:
+        b = salt_buckets
+        st_dst = (
+            f"(SELECT id, community, explode(sequence(0L, {b - 1}L)) AS _salt"
+            f" FROM {st})"
+        )
+        on = f"e.dst = s.id AND pmod(xxhash64(e.src), {b}) = s._salt"
+    else:
+        st_dst, on = st, "e.dst = s.id"
     if gate == "conflict":
-        assert not carry, "conflict CTE does not carry columns (unbatched loop)"
-        tail = f"""two{sfx} AS (
+        tail = f"""two AS (
   SELECT src, nbr_comm, cur_comm, k_i, _prelim, r.key AS key, r.m AS m, r.is_data AS is_data
   FROM (SELECT *, (nbr_comm != cur_comm AND score > stay_score + {EPS}) AS _prelim
-        FROM gated{sfx})
+        FROM gated)
   LATERAL VIEW explode(CASE WHEN _prelim
       THEN array(named_struct('key', cur_comm, 'm', 1, 'is_data', 0),
                  named_struct('key', nbr_comm, 'm', 0, 'is_data', 1))
       ELSE array(named_struct('key', nbr_comm, 'm', 0, 'is_data', 1)) END) t AS r
 ),
-out{sfx} AS (
+out AS (
   SELECT src AS id,
          CAST(CASE WHEN gate THEN nbr_comm ELSE cur_comm END AS LONG) AS community,
          k_i, CAST(gate AS INT) AS _moved
   FROM (SELECT *, (_prelim AND (nbr_comm < cur_comm OR _tmoved = 0)) AS gate
-        FROM (SELECT *, max(m) OVER (PARTITION BY key) AS _tmoved FROM two{sfx}))
+        FROM (SELECT *, max(m) OVER (PARTITION BY key) AS _tmoved FROM two))
   WHERE is_data = 1
 )"""
     else:
-        tail = f"""out{sfx} AS (
+        d = "nbr_comm < cur_comm" if step % 2 == 0 else "nbr_comm > cur_comm"
+        tail = f"""out AS (
   SELECT src AS id,
          CAST(CASE WHEN gate THEN nbr_comm ELSE cur_comm END AS LONG) AS community,
-         k_i, CAST(gate AS INT) AS _moved{cur_c}
+         k_i, CAST(gate AS INT) AS _moved
   FROM (SELECT *, (nbr_comm != cur_comm AND score > stay_score + {EPS} AND {d}) AS gate
-        FROM gated{sfx})
+        FROM gated)
 )"""
-    return f"""nbr{sfx} AS (
+    return f"""WITH nbr AS (
   SELECT e.src AS src, s.community AS nbr_comm,
          CASE WHEN e.src != e.dst THEN e.weight ELSE CAST(0.0 AS DOUBLE) END AS k_ic
-  FROM {{E}} e JOIN {st} s ON e.dst = s.id
+  FROM {e} e JOIN {st_dst} s ON {on}
 ),
-cand{sfx} AS (SELECT src, nbr_comm, SUM(k_ic) AS k_ic FROM nbr{sfx} GROUP BY src, nbr_comm),
-tot{sfx} AS (SELECT community AS nbr_comm, SUM(k_i) AS tot FROM {st} GROUP BY community),
-cur{sfx} AS (SELECT id AS src, community AS cur_comm, k_i{cur_c} FROM {st}),
-scored{sfx} AS (
-  SELECT c.src, c.nbr_comm, c.k_ic, t.tot, cu.cur_comm, cu.k_i{cur_c},
+cand AS (SELECT src, nbr_comm, SUM(k_ic) AS k_ic FROM nbr GROUP BY src, nbr_comm),
+tot AS (SELECT community AS nbr_comm, SUM(k_i) AS tot FROM {st} GROUP BY community),
+cur AS (SELECT id AS src, community AS cur_comm, k_i FROM {st}),
+scored AS (
+  SELECT c.src, c.nbr_comm, c.k_ic, t.tot, cu.cur_comm, cu.k_i,
          c.k_ic - (t.tot - CASE WHEN c.nbr_comm = cu.cur_comm THEN cu.k_i
-                            ELSE CAST(0.0 AS DOUBLE) END) * cu.k_i / {S} AS score
-  FROM cand{sfx} c JOIN tot{sfx} t ON c.nbr_comm = t.nbr_comm
-  JOIN cur{sfx} cu ON c.src = cu.src
+                           ELSE CAST(0.0 AS DOUBLE) END) * cu.k_i / {S} AS score
+  FROM cand c JOIN tot t ON c.nbr_comm = t.nbr_comm
+  JOIN cur cu ON c.src = cu.src
 ),
-best{sfx} AS (
+best AS (
   SELECT src,
          max_by(nbr_comm, struct(score, -nbr_comm)) AS nbr_comm,
          max_by(score, struct(score, -nbr_comm)) AS score,
          max(cur_comm) AS cur_comm,
          max(k_i) AS k_i,
          coalesce(max(CASE WHEN nbr_comm = cur_comm THEN k_ic END),
-                  CAST(0.0 AS DOUBLE)) AS stay_kic{best_c}
-  FROM scored{sfx} GROUP BY src
+                  CAST(0.0 AS DOUBLE)) AS stay_kic
+  FROM scored GROUP BY src
 ),
-gated{sfx} AS (
+gated AS (
   SELECT b.src, b.nbr_comm, b.score, b.cur_comm, b.k_i,
-         b.stay_kic - (t2.tot - b.k_i) * b.k_i / {S} AS stay_score{gated_c}
-  FROM best{sfx} b JOIN tot{sfx} t2 ON b.cur_comm = t2.nbr_comm
+         b.stay_kic - (t2.tot - b.k_i) * b.k_i / {S} AS stay_score
+  FROM best b JOIN tot t2 ON b.cur_comm = t2.nbr_comm
 ),
-{tail}"""
+{tail}
+SELECT * FROM out"""
 
 
 def _sql_consts(graph: LinkGraph, gain_eps: float) -> tuple[str, str]:
@@ -738,32 +394,45 @@ def _sql_consts(graph: LinkGraph, gain_eps: float) -> tuple[str, str]:
     return f"CAST({graph.two_m!r} AS DOUBLE)", f"CAST({gain_eps!r} AS DOUBLE)"
 
 
-def _superstep_sql(
-    graph: LinkGraph, assignments: DataFrame, step: int, gain_eps: float
-) -> DataFrame:
-    """SQL twin of :func:`_superstep` for the unsalted single-step hot path."""
-    S, EPS = _sql_consts(graph, gain_eps)
-    q = "WITH " + _superstep_cte("0", "{ST}", step, S, EPS) + "\nSELECT * FROM out0"
-    return graph.edges.sparkSession.sql(q, E=graph.edges, ST=assignments)
+# per-run suffix for the superstep views: two runs on one SparkSession must
+# never resolve each other's state
+_VIEW_IDS = itertools.count()
 
 
-def _superstep_pair_sql(
-    graph: LinkGraph, assignments: DataFrame, step: int, gain_eps: float
-) -> DataFrame:
-    """TWO composed gated supersteps as one SQL statement — the batched-pair
-    twin of chaining :func:`_superstep` twice, with the first superstep's
-    move flag carried through the second as ``_moved0`` so one Observation
-    reads both counts. One spark.sql call replaces the ~200 py4j expression
-    round trips of the two-step DataFrame composition."""
+@contextmanager
+def _superstep_views(graph: LinkGraph, gain_eps: float, gate_mode: str):
+    """Register ``graph.edges`` as a run-unique temp view and yield
+    ``run(state, step)``, which points the run's state view at ``state`` and
+    returns the :func:`_superstep_cte` statement as a DataFrame.
+
+    Register costs ~15-17 ms and release ~28 ms per view, so the edge view is
+    registered once per scope (one level) and each ``run`` pays only the
+    state-view replacement. The statement is analyzed when ``run`` returns,
+    so its DataFrame stays valid after the views are released.
+
+    Release in ``finally`` is REPLACE-then-drop: ``dropTempView`` on a view
+    of the edge cache runs a cascading uncache that evicts the EDGE CACHE
+    itself (every later superstep would re-run the edge-build pipeline),
+    while replacing the view with ``range(0)`` first unpins the state
+    checkpoint and the edge plan cache-neutrally and leaves nothing for the
+    drop to evict."""
+    spark = graph.edges.sparkSession
+    n = next(_VIEW_IDS)
+    e_view, st_view = f"_glouvain_edges_{n}", f"_glouvain_state_{n}"
     S, EPS = _sql_consts(graph, gain_eps)
-    c0 = _superstep_cte("0", "{ST}", step, S, EPS)
-    mid = "st1 AS (SELECT id, community, k_i, _moved AS _moved0 FROM out0)"
-    c1 = _superstep_cte("1", "st1", step + 1, S, EPS, carry=("_moved0",))
-    q = (
-        "WITH " + c0 + ",\n" + mid + ",\n" + c1
-        + "\nSELECT id, community, k_i, _moved, _moved0 FROM out1"
-    )
-    return graph.edges.sparkSession.sql(q, E=graph.edges, ST=assignments)
+    salt = _auto_salt(graph)
+
+    def run(state: DataFrame, step: int) -> DataFrame:
+        state.createOrReplaceTempView(st_view)
+        return spark.sql(_superstep_cte(e_view, st_view, step, S, EPS, gate_mode, salt))
+
+    try:
+        graph.edges.createOrReplaceTempView(e_view)
+        yield run
+    finally:
+        for v in (e_view, st_view):
+            spark.range(0).createOrReplaceTempView(v)
+            spark.catalog.dropTempView(v)
 
 
 def _superstep(
@@ -771,42 +440,18 @@ def _superstep(
     assignments: DataFrame,
     step: int,
     gain_eps: float,
-    use_pandas: bool = False,
-    carry_cols: tuple[str, ...] = (),
     gate_mode: str = "parity",
 ) -> DataFrame:
-    """One synchronous local-move superstep: score candidates against frozen
-    state, argmax per vertex (ties → smallest community id), apply
-    strictly-improving moves that pass the oscillation gate (``gate_mode``:
-    "parity" = the even/odd direction gate keyed on ``step``; "conflict" =
-    the moved-community conflict gate, step-independent — see module
-    docstring). Default stays "parity" so the SQL-twin equivalence paths and
-    the fixed-step driver queries keep their pinned semantics; the production
-    loop passes its own mode explicitly."""
-    x = _superstep_exprs(graph.two_m, gain_eps)
-    if use_pandas:
-        # alternative physical strategy, pinned label-equal to the default
-        best = _best_moves_pandas(move_scores(graph, assignments))
-    else:
-        best = _best_moves_fast(
-            graph, assignments, graph.two_m, carry_cols=carry_cols, exprs=x
-        )
-    if gate_mode == "conflict":
-        # fused single-reference gate: lazy compositions (the driver twins)
-        # evaluate the E-row argmax once instead of twice, and the
-        # production loop needs no pre-gate materialization of ``best``
-        return _conflict_apply_fused(best, gain_eps, carry_cols=carry_cols)
-    # ``best`` already carries one row per vertex with its current community
-    # (the own community is always a scored candidate), so the next state is
-    # a pure PROJECTION of it — no separate move-set materialization and no
-    # assignments⋈moves join (the reference's per-round buffer lifecycle,
-    # messagemanager.rs:328-393, dissolves entirely). The heavy scored plan
-    # runs exactly once (the caller's swap/materialize); the move count is a
-    # scalar aggregate over the materialized state. The gate (strict
-    # improvement + even/odd direction) is pre-built per parity in
-    # _superstep_exprs. k_i rides the state — no per-superstep degree join.
-    apply_cols = x["apply_even"] if step % 2 == 0 else x["apply_odd"]
-    return best.select(*apply_cols, *carry_cols)
+    """One synchronous local-move superstep from state ``assignments``
+    ([id, community, k_i]): score candidates against frozen state, argmax
+    per vertex (ties → smallest community id), apply strictly-improving
+    moves that pass the oscillation gate (``gate_mode``: "parity" = the
+    even/odd direction gate keyed on ``step``; "conflict" = the
+    moved-community conflict gate, step-independent — see module
+    docstring). Default stays "parity" so the fixed-step driver queries keep
+    their pinned semantics; the production loop passes its own mode."""
+    with _superstep_views(graph, gain_eps, gate_mode) as run:
+        return run(assignments, step)
 
 
 @dataclass
@@ -826,33 +471,27 @@ def louvain_level(
     gain_eps: float = 1e-12,
     level: int = 0,
     checkpointer=None,
-    use_pandas: bool = False,
     min_moves_frac: float = 0.0,
     start_step: int = 0,
     start_streak: int = 0,
-    batch_supersteps: int = 1,
     gate_mode: str = "conflict",
-    conflict_fuse: bool = True,
 ) -> tuple[DataFrame, LevelStats]:
     """L1 one_level (communities.rs:36-41): supersteps until quiescence or
     ``max_supersteps``.
+
+    Each superstep is ONE ``spark.sql`` statement (:func:`_superstep_cte`)
+    over this level's temp views of the edge cache and the materialized
+    state, followed by ONE materialization that also observes the move
+    count, under either gate and for salted graphs. The edge view is
+    registered once per level; each superstep only re-points the state view
+    (:func:`_superstep_views`), and both views are released when the level
+    ends or raises.
 
     ``gate_mode="conflict"`` (default, r5 — see module docstring) applies
     every improving move whose target community is not itself losing a
     member (descending-id moves always apply). Quiescence = ONE zero-move
     superstep: the gate is step-independent, so an unchanged state
     reproduces itself and a single quiet superstep is already the fixpoint.
-    With ``conflict_fuse=True`` (default, r5b) the gate is the
-    single-reference fused form (:func:`_conflict_apply_fused`): ONE job
-    per superstep — the E-row dataflow, the exploded moved-community
-    window, the gated apply, and the move-count Observation all ride the
-    one state materialization. ``conflict_fuse=False`` keeps the r5 join
-    formulation (materialize the argmax output, then moved-set distinct +
-    left join + second materialization — two jobs per superstep), retained
-    as the fallback for the window form's single-hot-target-community skew
-    hazard; labels are byte-identical between the two (same gate function,
-    pinned by test).
-
     ``gate_mode="parity"`` (r2-r4 semantics) alternates the even/odd
     direction gate and needs a full quiet even+odd PAIR (two consecutive
     zero-move supersteps) to terminate. With ``min_moves_frac > 0`` both
@@ -869,32 +508,6 @@ def louvain_level(
     convergence streak (without the streak, a resume into a slack-converged
     level would run extra real supersteps and diverge from the uninterrupted
     run when ``min_moves_frac > 0``).
-
-    ``batch_supersteps=2`` composes TWO gated supersteps into one plan with
-    ONE materialization and ONE Observation (both move counts ride it).
-    Labels are PROVABLY identical to the unbatched loop: a pair only runs
-    when the convergence streak is 0, so a streak can never complete mid-pair
-    (after the pair's first count it is at most 1) and the two counts are
-    folded into the streak sequentially — when the streak is 1 the loop falls
-    back to a single superstep, exactly reproducing the unbatched stopping
-    rule for any ``min_moves_frac``. The DEFAULT is 1, from measurement, not
-    caution: inside the composed plan the first superstep's output is an
-    UNMATERIALIZED subplan referenced three times (dst-labels join, community
-    totals, current-community projection), and Spark inlines deterministic
-    CTE/DataFrame references — the heavy edge⋈state aggregation re-executes
-    per reference AND, lacking the materialized state's stamped statistics,
-    the planner stops broadcasting the mid-state's derivatives. Measured at
-    sf0.1/local[32]: 1.4-2.3 s per superstep batched vs 0.76 s unbatched
-    (build 0.29 + exec+materialize+observe 0.47); the same loss reproduces
-    with the one-statement pair SQL (:func:`_superstep_pair_sql`). Batching
-    would win only if a superstep's fixed job overhead dominated BOTH the
-    extra recompute and the lost broadcasts — true for neither this box nor
-    a real cluster (the mid-state recompute grows with E, the saved floor
-    does not). With a ``checkpointer`` the loop also runs unbatched: the
-    per-superstep snapshot cadence is the documented crash-recovery
-    contract, and writing the intermediate state would materialize it
-    anyway. ``use_pandas`` runs unbatched (alternative physical path kept
-    minimal).
     """
     asg = assignments if assignments is not None else singleton_assignments(graph)
     # caller-supplied ids that are not graph vertices never enter the scoring
@@ -910,45 +523,10 @@ def louvain_level(
     stats = LevelStats(level=level, start_step=start_step)
     move_slack = int(min_moves_frac * max(graph.stats.num_vertices, 1))
     zero_streak = start_streak
-    batch = (
-        batch_supersteps
-        if (checkpointer is None and not use_pandas and gate_mode == "parity")
-        else 1
-    )
     # conflict gate: step-independent, so one exact-zero superstep is a
     # fixpoint; slack-quiet (> 0 moves) still needs a confirming second
     quiet_target = 1 if (gate_mode == "conflict" and move_slack == 0) else 2
-    x = _superstep_exprs(graph.two_m, gain_eps)
-    # r6 SQL fast path for the default fused-conflict superstep: the whole
-    # gated superstep is ONE spark.sql call over TEMP VIEWS of the edge
-    # cache and the checkpointed state. Unlike the r5 parameterized-SQL
-    # attempt (table ARGS strip the materialized state's stamped size
-    # statistics, so the planner dropped every broadcast — recorded above
-    # _superstep_cte), a temp view resolves to the underlying logical plan
-    # WITH its statistics: measured identical physical plan and exec time,
-    # with the driver-side build cost halved (~0.18 s → ~0.08 s per
-    # superstep at sf0.1; ~27 supersteps per run). Labels are byte-identical
-    # (same expression trees — digest-pinned by test); the salted-skew and
-    # pandas paths keep the DataFrame builder.
-    view_sql = (
-        _USE_VIEW_SQL
-        and gate_mode == "conflict"
-        and conflict_fuse
-        and not use_pandas
-        and _auto_salt(graph) == 1
-    )
-    spark_sess = graph.edges.sparkSession
-    if view_sql:
-        # fixed names, REPLACED not dropped — see the _E_VIEW comment above
-        graph.edges.createOrReplaceTempView(_E_VIEW)
-        S_lit, EPS_lit = _sql_consts(graph, gain_eps)
-        conflict_q = (
-            "WITH "
-            + _superstep_cte("0", _ST_VIEW, 0, S_lit, EPS_lit, gate="conflict").replace(
-                "{E}", _E_VIEW
-            )
-            + "\nSELECT * FROM out0"
-        )
+    spark = graph.edges.sparkSession
     # r6: scope the loop's shuffle partitions to the STATE size (the only
     # per-superstep exchange is the ≤2V-row gate window, and every broadcast
     # subplan stage runs at the state checkpoint's partition count) — the
@@ -956,8 +534,8 @@ def louvain_level(
     # parallelism is untouched (the cache keeps its build-time layout).
     # Labels are partition-invariant (cross-parallelism suite + digest).
     with superstep_planning(
-        spark_sess, state_partitions(spark_sess, 2 * graph.stats.num_vertices)
-    ):
+        spark, state_partitions(spark, 2 * graph.stats.num_vertices)
+    ), _superstep_views(graph, gain_eps, gate_mode) as run:
         # level-loop state = [id, community, k_i]: the degree is joined in
         # ONCE here and then rides through every superstep projection, so the
         # loop never shuffles graph.degrees again.
@@ -969,86 +547,20 @@ def louvain_level(
         step = start_step
         while step < max_supersteps and zero_streak < quiet_target:
             t0 = time.monotonic()
-            pair = (
-                batch >= 2 and zero_streak == 0 and step + 1 < max_supersteps
-            )
-            if gate_mode == "conflict" and not conflict_fuse:
-                # r5 join formulation, kept as the skew fallback (see
-                # louvain_level docstring). EAGER materialize, deliberately:
-                # a lazy `best.persist()` (cache populating inside the one
-                # swap job) was built and measured — at 18M edges the
-                # conflict superstep's heavy phase ran 7.6 s vs parity's
-                # 5.0 s warm, consistent with the gate join's SECOND
-                # reference to `best` missing the cache and re-running the
-                # full E-row argmax (the same RDDScanExec canonicalization
-                # wall as the pinned `tot` double-execution: state-derived
-                # subplans never match in CacheManager). Materialize costs
-                # one extra V-row job per superstep but guarantees the E-row
-                # work runs ONCE against the checkpointed leaf.
-                if use_pandas:
-                    best = _best_moves_pandas(move_scores(graph, state))
-                else:
-                    best = _best_moves_fast(graph, state, graph.two_m, exprs=x)
-                bm = materialize(best)
-                new_state = _conflict_apply(bm, gain_eps)
-                state_m, counts = swap_observed_multi(state, new_state, ["_moved"])
-                try:
-                    bm.unpersist()
-                except Exception:
-                    pass
-            elif pair:
-                # Two composed supersteps, one materialization + Observation.
-                # The first superstep's move flag rides through the second's
-                # dataflow as a carried column.
-                s1 = _superstep(graph, state, step, gain_eps).withColumnRenamed(
-                    "_moved", "_moved0"
-                )
-                s2 = _superstep(
-                    graph, s1, step + 1, gain_eps, carry_cols=("_moved0",)
-                )
-                state_m, counts = swap_observed_multi(
-                    state, s2, ["_moved0", "_moved"]
-                )
-            elif view_sql:
-                # fused conflict gate as ONE spark.sql statement over temp
-                # views (see the view_sql comment above the loop)
-                state.createOrReplaceTempView(_ST_VIEW)
-                new_state = spark_sess.sql(conflict_q)
-                state_m, counts = swap_observed_multi(state, new_state, ["_moved"])
-            else:
-                # parity single step, or the fused conflict gate (one plan,
-                # one materialization + Observation per superstep — `best`
-                # appears exactly once, so nothing needs a pre-gate job)
-                new_state = _superstep(
-                    graph, state, step, gain_eps, use_pandas=use_pandas,
-                    gate_mode=gate_mode,
-                )
-                state_m, counts = swap_observed_multi(state, new_state, ["_moved"])
+            state_m, (n_moves,) = swap_observed_multi(state, run(state, step), ["_moved"])
             state = state_m.select("id", "community", "k_i")
             wall = int((time.monotonic() - t0) * 1000)
-            for i, n_moves in enumerate(counts):
-                stats.supersteps += 1
-                stats.moves.append(n_moves)
-                # a batched pair's wall is attributed to its second superstep
-                stats.wall_ms.append(wall if i == len(counts) - 1 else 0)
-                if checkpointer is not None:  # only reachable with batch == 1
-                    checkpointer.save_superstep(
-                        algorithm="louvain", level=level, superstep=step + i,
-                        assignments=state.select("id", "community"),
-                        moves=n_moves, wall_ms=wall,
-                    )
-                zero_streak = zero_streak + 1 if n_moves <= move_slack else 0
-            step += len(counts)
-    if view_sql:
-        # release what the views pin (the last state's checkpoint RDD and
-        # the edge plan) by REPLACING them with an empty relation —
-        # replacement is cache-neutral, unlike dropTempView's cascading
-        # uncache (see _E_VIEW comment)
-        for v in (_E_VIEW, _ST_VIEW):
-            try:
-                spark_sess.range(0).createOrReplaceTempView(v)
-            except Exception:
-                pass
+            stats.supersteps += 1
+            stats.moves.append(n_moves)
+            stats.wall_ms.append(wall)
+            if checkpointer is not None:
+                checkpointer.save_superstep(
+                    algorithm="louvain", level=level, superstep=step,
+                    assignments=state.select("id", "community"),
+                    moves=n_moves, wall_ms=wall,
+                )
+            zero_streak = zero_streak + 1 if n_moves <= move_slack else 0
+            step += 1
     result = state.select("id", "community")
     if extra is not None:
         result = result.unionByName(extra)
@@ -1116,12 +628,9 @@ def louvain(
     gain_eps: float = 1e-12,
     min_q_gain: float = 1e-7,
     checkpointer=None,
-    use_pandas: bool = False,
     min_moves_frac: float = 0.0,
     resume: bool = False,
-    batch_supersteps: int = 1,
     gate_mode: str = "conflict",
-    conflict_fuse: bool = True,
 ) -> LouvainResult:
     """Full multi-level Louvain: local-move level → coarsen → repeat until the
     level's modularity gain < ``min_q_gain``. Final labels are unwound to
@@ -1212,13 +721,11 @@ def louvain(
                 cur,
                 assignments=resume_asg if level == start_level else None,
                 max_supersteps=max_supersteps, gain_eps=gain_eps, level=level,
-                checkpointer=checkpointer, use_pandas=use_pandas,
+                checkpointer=checkpointer,
                 min_moves_frac=min_moves_frac,
                 start_step=resume_step if level == start_level else 0,
                 start_streak=resume_streak if level == start_level else 0,
-                batch_supersteps=batch_supersteps,
                 gate_mode=gate_mode,
-                conflict_fuse=conflict_fuse,
             )
             # Coarsen first, then read the level's Q off the coarse graph's
             # singleton partition (exactly equal, two scalar aggs instead of two

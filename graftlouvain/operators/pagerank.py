@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graftlouvain.functions.iterate import (
+    broadcast_regime,
     materialize,
     state_partitions,
     superstep_planning,
@@ -33,24 +34,13 @@ def pagerank(
     tol: float = 1e-9,
     max_iter: int = 100,
     n_iter: int | None = None,
-    batch_iters: int = 1,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Returns [id, rank]. ``n_iter`` forces exactly that many iterations
-    (no convergence test) — used by the fixed-iteration SQL oracle.
-
-    ``batch_iters`` composes that many power iterations into one plan per
-    materialization on the fixed-iteration path (mathematically identical —
-    lineage cuts carry no semantics there; ranks pinned to 1e-12 in pytest).
-    Default 1 FROM MEASUREMENT: the composed plan's intermediate rank table
-    is an unmaterialized subplan without the stamped statistics the planner
-    needs, so batching net-loses exactly like the Louvain superstep pair
-    (same-session interleaved medians at sf0.1/local[32], 10 iters:
-    4.10 s / 4.55 s / 5.44 s for batch 1/2/3). The convergence path runs one
-    iteration per materialization because the L1 delta must be read between
-    consecutive iterations — the delta rides the materialization as an
-    Observation over a carried |new − old| column instead of a separate
-    old⋈new join + aggregate job per iteration.
+    (no convergence test) — used by the fixed-iteration SQL oracle. Every
+    iteration is one materialization; on the convergence path the L1 delta
+    rides it as an Observation over a carried |new − old| column instead of
+    a separate old⋈new join + aggregate job per iteration.
 
     ``seeds`` ([id]) switches to PERSONALIZED PageRank (Haveliwala 2002 /
     the random-walk-with-restart form): the teleport mass (1−α) is split
@@ -115,54 +105,31 @@ def pagerank(
     # lazy repartition("dst") resolved inside the scope would build the
     # E-row cache at the V-proportional count, collapsing edge parallelism)
     p_session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        bcast_limit = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:
-        bcast_limit = 10 * 1024 * 1024
     with superstep_planning(spark, state_partitions(spark, V)):
         ranks = materialize(start)
         # LAYOUT IS SIZE-ADAPTIVE (r6, guide §2.4): while the V-row rank
-        # table broadcasts into the shares join (the planner decides that
-        # from the materialized state's STAMPED size, so the decision here
-        # reads the same stamped number, with a 2× safety margin against
-        # per-iteration stamp jitter), laying shares out by DST makes the
-        # per-iteration groupBy(dst) aggregation exchange-free — the
-        # per-iteration shuffles disappear entirely (executed-plan walk:
-        # 2 ShuffleExchange nodes → 0; measured 6.3 s → 2.8 s for 10
-        # iterations at sf0.1/local[32], rounded digest identical — the
-        # 6-dp output rounding absorbs the partial-sum reordering exactly
-        # as it absorbs the DuckDB twin's different summation order).
+        # table broadcasts into the shares join (the same broadcast_regime
+        # decision that scoped the loop's partitions above), laying shares
+        # out by DST makes the per-iteration groupBy(dst) aggregation
+        # exchange-free — the per-iteration shuffles disappear entirely
+        # (executed-plan walk: 2 ShuffleExchange nodes → 0; measured
+        # 6.3 s → 2.8 s for 10 iterations at sf0.1/local[32], rounded
+        # digest identical — the 6-dp output rounding absorbs the
+        # partial-sum reordering exactly as it absorbs the DuckDB twin's
+        # different summation order).
         # Past the broadcast regime the src layout is kept: there the
         # ranks join must co-partition on src, and a dst layout would
         # re-shuffle the E-row shares EVERY iteration instead of once at
         # build — the regime that actually matters at 100 TB.
-        try:
-            ranks_stamped = int(
-                str(
-                    ranks._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-        except Exception:
-            ranks_stamped = V * 48
-        dst_layout = bcast_limit > 0 and 2 * ranks_stamped <= bcast_limit
         shares = graph.edges.join(out_w, "src").select(
             "src", "dst", (F.col("weight") / F.col("out_w")).alias("share")
         )
-        if dst_layout:
+        if broadcast_regime(spark, V):
             shares = shares.repartition(p_session, "dst")
         shares = shares.cache()
         if n_iter is not None:
-            done = 0
-            while done < n_iter:
-                k = min(max(batch_iters, 1), n_iter - done)
-                cur = ranks
-                for _ in range(k):
-                    cur = one_iter(cur)
-                ranks = swap(ranks, cur)
-                done += k
+            for _ in range(n_iter):
+                ranks = swap(ranks, one_iter(ranks))
         else:
             from graftlouvain.functions.iterate import swap_observed_sum
 

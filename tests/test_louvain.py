@@ -110,71 +110,6 @@ def test_hub_partition_recovers_blocks(spark):
         assert len({labels[u] for u in block}) == 1
 
 
-def test_pandas_argmax_path_matches_window(spark):
-    """The Arrow grouped-map argmax (north-star pandas-UDF local phase) must
-    produce the exact same labels as the default (hash-aggregate) path."""
-    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
-    asg_w, _ = louvain_level(g, use_pandas=False)
-    asg_p, _ = louvain_level(g, use_pandas=True)
-    assert _labels(asg_w) == _labels(asg_p)
-
-
-def test_argmax_physical_paths_equal(spark):
-    """All three argmax physical strategies — hash-agg max_by (default),
-    window rank, Arrow grouped-map — produce identical best moves from the
-    same scored table, including tie cases."""
-    from graftlouvain.operators.louvain import (
-        _best_moves_agg,
-        _best_moves_pandas,
-        _best_moves_window,
-        move_scores,
-    )
-
-    for edges in (FIXTURE_KARATE_W, fixture_hub()):
-        g = LinkGraph.from_edges(to_df(spark, edges))
-        scored = move_scores(g, singleton_assignments(g))
-        cols = ["src", "nbr_comm", "score", "cur_comm", "stay_score"]
-
-        def key(df):
-            return sorted(
-                (r["src"], r["nbr_comm"], round(r["score"], 9), r["cur_comm"],
-                 round(r["stay_score"], 9))
-                for r in df.select(*cols).collect()
-            )
-
-        a = key(_best_moves_agg(scored))
-        assert a == key(_best_moves_window(scored))
-        assert a == key(_best_moves_pandas(scored))
-
-
-@pytest.mark.parametrize(
-    "edges", [FIXTURE_W5, FIXTURE_28_W, FIXTURE_KARATE_W, fixture_hub()],
-    ids=["w5", "fixture28", "karate", "hub"],
-)
-def test_batched_matches_unbatched(spark, edges):
-    """batch_supersteps=2 (one materialization/Observation per superstep PAIR)
-    must reproduce the unbatched loop exactly: same labels, same superstep
-    count, same per-superstep move sequence — with and without convergence
-    slack (min_moves_frac). Pinned to gate_mode="parity": batching composes
-    the even/odd pair, so the conflict gate (step-independent) forces
-    batch=1 by construction."""
-    g = LinkGraph.from_edges(to_df(spark, edges))
-    for frac in (0.0, 0.05):
-        a1, s1 = louvain_level(
-            g, batch_supersteps=1, min_moves_frac=frac, gate_mode="parity"
-        )
-        a2, s2 = louvain_level(
-            g, batch_supersteps=2, min_moves_frac=frac, gate_mode="parity"
-        )
-        assert _labels(a1) == _labels(a2)
-        assert s1.supersteps == s2.supersteps
-        assert s1.moves == s2.moves
-    r1 = louvain(g, batch_supersteps=1, gate_mode="parity")
-    r2 = louvain(g, batch_supersteps=2, gate_mode="parity")
-    assert _labels(r1.assignments) == _labels(r2.assignments)
-    assert r1.modularity == pytest.approx(r2.modularity, abs=1e-12)
-
-
 @pytest.mark.parametrize(
     "edges", [FIXTURE_28_W, FIXTURE_KARATE_W],
     ids=["fixture28", "karate"],
@@ -241,60 +176,6 @@ def test_conflict_gate_progress_and_fewer_supersteps():
     assert q["f28"][1] == pytest.approx(0.392219387755102, abs=1e-9)
 
 
-def test_sql_superstep_matches_df(spark):
-    """The one-statement SQL superstep (driver-floor hot path) is row-for-row
-    identical to the DataFrame-built superstep at every step parity, from both
-    singleton and mid-level states."""
-    from pyspark.sql import functions as F
-
-    from graftlouvain.operators.louvain import _superstep, _superstep_sql
-
-    for edges in (FIXTURE_KARATE_W, fixture_hub()):
-        g = LinkGraph.from_edges(to_df(spark, edges))
-        state = singleton_assignments(g).join(
-            g.degrees.select("id", F.col("degree").alias("k_i")), "id"
-        )
-        for step in (0, 1, 2):
-            df_rows = sorted(
-                (r["id"], r["community"], round(r["k_i"], 9), r["_moved"])
-                for r in _superstep(g, state, step, 1e-12).collect()
-            )
-            sql_rows = sorted(
-                (r["id"], r["community"], round(r["k_i"], 9), r["_moved"])
-                for r in _superstep_sql(g, state, step, 1e-12).collect()
-            )
-            assert sql_rows == df_rows
-            # advance the state through the DF path for the next parity
-            state = spark.createDataFrame(
-                [(i, c, k) for i, c, k, _ in df_rows],
-                "id long, community long, k_i double",
-            )
-
-
-def test_sql_pair_matches_df_pair(spark):
-    """The one-statement batched-pair SQL is row-for-row identical to
-    composing two DataFrame supersteps, including the carried _moved0 flag."""
-    from pyspark.sql import functions as F
-
-    from graftlouvain.operators.louvain import _superstep, _superstep_pair_sql
-
-    for edges in (FIXTURE_KARATE_W, fixture_hub()):
-        g = LinkGraph.from_edges(to_df(spark, edges))
-        state = singleton_assignments(g).join(
-            g.degrees.select("id", F.col("degree").alias("k_i")), "id"
-        )
-        for step in (0, 1):
-            s1 = _superstep(g, state, step, 1e-12).withColumnRenamed(
-                "_moved", "_moved0"
-            )
-            s2 = _superstep(g, s1, step + 1, 1e-12, carry_cols=("_moved0",))
-            key = lambda df: sorted(
-                (r["id"], r["community"], round(r["k_i"], 9), r["_moved"], r["_moved0"])
-                for r in df.collect()
-            )
-            assert key(_superstep_pair_sql(g, state, step, 1e-12)) == key(s2)
-
-
 def test_superstep_tot_double_exec_diagnosis(spark):
     """SENTINEL for the accepted double execution of the superstep's
     community-totals aggregate (BENCH/BASELINE.md §7): ReuseExchange cannot
@@ -305,7 +186,7 @@ def test_superstep_tot_double_exec_diagnosis(spark):
     one superstep plan must currently canonicalize UNEQUAL while printing
     textually identical trees. If a Spark upgrade makes this assertion fail,
     canonicalization has been fixed and the broadcast CAN now be reused —
-    revisit _best_moves_fast and drop the accepted-double-execution note."""
+    revisit _superstep_cte and drop the accepted-double-execution note."""
     from graftlouvain.functions.iterate import materialize, superstep_planning
     from graftlouvain.operators.graph import LinkGraph
     from graftlouvain.operators.louvain import _superstep
@@ -365,15 +246,21 @@ def test_salted_move_scores_identical(spark):
 
 
 def test_salted_level_labels_identical(spark, monkeypatch):
-    """Force auto-salting on (threshold 0) — full-level labels unchanged."""
+    """Force auto-salting on (threshold 0): the salted superstep statement
+    reproduces the sequential oracle's labels and superstep count exactly,
+    under both gates."""
     import graftlouvain.operators.louvain as lv
 
-    g = LinkGraph.from_edges(to_df(spark, fixture_hub(n_blocks=4, block_size=8)))
-    want = _labels(louvain_level(g)[0])
+    edges = fixture_hub(n_blocks=4, block_size=8)
+    g = LinkGraph.from_edges(to_df(spark, edges))
     monkeypatch.setattr(lv, "SKEW_SALT_MIN_DEGREE", 0)
     monkeypatch.setattr(lv, "SKEW_SALT_RATIO", 0.0)
-    got = _labels(louvain_level(g)[0])
-    assert got == want
+    assert lv._auto_salt(g) == lv.SKEW_SALT_BUCKETS
+    for gate_mode in ("conflict", "parity"):
+        asg, stats = louvain_level(g, gate_mode=gate_mode)
+        want, steps = seq_louvain_level(edges, gate_mode=gate_mode)
+        assert _labels(asg) == want, gate_mode
+        assert stats.supersteps == steps, gate_mode
 
 
 def test_level_preserves_non_graph_ids(spark):
@@ -421,73 +308,6 @@ def test_random_graphs_match_oracle(spark):
         assert result.modularity == pytest.approx(q_want, abs=1e-9), f"seed {seed}"
 
 
-@pytest.mark.parametrize(
-    "edges", [FIXTURE_W5, FIXTURE_28_W, FIXTURE_KARATE_W, fixture_hub()],
-    ids=["w5", "fixture28", "karate", "hub"],
-)
-def test_conflict_apply_fused_equivalent(spark, edges):
-    """The fused single-reference conflict gate (r5b: exploded data/marker
-    relation + one window, `best` referenced ONCE) is byte-identical to the
-    r5 join formulation (materialized `best` + distinct moved-set left
-    join): same gate function, different physical shape only. Pinned at
-    three granularities: (a) the raw gated relation from singleton AND
-    mid-level states including the _moved flag, (b) full-level labels,
-    (c) superstep count + per-superstep move sequence."""
-    from pyspark.sql import functions as F
-
-    from graftlouvain.operators.louvain import (
-        _best_moves_fast,
-        _conflict_apply,
-        _conflict_apply_fused,
-        _superstep_exprs,
-        materialize,
-    )
-
-    g = LinkGraph.from_edges(to_df(spark, edges))
-    x = _superstep_exprs(g.two_m, 1e-12)
-    state = singleton_assignments(g).join(
-        g.degrees.select("id", F.col("degree").alias("k_i")), "id"
-    )
-
-    def rows(df):
-        return sorted(
-            (r["id"], r["community"], round(r["k_i"], 9), r["_moved"])
-            for r in df.collect()
-        )
-
-    # (a) raw relation equality from singleton, then from the state the
-    # join form produces (a mid-level, partially-converged state)
-    for _ in range(2):
-        best = materialize(_best_moves_fast(g, state, g.two_m, exprs=x))
-        joined = _conflict_apply(best, 1e-12)
-        fused = _conflict_apply_fused(best, 1e-12)
-        assert rows(fused) == rows(joined)
-        state = joined.select("id", "community", "k_i")
-        best.unpersist()
-
-    # (b)+(c) the full level, fused loop vs join-fallback loop
-    a1, s1 = louvain_level(g, conflict_fuse=True)
-    a2, s2 = louvain_level(g, conflict_fuse=False)
-    assert _labels(a1) == _labels(a2)
-    assert s1.supersteps == s2.supersteps
-    assert s1.moves == s2.moves
-
-    # carry columns ride both gate forms identically (the API surface the
-    # batched-pair parity path uses; conflict accepts them too)
-    state_c = singleton_assignments(g).join(
-        g.degrees.select("id", F.col("degree").alias("k_i")), "id"
-    ).withColumn("_tag", F.col("id") % 3)
-    best_c = materialize(
-        _best_moves_fast(g, state_c, g.two_m, carry_cols=("_tag",), exprs=x)
-    )
-    rows_c = lambda df: sorted(
-        (r["id"], r["community"], r["_moved"], r["_tag"]) for r in df.collect()
-    )
-    assert rows_c(_conflict_apply_fused(best_c, 1e-12, carry_cols=("_tag",))) == \
-        rows_c(_conflict_apply(best_c, 1e-12, carry_cols=("_tag",)))
-    best_c.unpersist()
-
-
 def test_fused_conflict_superstep_plan_shape(spark):
     """Plan pin for the r5b fused conflict gate: the parity superstep plan
     stays exchange-FREE on the src-partitioned edge cache (the r2-r4 pinned
@@ -526,29 +346,67 @@ def test_fused_conflict_superstep_plan_shape(spark):
     assert "key#" in counts["conflict"][0]  # the window's community-id key
 
 
-@pytest.mark.parametrize(
-    "edges", [FIXTURE_28_W, FIXTURE_KARATE_W, fixture_hub()],
-    ids=["fixture28", "karate", "hub"],
-)
-def test_view_sql_conflict_superstep_equivalent(spark, edges):
-    """r6: the production loop's temp-view SQL fast path (the whole fused
-    conflict superstep as one spark.sql statement over views of the edge
-    cache and the checkpointed state) is byte-identical to the DataFrame
-    builder — the physical plan is operator-for-operator the same (verified
-    at sf0.1: 11 Exchange / 4 BroadcastHashJoin / 1 Window in both), so this
-    pins labels, superstep count, and the per-superstep move sequence across
-    the two builders."""
-    from graftlouvain.operators import louvain as L
+def _glouvain_views(spark):
+    return [t.name for t in spark.catalog.listTables() if t.name.startswith("_glouvain")]
 
-    g = LinkGraph.from_edges(to_df(spark, edges))
-    prev = L._USE_VIEW_SQL
+
+def _edges_cached(spark, g):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(g.edges._jdf).isDefined()
+
+
+def test_level_releases_superstep_views(spark, monkeypatch):
+    """A level leaves no superstep temp view behind — neither when it returns
+    nor when it raises mid-loop — and releasing the views never evicts the
+    edge cache."""
+    import graftlouvain.operators.louvain as lv
+
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    louvain_level(g)
+    assert _glouvain_views(spark) == []
+    assert _edges_cached(spark, g)
+
+    real = lv.swap_observed_multi
+    calls = []
+
+    def fail_second(old, new, cols):
+        calls.append(cols)
+        if len(calls) == 2:
+            raise RuntimeError("injected superstep failure")
+        return real(old, new, cols)
+
+    monkeypatch.setattr(lv, "swap_observed_multi", fail_second)
+    with pytest.raises(RuntimeError, match="injected"):
+        louvain_level(g)
+    assert len(calls) == 2
+    assert _glouvain_views(spark) == []
+    assert _edges_cached(spark, g)
+
+
+def test_concurrent_levels_share_session(spark):
+    """Two levels running at once on one SparkSession each return the labels
+    of their serial run: superstep view names are unique per run."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    graphs = [
+        LinkGraph.from_edges(to_df(spark, e)) for e in (FIXTURE_KARATE_W, fixture_hub())
+    ]
+    serial = [_labels(louvain_level(g)[0]) for g in graphs]
+    start = threading.Barrier(len(graphs))
+
+    def level(g):
+        start.wait()
+        return _labels(louvain_level(g)[0])
+
+    # superstep_planning scopes session-global conf, and overlapping scopes
+    # restore it out of order — put it back for the rest of the suite
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    conf = {k: spark.conf.get(k) for k in keys}
     try:
-        L._USE_VIEW_SQL = True
-        a1, s1 = louvain_level(g)
-        L._USE_VIEW_SQL = False
-        a2, s2 = louvain_level(g)
+        with ThreadPoolExecutor(len(graphs)) as ex:
+            got = list(ex.map(level, graphs))
     finally:
-        L._USE_VIEW_SQL = prev
-    assert _labels(a1) == _labels(a2)
-    assert s1.supersteps == s2.supersteps
-    assert s1.moves == s2.moves
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+    assert got == serial

@@ -73,18 +73,65 @@ def test_personalized_pagerank_matches_python(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-6)
 
 
-def test_pagerank_batched_iters_identical(spark):
-    """Composing k power iterations per materialization (fixed-iteration
-    path) is pure lineage batching — ranks match the unbatched loop to
-    float round-off on every fixture."""
-    for edges in (FIXTURE_KARATE_W, fixture_hub()):
-        g = LinkGraph.from_edges(to_df(spark, edges))
-        base = {r["id"]: r["rank"] for r in pagerank(g, n_iter=10, batch_iters=1).collect()}
-        for k in (2, 3):
-            got = {r["id"]: r["rank"] for r in pagerank(g, n_iter=10, batch_iters=k).collect()}
-            assert set(got) == set(base)
-            for v in base:
-                assert got[v] == pytest.approx(base[v], abs=1e-12)
+def test_pagerank_regime_decides_partitions_and_layout(spark, monkeypatch):
+    """One broadcast-regime decision drives both of PageRank's layout
+    choices. Inside the regime the loop scopes its shuffle partitions down
+    and lays the shares table out by dst; once the broadcast threshold drops
+    below 48 B per vertex it keeps the session's partition count AND the src
+    layout. Ranks match the oracle either way."""
+    import graftlouvain.operators.pagerank as pr
+
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    V = g.stats.num_vertices
+    want = seq_pagerank(FIXTURE_KARATE_W, n_iter=10)
+    real_planning, real_swap = pr.superstep_planning, pr.swap
+    scoped, plans = [], []
+
+    def planning(sess, shuffle_partitions=None):
+        scoped.append(shuffle_partitions)
+        return real_planning(sess, shuffle_partitions)
+
+    def shares_partitioning(df):
+        """outputPartitioning of the cached shares scan in df's executed plan."""
+        found = []
+
+        def walk(node):
+            if "InMemoryTableScan" in node.getClass().getSimpleName() and (
+                "share" in node.output().toString()
+            ):
+                found.append(node.outputPartitioning().toString())
+            for i in range(node.children().size()):
+                walk(node.children().apply(i))
+
+        walk(df._jdf.queryExecution().executedPlan())
+        return found
+
+    def swap(old, new):
+        plans.extend(shares_partitioning(new))
+        return real_swap(old, new)
+
+    monkeypatch.setattr(pr, "superstep_planning", planning)
+    monkeypatch.setattr(pr, "swap", swap)
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.shuffle.partitions")
+    prev = {k: spark.conf.get(k) for k in keys}
+    layouts = {}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", 8)
+        for regime, threshold in (("broadcast", prev[keys[0]]), ("shuffle", 48 * V - 1)):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            scoped.clear()
+            plans.clear()
+            got = {r["id"]: r["rank"] for r in pagerank(g, n_iter=10).collect()}
+            assert set(got) == set(want)
+            for v in want:
+                assert got[v] == pytest.approx(want[v], abs=1e-6)
+            dst = [p.startswith("hashpartitioning(dst") for p in plans]
+            assert len(plans) == 10 and len(set(dst)) == 1
+            layouts[regime] = (scoped[0], dst[0])
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert layouts == {"broadcast": (4, True), "shuffle": (8, False)}
 
 
 @pytest.mark.parametrize("edges", ALL + [TWO_COMP], ids=IDS + ["twocomp"])

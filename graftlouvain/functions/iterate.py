@@ -1,6 +1,8 @@
-"""Iteration state hygiene for Spark DataFrame fixpoint loops.
+"""The one fixpoint loop, :func:`fixpoint`, that every iterative operator
+runs on: an operator supplies only its superstep body, which swaps the state
+through :func:`swap` or :func:`swap_observed` / :func:`swap_observed_multi`.
 
-Two separate pathologies must be handled every superstep:
+Every swap handles two pathologies of iterated DataFrame plans:
 
 1. **Lineage growth** — each superstep's plan references the previous state
    several times, so unchecked plans grow exponentially in node count.
@@ -15,13 +17,15 @@ Two separate pathologies must be handled every superstep:
    in-memory byte size, so downstream planning sees truthful (tiny) numbers
    and broadcast decisions stay correct.
 
-``materialize`` applies both; callers unpersist the previous state once the
-new one is materialized.
+``materialize`` applies both; ``swap`` then releases the superseded state's
+checkpoint blocks.
 """
 
 from __future__ import annotations
 
+import time
 from contextlib import contextmanager
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,51 +132,51 @@ def superstep_planning(spark: SparkSession, shuffle_partitions: int | None = Non
         conf.set("spark.sql.shuffle.partitions", prev_p)
 
 
+# name swap stamps on the checkpoint RDD of every state it creates: _release
+# drops only these, never a checkpoint the caller made
+_STATE_RDD = "graftlouvain.state"
+
+
+def _release(state: DataFrame | None) -> None:
+    """Drop the checkpoint blocks of a loop-owned state (a projection of a
+    :func:`swap` output); leave any other DataFrame alone. ``unpersist()``
+    cannot do this: it only drops CacheManager entries, and a checkpointed
+    state has none."""
+    if state is None:
+        return
+    plan = state._jdf.queryExecution().analyzed()
+    while plan.getClass().getSimpleName() == "Project":
+        plan = plan.child()
+    if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().name() == _STATE_RDD:
+        plan.rdd().unpersist(False)
+
+
 def swap(old: DataFrame | None, new: DataFrame) -> DataFrame:
-    """Materialize ``new`` then release ``old`` (safe order: the new state is
-    fully computed before its input is evicted)."""
+    """Materialize ``new`` as a loop-owned state, then release ``old`` (safe
+    order: the new state is fully computed before its input is evicted)."""
     out = materialize(new)
-    if old is not None:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+    out._jdf.queryExecution().analyzed().rdd().setName(_STATE_RDD)
+    _release(old)
     return out
 
 
 def swap_observed(
     old: DataFrame | None, new: DataFrame, metric_col: str
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, int | float]:
     """:func:`swap` + read ``sum(metric_col)`` observed DURING the
-    materialization pass (Spark ``Observation`` / CollectMetrics): convergence
-    counters cost zero extra jobs and zero extra passes over the state —
-    previously every fixpoint loop here paid either a second scalar-aggregate
-    job (Louvain moves) or a full old⋈new join + count (CC/LPA changed-count)
-    per superstep."""
+    materialization pass (Spark ``Observation`` / CollectMetrics): a
+    convergence counter costs no extra job and no extra pass over the state
+    (no second scalar aggregate, no old⋈new join + count)."""
     out, vals = swap_observed_multi(old, new, [metric_col])
     return out, vals[0]
 
 
-def swap_observed_sum(
-    old: DataFrame | None, new: DataFrame, metric_col: str
-) -> tuple[DataFrame, float]:
-    """:func:`swap` observing a FLOAT ``sum(metric_col)`` during the one
-    materialization pass — PageRank reads its L1 convergence delta this way
-    (previously a separate old⋈new join + aggregate job per iteration)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = new.observe(obs, F.sum(F.col(metric_col)).alias("m"))
-    out = swap(old, observed)
-    return out, float(obs.get["m"] or 0.0)
-
-
 def swap_observed_multi(
     old: DataFrame | None, new: DataFrame, metric_cols: list[str]
-) -> tuple[DataFrame, list[int]]:
+) -> tuple[DataFrame, list[int | float]]:
     """:func:`swap` observing ``sum(c)`` for SEVERAL columns in the one
-    materialization pass (the Louvain level loop reads its move count this
-    way)."""
+    materialization pass: ``int`` for integer columns, ``float`` for
+    floating ones, 0 over an empty state."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -181,4 +185,55 @@ def swap_observed_multi(
     )
     out = swap(old, observed)
     got = obs.get
-    return out, [int(got[f"m{i}"] or 0) for i in range(len(metric_cols))]
+    return out, [got[f"m{i}"] or 0 for i in range(len(metric_cols))]
+
+
+class Superstep(NamedTuple):
+    step: int
+    metric: Any  # what the step returned beside its state
+    wall_ms: int  # the step alone
+
+
+def fixpoint(
+    spark: SparkSession,
+    n_rows: int,
+    init: Callable[[], DataFrame],
+    step: Callable[[DataFrame, int], tuple[DataFrame, Any]],
+    max_iter: int,
+    quiet: Callable[[Any], bool] | None = None,
+    patience: int = 1,
+    start: int = 0,
+    start_streak: int = 0,
+    after: Callable[[DataFrame, Superstep], None] | None = None,
+) -> tuple[DataFrame, list[Superstep]]:
+    """Run ``state, metric = step(state, i)`` for ``i`` from ``start`` while
+    ``i < max_iter``, from the materialized ``init()``, inside one
+    :func:`superstep_planning` scope sized for an ``n_rows``-row state (so
+    whatever ``init`` caches is planned under it too). Return the final
+    state and one :class:`Superstep` record per superstep.
+
+    ``step`` swaps the state itself, through its own module's ``swap``
+    binding. With ``quiet``, the loop stops once ``quiet(metric)`` has held
+    for ``patience`` consecutive supersteps, ``start_streak`` of them
+    already run before a resume. ``after(state, record)`` runs after each
+    superstep, outside its timing. A superstep that raises releases the
+    live state."""
+    records: list[Superstep] = []
+    with superstep_planning(spark, state_partitions(spark, n_rows)):
+        state = swap(None, init())
+        streak, i = start_streak, start
+        try:
+            while i < max_iter and streak < patience:
+                t0 = time.monotonic()
+                state, metric = step(state, i)
+                rec = Superstep(i, metric, int((time.monotonic() - t0) * 1000))
+                records.append(rec)
+                if after is not None:
+                    after(state, rec)
+                if quiet is not None:
+                    streak = streak + 1 if quiet(metric) else 0
+                i += 1
+        except BaseException:
+            _release(state)
+            raise
+    return state, records

@@ -15,9 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graftlouvain.functions.iterate import (
+    fixpoint,
     materialize,
-    state_partitions,
-    superstep_planning,
     swap_observed,
 )
 from graftlouvain.operators.graph import LinkGraph
@@ -29,28 +28,30 @@ def components(graph: LinkGraph, max_iter: int = 200) -> DataFrame:
     Convergence: min-label only decreases, so ``changed`` =
     Σ[new < old], computed as an observed metric during the state
     materialization itself — no old⋈new comparison join per superstep."""
-    spark = graph.edges.sparkSession
-    with superstep_planning(spark, state_partitions(spark, graph.stats.num_vertices)):
-        labels = materialize(graph.vertices.select("id", F.col("id").alias("component")))
-        for _i in range(max_iter):
-            nbr_min = (
-                graph.edges.join(
-                    labels.select(F.col("id").alias("dst"), F.col("component").alias("c")),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.min("c").alias("nbr_min"))
+
+    def superstep(labels: DataFrame, _i: int) -> tuple[DataFrame, int]:
+        nbr_min = (
+            graph.edges.join(
+                labels.select(F.col("id").alias("dst"), F.col("component").alias("c")),
+                "dst",
             )
-            new_c = F.least("component", F.coalesce("nbr_min", "component"))
-            flagged = labels.join(nbr_min, "id", "left").select(
-                "id",
-                new_c.alias("component"),
-                (new_c < F.col("component")).cast("int").alias("_changed"),
-            )
-            labels, changed = swap_observed(labels, flagged, "_changed")
-            labels = labels.select("id", "component")
-            if changed == 0:
-                break
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.min("c").alias("nbr_min"))
+        )
+        new_c = F.least("component", F.coalesce("nbr_min", "component"))
+        flagged = labels.join(nbr_min, "id", "left").select(
+            "id",
+            new_c.alias("component"),
+            (new_c < F.col("component")).cast("int").alias("_changed"),
+        )
+        labels, changed = swap_observed(labels, flagged, "_changed")
+        return labels.select("id", "component"), changed
+
+    labels, _ = fixpoint(
+        graph.edges.sparkSession, graph.stats.num_vertices,
+        lambda: graph.vertices.select("id", F.col("id").alias("component")),
+        superstep, max_iter, quiet=lambda changed: changed == 0,
+    )
     return labels
 
 

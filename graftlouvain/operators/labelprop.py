@@ -16,9 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graftlouvain.functions.iterate import (
-    materialize,
-    state_partitions,
-    superstep_planning,
+    fixpoint,
+    materialize,  # noqa: F401 (wrapped here by perfbench/trace.py)
     swap_observed,
 )
 from graftlouvain.operators.graph import LinkGraph
@@ -31,31 +30,33 @@ def label_propagation(graph: LinkGraph, max_iter: int = 5) -> DataFrame:
     hash-aggregate argmax (max_by over (w, −l) — no sort; ties → smallest
     label), and one observed-metric materialization (changed-count read during
     the same pass, no comparison join)."""
-    spark = graph.edges.sparkSession
-    with superstep_planning(spark, state_partitions(spark, graph.stats.num_vertices)):
-        labels = materialize(graph.vertices.select("id", F.col("id").alias("label")))
-        for _i in range(max_iter):
-            weighted = (
-                graph.edges.where(F.col("src") != F.col("dst"))
-                .join(
-                    labels.select(F.col("id").alias("dst"), F.col("label").alias("l")), "dst"
-                )
-                .groupBy(F.col("src").alias("id"), F.col("l"))
-                .agg(F.sum("weight").alias("w"))
+
+    def superstep(labels: DataFrame, _i: int) -> tuple[DataFrame, int]:
+        weighted = (
+            graph.edges.where(F.col("src") != F.col("dst"))
+            .join(
+                labels.select(F.col("id").alias("dst"), F.col("label").alias("l")), "dst"
             )
-            winners = weighted.groupBy("id").agg(
-                F.max_by("l", F.struct(F.col("w"), (-F.col("l")).alias("neg"))).alias(
-                    "new_label"
-                )
+            .groupBy(F.col("src").alias("id"), F.col("l"))
+            .agg(F.sum("weight").alias("w"))
+        )
+        winners = weighted.groupBy("id").agg(
+            F.max_by("l", F.struct(F.col("w"), (-F.col("l")).alias("neg"))).alias(
+                "new_label"
             )
-            new_l = F.coalesce("new_label", "label")
-            flagged = labels.join(winners, "id", "left").select(
-                "id",
-                new_l.alias("label"),
-                (new_l != F.col("label")).cast("int").alias("_changed"),
-            )
-            labels, changed = swap_observed(labels, flagged, "_changed")
-            labels = labels.select("id", "label")
-            if changed == 0:
-                break
+        )
+        new_l = F.coalesce("new_label", "label")
+        flagged = labels.join(winners, "id", "left").select(
+            "id",
+            new_l.alias("label"),
+            (new_l != F.col("label")).cast("int").alias("_changed"),
+        )
+        labels, changed = swap_observed(labels, flagged, "_changed")
+        return labels.select("id", "label"), changed
+
+    labels, _ = fixpoint(
+        graph.edges.sparkSession, graph.stats.num_vertices,
+        lambda: graph.vertices.select("id", F.col("id").alias("label")),
+        superstep, max_iter, quiet=lambda changed: changed == 0,
+    )
     return labels

@@ -68,7 +68,6 @@ it.
 from __future__ import annotations
 
 import itertools
-import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -76,9 +75,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graftlouvain.functions.iterate import (
-    materialize,
-    state_partitions,
-    superstep_planning,
+    Superstep,
+    fixpoint,
+    materialize,  # noqa: F401 (wrapped here by perfbench/trace.py)
     swap,
     swap_observed_multi,
 )
@@ -520,47 +519,41 @@ def louvain_level(
         if assignments is not None
         else None
     )
-    stats = LevelStats(level=level, start_step=start_step)
     move_slack = int(min_moves_frac * max(graph.stats.num_vertices, 1))
-    zero_streak = start_streak
     # conflict gate: step-independent, so one exact-zero superstep is a
     # fixpoint; slack-quiet (> 0 moves) still needs a confirming second
     quiet_target = 1 if (gate_mode == "conflict" and move_slack == 0) else 2
-    spark = graph.edges.sparkSession
-    # r6: scope the loop's shuffle partitions to the STATE size (the only
-    # per-superstep exchange is the ≤2V-row gate window, and every broadcast
-    # subplan stage runs at the state checkpoint's partition count) — the
-    # coarse-shrink row-proportional policy extended to every level. Edge
-    # parallelism is untouched (the cache keeps its build-time layout).
-    # Labels are partition-invariant (cross-parallelism suite + digest).
-    with superstep_planning(
-        spark, state_partitions(spark, 2 * graph.stats.num_vertices)
-    ), _superstep_views(graph, gain_eps, gate_mode) as run:
-        # level-loop state = [id, community, k_i]: the degree is joined in
-        # ONCE here and then rides through every superstep projection, so the
-        # loop never shuffles graph.degrees again.
-        if "k_i" not in asg.columns:
-            asg = asg.join(
-                graph.degrees.select("id", F.col("degree").alias("k_i")), "id"
-            )
-        state = materialize(asg)
-        step = start_step
-        while step < max_supersteps and zero_streak < quiet_target:
-            t0 = time.monotonic()
-            state_m, (n_moves,) = swap_observed_multi(state, run(state, step), ["_moved"])
-            state = state_m.select("id", "community", "k_i")
-            wall = int((time.monotonic() - t0) * 1000)
-            stats.supersteps += 1
-            stats.moves.append(n_moves)
-            stats.wall_ms.append(wall)
-            if checkpointer is not None:
-                checkpointer.save_superstep(
-                    algorithm="louvain", level=level, superstep=step,
-                    assignments=state.select("id", "community"),
-                    moves=n_moves, wall_ms=wall,
-                )
-            zero_streak = zero_streak + 1 if n_moves <= move_slack else 0
-            step += 1
+    # level-loop state = [id, community, k_i]: the degree is joined in ONCE
+    # here and then rides through every superstep projection, so the loop
+    # never shuffles graph.degrees again.
+    if "k_i" not in asg.columns:
+        asg = asg.join(graph.degrees.select("id", F.col("degree").alias("k_i")), "id")
+
+    def save(state: DataFrame, rec: Superstep) -> None:
+        checkpointer.save_superstep(
+            algorithm="louvain", level=level, superstep=rec.step,
+            assignments=state.select("id", "community"),
+            moves=rec.metric, wall_ms=rec.wall_ms,
+        )
+
+    with _superstep_views(graph, gain_eps, gate_mode) as run:
+
+        def superstep(state: DataFrame, step: int) -> tuple[DataFrame, int]:
+            state, (n_moves,) = swap_observed_multi(state, run(state, step), ["_moved"])
+            return state.select("id", "community", "k_i"), n_moves
+
+        state, records = fixpoint(
+            graph.edges.sparkSession,
+            2 * graph.stats.num_vertices,  # the ≤2V-row gate window is the state shuffle
+            lambda: asg, superstep, max_supersteps,
+            quiet=lambda n_moves: n_moves <= move_slack, patience=quiet_target,
+            start=start_step, start_streak=start_streak,
+            after=save if checkpointer is not None else None,
+        )
+    stats = LevelStats(
+        level=level, supersteps=len(records), start_step=start_step,
+        moves=[r.metric for r in records], wall_ms=[r.wall_ms for r in records],
+    )
     result = state.select("id", "community")
     if extra is not None:
         result = result.unionByName(extra)

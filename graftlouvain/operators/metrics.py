@@ -25,12 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graftlouvain.functions.iterate import (
-    materialize,
-    state_partitions,
-    superstep_planning,
-    swap_observed,
-)
+from graftlouvain.functions.iterate import fixpoint, swap_observed
 from graftlouvain.operators.graph import LinkGraph
 
 
@@ -99,29 +94,31 @@ def kcore(graph: LinkGraph, k: int, rounds: int | None = None) -> DataFrame:
     if k < 1:
         raise ValueError("kcore requires k >= 1 (k=0 is the full vertex set)")
     sym = graph.edges.where(F.col("src") != F.col("dst")).select("src", "dst")
-    spark = graph.edges.sparkSession
-    with superstep_planning(spark, state_partitions(spark, graph.stats.num_vertices)):
-        alive = materialize(graph.vertices.select("id"))
-        n_alive = graph.stats.num_vertices
-        max_rounds = rounds if rounds is not None else max(n_alive, 1)
-        for _ in range(max_rounds):
-            # induced-subgraph degrees: only edges whose BOTH endpoints
-            # survive; a vertex with no surviving adjacency row has degree 0
-            # and drops out of the aggregation (= removed), which is exactly
-            # the peel for any k >= 1
-            adj = sym.join(
-                alive.select(F.col("id").alias("src")), "src", "left_semi"
-            ).join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
-            survivors = (
-                adj.groupBy(F.col("src").alias("id"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .where(F.col("n") >= k)
-                .select("id", F.lit(1).alias("_c"))
-            )
-            alive, kept_n = swap_observed(alive, survivors, "_c")
-            alive = alive.select("id")
-            if rounds is None and kept_n in (n_alive, 0):
-                n_alive = kept_n
-                break
-            n_alive = kept_n
+    n_alive = graph.stats.num_vertices
+
+    def peel(alive: DataFrame, _i: int) -> tuple[DataFrame, tuple[int, int]]:
+        nonlocal n_alive
+        # induced-subgraph degrees: only edges whose BOTH endpoints
+        # survive; a vertex with no surviving adjacency row has degree 0
+        # and drops out of the aggregation (= removed), which is exactly
+        # the peel for any k >= 1
+        adj = sym.join(
+            alive.select(F.col("id").alias("src")), "src", "left_semi"
+        ).join(alive.select(F.col("id").alias("dst")), "dst", "left_semi")
+        survivors = (
+            adj.groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .where(F.col("n") >= k)
+            .select("id", F.lit(1).alias("_c"))
+        )
+        alive, kept = swap_observed(alive, survivors, "_c")
+        removed, n_alive = n_alive - kept, kept
+        return alive.select("id"), (removed, kept)
+
+    alive, _ = fixpoint(
+        graph.edges.sparkSession, n_alive, lambda: graph.vertices.select("id"), peel,
+        rounds if rounds is not None else max(n_alive, 1),
+        # stable once a peel removes nothing, or leaves nothing to peel
+        quiet=None if rounds is not None else (lambda m: 0 in m),
+    )
     return alive

@@ -20,10 +20,10 @@ from pyspark.sql import functions as F
 
 from graftlouvain.functions.iterate import (
     broadcast_regime,
-    materialize,
-    state_partitions,
-    superstep_planning,
+    fixpoint,
+    materialize,  # noqa: F401 (wrapped here by perfbench/trace.py)
     swap,
+    swap_observed,
 )
 from graftlouvain.operators.graph import LinkGraph
 
@@ -105,11 +105,14 @@ def pagerank(
     # lazy repartition("dst") resolved inside the scope would build the
     # E-row cache at the V-proportional count, collapsing edge parallelism)
     p_session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with superstep_planning(spark, state_partitions(spark, V)):
-        ranks = materialize(start)
+    shares = None
+
+    def init() -> DataFrame:
+        # Cached INSIDE the loop's planning scope: cached outside it, the
+        # plan is adaptive with unknown partitioning and the dst layout is lost.
         # LAYOUT IS SIZE-ADAPTIVE (r6, guide §2.4): while the V-row rank
         # table broadcasts into the shares join (the same broadcast_regime
-        # decision that scoped the loop's partitions above), laying shares
+        # decision that scoped the loop's partitions), laying shares
         # out by DST makes the per-iteration groupBy(dst) aggregation
         # exchange-free — the per-iteration shuffles disappear entirely
         # (executed-plan walk: 2 ShuffleExchange nodes → 0; measured
@@ -121,25 +124,28 @@ def pagerank(
         # ranks join must co-partition on src, and a dst layout would
         # re-shuffle the E-row shares EVERY iteration instead of once at
         # build — the regime that actually matters at 100 TB.
+        nonlocal shares
         shares = graph.edges.join(out_w, "src").select(
             "src", "dst", (F.col("weight") / F.col("out_w")).alias("share")
         )
         if broadcast_regime(spark, V):
             shares = shares.repartition(p_session, "dst")
         shares = shares.cache()
-        if n_iter is not None:
-            for _ in range(n_iter):
-                ranks = swap(ranks, one_iter(ranks))
-        else:
-            from graftlouvain.functions.iterate import swap_observed_sum
+        return start
 
-            for _i in range(max_iter):
-                stepped = one_iter(ranks).join(
-                    ranks.withColumnRenamed("rank", "old"), "id"
-                ).select("id", "rank", F.abs(F.col("rank") - F.col("old")).alias("_d"))
-                ranks, delta = swap_observed_sum(ranks, stepped, "_d")
-                ranks = ranks.select("id", "rank")
-                if delta < tol:
-                    break
+    def fixed_step(ranks: DataFrame, _i: int) -> tuple[DataFrame, None]:
+        return swap(ranks, one_iter(ranks)), None
+
+    def converging_step(ranks: DataFrame, _i: int) -> tuple[DataFrame, float]:
+        stepped = one_iter(ranks).join(
+            ranks.withColumnRenamed("rank", "old"), "id"
+        ).select("id", "rank", F.abs(F.col("rank") - F.col("old")).alias("_d"))
+        ranks, delta = swap_observed(ranks, stepped, "_d")
+        return ranks.select("id", "rank"), delta
+
+    if n_iter is not None:
+        ranks, _ = fixpoint(spark, V, init, fixed_step, n_iter)
+    else:
+        ranks, _ = fixpoint(spark, V, init, converging_step, max_iter, lambda d: d < tol)
     shares.unpersist()
     return ranks

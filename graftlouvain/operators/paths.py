@@ -19,10 +19,10 @@ no-ops (the k-core fixed-round twin uses the same argument).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graftlouvain.functions.iterate import materialize, state_partitions, superstep_planning
+from graftlouvain.functions.iterate import fixpoint, swap
 from graftlouvain.operators.graph import LinkGraph
 
 
@@ -39,36 +39,42 @@ def sample_sources(graph: LinkGraph, n_sources: int = 4) -> DataFrame:
     )
 
 
+def _relax(
+    graph: LinkGraph, sources: DataFrame, rounds: int, length: Column, zero: Column
+) -> DataFrame:
+    """[seed, id, dist] after ``rounds`` synchronous min-plus relaxations from
+    every source (distance ``zero``), each edge adding ``length``: one
+    distance⋈edges hop + a per-(seed, vertex) MIN per round."""
+    edges = graph.edges.where(F.col("src") != F.col("dst")).select(
+        "src", "dst", length.alias("len")
+    )
+
+    def relax(dist: DataFrame, _i: int) -> tuple[DataFrame, None]:
+        hop = dist.join(edges, dist["id"] == edges["src"]).select(
+            "seed", F.col("dst").alias("id"), (F.col("dist") + F.col("len")).alias("dist")
+        )
+        new_dist = (
+            dist.unionByName(hop).groupBy("seed", "id").agg(F.min("dist").alias("dist"))
+        )
+        return swap(dist, new_dist), None
+
+    # frontier rows are (#sources x V), not V (r6 review) - sources are tiny
+    # by contract (sampled seeds), so counting them is one trivial job
+    n_src = max(sources.count(), 1)
+    dist, _ = fixpoint(
+        graph.edges.sparkSession, n_src * graph.stats.num_vertices,
+        lambda: sources.select("seed", F.col("seed").alias("id"), zero.alias("dist")),
+        relax, rounds,
+    )
+    return dist
+
+
 def bfs_distances(
     graph: LinkGraph, sources: DataFrame, max_depth: int = 6
 ) -> DataFrame:
     """[seed, id, dist] — unweighted shortest-path distance from every source
     to every vertex within ``max_depth`` hops (unreached pairs absent)."""
-    dist = materialize(
-        sources.select("seed", F.col("seed").alias("id"), F.lit(0).alias("dist"))
-    )
-    edges = graph.edges.where(F.col("src") != F.col("dst")).select("src", "dst")
-    spark = graph.edges.sparkSession
-    # frontier rows are (#sources x V), not V (r6 review) - sources are tiny
-    # by contract (sampled seeds), so counting them is one trivial job
-    n_src = max(sources.count(), 1)
-    with superstep_planning(
-        spark, state_partitions(spark, n_src * graph.stats.num_vertices)
-    ):
-        for _ in range(max_depth):
-            hop = (
-                dist.join(edges, dist["id"] == edges["src"])
-                .select("seed", F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
-            )
-            new_dist = (
-                dist.unionByName(hop)
-                .groupBy("seed", "id")
-                .agg(F.min("dist").alias("dist"))
-            )
-            prev = dist
-            dist = materialize(new_dist)
-            prev.unpersist()
-    return dist
+    return _relax(graph, sources, max_depth, F.lit(1), F.lit(0))
 
 
 def sssp_distances(
@@ -82,36 +88,7 @@ def sssp_distances(
     the sums are exact outright. Rounds bound the hop count, not the length:
     a ``max_rounds``-round run is exact for all shortest paths of ≤ that
     many edges (the fixed-unroll contract shared with BFS/k-core twins)."""
-    dist = materialize(
-        sources.select(
-            "seed", F.col("seed").alias("id"), F.lit(0.0).alias("dist")
-        )
-    )
-    edges = graph.edges.where(F.col("src") != F.col("dst")).select(
-        "src", "dst", "weight"
-    )
-    spark = graph.edges.sparkSession
-    # frontier rows are (#sources x V), not V (r6 review) - sources are tiny
-    # by contract (sampled seeds), so counting them is one trivial job
-    n_src = max(sources.count(), 1)
-    with superstep_planning(
-        spark, state_partitions(spark, n_src * graph.stats.num_vertices)
-    ):
-        for _ in range(max_rounds):
-            hop = dist.join(edges, dist["id"] == edges["src"]).select(
-                "seed",
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("weight")).alias("dist"),
-            )
-            new_dist = (
-                dist.unionByName(hop)
-                .groupBy("seed", "id")
-                .agg(F.min("dist").alias("dist"))
-            )
-            prev = dist
-            dist = materialize(new_dist)
-            prev.unpersist()
-    return dist
+    return _relax(graph, sources, max_rounds, F.col("weight"), F.lit(0.0))
 
 
 def harmonic_closeness(

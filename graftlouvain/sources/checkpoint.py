@@ -67,8 +67,23 @@ class CheckpointManager:
         return path, lineage, wall_ms
 
     def _append_manifest(self, record: dict) -> None:
-        with open(self.manifest_path, "a") as f:
-            f.write(json.dumps(record, sort_keys=True) + "\n")
+        line = (json.dumps(record, sort_keys=True) + "\n").encode()
+        with open(self.manifest_path, "ab+") as f:
+            end = f.seek(0, os.SEEK_END)
+            f.seek(max(end - 1, 0))
+            if end and f.read(1) != b"\n":
+                # a crash mid-append left the last line unterminated: end it
+                # if it is a whole record (manifest() reads it as committed),
+                # else cut the torn record, which never committed
+                f.seek(0)
+                data = f.read()
+                cut = data.rfind(b"\n") + 1
+                try:
+                    json.loads(data[cut:])
+                    line = b"\n" + line
+                except json.JSONDecodeError:
+                    f.truncate(cut)
+            f.write(line)
 
     def save_superstep(
         self,
@@ -133,10 +148,19 @@ class CheckpointManager:
     # -- read / resume ----------------------------------------------------
 
     def manifest(self) -> list[dict]:
+        """Every committed record. A final line that does not parse is a
+        record torn by a crash mid-append (never committed) and is skipped;
+        a corrupt line anywhere else raises."""
         if not os.path.exists(self.manifest_path):
             return []
         with open(self.manifest_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+            lines = [line for line in f if line.strip()]
+        records = [json.loads(line) for line in lines[:-1]]
+        try:
+            records.extend(json.loads(line) for line in lines[-1:])
+        except json.JSONDecodeError:
+            pass
+        return records
 
     def latest_superstep(self, algorithm: str) -> dict | None:
         """The most recent completed superstep record (commit point = manifest

@@ -140,8 +140,9 @@ def test_checkpoint_resume_one_level(spark, tmp_path):
 
 def test_checkpoint_resume_full_louvain(spark, tmp_path):
     """Crash mid-run (manifest truncated to a committed superstep inside the
-    LAST level), resume through the public ``louvain(..., resume=True)`` API —
-    final labels byte-identical to the uninterrupted run."""
+    LAST level, then a torn half of the next record), resume through the
+    public ``louvain(..., resume=True)`` API — final labels byte-identical to
+    the uninterrupted run."""
     import json
 
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
@@ -164,15 +165,24 @@ def test_checkpoint_resume_full_louvain(spark, tmp_path):
     )
     with open(ck.manifest_path) as f:
         lines = [ln for ln in f if ln.strip()]
+    # ... and the crash tore the append of the next record: half a line,
+    # no newline
+    torn = lines[cut + 1][: len(lines[cut + 1]) // 2]
     with open(ck.manifest_path, "w") as f:
         f.writelines(lines[: cut + 1])
+        f.write(torn)
 
-    res = louvain(g, checkpointer=CheckpointManager(ckdir), resume=True)
+    ck = CheckpointManager(ckdir)
+    assert ck.manifest() == records[: cut + 1]
+    res = louvain(g, checkpointer=ck, resume=True)
     got = {r["id"]: r["community"] for r in res.assignments.collect()}
     assert got == want
     assert abs(res.modularity - want_res.modularity) < 1e-12
     # the resumed run must have skipped the completed earlier levels
     assert res.levels[0].level == last_level
+    # its records replace the torn one instead of being appended onto it
+    resumed = ck.manifest()
+    assert resumed[: cut + 1] == records[: cut + 1] and len(resumed) > cut + 1
 
 
 def test_checkpoint_resume_with_slack(spark, tmp_path):

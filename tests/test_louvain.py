@@ -358,7 +358,7 @@ def _edges_cached(spark, g):
 def test_level_releases_superstep_views(spark, monkeypatch):
     """A level leaves no superstep temp view behind — neither when it returns
     nor when it raises mid-loop — and releasing the views never evicts the
-    edge cache."""
+    edge cache. A level that raises also leaves no state checkpoint."""
     import graftlouvain.operators.louvain as lv
 
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
@@ -376,9 +376,13 @@ def test_level_releases_superstep_views(spark, monkeypatch):
         return real(old, new, cols)
 
     monkeypatch.setattr(lv, "swap_observed_multi", fail_second)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keys())
     with pytest.raises(RuntimeError, match="injected"):
         louvain_level(g)
     assert len(calls) == 2
+    # the live state's checkpoint is released with the failure
+    assert set(rdds().keys()) - before == set()
     assert _glouvain_views(spark) == []
     assert _edges_cached(spark, g)
 

@@ -84,12 +84,8 @@ def test_pagerank_regime_decides_partitions_and_layout(spark, monkeypatch):
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     V = g.stats.num_vertices
     want = seq_pagerank(FIXTURE_KARATE_W, n_iter=10)
-    real_planning, real_swap = pr.superstep_planning, pr.swap
+    real_swap = pr.swap
     scoped, plans = [], []
-
-    def planning(sess, shuffle_partitions=None):
-        scoped.append(shuffle_partitions)
-        return real_planning(sess, shuffle_partitions)
 
     def shares_partitioning(df):
         """outputPartitioning of the cached shares scan in df's executed plan."""
@@ -107,10 +103,10 @@ def test_pagerank_regime_decides_partitions_and_layout(spark, monkeypatch):
         return found
 
     def swap(old, new):
+        scoped.append(int(spark.conf.get("spark.sql.shuffle.partitions")))
         plans.extend(shares_partitioning(new))
         return real_swap(old, new)
 
-    monkeypatch.setattr(pr, "superstep_planning", planning)
     monkeypatch.setattr(pr, "swap", swap)
     keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.shuffle.partitions")
     prev = {k: spark.conf.get(k) for k in keys}
@@ -139,6 +135,52 @@ def test_components_matches_oracle(spark, edges):
     g = LinkGraph.from_edges(to_df(spark, edges))
     got = {r["id"]: r["component"] for r in components(g).collect()}
     assert got == seq_components(edges)
+
+
+PATH5 = [(i, i + 1, 1.0) for i in range(4)]
+
+
+def persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_components_releases_superseded_states(spark):
+    """Each superstep releases the state it replaced: a components run adds
+    exactly one persistent RDD, the checkpoint of the state it returns."""
+    g = LinkGraph.from_edges(to_df(spark, PATH5))
+    before = persistent_rdds(spark)
+    labels = components(g)
+    checkpoint = labels._jdf.queryExecution().analyzed().child()  # under the select
+    assert persistent_rdds(spark) - before == {checkpoint.rdd().id()}
+    assert {r["id"]: r["component"] for r in labels.collect()} == seq_components(PATH5)
+
+
+def test_bench_contract(spark, monkeypatch):
+    """What perfbench reads off the engine: every traced binding resolves,
+    and components calls its module's ``swap_observed`` once per superstep
+    (the graph_suite ``supersteps`` count)."""
+    import importlib
+
+    import graftlouvain.operators.components as cc
+    from perfbench.trace import TRACED
+
+    for mod, path, _ in TRACED:
+        obj = importlib.import_module(mod)
+        for attr in path.split("."):
+            obj = getattr(obj, attr)
+        assert callable(obj), (mod, path)
+
+    real, calls = cc.swap_observed, []
+
+    def counted(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(cc, "swap_observed", counted)
+    g = LinkGraph.from_edges(to_df(spark, PATH5))
+    assert {r["component"] for r in components(g).collect()} == {0}
+    # 0-1-2-3-4: four rounds lower vertex 4's label, then one quiet round
+    assert len(calls) == 5
 
 
 @pytest.mark.parametrize("edges", [FIXTURE_28_W, TWO_COMP], ids=["fixture28", "twocomp"])

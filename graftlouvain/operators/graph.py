@@ -21,8 +21,7 @@ single shuffle on (src,dst) with map-side partial aggregation; the follow-up
 so Louvain/PageRank/CC/LPA supersteps shuffle only their *small* state tables.
 Hub skew in the degree aggregation is handled by map-side combine (hash
 aggregate); the join side of skew is covered by AQE skew-join (enabled in
-session.py) plus the optional salted two-stage aggregation in
-``graftlouvain.functions.skew``.
+session.py) and, inside the Louvain superstep, by its salted edge⋈state join.
 """
 
 from __future__ import annotations

@@ -10,9 +10,10 @@ default — improving moves apply unless the target community is itself losing
 a preliminary mover AND target > cur; ``"parity"`` = the r2-r4 even/odd
 direction gate), same strict-gain rule, same level termination (one quiet
 superstep for the step-independent conflict gate, a quiet even+odd pair for
-parity), same coarsening and min-q-gain level loop. Arithmetic uses the same
-f64 formula ``k_ic - tot' * k_i / S`` so that with integer-valued weights the
-comparisons are bit-identical to Spark's.
+parity), same coarsening and min-q-gain level loop, and the same rule that a
+level whose Q is below the previous level's is never committed. Arithmetic
+uses the same f64 formula ``k_ic - tot' * k_i / S`` so that with
+integer-valued weights the comparisons are bit-identical to Spark's.
 """
 
 from __future__ import annotations
@@ -120,19 +121,6 @@ def seq_louvain_level(edges, assignments=None, max_supersteps=64, gain_eps=1e-12
     return asg, steps
 
 
-def seq_coarsen(edges, assignments):
-    """Coarse symmetrized-equivalent edge list: returns the coarse graph as an
-    UNDIRECTED input edge list reconstructed from the symmetric aggregation
-    (upper triangle + halved... no — we return the symmetric table directly as
-    directed input and mark it pre-symmetrized by consuming it with
-    _graph_tables_pre)."""
-    sym = symmetrize(edges)
-    coarse = defaultdict(float)
-    for (s, d), w in sym.items():
-        coarse[(assignments[s], assignments[d])] += w
-    return coarse  # symmetric dict, self-loops already doubled like the engine
-
-
 def _graph_tables_pre(sym):
     adj = defaultdict(dict)
     deg = defaultdict(float)
@@ -161,6 +149,9 @@ def seq_louvain(edges, max_levels=20, max_supersteps=64, gain_eps=1e-12, min_q_g
             if zero_streak >= _quiet_target(gate_mode):
                 break
         q = _q_of(cur_sym, asg)
+        if q < q_prev:  # never commit a level that lowers Q
+            q = q_prev
+            break
         global_asg = {v: asg[c] for v, c in global_asg.items()}
         if q - q_prev < min_q_gain:
             break

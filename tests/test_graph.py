@@ -5,7 +5,6 @@ import math
 
 from pyspark.sql import functions as F
 
-from graftlouvain.functions.skew import salted_collect_adjacency, salted_sum
 from graftlouvain.operators.graph import (
     LinkGraph,
     community_stats,
@@ -18,7 +17,6 @@ from tests.fixtures import (
     FIXTURE_28_W,
     FIXTURE_W5,
     FIXTURE_W5_DEGREES,
-    fixture_hub,
     to_df,
 )
 
@@ -106,22 +104,6 @@ def test_duplicate_pairs_aggregate(spark):
     g = LinkGraph.from_edges(df)
     rows = {(r["src"], r["dst"]): r["weight"] for r in g.edges.collect()}
     assert rows == {(0, 1): 7.0, (1, 0): 7.0}
-
-
-def test_salted_sum_equals_plain(spark):
-    g = LinkGraph.from_edges(to_df(spark, fixture_hub()))
-    plain = {r["id"]: r["degree"] for r in g.degrees.collect()}
-    salted = salted_sum(g.edges, ["src"], "weight", "degree", salt_buckets=8)
-    got = {r["src"]: r["degree"] for r in salted.collect()}
-    assert got == plain
-
-
-def test_salted_adjacency_complete(spark):
-    g = LinkGraph.from_edges(to_df(spark, fixture_hub()))
-    adj = salted_collect_adjacency(g.edges, salt_buckets=4)
-    row = adj.where("src = 0").first()
-    hub_nbrs = sorted(x["dst"] for x in row["adj"])
-    assert hub_nbrs == list(range(1, 33))
 
 
 def test_dense_ids_deterministic(spark):

@@ -3,6 +3,7 @@ equality (exact), modularity preservation under coarsening."""
 
 import pytest
 
+import graftlouvain.operators.louvain as lv
 from graftlouvain.operators.graph import LinkGraph, singleton_assignments
 from graftlouvain.operators.louvain import coarsen, louvain, louvain_level, modularity
 from graftlouvain.oracle.louvain_seq import (
@@ -32,6 +33,31 @@ def _canon(labels):
         rep.setdefault(c, v)
         rep[c] = min(rep[c], v)
     return {v: rep[c] for v, c in labels.items()}
+
+
+def _tiers(monkeypatch):
+    """Yield each tier of ``louvain()`` in turn, as ``LevelStats.path`` names
+    it: first the default, under which every graph here is small enough
+    for the local numpy kernel, then SQL supersteps for every level."""
+    yield "local"
+    monkeypatch.setattr(lv, "LOCAL_LEVEL_MAX_EDGES", -1)
+    yield "spark"
+
+
+def _random_edges(seed, n_max=24):
+    """Seeded Erdős–Rényi-ish weighted graph: 12..``n_max`` vertices,
+    integer weights 1-5, self-loops allowed."""
+    import random as _random
+
+    rng = _random.Random(seed)
+    n = rng.randint(12, n_max)
+    edges = []
+    for u in range(n):
+        for v in range(u, n):
+            p = 0.18 if u != v else 0.05
+            if rng.random() < p:
+                edges.append((u, v, float(rng.randint(1, 5))))
+    return edges
 
 
 def test_initial_modularity_fixture28(spark):
@@ -67,12 +93,14 @@ def test_level_labels_match_oracle(spark, edges):
     "edges", [FIXTURE_W5, FIXTURE_28_W, FIXTURE_KARATE_W, fixture_hub()],
     ids=["w5", "fixture28", "karate", "hub"],
 )
-def test_full_louvain_matches_oracle(spark, edges):
+def test_full_louvain_matches_oracle(spark, edges, monkeypatch):
     g = LinkGraph.from_edges(to_df(spark, edges))
-    result = louvain(g)
     want, q_want = seq_louvain(edges)
-    assert _labels(result.assignments) == want
-    assert result.modularity == pytest.approx(q_want, abs=1e-9)
+    for tier in _tiers(monkeypatch):
+        result = louvain(g)
+        assert {s.path for s in result.levels} == {tier}
+        assert _labels(result.assignments) == want, tier
+        assert result.modularity == pytest.approx(q_want, abs=1e-9), tier
 
 
 def test_karate_modularity_quality(spark):
@@ -215,13 +243,15 @@ def test_superstep_tot_double_exec_diagnosis(spark):
     assert not a.sameResult(b)  # the documented canonicalization gap
 
 
-def test_metrics_table(spark):
+def test_metrics_table(spark, monkeypatch):
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_W5))
-    res = louvain(g)
-    rows = res.metrics().collect()
-    assert len(rows) == sum(s.supersteps for s in res.levels)
-    assert sum(r["moves"] for r in rows) > 0
-    assert all(r["wall_ms"] >= 0 for r in rows)
+    for tier in _tiers(monkeypatch):
+        res = louvain(g)
+        rows = res.metrics().collect()
+        assert len(rows) == sum(s.supersteps for s in res.levels)
+        assert sum(r["moves"] for r in rows) > 0
+        assert all(r["wall_ms"] >= 0 for r in rows)
+        assert {r["path"] for r in rows} == {tier}
 
 
 def test_salted_move_scores_identical(spark):
@@ -278,7 +308,7 @@ def test_level_preserves_non_graph_ids(spark):
     assert set(labels) == set(_labels(asg))
 
 
-def test_random_graphs_match_oracle(spark):
+def test_random_graphs_match_oracle(spark, monkeypatch):
     """Property sweep: 6 seeded random weighted graphs (Erdős–Rényi-ish,
     12-24 vertices, integer weights 1-5, self-loops allowed) — FULL
     multi-level engine labels must equal the sequential oracle EXACTLY on
@@ -287,25 +317,69 @@ def test_random_graphs_match_oracle(spark):
     ties) where gate/tie-break bugs would actually hide. Seeded stdlib
     randomness, not hypothesis: each case costs ~2-4 s of Spark jobs, so a
     shrinking search would time out while a fixed sweep stays deterministic
-    and CI-sized."""
-    import random as _random
+    and CI-sized. Every graph runs on both tiers."""
+    cases = [(seed, _random_edges(1000 + seed)) for seed in range(6)]
+    graphs = [
+        (seed, edges, LinkGraph.from_edges(to_df(spark, edges)), seq_louvain(edges))
+        for seed, edges in cases if edges
+    ]
+    for tier in _tiers(monkeypatch):
+        for seed, edges, g, (want, q_want) in graphs:
+            result = louvain(g)
+            assert {s.path for s in result.levels} == {tier}
+            assert _labels(result.assignments) == want, f"seed {seed} {tier}"
+            assert result.modularity == pytest.approx(q_want, abs=1e-9), (
+                f"seed {seed} {tier}")
 
-    for seed in range(6):
-        rng = _random.Random(1000 + seed)
-        n = rng.randint(12, 24)
-        edges = []
-        for u in range(n):
-            for v in range(u, n):
-                p = 0.18 if u != v else 0.05
-                if rng.random() < p:
-                    edges.append((u, v, float(rng.randint(1, 5))))
-        if not edges:
-            continue
-        g = LinkGraph.from_edges(to_df(spark, edges))
-        result = louvain(g)
-        want, q_want = seq_louvain(edges)
-        assert _labels(result.assignments) == want, f"seed {seed}"
-        assert result.modularity == pytest.approx(q_want, abs=1e-9), f"seed {seed}"
+
+@pytest.mark.parametrize(
+    "seed,n_max,gate_mode", [(1003, 24, "parity"), (1000, 40, "conflict")],
+    ids=["parity-1003", "conflict-1000"],
+)
+def test_q_lowering_level_not_committed(spark, monkeypatch, seed, n_max, gate_mode):
+    """A level whose Q is below the previous level's is never committed, on
+    either tier or in the oracle: the run returns the previous assignment
+    and its Q, and keeps the rejected level's stats. On these graphs the
+    last level lowers Q (0.3404 → 0.3282 and 0.3237 → 0.239), and before
+    the rule both the engine and the oracle returned that lower Q."""
+    edges = _random_edges(seed, n_max)
+    g = LinkGraph.from_edges(to_df(spark, edges))
+    want, q_want = seq_louvain(edges, gate_mode=gate_mode)
+    assert seq_modularity(edges, want) == pytest.approx(q_want, abs=1e-12)
+    for tier in _tiers(monkeypatch):
+        r = louvain(g, gate_mode=gate_mode)
+        level_q = [s.modularity for s in r.levels]
+        assert level_q[-1] < level_q[-2], tier  # the rejected level ran
+        assert r.modularity >= max(level_q), tier
+        assert r.modularity == pytest.approx(modularity(g, r.assignments), abs=1e-12), tier
+        assert _labels(r.assignments) == want, tier
+        assert r.modularity == pytest.approx(q_want, abs=1e-9), tier
+
+
+def test_local_tier_handoff_identical(spark, monkeypatch):
+    """The SQL-to-local hand-off is invisible: on the benchmark's planted
+    seed-3 graph (levels of 14, 2 and 1 supersteps, ``min_moves_frac`` 0.02)
+    all-local, SQL level 0 then local, and all-SQL runs give identical
+    labels, Q, and per-level superstep and move counts."""
+    from perfbench.inputs import planted_edges
+
+    t = planted_edges(3, n_edges=20_000, n_blocks=20, block_size=100, p_out=0.05)
+    g = LinkGraph.from_edges(spark.createDataFrame(t.to_pandas()))
+    runs = {}
+    for threshold in (lv.LOCAL_LEVEL_MAX_EDGES, 10_000, -1):
+        monkeypatch.setattr(lv, "LOCAL_LEVEL_MAX_EDGES", threshold)
+        r = louvain(g, min_moves_frac=0.02)
+        runs[threshold] = (
+            _labels(r.assignments), r.modularity,
+            [(s.supersteps, s.moves) for s in r.levels], [s.path for s in r.levels],
+        )
+    local, handoff, sql = runs.values()
+    assert g.stats.num_directed_edges > 10_000
+    assert [n for n, _ in local[2]] == [14, 2, 1]
+    assert local[3] == ["local"] * 3
+    assert handoff[3] == ["spark", "local", "local"]
+    assert sql[3] == ["spark"] * 3
+    assert local[:3] == handoff[:3] == sql[:3]
 
 
 def test_fused_conflict_superstep_plan_shape(spark):
@@ -414,3 +488,20 @@ def test_concurrent_levels_share_session(spark):
         for k, v in conf.items():
             spark.conf.set(k, v)
     assert got == serial
+
+
+def test_weak_planted_level_not_committed(spark):
+    """The weak-structure planted graph (20k vertices, 372,842 directed
+    edges, ``min_moves_frac`` 0.02): level 1 churns to the superstep cap and
+    ends at Q 0.058, far below level 0's 0.780. The result keeps level 0's
+    partition and Q instead of that collapse (local tier; about 3 s)."""
+    from perfbench.inputs import planted_edges
+
+    t = planted_edges(1, 200_000, 200, 100, 0.2)
+    g = LinkGraph.from_edges(spark.createDataFrame(t.to_pandas()))
+    r = louvain(g, min_moves_frac=0.02)
+    assert [s.path for s in r.levels] == ["local", "local"]
+    level_q = [s.modularity for s in r.levels]
+    assert level_q[1] < 0.1 < 0.7 < level_q[0]
+    assert r.modularity == level_q[0]
+    assert r.modularity == pytest.approx(modularity(g, r.assignments), abs=1e-12)

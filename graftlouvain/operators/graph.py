@@ -22,16 +22,31 @@ so Louvain/PageRank/CC/LPA supersteps shuffle only their *small* state tables.
 Hub skew in the degree aggregation is handled by map-side combine (hash
 aggregate); the join side of skew is covered by AQE skew-join (enabled in
 session.py) and, inside the Louvain superstep, by its salted edge⋈state join.
+
+Small graphs leave Spark: :meth:`LinkGraph.local_edges` collects a graph with
+at most ``LOCAL_MAX_EDGES`` directed edges once, as compacted numpy arrays,
+for the driver-side kernels of Louvain and PageRank.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graftlouvain.schemas import conform_edges
+
+# A graph with at most this many directed edges runs Louvain (from that level
+# on) and PageRank in driver-side numpy kernels instead of as SQL supersteps.
+# Measured on local[4] (4-vCPU box), same graphs on both paths:
+#   372,842 edges:   108 ms per Louvain kernel superstep vs 1,471 ms per SQL
+#                    superstep (median), toPandas 0.54 s;
+#   1,813,492 edges: 324 ms vs 4,516 ms, toPandas 0.95 s;
+#   35,236 edges:    pagerank(n_iter=10) 0.24 s vs 4.15 s, collect included.
+# At 2^20 edges the driver holds ~25 MB of edge columns.
+LOCAL_MAX_EDGES = 1 << 20
 
 
 @dataclass
@@ -193,6 +208,18 @@ class LinkGraph:
     def two_m(self) -> float:
         """Textbook 2m = Σ degrees = Σ symmetrized weights."""
         return self.stats.total_weight
+
+    def local_edges(self) -> tuple[np.ndarray, ...] | None:
+        """``(ids, s, d, w)``: the edge table collected once through Arrow,
+        with vertex ids compacted to indices into the sorted ``ids`` (so the
+        smallest index is the smallest id); ``None`` above
+        ``LOCAL_MAX_EDGES`` directed edges."""
+        if self.stats.num_directed_edges > LOCAL_MAX_EDGES:
+            return None
+        e = self.edges.toPandas()
+        ids, s = np.unique(e["src"].to_numpy(), return_inverse=True)
+        d = np.searchsorted(ids, e["dst"].to_numpy())
+        return ids, s, d, e["weight"].to_numpy(dtype=np.float64)
 
     def neighbors_of(self, vertex_id: int) -> DataFrame:
         """A2 neighbors(v) (graph.rs:402-407) — test/debug helper only; hot

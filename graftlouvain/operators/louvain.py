@@ -1,5 +1,5 @@
 """Multi-level Louvain as bulk-synchronous supersteps (SURVEY.md §2d/§2e): one
-SQL superstep, plus its numpy twin for levels below ``LOCAL_LEVEL_MAX_EDGES``.
+SQL superstep, plus its numpy twin for levels below ``graph.LOCAL_MAX_EDGES``.
 
 The reference's per-vertex move phase is a literal ``todo!()``
 (/root/reference/src/louvain/communities.rs:74); its semantics are
@@ -66,20 +66,22 @@ ONE materialization per superstep and the move count is an Observation over
 it.
 
 LOCAL TIER: at the top of each level of :func:`louvain`, a level graph with
-at most ``LOCAL_LEVEL_MAX_EDGES`` directed edges is collected ONCE to the
-driver through Arrow (``toPandas``), and that level and every later one run
-in :func:`_local_levels`: supersteps, coarsening, per-level Q and every stop
+at most ``graph.LOCAL_MAX_EDGES`` directed edges is collected ONCE to the
+driver by :meth:`LinkGraph.local_edges` (the helper and threshold PageRank's
+local tier shares), and that level and every later one run in
+:func:`_local_levels`: supersteps, coarsening, per-level Q and every stop
 rule, as numpy array operations. Coarse graphs only shrink, so once a level
 is local every later level is too; large graphs keep SQL level 0 and their
 coarse levels go local. One ``createDataFrame`` join unwinds the labels. The
 kernel is a port of :func:`_superstep_cte` and :func:`louvain_level`, not a
-redesign: ids are compacted with ``np.unique`` (sorted, so the smallest-id
+redesign: ids arrive compacted in sorted order (so the smallest-id
 tie-break holds), candidates come from non-self-loop edges, the stay score
 is analytic, and the score is evaluated in the statement's operation order.
 It runs on the driver rather than in an ``applyInPandas`` task: below the
 threshold all edges land in one task either way, and ``applyInPandas``
 would add a one-partition shuffle and a Python worker and would have to
-pass per-level stats back through its output schema.
+pass per-level stats back through its output schema. On a graph with no
+weight (S = 0) both tiers keep every vertex where it is.
 
 Both tiers give identical labels, Q and per-level superstep and move counts
 whenever the weights are integer-valued below 2^53 (every sum is then exact
@@ -169,15 +171,6 @@ def singleton_modularity(graph: LinkGraph, reference_convention: bool = False) -
 # Coarse levels rebuild their edge cache at ~this many rows per partition
 # (and scope spark.sql.shuffle.partitions down to match); see louvain().
 COARSE_SHRINK_TARGET_ROWS = 32_768
-
-# A level with at most this many directed edges, and every level after it,
-# runs in the driver-side numpy kernel (_local_levels) instead of as SQL
-# supersteps. Measured on local[4] (4-vCPU box), same graphs on both paths:
-#   372,842 edges:   108 ms per kernel superstep vs 1,471 ms per SQL
-#                    superstep (median), toPandas 0.54 s;
-#   1,813,492 edges: 324 ms vs 4,516 ms, toPandas 0.95 s.
-# At 2^20 edges the driver holds ~25 MB of edge columns.
-LOCAL_LEVEL_MAX_EDGES = 1 << 20
 
 SKEW_SALT_MIN_DEGREE = 100_000
 SKEW_SALT_RATIO = 32.0
@@ -459,6 +452,8 @@ def _superstep_views(graph: LinkGraph, gain_eps: float, gate_mode: str):
     salt = _auto_salt(graph)
 
     def run(state: DataFrame, step: int) -> DataFrame:
+        if graph.two_m == 0:  # no weight, no gain: stay put, as the kernel does
+            return state.select("id", "community", "k_i", F.lit(0).alias("_moved"))
         state.createOrReplaceTempView(st_view)
         return spark.sql(_superstep_cte(e_view, st_view, step, S, EPS, gate_mode, salt))
 
@@ -679,18 +674,15 @@ def _local_level(s, d, w, n, level, max_supersteps, gain_eps, min_moves_frac, ga
 
 
 def _local_levels(
-    edges: pd.DataFrame, first_level: int, max_levels: int, q_prev: float,
+    ids: np.ndarray, s: np.ndarray, d: np.ndarray, w: np.ndarray,
+    first_level: int, max_levels: int, q_prev: float,
     max_supersteps: int, gain_eps: float, min_q_gain: float,
     min_moves_frac: float, gate_mode: str,
-) -> tuple[np.ndarray, np.ndarray, float, list]:
-    """Run levels ``first_level``.. of :func:`louvain` on the collected
-    symmetric edge table [src, dst, weight] of the level graph: supersteps,
-    coarsening, per-level Q and the same stop rules. Returns the level
-    graph's vertex ids, the community id each ends in, Q and the levels'
-    :class:`LevelStats`."""
-    ids, s = np.unique(edges["src"].to_numpy(), return_inverse=True)
-    d = np.searchsorted(ids, edges["dst"].to_numpy())
-    w = edges["weight"].to_numpy(dtype=np.float64)
+) -> tuple[np.ndarray, float, list]:
+    """Run levels ``first_level``.. of :func:`louvain` on the level graph
+    collected by :meth:`LinkGraph.local_edges`: supersteps, coarsening,
+    per-level Q and the same stop rules. Returns the community id each of
+    ``ids`` ends in, Q and the levels' :class:`LevelStats`."""
     label = np.arange(len(ids))  # first-level vertex -> committed level vertex
     vid = np.arange(len(ids))  # committed level vertex -> first-level vertex
     levels: list[LevelStats] = []
@@ -718,7 +710,7 @@ def _local_levels(
         if q - q_prev < min_q_gain or m <= 1:
             break
         q_prev = q
-    return ids, ids[vid[label]], q, levels
+    return ids[vid[label]], q, levels
 
 
 @dataclass
@@ -787,7 +779,7 @@ def louvain(
     :class:`LevelStats` stays in ``levels``.
 
     Without a ``checkpointer``, the first level with at most
-    ``LOCAL_LEVEL_MAX_EDGES`` directed edges and every level after it run in
+    ``graph.LOCAL_MAX_EDGES`` directed edges and every level after it run in
     the driver-side numpy kernel (module docstring, LOCAL TIER);
     ``LevelStats.path`` records which tier ran each level.
     ``gate_mode`` selects the oscillation gate ("conflict" default, "parity"
@@ -872,16 +864,17 @@ def louvain(
     p_orig = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         for level in range(start_level, max_levels):
-            if checkpointer is None and cur.stats.num_directed_edges <= LOCAL_LEVEL_MAX_EDGES:
+            edges = cur.local_edges() if checkpointer is None else None
+            if edges is not None:
                 # coarse graphs only shrink: this level and every later one
                 # run in the kernel, then one join unwinds them all
-                ids, labels, q, local = _local_levels(
-                    cur.edges.toPandas(), level, max_levels, q_prev,
+                labels, q, local = _local_levels(
+                    *edges, level, max_levels, q_prev,
                     max_supersteps, gain_eps, min_q_gain, min_moves_frac, gate_mode,
                 )
                 level_stats += local
                 global_asg = _unwind(global_asg, spark.createDataFrame(
-                    pd.DataFrame({"community": ids, "_new": labels}),
+                    pd.DataFrame({"community": edges[0], "_new": labels}),
                     "community long, _new long",
                 ))
                 break

@@ -2,19 +2,32 @@
 reference code; semantics from Brin & Page 1998 / the standard power
 iteration).
 
-r_{t+1}(v) = (1−α)/V + α · ( Σ_{u→v} r_t(u)·w(u,v)/outw(u) + dangling_t/V )
+r_{t+1}(v) = (1−α)/V + α · Σ_{u→v} r_t(u)·w(u,v)/outw(u)
 
-On a symmetrized LinkGraph every vertex with an edge has out-weight > 0, so
-dangling mass is zero; the term is kept for generality (directed callers).
+A vertex with out-weight 0 (every edge of weight 0) gives each edge share 0:
+its rank mass is not redistributed, so the ranks then sum to less than 1.
+On a symmetrized graph with positive weights every vertex has out-weight
+> 0 and the ranks sum to 1.
 
 Scale: per iteration one join (ranks ⋈ edges, co-partitioned on src because
 LinkGraph.edges is hash-partitioned on src and ranks are repartitioned
 likewise once) + one groupBy(dst) shuffle. Convergence tested by an L1-delta
 aggregation; lineage cut via localCheckpoint per iteration.
+
+LOCAL TIER: a graph with at most ``graph.LOCAL_MAX_EDGES`` directed edges is
+collected once by :meth:`LinkGraph.local_edges` (the helper and threshold
+Louvain's local tier shares) and iterated on the driver by
+:func:`_local_pagerank`, a port of the SQL loop: the same ``base``/``alpha``
+arithmetic, reset vector and ``tol`` rule. Its ranks come back through one
+``swap``, so either tier returns one loop-owned checkpoint. The tiers sum
+each vertex's incoming mass in different orders, so ranks can differ in the
+last ulps.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,10 +50,12 @@ def pagerank(
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Returns [id, rank]. ``n_iter`` forces exactly that many iterations
-    (no convergence test) — used by the fixed-iteration SQL oracle. Every
-    iteration is one materialization; on the convergence path the L1 delta
-    rides it as an Observation over a carried |new − old| column instead of
-    a separate old⋈new join + aggregate job per iteration.
+    (no convergence test) — used by the fixed-iteration SQL oracle. A graph
+    with at most ``graph.LOCAL_MAX_EDGES`` directed edges runs in the local
+    tier (module docstring). On the SQL tier every iteration is one
+    materialization; on the convergence path the L1 delta rides it as an
+    Observation over a carried |new − old| column instead of a separate
+    old⋈new join + aggregate job per iteration.
 
     ``seeds`` ([id]) switches to PERSONALIZED PageRank (Haveliwala 2002 /
     the random-walk-with-restart form): the teleport mass (1−α) is split
@@ -50,8 +65,24 @@ def pagerank(
     V = graph.stats.num_vertices
     if V == 0:
         return graph.vertices.select("id", F.lit(0.0).alias("rank"))
-    out_w = graph.degrees.select(F.col("id").alias("src"), F.col("degree").alias("out_w"))
     spark = graph.edges.sparkSession
+    local = graph.local_edges()
+    if local is not None:
+        ids, s, d, w = local
+        if seeds is None:
+            reset, start = np.full(V, (1.0 - alpha) / V), np.full(V, 1.0 / V)
+        else:
+            on = np.isin(ids, seeds.select(seeds.columns[0]).toPandas().iloc[:, 0])
+            n_seeds = int(on.sum())
+            if n_seeds == 0:
+                raise ValueError("personalized pagerank requires a non-empty seed set")
+            reset = np.where(on, (1.0 - alpha) / n_seeds, 0.0)
+            start = np.where(reset > 0, 1.0 / n_seeds, 0.0)
+        ranks, _ = _local_pagerank(s, d, w, reset, start, alpha, tol, max_iter, n_iter)
+        return swap(None, spark.createDataFrame(
+            pd.DataFrame({"id": ids, "rank": ranks}), "id long, rank double"
+        ))
+    out_w = graph.degrees.select(F.col("id").alias("src"), F.col("degree").alias("out_w"))
     if seeds is not None:
         # seeds outside the graph carry no walk mass — intersect first so the
         # teleport normalizer matches the effective seed set
@@ -126,7 +157,9 @@ def pagerank(
         # build — the regime that actually matters at 100 TB.
         nonlocal shares
         shares = graph.edges.join(out_w, "src").select(
-            "src", "dst", (F.col("weight") / F.col("out_w")).alias("share")
+            "src", "dst",
+            F.when(F.col("out_w") > 0, F.col("weight") / F.col("out_w"))
+            .otherwise(F.lit(0.0)).alias("share"),
         )
         if broadcast_regime(spark, V):
             shares = shares.repartition(p_session, "dst")
@@ -149,3 +182,22 @@ def pagerank(
         ranks, _ = fixpoint(spark, V, init, converging_step, max_iter, lambda d: d < tol)
     shares.unpersist()
     return ranks
+
+
+def _local_pagerank(s, d, w, reset, rank, alpha, tol, max_iter, n_iter):
+    """numpy twin of :func:`pagerank`'s SQL loop over compacted vertex
+    indices: ``rank ← reset + α·mass`` with the same shares, for ``n_iter``
+    steps, or until ``Σ|new − old| < tol`` after a step (``fixpoint``'s
+    rule), at most ``max_iter``. Returns the ranks and the steps run."""
+    n = len(rank)
+    out_w = np.bincount(s, weights=w, minlength=n)[s]
+    share = np.divide(w, out_w, out=np.zeros_like(w), where=out_w > 0)
+    steps = n_iter if n_iter is not None else max_iter
+    i = 0
+    while i < steps:
+        new = reset + alpha * np.bincount(d, weights=rank[s] * share, minlength=n)
+        delta = float(np.abs(new - rank).sum())
+        rank, i = new, i + 1
+        if n_iter is None and delta < tol:
+            break
+    return rank, i

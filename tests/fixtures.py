@@ -73,3 +73,18 @@ def to_df(spark, edges):
     """Edge list → DataFrame[src long, dst long, weight double]."""
     rows = [(int(s), int(d), float(w)) for s, d, w in edges]
     return spark.createDataFrame(rows, "src long, dst long, weight double")
+
+
+def tiers(monkeypatch):
+    """Yield each tier of the iterative operators in turn, as
+    ``LevelStats.path`` names it: first the default, under which every graph
+    here is small enough for the local numpy kernels, then SQL supersteps
+    throughout (``LOCAL_MAX_EDGES`` = −1). A loop that runs to its end
+    restores the default."""
+    import graftlouvain.operators.graph as graph_mod
+
+    default = graph_mod.LOCAL_MAX_EDGES
+    yield "local"
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    yield "spark"
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", default)

@@ -3,7 +3,7 @@ equality (exact), modularity preservation under coarsening."""
 
 import pytest
 
-import graftlouvain.operators.louvain as lv
+import graftlouvain.operators.graph as graph_mod
 from graftlouvain.operators.graph import LinkGraph, singleton_assignments
 from graftlouvain.operators.louvain import coarsen, louvain, louvain_level, modularity
 from graftlouvain.oracle.louvain_seq import (
@@ -17,6 +17,7 @@ from tests.fixtures import (
     FIXTURE_KARATE_W,
     FIXTURE_W5,
     fixture_hub,
+    tiers,
     to_df,
 )
 
@@ -33,15 +34,6 @@ def _canon(labels):
         rep.setdefault(c, v)
         rep[c] = min(rep[c], v)
     return {v: rep[c] for v, c in labels.items()}
-
-
-def _tiers(monkeypatch):
-    """Yield each tier of ``louvain()`` in turn, as ``LevelStats.path`` names
-    it: first the default, under which every graph here is small enough
-    for the local numpy kernel, then SQL supersteps for every level."""
-    yield "local"
-    monkeypatch.setattr(lv, "LOCAL_LEVEL_MAX_EDGES", -1)
-    yield "spark"
 
 
 def _random_edges(seed, n_max=24):
@@ -96,7 +88,7 @@ def test_level_labels_match_oracle(spark, edges):
 def test_full_louvain_matches_oracle(spark, edges, monkeypatch):
     g = LinkGraph.from_edges(to_df(spark, edges))
     want, q_want = seq_louvain(edges)
-    for tier in _tiers(monkeypatch):
+    for tier in tiers(monkeypatch):
         result = louvain(g)
         assert {s.path for s in result.levels} == {tier}
         assert _labels(result.assignments) == want, tier
@@ -245,7 +237,7 @@ def test_superstep_tot_double_exec_diagnosis(spark):
 
 def test_metrics_table(spark, monkeypatch):
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_W5))
-    for tier in _tiers(monkeypatch):
+    for tier in tiers(monkeypatch):
         res = louvain(g)
         rows = res.metrics().collect()
         assert len(rows) == sum(s.supersteps for s in res.levels)
@@ -323,7 +315,7 @@ def test_random_graphs_match_oracle(spark, monkeypatch):
         (seed, edges, LinkGraph.from_edges(to_df(spark, edges)), seq_louvain(edges))
         for seed, edges in cases if edges
     ]
-    for tier in _tiers(monkeypatch):
+    for tier in tiers(monkeypatch):
         for seed, edges, g, (want, q_want) in graphs:
             result = louvain(g)
             assert {s.path for s in result.levels} == {tier}
@@ -346,7 +338,7 @@ def test_q_lowering_level_not_committed(spark, monkeypatch, seed, n_max, gate_mo
     g = LinkGraph.from_edges(to_df(spark, edges))
     want, q_want = seq_louvain(edges, gate_mode=gate_mode)
     assert seq_modularity(edges, want) == pytest.approx(q_want, abs=1e-12)
-    for tier in _tiers(monkeypatch):
+    for tier in tiers(monkeypatch):
         r = louvain(g, gate_mode=gate_mode)
         level_q = [s.modularity for s in r.levels]
         assert level_q[-1] < level_q[-2], tier  # the rejected level ran
@@ -354,6 +346,24 @@ def test_q_lowering_level_not_committed(spark, monkeypatch, seed, n_max, gate_mo
         assert r.modularity == pytest.approx(modularity(g, r.assignments), abs=1e-12), tier
         assert _labels(r.assignments) == want, tier
         assert r.modularity == pytest.approx(q_want, abs=1e-9), tier
+
+
+def test_zero_weight_graph_keeps_singletons(spark, monkeypatch):
+    """On a graph whose weights are all 0 (S = 0) no move can gain: both
+    tiers return singletons at Q 0 with the same supersteps and moves, under
+    both gates. The SQL statement used to divide by S and raise
+    DIVIDE_BY_ZERO."""
+    edges = [(0, 1, 0.0), (1, 2, 0.0), (0, 2, 0.0), (2, 3, 0.0)]
+    g = LinkGraph.from_edges(to_df(spark, edges))
+    runs = []
+    for tier in tiers(monkeypatch):
+        for gate_mode in ("conflict", "parity"):
+            r = louvain(g, gate_mode=gate_mode)
+            assert _labels(r.assignments) == {v: v for v in range(4)}, tier
+            assert r.modularity == 0.0, tier
+            assert [s.path for s in r.levels] == [tier]
+            runs.append((gate_mode, [(s.supersteps, s.moves) for s in r.levels]))
+    assert runs == [("conflict", [(1, [0])]), ("parity", [(2, [0, 0])])] * 2
 
 
 def test_local_tier_handoff_identical(spark, monkeypatch):
@@ -366,8 +376,8 @@ def test_local_tier_handoff_identical(spark, monkeypatch):
     t = planted_edges(3, n_edges=20_000, n_blocks=20, block_size=100, p_out=0.05)
     g = LinkGraph.from_edges(spark.createDataFrame(t.to_pandas()))
     runs = {}
-    for threshold in (lv.LOCAL_LEVEL_MAX_EDGES, 10_000, -1):
-        monkeypatch.setattr(lv, "LOCAL_LEVEL_MAX_EDGES", threshold)
+    for threshold in (graph_mod.LOCAL_MAX_EDGES, 10_000, -1):
+        monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", threshold)
         r = louvain(g, min_moves_frac=0.02)
         runs[threshold] = (
             _labels(r.assignments), r.modularity,

@@ -3,7 +3,7 @@ labels/components exact, scores allclose 1e-6 (BASELINE.json:6)."""
 
 import pytest
 
-from graftlouvain.operators.components import components, components_star
+from graftlouvain.operators.components import components
 from graftlouvain.operators.graph import LinkGraph
 from graftlouvain.operators.labelprop import label_propagation
 from graftlouvain.operators.pagerank import pagerank
@@ -15,7 +15,14 @@ from graftlouvain.oracle.graphs import (
     seq_triangles,
 )
 
-from tests.fixtures import FIXTURE_28_W, FIXTURE_KARATE_W, FIXTURE_W5, fixture_hub, to_df
+from tests.fixtures import (
+    FIXTURE_28_W,
+    FIXTURE_KARATE_W,
+    FIXTURE_W5,
+    fixture_hub,
+    tiers,
+    to_df,
+)
 
 ALL = [FIXTURE_W5, FIXTURE_28_W, FIXTURE_KARATE_W, fixture_hub()]
 IDS = ["w5", "fixture28", "karate", "hub"]
@@ -24,29 +31,64 @@ IDS = ["w5", "fixture28", "karate", "hub"]
 TWO_COMP = [(0, 1, 1.0), (1, 2, 1.0), (0, 2, 1.0), (10, 11, 1.0), (11, 12, 1.0)]
 
 
+def _pagerank_tiers(monkeypatch, g, **kwargs):
+    """Run ``pagerank(g, **kwargs)`` on each tier: {tier: (ranks, steps)},
+    where ``steps`` counts the iterations the tier ran."""
+    import graftlouvain.operators.pagerank as pr
+
+    steps = []
+    real_fixpoint, real_local = pr.fixpoint, pr._local_pagerank
+
+    def fixpoint(*args, **kw):
+        state, records = real_fixpoint(*args, **kw)
+        steps.append(len(records))
+        return state, records
+
+    def local(*args):
+        ranks, n = real_local(*args)
+        steps.append(n)
+        return ranks, n
+
+    monkeypatch.setattr(pr, "fixpoint", fixpoint)
+    monkeypatch.setattr(pr, "_local_pagerank", local)
+    runs = {}
+    for tier in tiers(monkeypatch):
+        ranks = {r["id"]: r["rank"] for r in pagerank(g, **kwargs).collect()}
+        runs[tier] = (ranks, steps.pop())
+    return runs
+
+
+def _assert_tiers_agree(runs):
+    (local, n_local), (sql, n_sql) = runs["local"], runs["spark"]
+    assert n_local == n_sql
+    assert set(local) == set(sql)
+    assert max(abs(local[v] - sql[v]) for v in sql) <= 1e-12
+
+
 @pytest.mark.parametrize("edges", ALL + [TWO_COMP], ids=IDS + ["twocomp"])
-def test_pagerank_matches_oracle(spark, edges):
+def test_pagerank_matches_oracle(spark, edges, monkeypatch):
+    """Both tiers match the oracle, agree to 1e-12 and stop the tol path
+    after the same number of iterations."""
     g = LinkGraph.from_edges(to_df(spark, edges))
-    got = {r["id"]: r["rank"] for r in pagerank(g, tol=1e-12).collect()}
     want = seq_pagerank(edges, tol=1e-12)
-    assert set(got) == set(want)
-    for v in want:
-        assert got[v] == pytest.approx(want[v], abs=1e-6)
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-6)
+    runs = _pagerank_tiers(monkeypatch, g, tol=1e-12)
+    for tier, (got, _) in runs.items():
+        assert set(got) == set(want), tier
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-6), tier
+        assert sum(got.values()) == pytest.approx(1.0, abs=1e-6), tier
+    _assert_tiers_agree(runs)
 
 
-def test_personalized_pagerank_matches_python(spark):
+def test_personalized_pagerank_matches_python(spark, monkeypatch):
     """PPR (random walk with restart, seed-restricted teleport) vs a direct
-    Python power iteration on karate; seeds outside the graph are ignored in
-    the normalizer."""
+    Python power iteration on karate, on both tiers; seeds outside the graph
+    are ignored in the normalizer."""
     edges = FIXTURE_KARATE_W
     g = LinkGraph.from_edges(to_df(spark, edges))
     seeds = [0, 33, 999]  # 999 is not a vertex — must not affect mass
     seed_df = spark.createDataFrame([(s,) for s in seeds], "id long")
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank(g, alpha=0.85, n_iter=10, seeds=seed_df).collect()
-    }
+    runs = _pagerank_tiers(monkeypatch, g, alpha=0.85, n_iter=10, seeds=seed_df)
     # python twin
     nbrs, w = {}, {}
     for a, b, wt in edges:
@@ -67,10 +109,75 @@ def test_personalized_pagerank_matches_python(spark):
             v: (0.15 / len(s_eff) if v in s_eff else 0.0) + 0.85 * mass[v]
             for v in vs
         }
-    assert set(got) == vs
-    for v in vs:
-        assert got[v] == pytest.approx(rank[v], abs=1e-6)
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-6)
+    for tier, (got, n) in runs.items():
+        assert set(got) == vs, tier
+        for v in vs:
+            assert got[v] == pytest.approx(rank[v], abs=1e-6), tier
+        assert sum(got.values()) == pytest.approx(1.0, abs=1e-6), tier
+        assert n == 10, tier
+    _assert_tiers_agree(runs)
+
+
+def test_personalized_pagerank_empty_seeds(spark, monkeypatch):
+    """A seed set with no graph vertex raises the same error on both tiers."""
+    g = LinkGraph.from_edges(to_df(spark, TWO_COMP))
+    seed_df = spark.createDataFrame([(999,)], "id long")
+    for tier in tiers(monkeypatch):
+        with pytest.raises(ValueError, match="non-empty seed set"):
+            pagerank(g, n_iter=10, seeds=seed_df)
+
+
+def test_pagerank_zero_out_weight_vertex(spark, monkeypatch):
+    """A vertex whose edges all weigh 0 gives share 0 instead of dividing by
+    its zero out-weight (the SQL tier used to raise DIVIDE_BY_ZERO). On both
+    paths both tiers give equal finite ranks; that vertex keeps only the
+    teleport term, and its mass is not redistributed. An all-zero triangle
+    keeps only teleport mass everywhere."""
+    import math
+
+    edges = [(0, 1, 1.0), (1, 2, 1.0), (0, 2, 1.0), (2, 3, 0.0),
+             (10, 11, 0.0), (11, 12, 0.0), (10, 12, 0.0)]
+    g = LinkGraph.from_edges(to_df(spark, edges))
+    for kwargs in ({"n_iter": 10, "alpha": 0.85}, {"tol": 1e-6, "alpha": 0.5}):
+        base = (1.0 - kwargs["alpha"]) / 7
+        runs = _pagerank_tiers(monkeypatch, g, **kwargs)
+        for tier, (got, _) in runs.items():
+            assert all(math.isfinite(r) for r in got.values()), tier
+            assert [got[v] for v in (3, 10, 11, 12)] == [base] * 4, tier
+            assert sum(got.values()) < 1.0, tier
+        _assert_tiers_agree(runs)
+
+
+def test_pagerank_local_tier_is_one_checkpoint(spark, monkeypatch):
+    """On karate a default ``pagerank(n_iter=10)`` runs locally and returns
+    one loop-owned checkpoint: one ``swap`` through pagerank's own binding,
+    one materialization in all. With the threshold at −1 the SQL tier swaps
+    once per iteration there, and materializes 11 states: the start state
+    (through ``fixpoint``'s swap) and one per iteration."""
+    import graftlouvain.functions.iterate as it
+    import graftlouvain.operators.pagerank as pr
+
+    swaps, mats = [], []
+    real_swap, real_mat = pr.swap, it.materialize
+
+    def swap(old, new):
+        swaps.append(1)
+        return real_swap(old, new)
+
+    def materialize(df):
+        mats.append(1)
+        return real_mat(df)
+
+    monkeypatch.setattr(pr, "swap", swap)
+    monkeypatch.setattr(it, "materialize", materialize)
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    counts = {}
+    for tier in tiers(monkeypatch):
+        swaps.clear()
+        mats.clear()
+        assert pagerank(g, n_iter=10).count() == g.stats.num_vertices
+        counts[tier] = (len(swaps), len(mats))
+    assert counts == {"local": (1, 1), "spark": (10, 11)}
 
 
 def test_pagerank_regime_decides_partitions_and_layout(spark, monkeypatch):
@@ -79,8 +186,10 @@ def test_pagerank_regime_decides_partitions_and_layout(spark, monkeypatch):
     and lays the shares table out by dst; once the broadcast threshold drops
     below 48 B per vertex it keeps the session's partition count AND the src
     layout. Ranks match the oracle either way."""
+    import graftlouvain.operators.graph as graph_mod
     import graftlouvain.operators.pagerank as pr
 
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)  # the SQL tier's layout
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     V = g.stats.num_vertices
     want = seq_pagerank(FIXTURE_KARATE_W, n_iter=10)
@@ -183,13 +292,6 @@ def test_bench_contract(spark, monkeypatch):
     assert len(calls) == 5
 
 
-@pytest.mark.parametrize("edges", [FIXTURE_28_W, TWO_COMP], ids=["fixture28", "twocomp"])
-def test_components_star_matches(spark, edges):
-    g = LinkGraph.from_edges(to_df(spark, edges))
-    got = {r["id"]: r["component"] for r in components_star(g).collect()}
-    assert got == seq_components(edges)
-
-
 @pytest.mark.parametrize("edges", ALL, ids=IDS)
 def test_lpa_matches_oracle(spark, edges):
     g = LinkGraph.from_edges(to_df(spark, edges))
@@ -210,27 +312,3 @@ def test_karate_triangle_total(spark):
     """Known value: Zachary karate club has 45 triangles."""
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     assert triangle_count(g) == 45
-
-
-def test_components_star_random_graph(spark):
-    """Property test: large/small-star output equals min-label CC on a seeded
-    random graph with several components."""
-    import random
-    rng = random.Random(123)
-    edges = []
-    for comp_base in (0, 100, 200, 300):
-        ids = list(range(comp_base, comp_base + rng.randint(3, 25)))
-        for v in ids[1:]:
-            edges.append((rng.choice(ids[: ids.index(v)]), v, 1.0))
-    g = LinkGraph.from_edges(to_df(spark, edges))
-    got = {r["id"]: r["component"] for r in components_star(g).collect()}
-    assert got == seq_components(edges)
-
-
-def test_components_star_path_graph(spark):
-    """Worst case for min-label propagation (diameter = V); large/small-star
-    must still produce exact min-id components in O(log V) rounds."""
-    edges = [(i, i + 1, 1.0) for i in range(63)] + [(100, 101, 1.0)]
-    g = LinkGraph.from_edges(to_df(spark, edges))
-    got = {r["id"]: r["component"] for r in components_star(g, max_iter=16).collect()}
-    assert got == seq_components(edges)

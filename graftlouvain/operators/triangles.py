@@ -6,14 +6,29 @@ Edges are oriented from the lower (degree, id) endpoint to the higher one —
 the key trick that bounds wedge fan-out by O(sqrt(E)) per vertex and defuses
 hub skew: a hub's wedges are only built over its FEW higher-degree neighbors.
 Triangles = oriented wedges (a→b, b→c) closed by oriented edge (a→c).
+
+LOCAL TIER: a graph with at most ``graph.LOCAL_MAX_EDGES`` directed edges is
+collected once by :meth:`LinkGraph.local_edges` (the helper and threshold
+Louvain and PageRank share) and counted on the driver by
+:func:`_local_triangles`, the same oriented-wedge work as one vectorized
+task. It orients by (unweighted degree, id), a strict integer order, so
+weights (NaN included) never decide an orientation; counts do not depend on
+the orientation, so both tiers give identical integers. Wedges are expanded
+in chunks of at most ``LOCAL_MAX_EDGES``, so driver memory is O(E + chunk)
+whatever the wedge count. Measured on local[4] (4-vCPU box):
+``triangles_per_vertex`` on the ~35k-edge ``graph_suite`` graphs 0.19-0.28 s
+vs 1.39-2.04 s in SQL, and on K₁₀₂₄ (1,047,552 edges, 178M oriented wedges)
+9.2 s vs 24.2 s, digest included. :func:`triangle_list` stays on SQL.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graftlouvain.operators.graph import LinkGraph
+from graftlouvain.operators.graph import LOCAL_MAX_EDGES, LinkGraph
 
 
 def _oriented(graph: LinkGraph) -> DataFrame:
@@ -97,7 +112,54 @@ def triangle_list(graph: LinkGraph) -> DataFrame:
     )
 
 
+def _local_triangles(ids, s, d, w, chunk: int = LOCAL_MAX_EDGES) -> np.ndarray:
+    """Per-vertex triangle counts (``int64``, aligned with ``ids``) of the
+    compacted edge arrays of :meth:`LinkGraph.local_edges`. ``w`` is
+    ignored: weights never change a count. Each undirected pair is taken
+    once (``s < d``, which drops self-loops) and oriented from the lower
+    (unweighted degree, index) endpoint to the higher; every oriented wedge
+    x→y→z is tested for its closing edge x→z, ``chunk`` wedges at a time."""
+    n = len(ids)
+    a, b = s[s < d], d[s < d]
+    deg = np.bincount(np.concatenate([a, b]), minlength=n)
+    key = deg * n + np.arange(n)
+    fwd = key[a] < key[b]
+    # oriented edges sorted by x·n + y: the CSR rows and the closing-edge keys
+    edge_key = np.sort(np.where(fwd, a, b) * n + np.where(fwd, b, a))
+    x, y = edge_key // n, edge_key % n
+    out_deg = np.bincount(x, minlength=n)
+    row = np.cumsum(out_deg) - out_deg  # first out-edge of each vertex
+    # wedges of edge e are its target's out-edges, at global wedge indices
+    # [begins[e], ends[e]); wedge k closes at z = y[shift[e] + k]
+    wedges = out_deg[y]
+    ends = np.cumsum(wedges)
+    begins = ends - wedges
+    shift = row[y] - begins
+    xn = x * n
+    # x and y are credited per edge at the end, z per closed wedge
+    per_edge = np.zeros(len(y), dtype=np.int64)
+    counts = np.zeros(n, dtype=np.int64)
+    total = int(wedges.sum())
+    for lo in range(0, total, chunk):
+        hi = min(lo + chunk, total)
+        first, last = np.searchsorted(ends, [lo, hi - 1], side="right")
+        es = np.arange(first, last + 1)
+        e = np.repeat(es, np.minimum(ends[es], hi) - np.maximum(begins[es], lo))
+        z = y[shift[e] + np.arange(lo, hi)]
+        q = xn[e] + z
+        pos = np.minimum(np.searchsorted(edge_key, q), len(edge_key) - 1)
+        closed = edge_key[pos] == q
+        per_edge[first:last + 1] += np.bincount(e[closed] - first, minlength=len(es))
+        counts += np.bincount(z[closed], minlength=n)
+    np.add.at(counts, x, per_edge)
+    np.add.at(counts, y, per_edge)
+    return counts
+
+
 def triangle_count(graph: LinkGraph) -> int:
+    local = graph.local_edges()
+    if local is not None:
+        return int(_local_triangles(*local).sum()) // 3
     return triangle_list(graph).count()
 
 
@@ -112,7 +174,17 @@ def triangles_per_vertex(graph: LinkGraph) -> DataFrame:
     of exploding whole triples (T = 124.5M at sf0.1, so the explode volume
     drops ~3×); partial aggregation collapses them map-side before the V-row
     shuffle. Counts are identical: each triangle credits each of its three
-    corners exactly once, exactly as before (digest-pinned)."""
+    corners exactly once, exactly as before (digest-pinned).
+
+    A graph with at most ``graph.LOCAL_MAX_EDGES`` directed edges is counted
+    by :func:`_local_triangles` instead (module docstring)."""
+    local = graph.local_edges()
+    if local is not None:
+        counts = _local_triangles(*local)
+        return graph.edges.sparkSession.createDataFrame(
+            pd.DataFrame({"id": local[0], "triangles": counts}),
+            "id long, triangles long",
+        )
     edges_lo, hi_n = _oriented_with_adjacency(graph)
     inter = (
         edges_lo.join(hi_n, "hi")

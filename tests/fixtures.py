@@ -76,11 +76,11 @@ def to_df(spark, edges):
 
 
 def tiers(monkeypatch):
-    """Yield each tier of the iterative operators in turn, as
-    ``LevelStats.path`` names it: first the default, under which every graph
-    here is small enough for the local numpy kernels, then SQL supersteps
-    throughout (``LOCAL_MAX_EDGES`` = −1). A loop that runs to its end
-    restores the default."""
+    """Yield each tier of the operators with a local numpy kernel (Louvain,
+    PageRank, triangles) in turn, as ``LevelStats.path`` names it: first the
+    default, under which every graph here is small enough for the local
+    kernels, then the SQL plans throughout (``LOCAL_MAX_EDGES`` = −1). A
+    loop that runs to its end restores the default."""
     import graftlouvain.operators.graph as graph_mod
 
     default = graph_mod.LOCAL_MAX_EDGES

@@ -10,7 +10,14 @@ from graftlouvain.operators.graph import LinkGraph
 from graftlouvain.operators.metrics import degree_assortativity, kcore, neighbor_jaccard
 from graftlouvain.operators.triangles import clustering_coefficients
 
-from tests.fixtures import FIXTURE_28_W, FIXTURE_KARATE_W, FIXTURE_W5, fixture_hub, to_df
+from tests.fixtures import (
+    FIXTURE_28_W,
+    FIXTURE_KARATE_W,
+    FIXTURE_W5,
+    fixture_hub,
+    tiers,
+    to_df,
+)
 
 
 def _adj(edges):
@@ -28,19 +35,21 @@ def _adj(edges):
     "edges", [FIXTURE_W5, FIXTURE_28_W, FIXTURE_KARATE_W, fixture_hub()],
     ids=["w5", "fixture28", "karate", "hub"],
 )
-def test_clustering_coefficients_match_python(spark, edges):
+def test_clustering_coefficients_match_python(spark, edges, monkeypatch):
     g = LinkGraph.from_edges(to_df(spark, edges))
-    got = {
-        r["id"]: (r["nbrs"], r["triangles"], r["coeff"])
-        for r in clustering_coefficients(g).collect()
-    }
     nbrs = _adj(edges)
-    for v in got:
-        ns = nbrs.get(v, set())
-        tri = sum(1 for a in ns for b in ns if a < b and b in nbrs[a])
-        n = len(ns)
-        coeff = round(2.0 * tri / (n * (n - 1)), 6) if n >= 2 else 0.0
-        assert got[v] == (n, tri, pytest.approx(coeff, abs=1e-9)), v
+    for tier in tiers(monkeypatch):
+        got = {
+            r["id"]: (r["nbrs"], r["triangles"], r["coeff"])
+            for r in clustering_coefficients(g).collect()
+        }
+        assert set(got) == set(nbrs), tier
+        for v in got:
+            ns = nbrs.get(v, set())
+            tri = sum(1 for a in ns for b in ns if a < b and b in nbrs[a])
+            n = len(ns)
+            coeff = round(2.0 * tri / (n * (n - 1)), 6) if n >= 2 else 0.0
+            assert got[v] == (n, tri, pytest.approx(coeff, abs=1e-9)), (tier, v)
 
 
 @pytest.mark.parametrize(

@@ -1,13 +1,18 @@
 """PageRank / CC / LPA / triangle tests vs sequential oracles (SURVEY.md §2h):
 labels/components exact, scores allclose 1e-6 (BASELINE.json:6)."""
 
+import numpy as np
 import pytest
 
 from graftlouvain.operators.components import components
 from graftlouvain.operators.graph import LinkGraph
 from graftlouvain.operators.labelprop import label_propagation
 from graftlouvain.operators.pagerank import pagerank
-from graftlouvain.operators.triangles import triangle_count, triangles_per_vertex
+from graftlouvain.operators.triangles import (
+    _local_triangles,
+    triangle_count,
+    triangles_per_vertex,
+)
 from graftlouvain.oracle.graphs import (
     seq_components,
     seq_label_propagation,
@@ -300,15 +305,73 @@ def test_lpa_matches_oracle(spark, edges):
 
 
 @pytest.mark.parametrize("edges", ALL + [TWO_COMP], ids=IDS + ["twocomp"])
-def test_triangles_match_oracle(spark, edges):
+def test_triangles_match_oracle(spark, edges, monkeypatch):
     g = LinkGraph.from_edges(to_df(spark, edges))
     want_total, want_per_v = seq_triangles(edges)
-    assert triangle_count(g) == want_total
-    got = {r["id"]: r["triangles"] for r in triangles_per_vertex(g).collect()}
-    assert got == want_per_v
+    for tier in tiers(monkeypatch):
+        assert triangle_count(g) == want_total, tier
+        got = {r["id"]: r["triangles"] for r in triangles_per_vertex(g).collect()}
+        assert got == want_per_v, tier
 
 
-def test_karate_triangle_total(spark):
+def test_karate_triangle_total(spark, monkeypatch):
     """Known value: Zachary karate club has 45 triangles."""
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
-    assert triangle_count(g) == 45
+    for tier in tiers(monkeypatch):
+        assert triangle_count(g) == 45, tier
+
+
+@pytest.mark.parametrize(
+    "edges", [FIXTURE_KARATE_W, fixture_hub()], ids=["karate", "hub"]
+)
+def test_triangles_wedge_chunking(spark, edges):
+    """Every wedge chunk size, down to one wedge per chunk, gives the
+    oracle's per-vertex counts."""
+    ids, s, d, w = LinkGraph.from_edges(to_df(spark, edges)).local_edges()
+    _, want = seq_triangles(edges)
+    for chunk in (1, 7, None):
+        kw = {} if chunk is None else {"chunk": chunk}
+        got = _local_triangles(ids, s, d, w, **kw)
+        assert got.dtype == np.int64
+        assert dict(zip(ids.tolist(), got.tolist())) == want, chunk
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [[], [(5, 5, 1.0), (0, 1, 1.0), (1, 2, 1.0), (0, 2, 1.0), (2, 2, 3.0)], TWO_COMP],
+    ids=["empty", "selfloop", "twocomp"],
+)
+def test_triangles_edge_cases(spark, edges, monkeypatch):
+    """Both tiers give equal rows under the same column names and types; a
+    vertex with only a self-loop is listed with 0."""
+    g = LinkGraph.from_edges(to_df(spark, edges))
+    runs = {}
+    for tier in tiers(monkeypatch):
+        df = triangles_per_vertex(g)
+        runs[tier] = (
+            [(f.name, f.dataType.simpleString()) for f in df.schema],
+            sorted(tuple(r) for r in df.collect()),
+        )
+    assert runs["local"] == runs["spark"]
+    assert runs["local"][0] == [("id", "bigint"), ("triangles", "bigint")]
+    _, want = seq_triangles(edges)
+    assert dict(runs["local"][1]) == want
+
+
+def test_triangle_counts_ignore_weights(spark, monkeypatch):
+    """Weights never change a count: karate with weights 1, 0, −2.5 and one
+    NaN gives the unit-weight copy's per-vertex counts on both tiers. The
+    local tier orients by unweighted degree; comparing weighted degrees
+    instead is no total order once the NaN on edge (1, 2) reaches them, and
+    loses 10 of the 45 triangles."""
+    mixed = [
+        (a, b, float("nan") if (a, b) == (1, 2) else (1.0, 0.0, -2.5)[i % 3])
+        for i, (a, b, _w) in enumerate(FIXTURE_KARATE_W)
+    ]
+    unit = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    g = LinkGraph.from_edges(to_df(spark, mixed))
+    for tier in tiers(monkeypatch):
+        want = {r["id"]: r["triangles"] for r in triangles_per_vertex(unit).collect()}
+        got = {r["id"]: r["triangles"] for r in triangles_per_vertex(g).collect()}
+        assert got == want, tier
+        assert sum(got.values()) == 3 * 45, tier

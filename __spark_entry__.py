@@ -36,7 +36,7 @@ from graftlouvain.operators.dedup import (  # noqa: E402
 from graftlouvain.operators.components import components  # noqa: E402
 from graftlouvain.operators.graph import LinkGraph, community_stats  # noqa: E402
 from graftlouvain.operators.labelprop import label_propagation  # noqa: E402
-from graftlouvain.operators.louvain import louvain, modularity, move_scores  # noqa: E402
+from graftlouvain.operators.louvain import louvain, modularity  # noqa: E402
 from graftlouvain.operators.multimodal import decode_features, media_from_docs  # noqa: E402
 from graftlouvain.operators.pagerank import pagerank  # noqa: E402
 from graftlouvain.operators.similarity import (  # noqa: E402
@@ -546,22 +546,13 @@ def q_modularity_nation(spark, sf):
 
 def q_louvain_gain_argmax(spark, sf):
     """L2/L3: one superstep's best-move argmax per vertex from nation init —
-    the reconstructed move phase, window-ranked (ties → smallest community)."""
-    from pyspark.sql import Window
+    the reconstructed move phase, scored by the superstep statement's own
+    scoring CTEs (ties → smallest community, own community included)."""
+    from graftlouvain.operators.louvain import _gain_argmax
 
     g = _graph(spark, sf)
-    asg = _nation_assignments(spark, sf, g)
-    scored = move_scores(g, asg)
-    w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("nbr_comm"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            F.col("src").alias("id"),
-            F.col("nbr_comm").alias("best_comm"),
-            F.round("score", 6).alias("score"),
-        )
-    )
+    best = _gain_argmax(g, _nation_assignments(spark, sf, g))
+    return best.select("id", "best_comm", F.round("score", 6).alias("score"))
 
 
 def q_coarsen_nation(spark, sf):

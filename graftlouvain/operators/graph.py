@@ -26,11 +26,13 @@ session.py) and, inside the Louvain superstep, by its salted edge⋈state join.
 Small graphs leave Spark: :meth:`LinkGraph.local_edges` collects a graph with
 at most ``LOCAL_MAX_EDGES`` directed edges once, as compacted numpy arrays,
 for the driver-side kernels of Louvain, PageRank and triangle counting.
+The graph keeps those arrays (read-only) until :meth:`LinkGraph.unpersist`,
+so PageRank and triangle counting on one graph share a single collect.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -91,6 +93,7 @@ class LinkGraph:
     degrees: DataFrame
     vertices: DataFrame
     stats: GraphStats
+    _local: tuple | None = field(default=None, init=False, repr=False, compare=False)
 
     # -- construction -----------------------------------------------------
 
@@ -219,13 +222,19 @@ class LinkGraph:
         """``(ids, s, d, w)``: the edge table collected once through Arrow,
         with vertex ids compacted to indices into the sorted ``ids`` (so the
         smallest index is the smallest id); ``None`` above
-        ``LOCAL_MAX_EDGES`` directed edges."""
+        ``LOCAL_MAX_EDGES`` directed edges. The first collect is kept until
+        :meth:`unpersist`, read-only so that no kernel can change another
+        kernel's input; the threshold is checked on every call."""
         if self.stats.num_directed_edges > LOCAL_MAX_EDGES:
             return None
-        e = self.edges.toPandas()
-        ids, s = np.unique(e["src"].to_numpy(), return_inverse=True)
-        d = np.searchsorted(ids, e["dst"].to_numpy())
-        return ids, s, d, e["weight"].to_numpy(dtype=np.float64)
+        if self._local is None:
+            e = self.edges.toPandas()
+            ids, s = np.unique(e["src"].to_numpy(), return_inverse=True)
+            d = np.searchsorted(ids, e["dst"].to_numpy())
+            self._local = (ids, s, d, e["weight"].to_numpy(dtype=np.float64))
+            for a in self._local:
+                a.setflags(write=False)
+        return self._local
 
     def neighbors_of(self, vertex_id: int) -> DataFrame:
         """A2 neighbors(v) (graph.rs:402-407) — test/debug helper only; hot
@@ -235,6 +244,7 @@ class LinkGraph:
     def unpersist(self) -> None:
         self.edges.unpersist()
         self.degrees.unpersist()
+        self._local = None
 
 
 def singleton_assignments(graph: LinkGraph) -> DataFrame:

@@ -12,7 +12,7 @@ replacement (BASELINE.json north_star: "bulk-synchronous supersteps"). The
 in-repo sequential oracle (graftlouvain.oracle.louvain_seq) implements the
 SAME synchronous variant, so labels match exactly.
 
-Move rule (derivation in docstring of :func:`move_scores`): for vertex i with
+Move rule (derivation in docstring of :func:`_scoring_cte`): for vertex i with
 degree k_i in community A, candidate community C (including A), with
 tot'_C = tot_C − k_i·[C==A]:
 
@@ -98,6 +98,7 @@ import itertools
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -187,32 +188,15 @@ def _auto_salt(graph: LinkGraph) -> int:
     return 1
 
 
-def _nbr_candidate_rows(
-    graph: LinkGraph, asg_dst: DataFrame, salt_buckets: int
-) -> DataFrame:
-    """(src, nbr_comm, k_ic) rows from the edge⋈assignment join over the
-    non-self-loop edges, optionally salted."""
-    e = graph.edges.where(F.col("src") != F.col("dst"))
-    if salt_buckets > 1:
-        salted_e = e.withColumn("_salt", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)))
-        salted_a = asg_dst.withColumn(
-            "_salt",
-            F.explode(
-                F.sequence(F.lit(0).cast("long"), F.lit(salt_buckets - 1).cast("long"))
-            ),
-        )
-        joined = salted_e.join(salted_a, ["dst", "_salt"])
-    else:
-        joined = e.join(asg_dst, "dst")
-    return joined.select("src", "nbr_comm", F.col("weight").alias("k_ic"))
-
-
-def move_scores(
-    graph: LinkGraph, assignments: DataFrame, salt_buckets: int | None = None
-) -> DataFrame:
-    """Candidate-move scoring table [src, nbr_comm, cur_comm, k_ic, k_i, score]
-    for one superstep (L2/L3 — the reference's unimplemented move phase,
-    communities.rs:68-83, reconstructed).
+def _scoring_cte(e: str, st: str, S: str, salt_buckets: int = 1) -> str:
+    """THE Louvain scoring definition (L2/L3 — the reference's unimplemented
+    move phase, communities.rs:68-83, reconstructed): the ``WITH`` prefix,
+    CTEs ``nbr`` … ``gated``, that every Spark-side statement scoring moves
+    continues. It reads the edge relation ``e`` ([src, dst, weight],
+    src-partitioned cache) and the state relation ``st`` ([id, community,
+    k_i]); ``gated`` holds one row per vertex [src, nbr_comm, score,
+    cur_comm, k_i, stay_score]: its best candidate community (argmax score,
+    ties → smallest community id) and the score of staying put.
 
     Derivation of the score: moving i (already removed from its community)
     into C changes Q by [2·k_{i→C} + self_i]/S − (2·tot'_C·k_i + k_i²)/S².
@@ -220,92 +204,9 @@ def move_scores(
     argmax ΔQ == argmax [k_{i→C} − tot'_C·k_i/S]. Self-loop edges are
     excluded from k_{i→C} (constant too); the reference's
     ``neighboring_communities`` likewise never adds the self-loop target with
-    special weight (communitystate.rs:147-163).
-
-    ``salt_buckets`` (default: auto from the graph's degree-skew stats) salts
-    the edge⋈assignment shuffle join: edge rows carry a deterministic salt
-    derived from ``src`` and the (small) assignment side is replicated per
-    salt, so a power-law hub's adjacency fans out over ``salt_buckets``
-    reducers instead of one straggler. Pure re-bucketing of a sum — results
-    are bit-identical (addition order within a group is already unordered in
-    a shuffle agg).
-
-    ``assignments`` may carry the vertex degree as a ``k_i`` column (the
-    level loop's state table does); community totals and per-vertex degrees
-    are then read straight off the state — two fewer O(V) shuffle joins per
-    superstep than joining ``graph.degrees`` each time.
-    """
-    S = graph.two_m
-    if salt_buckets is None:
-        salt_buckets = _auto_salt(graph)
-    if "k_i" not in assignments.columns:
-        assignments = assignments.join(
-            graph.degrees.select("id", F.col("degree").alias("k_i")), "id"
-        )
-    # C4 — THE central superstep join (communitystate.rs:147-163): weights
-    # from each vertex to each neighboring community. The vertex's own
-    # community is unioned in as a zero-weight candidate BEFORE the single
-    # aggregation (guaranteeing "stay" a defined score without a second
-    # groupBy shuffle; adding 0.0 is exact in IEEE so sums are unchanged).
-    asg_dst = assignments.select(
-        F.col("id").alias("dst"), F.col("community").alias("nbr_comm")
-    )
-    nbr_rows = _nbr_candidate_rows(graph, asg_dst, salt_buckets)
-    own = assignments.select(
-        F.col("id").alias("src"),
-        F.col("community").alias("nbr_comm"),
-        F.lit(0.0).alias("k_ic"),
-    )
-    cand = (
-        nbr_rows.unionByName(own)
-        .groupBy("src", "nbr_comm")
-        .agg(F.sum("k_ic").alias("k_ic"))
-    )
-
-    # Community totals (tot_C = Σ member degrees), recomputed per superstep —
-    # replaces the reference's delta maintenance (communitystate.rs:96-132).
-    # No degrees join: k_i rides on the state table.
-    tot = (
-        assignments.groupBy(F.col("community").alias("nbr_comm"))
-        .agg(F.sum("k_i").alias("tot"))
-    )
-
-    cur = assignments.select(
-        F.col("id").alias("src"), F.col("community").alias("cur_comm"), "k_i"
-    )
-
-    return (
-        cand.join(tot, "nbr_comm")
-        .join(cur, "src")
-        .withColumn(
-            "score",
-            F.col("k_ic")
-            - (
-                F.col("tot")
-                - F.when(F.col("nbr_comm") == F.col("cur_comm"), F.col("k_i")).otherwise(
-                    F.lit(0.0)
-                )
-            )
-            * F.col("k_i")
-            / F.lit(S),
-        )
-    )
-
-
-def _superstep_cte(
-    e: str,
-    st: str,
-    step: int,
-    S: str,
-    EPS: str,
-    gate: str = "parity",
-    salt_buckets: int = 1,
-) -> str:
-    """THE Louvain superstep: one SQL statement reading the edge relation
-    ``e`` ([src, dst, weight], src-partitioned cache) and the state relation
-    ``st`` ([id, community, k_i]) and returning the next state
-    [id, community, k_i, _moved]. Every caller runs it through
-    :func:`_superstep_views`.
+    special weight (communitystate.rs:147-163). Community totals tot_C are
+    recomputed per superstep straight off the state, which carries k_i —
+    replacing the reference's delta maintenance (communitystate.rs:96-132).
 
     - Self-loop rows carry k_ic = 0 instead of a unioned own-candidate
       table (a Union erases partitioning info and would force two E-row
@@ -322,17 +223,6 @@ def _superstep_cte(
       ``src`` into a bucket and the (small) state side is replicated per
       bucket, so a power-law hub's adjacency fans out over that many
       reducers. Pure re-bucketing of a sum — labels are identical.
-    - ``gate="conflict"`` emits the conflict gate single-reference: each
-      best row explodes into a DATA record keyed by its target ``nbr_comm``
-      and — only when it is itself a preliminary mover — a MARKER record
-      keyed by its current ``cur_comm``; one ``max(m)`` window over the key
-      recovers "target community loses a member" in the same pass (≤ 2V
-      skinny rows, shrinking to ~V as the level converges). ``best`` is
-      referenced once, so one materialization covers the whole superstep.
-      Skew caveat: a single community targeted by a large fraction of all
-      vertices puts its data rows in ONE window group.
-      ``gate="parity"`` applies the even/odd direction gate keyed on
-      ``step`` instead.
 
     ACCEPTED DOUBLE EXECUTION (diagnosed negative result, r4): ``tot`` is
     referenced twice (candidate scoring + stay-score lookup) and the V-row
@@ -356,33 +246,6 @@ def _superstep_cte(
         on = f"e.dst = s.id AND pmod(xxhash64(e.src), {b}) = s._salt"
     else:
         st_dst, on = st, "e.dst = s.id"
-    if gate == "conflict":
-        tail = f"""two AS (
-  SELECT src, nbr_comm, cur_comm, k_i, _prelim, r.key AS key, r.m AS m, r.is_data AS is_data
-  FROM (SELECT *, (nbr_comm != cur_comm AND score > stay_score + {EPS}) AS _prelim
-        FROM gated)
-  LATERAL VIEW explode(CASE WHEN _prelim
-      THEN array(named_struct('key', cur_comm, 'm', 1, 'is_data', 0),
-                 named_struct('key', nbr_comm, 'm', 0, 'is_data', 1))
-      ELSE array(named_struct('key', nbr_comm, 'm', 0, 'is_data', 1)) END) t AS r
-),
-out AS (
-  SELECT src AS id,
-         CAST(CASE WHEN gate THEN nbr_comm ELSE cur_comm END AS LONG) AS community,
-         k_i, CAST(gate AS INT) AS _moved
-  FROM (SELECT *, (_prelim AND (nbr_comm < cur_comm OR _tmoved = 0)) AS gate
-        FROM (SELECT *, max(m) OVER (PARTITION BY key) AS _tmoved FROM two))
-  WHERE is_data = 1
-)"""
-    else:
-        d = "nbr_comm < cur_comm" if step % 2 == 0 else "nbr_comm > cur_comm"
-        tail = f"""out AS (
-  SELECT src AS id,
-         CAST(CASE WHEN gate THEN nbr_comm ELSE cur_comm END AS LONG) AS community,
-         k_i, CAST(gate AS INT) AS _moved
-  FROM (SELECT *, (nbr_comm != cur_comm AND score > stay_score + {EPS} AND {d}) AS gate
-        FROM gated)
-)"""
     return f"""WITH nbr AS (
   SELECT e.src AS src, s.community AS nbr_comm,
          CASE WHEN e.src != e.dst THEN e.weight ELSE CAST(0.0 AS DOUBLE) END AS k_ic
@@ -412,15 +275,84 @@ gated AS (
   SELECT b.src, b.nbr_comm, b.score, b.cur_comm, b.k_i,
          b.stay_kic - (t2.tot - b.k_i) * b.k_i / {S} AS stay_score
   FROM best b JOIN tot t2 ON b.cur_comm = t2.nbr_comm
+)"""
+
+
+def _superstep_cte(
+    e: str,
+    st: str,
+    step: int,
+    S: str,
+    EPS: str,
+    gate: str = "parity",
+    salt_buckets: int = 1,
+) -> str:
+    """THE Louvain superstep: the :func:`_scoring_cte` prefix over ``e`` and
+    ``st`` continued by a gate tail, one SQL statement returning the next
+    state [id, community, k_i, _moved]. Every caller runs it through
+    :func:`_superstep_views`.
+
+    - ``gate="conflict"`` emits the conflict gate single-reference: each
+      best row explodes into a DATA record keyed by its target ``nbr_comm``
+      and — only when it is itself a preliminary mover — a MARKER record
+      keyed by its current ``cur_comm``; one ``max(m)`` window over the key
+      recovers "target community loses a member" in the same pass (≤ 2V
+      skinny rows, shrinking to ~V as the level converges). ``best`` is
+      referenced once, so one materialization covers the whole superstep.
+      Skew caveat: a single community targeted by a large fraction of all
+      vertices puts its data rows in ONE window group.
+    - ``gate="parity"`` applies the even/odd direction gate keyed on
+      ``step`` instead."""
+    if gate == "conflict":
+        tail = f"""two AS (
+  SELECT src, nbr_comm, cur_comm, k_i, _prelim, r.key AS key, r.m AS m, r.is_data AS is_data
+  FROM (SELECT *, (nbr_comm != cur_comm AND score > stay_score + {EPS}) AS _prelim
+        FROM gated)
+  LATERAL VIEW explode(CASE WHEN _prelim
+      THEN array(named_struct('key', cur_comm, 'm', 1, 'is_data', 0),
+                 named_struct('key', nbr_comm, 'm', 0, 'is_data', 1))
+      ELSE array(named_struct('key', nbr_comm, 'm', 0, 'is_data', 1)) END) t AS r
 ),
+out AS (
+  SELECT src AS id,
+         CAST(CASE WHEN gate THEN nbr_comm ELSE cur_comm END AS LONG) AS community,
+         k_i, CAST(gate AS INT) AS _moved
+  FROM (SELECT *, (_prelim AND (nbr_comm < cur_comm OR _tmoved = 0)) AS gate
+        FROM (SELECT *, max(m) OVER (PARTITION BY key) AS _tmoved FROM two))
+  WHERE is_data = 1
+)"""
+    else:
+        d = "nbr_comm < cur_comm" if step % 2 == 0 else "nbr_comm > cur_comm"
+        tail = f"""out AS (
+  SELECT src AS id,
+         CAST(CASE WHEN gate THEN nbr_comm ELSE cur_comm END AS LONG) AS community,
+         k_i, CAST(gate AS INT) AS _moved
+  FROM (SELECT *, (nbr_comm != cur_comm AND score > stay_score + {EPS} AND {d}) AS gate
+        FROM gated)
+)"""
+    return f"""{_scoring_cte(e, st, S, salt_buckets)},
 {tail}
 SELECT * FROM out"""
 
 
-def _sql_consts(graph: LinkGraph, gain_eps: float) -> tuple[str, str]:
+def _gain_argmax_cte(e: str, st: str, S: str, salt_buckets: int = 1) -> str:
+    """[id, best_comm, score]: each vertex's best community, own one
+    included. ``best`` ranks only the communities an edge reaches;
+    ``stay_score`` is what an own-community row scores, by the same
+    expression in the same order, so the own community wins on a higher
+    stay score or on an equal one with the smaller id."""
+    return f"""{_scoring_cte(e, st, S, salt_buckets)}
+SELECT src AS id,
+       CASE WHEN stay THEN cur_comm ELSE nbr_comm END AS best_comm,
+       CASE WHEN stay THEN stay_score ELSE score END AS score
+FROM (SELECT *, (stay_score > score OR (stay_score = score AND cur_comm < nbr_comm)) AS stay
+      FROM gated)"""
+
+
+def _sql_double(x: float) -> str:
     """``repr`` of a Python float is its shortest round-trip decimal, so the
-    CAST(… AS DOUBLE) literals recover bit-identical doubles JVM-side."""
-    return f"CAST({graph.two_m!r} AS DOUBLE)", f"CAST({gain_eps!r} AS DOUBLE)"
+    CAST(… AS DOUBLE) literal recovers the bit-identical double JVM-side."""
+    return f"CAST({x!r} AS DOUBLE)"
 
 
 # per-run suffix for the superstep views: two runs on one SparkSession must
@@ -429,10 +361,12 @@ _VIEW_IDS = itertools.count()
 
 
 @contextmanager
-def _superstep_views(graph: LinkGraph, gain_eps: float, gate_mode: str):
+def _superstep_views(graph: LinkGraph):
     """Register ``graph.edges`` as a run-unique temp view and yield
-    ``run(state, step)``, which points the run's state view at ``state`` and
-    returns the :func:`_superstep_cte` statement as a DataFrame.
+    ``run(state, statement)``, which points the run's state view at
+    ``state`` and returns ``statement(e, st, S=…, salt_buckets=…)`` over the
+    two views — a :func:`_superstep_cte` or :func:`_gain_argmax_cte`
+    statement — as a DataFrame.
 
     Register costs ~15-17 ms and release ~28 ms per view, so the edge view is
     registered once per scope (one level) and each ``run`` pays only the
@@ -448,14 +382,11 @@ def _superstep_views(graph: LinkGraph, gain_eps: float, gate_mode: str):
     spark = graph.edges.sparkSession
     n = next(_VIEW_IDS)
     e_view, st_view = f"_glouvain_edges_{n}", f"_glouvain_state_{n}"
-    S, EPS = _sql_consts(graph, gain_eps)
-    salt = _auto_salt(graph)
+    S, salt = _sql_double(graph.two_m), _auto_salt(graph)
 
-    def run(state: DataFrame, step: int) -> DataFrame:
-        if graph.two_m == 0:  # no weight, no gain: stay put, as the kernel does
-            return state.select("id", "community", "k_i", F.lit(0).alias("_moved"))
+    def run(state: DataFrame, statement) -> DataFrame:
         state.createOrReplaceTempView(st_view)
-        return spark.sql(_superstep_cte(e_view, st_view, step, S, EPS, gate_mode, salt))
+        return spark.sql(statement(e_view, st_view, S=S, salt_buckets=salt))
 
     try:
         graph.edges.createOrReplaceTempView(e_view)
@@ -466,6 +397,15 @@ def _superstep_views(graph: LinkGraph, gain_eps: float, gate_mode: str):
             spark.catalog.dropTempView(v)
 
 
+def _gain_argmax(graph: LinkGraph, assignments: DataFrame) -> DataFrame:
+    """One superstep's best move per vertex against ``assignments`` ([id,
+    community]): [id, best_comm, score], scored by the prefix every
+    superstep runs (:func:`_gain_argmax_cte`)."""
+    state = assignments.join(graph.degrees.select("id", F.col("degree").alias("k_i")), "id")
+    with _superstep_views(graph) as run:
+        return run(state, _gain_argmax_cte)
+
+
 def _superstep(
     graph: LinkGraph,
     assignments: DataFrame,
@@ -474,15 +414,17 @@ def _superstep(
     gate_mode: str = "parity",
 ) -> DataFrame:
     """One synchronous local-move superstep from state ``assignments``
-    ([id, community, k_i]): score candidates against frozen state, argmax
-    per vertex (ties → smallest community id), apply strictly-improving
-    moves that pass the oscillation gate (``gate_mode``: "parity" = the
-    even/odd direction gate keyed on ``step``; "conflict" = the
-    moved-community conflict gate, step-independent — see module
+    ([id, community, k_i]) of a graph with weight: score candidates against
+    frozen state, argmax per vertex (ties → smallest community id), apply
+    strictly-improving moves that pass the oscillation gate (``gate_mode``:
+    "parity" = the even/odd direction gate keyed on ``step``; "conflict" =
+    the moved-community conflict gate, step-independent — see module
     docstring). Default stays "parity" so the fixed-step driver queries keep
     their pinned semantics; the production loop passes its own mode."""
-    with _superstep_views(graph, gain_eps, gate_mode) as run:
-        return run(assignments, step)
+    with _superstep_views(graph) as run:
+        return run(assignments, partial(
+            _superstep_cte, step=step, EPS=_sql_double(gain_eps), gate=gate_mode
+        ))
 
 
 @dataclass
@@ -569,10 +511,14 @@ def louvain_level(
             moves=rec.metric, wall_ms=rec.wall_ms,
         )
 
-    with _superstep_views(graph, gain_eps, gate_mode) as run:
+    EPS = _sql_double(gain_eps)
+    with _superstep_views(graph) as run:
 
         def superstep(state: DataFrame, step: int) -> tuple[DataFrame, int]:
-            state, (n_moves,) = swap_observed_multi(state, run(state, step), ["_moved"])
+            if graph.two_m == 0:  # no weight, no gain: stay put, as the kernel does
+                return state, 0
+            statement = partial(_superstep_cte, step=step, EPS=EPS, gate=gate_mode)
+            state, (n_moves,) = swap_observed_multi(state, run(state, statement), ["_moved"])
             return state.select("id", "community", "k_i"), n_moves
 
         state, records = fixpoint(

@@ -83,9 +83,12 @@ def seq_label_propagation(edges, max_iter=5):
 
 
 def seq_triangles(edges):
-    """Returns (total, per_vertex dict) with degree-ordered orientation."""
+    """Returns (total, per_vertex dict), each pair oriented from the lower
+    (distinct-neighbour count, id) endpoint, as ``_local_triangles`` does: a
+    total order whatever the weights (a weighted degree holding a NaN is
+    none, and loses triangles). Counts never depend on the orientation."""
     adj = _adj(edges)
-    deg = {v: sum(adj[v].values()) for v in adj}
+    deg = {v: sum(1 for u in adj[v] if u != v) for v in adj}
     pairs = {(min(s, d), max(s, d)) for s in adj for d in adj[s] if s != d}
 
     def key(v):

@@ -246,25 +246,97 @@ def test_metrics_table(spark, monkeypatch):
         assert {r["path"] for r in rows} == {tier}
 
 
-def test_salted_move_scores_identical(spark):
-    """Skew salting of the superstep edge⋈assignment join is a pure
-    re-bucketing: scores and full-level labels are identical with and
-    without salting on the hub fixture."""
-    from pyspark.sql import functions as F
-
-    from graftlouvain.operators.louvain import move_scores
+def test_salted_move_scores_identical(spark, monkeypatch):
+    """Skew salting of the superstep edge⋈state join is a pure re-bucketing:
+    forcing auto-salting on (threshold 0) leaves every vertex's gain-argmax
+    row, best community and score, identical on the hub fixture."""
+    import graftlouvain.operators.louvain as lv
 
     g = LinkGraph.from_edges(to_df(spark, fixture_hub(n_blocks=4, block_size=8)))
     asg = singleton_assignments(g)
-    plain = {
-        (r["src"], r["nbr_comm"]): (r["k_ic"], round(r["score"], 9))
-        for r in move_scores(g, asg, salt_buckets=1).collect()
-    }
-    salted = {
-        (r["src"], r["nbr_comm"]): (r["k_ic"], round(r["score"], 9))
-        for r in move_scores(g, asg, salt_buckets=8).collect()
-    }
+    assert lv._auto_salt(g) == 1
+    plain = sorted(lv._gain_argmax(g, asg).collect())
+    monkeypatch.setattr(lv, "SKEW_SALT_MIN_DEGREE", 0)
+    monkeypatch.setattr(lv, "SKEW_SALT_RATIO", 0.0)
+    assert lv._auto_salt(g) == lv.SKEW_SALT_BUCKETS
+    salted = sorted(lv._gain_argmax(g, asg).collect())
+    assert len(plain) == g.stats.num_vertices
     assert salted == plain
+
+
+def _brute_gain_argmax(edges, comm):
+    """Plain-Python best move per vertex: score k_{i→C} − tot'_C·k_i/S over
+    every neighbour community C plus the vertex's own, in the engine's
+    operation order; ties go to the smallest community id. Returns
+    {id: (best_comm, score)} and {id: (own score, best neighbour score, has
+    a neighbour in its own community)}."""
+    from collections import defaultdict
+
+    from graftlouvain.oracle.louvain_seq import symmetrize
+
+    w = symmetrize(edges)
+    k = defaultdict(float)
+    for (s, _d), x in w.items():
+        k[s] += x
+    S = sum(k.values())
+    tot = defaultdict(float)
+    for v, c in comm.items():
+        tot[c] += k[v]
+    best, facts = {}, {}
+    for i in k:
+        k_ic = defaultdict(float)
+        for (s, d), x in w.items():
+            if s == i and d != i:
+                k_ic[comm[d]] += x
+        own = comm[i]
+
+        def score(c):
+            return k_ic[c] - (tot[c] - (k[i] if c == own else 0.0)) * k[i] / S
+
+        nbrs = {c: score(c) for c in list(k_ic) if c != own}
+        cands = {**nbrs, own: score(own)}
+        top = max(cands.values())
+        c = min(c for c, x in cands.items() if x == top)
+        best[i] = (c, top)
+        intra = any(s == i and d != i and comm[d] == own for (s, d) in w)
+        facts[i] = (cands[own], max(nbrs.values(), default=None), intra)
+    return best, facts
+
+
+def test_gain_argmax_matches_brute_force(spark):
+    """The gain argmax served from the superstep's scoring CTEs equals a
+    plain-Python argmax over every neighbour community plus the own one
+    (ties → smallest id), exactly: integer weights make every score one
+    rounding from exact. Vertices with no neighbour in their own community:
+    0 (heavy self-loop, one light edge out) and 11 (one edge of weight −1)
+    stay on a strictly higher stay score; 8 and 9 (one zero-weight edge
+    each) tie stay against a neighbour community, so 8 stays (larger-id
+    neighbour) and 9 moves (smaller-id neighbour). For 8, 9 and 11 the own
+    community is not among the communities an edge reaches; with
+    non-negative weights such a vertex can win only on a tie."""
+    from graftlouvain.operators.louvain import _gain_argmax
+
+    edges = [
+        (1, 2, 2.0), (1, 3, 2.0), (2, 3, 2.0),  # community 100
+        (4, 5, 2.0), (4, 6, 2.0), (5, 6, 2.0),  # community 200
+        (7, 1, 1.0), (7, 4, 1.0),  # singleton bridge
+        (0, 0, 30.0), (0, 2, 1.0),
+        (8, 5, 0.0), (9, 1, 0.0), (11, 6, -1.0),
+        (3, 10, 3.0),  # 10 shares community 200 with no neighbour there
+    ]
+    comm = {0: 0, 1: 100, 2: 100, 3: 100, 4: 200, 5: 200, 6: 200, 7: 7,
+            8: 8, 9: 300, 10: 200, 11: 11}
+    want, facts = _brute_gain_argmax(edges, comm)
+    for v, stays, tie in ((0, True, False), (11, True, False), (8, True, True),
+                          (9, False, True)):
+        own, nbr, intra = facts[v]
+        assert not intra and (own == nbr if tie else own > nbr), v
+        assert (want[v][0] == comm[v]) is stays, v
+
+    g = LinkGraph.from_edges(to_df(spark, edges))
+    asg = spark.createDataFrame(list(comm.items()), "id long, community long")
+    got = {r["id"]: (r["best_comm"], r["score"]) for r in _gain_argmax(g, asg).collect()}
+    assert got == want
 
 
 def test_salted_level_labels_identical(spark, monkeypatch):

@@ -185,6 +185,36 @@ def test_pagerank_local_tier_is_one_checkpoint(spark, monkeypatch):
     assert counts == {"local": (1, 1), "spark": (10, 11)}
 
 
+def test_local_edges_collected_once(spark, monkeypatch):
+    """PageRank then triangle counting on one small graph collect its edges
+    once: the arrays are kept read-only on the graph, the threshold still
+    decides every call, and ``unpersist`` drops them."""
+    import graftlouvain.operators.graph as graph_mod
+
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    collects = []
+    real = type(g.edges).toPandas
+
+    def to_pandas(df):
+        collects.append(1)
+        return real(df)
+
+    monkeypatch.setattr(type(g.edges), "toPandas", to_pandas)
+    pagerank(g, n_iter=10).collect()
+    triangles_per_vertex(g).collect()
+    assert len(collects) == 1
+    local = g.local_edges()
+    assert local is g.local_edges() and len(collects) == 1
+    assert not any(a.flags.writeable for a in local)
+    with pytest.raises(ValueError):
+        local[3][0] = 0.0
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    assert g.local_edges() is None
+    monkeypatch.undo()
+    g.unpersist()
+    assert g._local is None
+
+
 def test_pagerank_regime_decides_partitions_and_layout(spark, monkeypatch):
     """One broadcast-regime decision drives both of PageRank's layout
     choices. Inside the regime the loop scopes its shuffle partitions down
@@ -360,18 +390,20 @@ def test_triangles_edge_cases(spark, edges, monkeypatch):
 
 def test_triangle_counts_ignore_weights(spark, monkeypatch):
     """Weights never change a count: karate with weights 1, 0, −2.5 and one
-    NaN gives the unit-weight copy's per-vertex counts on both tiers. The
-    local tier orients by unweighted degree; comparing weighted degrees
-    instead is no total order once the NaN on edge (1, 2) reaches them, and
-    loses 10 of the 45 triangles."""
+    NaN gives the unit-weight copy's per-vertex counts on both tiers and in
+    the sequential oracle. The local tier and the oracle orient by unweighted
+    degree; comparing weighted degrees instead is no total order once the
+    NaN on edge (1, 2) reaches them, and loses 10 of the 45 triangles."""
     mixed = [
         (a, b, float("nan") if (a, b) == (1, 2) else (1.0, 0.0, -2.5)[i % 3])
         for i, (a, b, _w) in enumerate(FIXTURE_KARATE_W)
     ]
     unit = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     g = LinkGraph.from_edges(to_df(spark, mixed))
+    _, oracle = seq_triangles(mixed)
     for tier in tiers(monkeypatch):
         want = {r["id"]: r["triangles"] for r in triangles_per_vertex(unit).collect()}
         got = {r["id"]: r["triangles"] for r in triangles_per_vertex(g).collect()}
         assert got == want, tier
+        assert got == oracle, tier
         assert sum(got.values()) == 3 * 45, tier

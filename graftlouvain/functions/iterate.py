@@ -23,6 +23,7 @@ checkpoint blocks.
 
 from __future__ import annotations
 
+import threading
 import time
 from contextlib import contextmanager
 from typing import Any, Callable, NamedTuple
@@ -55,7 +56,8 @@ def materialize(df: DataFrame) -> DataFrame:
     return ck
 
 
-STATE_SHUFFLE_TARGET_ROWS = 32_768
+# rows per partition of the state shuffles and of coarse Louvain edge caches
+ROWS_PER_PARTITION = 32_768
 # conservative in-memory bytes per skinny state row (UnsafeRow with 2-3
 # numeric columns + null bitset + overhead) for the broadcast-regime guard
 STATE_ROW_BYTES_EST = 48
@@ -76,17 +78,20 @@ def broadcast_regime(spark: SparkSession, n_rows: int) -> bool:
     return limit > 0 and n_rows * STATE_ROW_BYTES_EST < limit
 
 
+def row_partitions(n_rows: int, cap: int) -> int:
+    """~``ROWS_PER_PARTITION`` rows per partition, floored at 4, capped at ``cap``."""
+    return max(4, min(cap, -(-max(n_rows, 1) // ROWS_PER_PARTITION)))
+
+
 def state_partitions(spark: SparkSession, n_rows: int) -> int:
-    """Row-proportional shuffle-partition count for the V-row STATE side of
-    an iterative operator: ~``STATE_SHUFFLE_TARGET_ROWS`` rows per partition,
-    floored at 4, capped at the session's current setting (so a real cluster
-    keeps its configured parallelism and only tiny states shrink). The same
-    policy the Louvain coarse-level shrink has applied since r3, extended to
-    every fixpoint loop (r6): with AQE off inside the loops (below), nothing
-    else coalesces the near-empty state shuffles, and the per-superstep task
-    floor — p tasks for the state exchange plus p per broadcast-subplan
-    stage — dominates small-state levels. Edge-side parallelism is untouched
-    (the edge cache keeps its build-time partitioning).
+    """Shuffle-partition count for the V-row STATE side of an iterative
+    operator: :func:`row_partitions` capped at the session's setting (so a
+    real cluster keeps its configured parallelism and only small states
+    shrink). With AQE off inside the loops (below), nothing else coalesces
+    the near-empty state shuffles, and the per-superstep task floor — p
+    tasks for the state exchange plus p per broadcast-subplan stage —
+    dominates small-state levels. The edge cache keeps its build-time
+    partitioning (``louvain.coarsen`` sizes a coarse one by the same rule).
 
     BROADCAST-REGIME GUARD (r6 review): the "only state-sized shuffles
     happen inside the loop" premise holds only while the materialized state
@@ -97,7 +102,11 @@ def state_partitions(spark: SparkSession, n_rows: int) -> int:
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if not broadcast_regime(spark, n_rows):
         return p
-    return max(4, min(p, -(-max(n_rows, 1) // STATE_SHUFFLE_TARGET_ROWS)))
+    return row_partitions(n_rows, p)
+
+
+# held through every superstep_planning scope; re-entrant for nested scopes
+_PLANNING = threading.RLock()
 
 
 @contextmanager
@@ -111,25 +120,29 @@ def superstep_planning(spark: SparkSession, shuffle_partitions: int | None = Non
     statistics (``materialize``), the static planner already makes the right
     broadcast/shuffle choices, so AQE buys nothing inside the loop. Ad-hoc
     relational queries keep AQE (skew-join splitting, coalescing) — this
-    scope only covers the superstep bodies.
+    scope only covers the superstep bodies (and the forced repartition of a
+    coarse edge cache, ``louvain.coarsen``).
 
     ``shuffle_partitions`` (r6) additionally scopes the session
     shuffle-partition count for the loop body — pass
     :func:`state_partitions`'s row-proportional value so V-row state
     shuffles stop scheduling one near-empty task per session partition
     (results are partition-invariant; pinned by the cross-parallelism
-    determinism suite and per-operator digest checks)."""
+    determinism suite and per-operator digest checks). The engine's one
+    session-config writer: a scope on another thread waits for this one to
+    restore the session, so every scope restores exactly what it found."""
     conf = spark.conf
-    prev = conf.get("spark.sql.adaptive.enabled", "true")
-    prev_p = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    if shuffle_partitions is not None and shuffle_partitions < int(prev_p):
-        conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
-        conf.set("spark.sql.shuffle.partitions", prev_p)
+    with _PLANNING:
+        prev = conf.get("spark.sql.adaptive.enabled", "true")
+        prev_p = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        if shuffle_partitions is not None and shuffle_partitions < int(prev_p):
+            conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+        try:
+            yield
+        finally:
+            conf.set("spark.sql.adaptive.enabled", prev)
+            conf.set("spark.sql.shuffle.partitions", prev_p)
 
 
 # name swap stamps on the checkpoint RDD of every state it creates: _release

@@ -109,6 +109,8 @@ from graftlouvain.functions.iterate import (
     Superstep,
     fixpoint,
     materialize,  # noqa: F401 (wrapped here by perfbench/trace.py)
+    row_partitions,
+    superstep_planning,
     swap,
     swap_observed_multi,
 )
@@ -169,10 +171,6 @@ def singleton_modularity(graph: LinkGraph, reference_convention: bool = False) -
 # the superstep's edge⋈assignment join (AQE — and hence its skew-join
 # splitting — is deliberately off inside superstep loops, see
 # functions.iterate.superstep_planning, so hub mitigation must be static).
-# Coarse levels rebuild their edge cache at ~this many rows per partition
-# (and scope spark.sql.shuffle.partitions down to match); see louvain().
-COARSE_SHRINK_TARGET_ROWS = 32_768
-
 SKEW_SALT_MIN_DEGREE = 100_000
 SKEW_SALT_RATIO = 32.0
 SKEW_SALT_BUCKETS = 16
@@ -545,7 +543,13 @@ def coarsen(graph: LinkGraph, assignments: DataFrame) -> LinkGraph:
     is not required by any downstream operator); edge weights sum between
     communities; intra-community weight lands on the (C,C) self-loop, which the
     symmetric fine table already counts twice, preserving Q exactly:
-    Q(coarse, singleton) == Q(fine, assignments)."""
+    Q(coarse, singleton) == Q(fine, assignments).
+
+    Coarse graphs shrink by orders of magnitude per level, so the coarse
+    graph lowers its edge cache's partition count to :func:`row_partitions`
+    of its edges: a 400-supernode level must not schedule the fine level's
+    thousands of near-empty tasks per exchange per superstep. Labels are
+    partition-invariant (pinned by the cross-parallelism determinism suite)."""
     asg_src = assignments.select(F.col("id").alias("src"), F.col("community").alias("c_src"))
     asg_dst = assignments.select(F.col("id").alias("dst"), F.col("community").alias("c_dst"))
     coarse_edges = (
@@ -554,7 +558,21 @@ def coarsen(graph: LinkGraph, assignments: DataFrame) -> LinkGraph:
         .groupBy(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
         .agg(F.sum("weight").alias("weight"))
     )
-    return LinkGraph.from_edges(coarse_edges, pre_symmetrized=True)
+    built = LinkGraph.from_edges(coarse_edges, pre_symmetrized=True)
+    p = built.edges.rdd.getNumPartitions()  # the built cache's layout: no job
+    want = row_partitions(built.stats.num_directed_edges, p)
+    if want >= p:
+        return built
+    # clone the graph around a repartitioned cache, sharing degrees and stats;
+    # AQE has nothing to coalesce in an explicit repartition, and without it
+    # forcing the cache is 1 job instead of 4
+    with superstep_planning(built.edges.sparkSession):
+        edges = built.edges.repartition(want, "src").cache()
+        edges.count()  # force before dropping the build's cache
+    built.edges.unpersist()
+    return LinkGraph(
+        edges=edges, degrees=built.degrees, vertices=built.vertices, stats=built.stats
+    )
 
 
 def _local_superstep(es, ed, ew, k, S, comm, step, gain_eps, gate_mode):
@@ -729,87 +747,35 @@ def louvain(
     the driver-side numpy kernel (module docstring, LOCAL TIER);
     ``LevelStats.path`` records which tier ran each level.
     ``gate_mode`` selects the oscillation gate ("conflict" default, "parity"
-    = the r2-r4 semantics; see module docstring) — a resume MUST pass the
-    same mode as the original run (with "parity" the gate depends on the
-    superstep index; with "conflict" it does not, but the labels differ
-    between modes).
+    = the r2-r4 semantics; see module docstring).
 
-    ``resume=True`` (requires ``checkpointer``) restarts from the latest
-    committed superstep in the checkpoint manifest — the public crash-recovery
-    path (S4; the reference round-trips state the same way in its tests,
-    communitystate.rs:890-971): the level-local assignments are loaded from
-    the superstep snapshot, the coarse graph and global assignments from the
-    preceding level records, and the level continues at the next superstep
-    with the even/odd gate parity AND the convergence streak (recomputed from
-    the committed move counts) preserved. Supersteps are deterministic given
-    assignments, so a resumed run produces byte-identical labels — provided
-    the resume passes the same ``min_moves_frac`` as the original run (the
-    streak depends on the slack). ``LevelStats`` for levels completed before
-    the crash are not replayed.
-
-    Concurrency hazard: the coarse-level shrink scopes the SESSION-GLOBAL
-    ``spark.sql.shuffle.partitions`` down while coarse levels run (restored in
-    a ``finally``), because the loop's shuffles inherit it implicitly — so a
-    CONCURRENT query on the same SparkSession silently runs at the shrunk
-    parallelism until the run ends. Run louvain() on a dedicated session (the
-    normal deployment shape: one driver, one job) or accept the interleaving.
+    ``resume=True`` (requires ``checkpointer``) restarts after the latest
+    committed superstep, as :meth:`CheckpointManager.resume_point` reads it —
+    the public crash-recovery path (S4; the reference round-trips state the
+    same way, communitystate.rs:890-971). Gate parity and the convergence
+    streak are preserved, so the labels are byte-identical to an
+    uninterrupted run's. A resume with other ``gate_mode``,
+    ``min_moves_frac``, ``gain_eps``, ``max_supersteps`` or input graph
+    raises ``ValueError``. ``LevelStats`` of levels completed before the
+    crash are not replayed. The run writes no session config: coarse graphs
+    size their own edge cache (:func:`coarsen`).
     """
-    global_asg = singleton_assignments(graph)
-    cur = graph
+    global_asg, q_prev = singleton_assignments(graph), singleton_modularity(graph)
+    start = None
+    if checkpointer is not None:
+        checkpointer = checkpointer.for_run(
+            graph, gate_mode=gate_mode, min_moves_frac=min_moves_frac,
+            gain_eps=gain_eps, max_supersteps=max_supersteps,
+        )
+        start = checkpointer.resume_point(graph) if resume else None
+    cur = graph if start is None else start.graph
+    if start is not None and start.level > 0:
+        global_asg, q_prev = start.global_assignments, start.modularity
     level_stats: list[LevelStats] = []
-    q_prev = singleton_modularity(cur)
-    start_level = 0
-    resume_asg = None
-    resume_step = 0
-    resume_streak = 0
-    if resume and checkpointer is not None:
-        rec = checkpointer.latest_superstep("louvain")
-        if rec is not None:
-            spark = graph.edges.sparkSession
-            manifest = checkpointer.manifest()
-            start_level = int(rec["level"])
-            resume_step = int(rec["superstep"]) + 1
-            resume_asg = checkpointer.load_assignments(spark, rec)
-            if start_level > 0:
-                coarse = [
-                    r for r in manifest
-                    if r["kind"] == "level" and r["algorithm"] == "louvain_coarse"
-                    and r["level"] == start_level
-                ][-1]
-                cur = LinkGraph.from_edges(
-                    spark.read.parquet(coarse["coarse_edges_path"]),
-                    pre_symmetrized=True,
-                )
-                lvl = [
-                    r for r in manifest
-                    if r["kind"] == "level" and r["algorithm"] == "louvain"
-                    and r["level"] == start_level - 1
-                ][-1]
-                global_asg = spark.read.parquet(lvl["assignments_path"])
-                q_prev = float(lvl["modularity"])
-            # Restore the convergence streak from the committed move counts,
-            # else a resume into a slack-converged (min_moves_frac > 0) level
-            # would run extra real supersteps and diverge from the
-            # uninterrupted run.
-            slack = int(min_moves_frac * max(cur.stats.num_vertices, 1))
-            lvl_recs = sorted(
-                (
-                    r for r in manifest
-                    if r["kind"] == "superstep" and r["algorithm"] == "louvain"
-                    and r["level"] == start_level and r["superstep"] < resume_step
-                ),
-                key=lambda r: r["superstep"],
-            )
-            for r in reversed(lvl_recs):
-                if int(r["moves"]) <= slack:
-                    resume_streak += 1
-                else:
-                    break
     q = q_prev
     spark = graph.edges.sparkSession
-    p_orig = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
-        for level in range(start_level, max_levels):
+        for level in range(start.level if start else 0, max_levels):
             edges = cur.local_edges() if checkpointer is None else None
             if edges is not None:
                 # coarse graphs only shrink: this level and every later one
@@ -825,19 +791,16 @@ def louvain(
                 ))
                 break
             asg, stats = louvain_level(
-                cur,
-                assignments=resume_asg if level == start_level else None,
+                cur, assignments=start.assignments if start else None,
                 max_supersteps=max_supersteps, gain_eps=gain_eps, level=level,
-                checkpointer=checkpointer,
-                min_moves_frac=min_moves_frac,
-                start_step=resume_step if level == start_level else 0,
-                start_streak=resume_streak if level == start_level else 0,
+                checkpointer=checkpointer, min_moves_frac=min_moves_frac,
+                start_step=start.step if start else 0,
+                start_streak=start.streak if start else 0,
                 gate_mode=gate_mode,
             )
-            # Coarsen first, then read the level's Q off the coarse graph's
-            # singleton partition (exactly equal, two scalar aggs instead of two
-            # full edge⋈assignment joins on the fine graph — see
-            # singleton_modularity).
+            start = None  # only the first level resumes
+            # the level's Q is the coarse graph's singleton Q: exactly equal,
+            # and no join over the fine graph (see singleton_modularity)
             nxt = coarsen(cur, asg)
             q = singleton_modularity(nxt)
             stats.modularity = q
@@ -862,57 +825,13 @@ def louvain(
             if cur is not graph:
                 cur.unpersist()
             cur = nxt
-            # Coarse graphs shrink by orders of magnitude per level; keeping the
-            # fine graph's partition count schedules p_orig near-empty tasks per
-            # exchange per superstep (pure scheduling floor — at 100 TB the fine
-            # level runs thousands of partitions that a 400-supernode coarse
-            # level must not inherit). Rebuild the edge cache at a row-
-            # proportional partition count and scope the session shuffle
-            # partitions down with it; labels are partition-invariant (pinned by
-            # the cross-parallelism determinism suite), and the conf is restored
-            # after the loop.
-            p_want = max(
-                4,
-                min(
-                    p_orig,
-                    -(-cur.stats.num_directed_edges // COARSE_SHRINK_TARGET_ROWS),
-                ),
-            )
-            if p_want < int(spark.conf.get("spark.sql.shuffle.partitions")):
-                old = cur
-                # r6: the coarse edge table is ALREADY pair-aggregated with
-                # correct degrees/stats — the shrink only needs the edge
-                # cache re-laid-out at p_want partitions, so clone the graph
-                # around a repartitioned cache instead of re-running the full
-                # from_edges aggregate+degrees+stats pipeline (one count job
-                # to force the new cache, vs the old agg+stats job chain).
-                # Degrees/vertices/stats are SHARED with the old graph, so
-                # only the old edge cache is released.
-                new_edges = old.edges.repartition(p_want, "src").cache()
-                new_edges.count()  # force before dropping the old cache
-                cur = LinkGraph(
-                    edges=new_edges,
-                    degrees=old.degrees,
-                    vertices=old.vertices,
-                    stats=old.stats,
-                )
-                old.edges.unpersist()
-                spark.conf.set("spark.sql.shuffle.partitions", p_want)
             if checkpointer is not None:
-                checkpointer.save_level(
-                    algorithm="louvain_coarse", level=level + 1, assignments=None,
-                    degrees=cur.degrees, coarse_edges=cur.edges, modularity=q,
-                )
+                checkpointer.save_coarse(level + 1, cur, q)
             if cur.stats.num_vertices <= 1:
                 break
     finally:
-        # the coarse-level shrink scopes this down; always restore
-        spark.conf.set("spark.sql.shuffle.partitions", p_orig)
-        # r6: release the LAST coarse graph's edge+degree caches — every run
-        # previously leaked one cache pair per exit path until JVM GC (the
-        # returned assignments are checkpoint-backed, never cur-backed)
+        # release the last coarse graph's caches (the returned assignments
+        # are checkpoint-backed, never cur-backed)
         if cur is not graph:
             cur.unpersist()
-    return LouvainResult(
-        assignments=global_asg, modularity=q, levels=level_stats
-    )
+    return LouvainResult(assignments=global_asg, modularity=q, levels=level_stats)

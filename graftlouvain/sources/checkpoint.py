@@ -16,20 +16,40 @@ a real object store too). When an Iceberg catalog IS configured,
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graftlouvain.operators.graph import LinkGraph
 
 # Manifest record format. v2 renamed write_wall_ms -> persist_wall_ms (the
 # timer spans materialization + lineage + file write, not just the write);
 # records carry manifest_version so cross-round consumers aggregating timing
 # fields can dispatch on it instead of seeing silent gaps. v1 records (no
-# version field) predate the rename.
-MANIFEST_VERSION = 2
+# version field) predate the rename. v3 records written for a Louvain run
+# carry ``run``: its parameters and its input graph's fingerprint.
+MANIFEST_VERSION = 3
+
+# the GraphStats fields that fingerprint a run's input graph (no job: from_edges
+# computes them in its one stats pass)
+FINGERPRINT = ("num_vertices", "num_directed_edges", "total_weight", "sum_degree_sq", "max_id")
+
+
+class ResumePoint(NamedTuple):
+    """A Louvain level to continue; the last two fields are None at level 0."""
+
+    level: int
+    step: int
+    streak: int
+    graph: LinkGraph
+    assignments: DataFrame
+    global_assignments: DataFrame | None
+    modularity: float | None
 
 
 class CheckpointManager:
@@ -38,6 +58,14 @@ class CheckpointManager:
         self.table_format = table_format
         os.makedirs(base_dir, exist_ok=True)
         self.manifest_path = os.path.join(base_dir, "manifest.jsonl")
+        self.run: dict = {}  # stamped on every record; see for_run
+
+    def for_run(self, graph: LinkGraph, **params) -> CheckpointManager:
+        """A copy of this manager that stamps every record with the Louvain
+        run's ``params`` and ``graph``'s fingerprint (see :meth:`resume_point`)."""
+        run = copy.copy(self)
+        run.run = {**params, **{f: getattr(graph.stats, f) for f in FINGERPRINT}}
+        return run
 
     # -- write ------------------------------------------------------------
 
@@ -67,6 +95,8 @@ class CheckpointManager:
         return path, lineage, wall_ms
 
     def _append_manifest(self, record: dict) -> None:
+        if self.run:
+            record["run"] = self.run
         line = (json.dumps(record, sort_keys=True) + "\n").encode()
         with open(self.manifest_path, "ab+") as f:
             end = f.seek(0, os.SEEK_END)
@@ -145,6 +175,13 @@ class CheckpointManager:
             record["coarse_edges_path"] = path
         self._append_manifest(record)
 
+    def save_coarse(self, level: int, graph: LinkGraph, modularity: float) -> None:
+        """The graph level ``level`` runs on, read back by :meth:`resume_point`."""
+        self.save_level(
+            algorithm="louvain_coarse", level=level, assignments=None,
+            degrees=graph.degrees, coarse_edges=graph.edges, modularity=modularity,
+        )
+
     # -- read / resume ----------------------------------------------------
 
     def manifest(self) -> list[dict]:
@@ -169,11 +206,50 @@ class CheckpointManager:
             r for r in self.manifest()
             if r["kind"] == "superstep" and r["algorithm"] == algorithm
         ]
-        if not records:
-            return None
-        return max(records, key=lambda r: (r["level"], r["superstep"]))
+        return max(records, key=lambda r: (r["level"], r["superstep"]), default=None)
 
     def load_assignments(self, spark: SparkSession, record: dict) -> DataFrame:
         if self.table_format == "iceberg":
             return spark.read.format("iceberg").load(record["path"])
         return spark.read.parquet(record["path"])
+
+    def resume_point(self, graph: LinkGraph) -> ResumePoint | None:
+        """Where this manager's Louvain run (:meth:`for_run`) on ``graph``
+        resumes: after the latest committed superstep, or None. The streak is
+        recounted from the level's committed moves, else a resume into a
+        slack-converged level would run extra supersteps and diverge.
+        ``ValueError`` names the fields that differ if that record is of
+        another run; a record with no fingerprint (manifest version < 3)
+        resumes unchecked."""
+        rec = self.latest_superstep("louvain")
+        if rec is None:
+            return None
+        theirs = rec.get("run", self.run)
+        diff = [k for k in self.run if theirs.get(k) != self.run[k]]
+        if diff:
+            raise ValueError(
+                f"checkpoint {self.base_dir} is of another run; differing: "
+                + ", ".join(f"{k} ({theirs.get(k)!r} != {self.run[k]!r})" for k in diff)
+            )
+        manifest = self.manifest()
+        levels = {(r["algorithm"], r["level"]): r for r in manifest if r["kind"] == "level"}
+        spark = graph.edges.sparkSession
+        level, step = int(rec["level"]), int(rec["superstep"]) + 1
+        global_asg = q = None
+        if level > 0:
+            coarse = levels["louvain_coarse", level]["coarse_edges_path"]
+            graph = LinkGraph.from_edges(spark.read.parquet(coarse), pre_symmetrized=True)
+            prev = levels["louvain", level - 1]
+            global_asg = spark.read.parquet(prev["assignments_path"])
+            q = float(prev["modularity"])
+        slack = int(self.run["min_moves_frac"] * max(graph.stats.num_vertices, 1))
+        moves = {
+            r["superstep"]: int(r["moves"]) for r in manifest
+            if r["kind"] == "superstep" and r["algorithm"] == "louvain" and r["level"] == level
+        }
+        streak = 0  # the below-slack supersteps that end at step - 1
+        while streak < step and moves[step - 1 - streak] <= slack:
+            streak += 1
+        return ResumePoint(
+            level, step, streak, graph, self.load_assignments(spark, rec), global_asg, q
+        )

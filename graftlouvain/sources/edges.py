@@ -13,14 +13,10 @@ Scale notes: pair expansion within a key (commit / basename) is quadratic in
 the key's group size — giant commits (vendored-tree imports, renames) are the
 classic skew bomb, so groups larger than ``max_group`` are DROPPED (standard
 practice in co-change mining; documented, deterministic). Expansion runs as an
-equi self-join so Catalyst keeps everything JVM-side with AQE skew splitting;
-``pairs_by_key(..., use_pandas=True)`` offers the grouped pandas-UDF expansion
-(combinations per group) as the alternative path for very wide groups.
+equi self-join so Catalyst keeps everything JVM-side with AQE skew splitting.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -57,7 +53,6 @@ def pairs_by_key(
     key_col: str,
     id_col: str = "id",
     max_group: int = 1000,
-    use_pandas: bool = False,
 ) -> DataFrame:
     """Generic co-occurrence pair expansion: rows (key, id) → undirected edges
     (src < dst, weight = #distinct shared keys).
@@ -69,28 +64,19 @@ def pairs_by_key(
     sizes = k.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
     keep = sizes.where((F.col("n") >= 2) & (F.col("n") <= max_group)).select("k")
     k = k.join(keep, "k", "left_semi")
-    if use_pandas:
-        def expand(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = sorted(pdf["id"].tolist())
-            out = [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
-            return pd.DataFrame(out, columns=["src", "dst"])
-
-        pairs = k.groupBy("k").applyInPandas(expand, schema="src long, dst long")
-    else:
-        a = k.select("k", F.col("id").alias("src"))
-        b = k.select("k", F.col("id").alias("dst"))
-        pairs = a.join(b, "k").where(F.col("src") < F.col("dst")).select("src", "dst")
+    a = k.select("k", F.col("id").alias("src"))
+    b = k.select("k", F.col("id").alias("dst"))
+    pairs = a.join(b, "k").where(F.col("src") < F.col("dst")).select("src", "dst")
     return pairs.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("double").alias("weight")
     )
 
 
-def cochange_edges(corpus: DataFrame, files: DataFrame, max_group: int = 1000,
-                   use_pandas: bool = False) -> DataFrame:
+def cochange_edges(corpus: DataFrame, files: DataFrame, max_group: int = 1000) -> DataFrame:
     keyed = corpus.select("repo", "path", "commit").join(
         files.select("repo", "path", "id"), ["repo", "path"]
     )
-    return pairs_by_key(keyed, "commit", max_group=max_group, use_pandas=use_pandas)
+    return pairs_by_key(keyed, "commit", max_group=max_group)
 
 
 def copath_edges(files: DataFrame, max_group: int = 1000) -> DataFrame:

@@ -19,7 +19,7 @@ from graftlouvain.sources.edges import (
     pairs_by_key,
 )
 
-from tests.fixtures import FIXTURE_KARATE_W, to_df
+from tests.fixtures import FIXTURE_28_W, FIXTURE_KARATE_W, to_df
 
 
 @pytest.fixture(scope="module")
@@ -70,15 +70,6 @@ def test_cochange_edges(spark, corpus, files):
                 want[(a, b)] += 1.0
     got = {(r["src"], r["dst"]): r["weight"] for r in edges}
     assert got == dict(want)
-
-
-def test_pairs_by_key_pandas_path_equal(spark, corpus, files):
-    keyed = corpus.select("repo", "path", "commit").join(
-        files.select("repo", "path", "id"), ["repo", "path"]
-    )
-    sql_path = pairs_by_key(keyed, "commit", use_pandas=False).collect()
-    pd_path = pairs_by_key(keyed, "commit", use_pandas=True).collect()
-    assert sorted(map(tuple, sql_path)) == sorted(map(tuple, pd_path))
 
 
 def test_max_group_drops_giant_keys(spark):
@@ -214,3 +205,34 @@ def test_checkpoint_resume_with_slack(spark, tmp_path):
     )
     got = {r["id"]: r["community"] for r in res.assignments.collect()}
     assert got == want
+
+
+def test_resume_refuses_another_run(spark, tmp_path):
+    """A resume whose parameters or input graph differ from the checkpointed
+    run's raises, naming what differs, instead of diverging silently; a
+    manifest written before records carried a fingerprint resumes as
+    before."""
+    import json
+
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    run = dict(max_levels=1, max_supersteps=2)
+    ckdir = str(tmp_path / "ck")
+    louvain(g, checkpointer=CheckpointManager(ckdir), **run)
+    with pytest.raises(ValueError, match=r"differing: min_moves_frac \(0\.0 != 0\.1\)$"):
+        louvain(g, min_moves_frac=0.1, checkpointer=CheckpointManager(ckdir),
+                resume=True, **run)
+    other = LinkGraph.from_edges(to_df(spark, FIXTURE_28_W))
+    with pytest.raises(ValueError, match="num_vertices") as err:
+        louvain(other, checkpointer=CheckpointManager(ckdir), resume=True, **run)
+    assert "min_moves_frac" not in str(err.value)
+
+    ck = CheckpointManager(ckdir)
+    with open(ck.manifest_path) as f:
+        records = [json.loads(line) for line in f]
+    assert all(r["manifest_version"] == 3 and "run" in r for r in records)
+    with open(ck.manifest_path, "w") as f:
+        for r in records:
+            r.pop("run")
+            f.write(json.dumps(r) + "\n")
+    res = louvain(g, min_moves_frac=0.1, checkpointer=ck, resume=True, **run)
+    assert res.levels[0].start_step == 2

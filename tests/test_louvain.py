@@ -559,17 +559,85 @@ def test_concurrent_levels_share_session(spark):
         start.wait()
         return _labels(louvain_level(g)[0])
 
-    # superstep_planning scopes session-global conf, and overlapping scopes
-    # restore it out of order — put it back for the rest of the suite
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     conf = {k: spark.conf.get(k) for k in keys}
-    try:
-        with ThreadPoolExecutor(len(graphs)) as ex:
-            got = list(ex.map(level, graphs))
-    finally:
-        for k, v in conf.items():
-            spark.conf.set(k, v)
+    with ThreadPoolExecutor(len(graphs)) as ex:
+        got = list(ex.map(level, graphs))
     assert got == serial
+    assert {k: spark.conf.get(k) for k in keys} == conf
+
+
+def test_superstep_planning_scopes_never_overlap(spark):
+    """Thread A enters a planning scope, thread B tries to enter one while A
+    is inside, A exits, then B exits: B gets in only once A has restored the
+    session, so the session is left exactly as found."""
+    import threading
+
+    from graftlouvain.functions.iterate import superstep_planning
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    found = {k: spark.conf.get(k) for k in keys}
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    overlapped = []
+
+    def a():
+        with superstep_planning(spark, 1):
+            a_in.set()
+            overlapped.append(b_in.wait(2))
+        a_out.set()
+
+    def b():
+        a_in.wait(30)
+        with superstep_planning(spark, 2):
+            b_in.set()
+            a_out.wait(30)
+
+    threads = [threading.Thread(target=f) for f in (a, b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    left = {k: spark.conf.get(k) for k in keys}
+    for k, v in found.items():  # keep a failure from leaking into later tests
+        spark.conf.set(k, v)
+    assert not any(t.is_alive() for t in threads)
+    assert overlapped == [False] and b_in.is_set()
+    assert left == found
+
+
+def test_checkpointed_run_writes_no_session_config(spark, tmp_path, monkeypatch):
+    """A checkpointed run keeps every level on SQL and never writes the
+    session config: every coarsen sees the session's shuffle partitions,
+    each coarse edge cache is sized by its own row count, and the labels
+    equal the local tier's."""
+    import graftlouvain.operators.louvain as lv
+    from graftlouvain.sources.checkpoint import CheckpointManager
+
+    key = "spark.sql.shuffle.partitions"
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    want = _labels(louvain(g).assignments)
+    real, seen, caches = lv.coarsen, [], []
+
+    def spy(graph, assignments):
+        seen.append(spark.conf.get(key))
+        out = real(graph, assignments)
+        caches.append((out.edges.rdd.getNumPartitions(), out.stats.num_directed_edges))
+        return out
+
+    monkeypatch.setattr(lv, "coarsen", spy)
+    found = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        res = louvain(g, checkpointer=CheckpointManager(str(tmp_path / "ck")))
+        after = spark.conf.get(key)
+    finally:
+        spark.conf.set(key, found)
+    assert after == "16"
+    assert len(seen) >= 2 and seen == ["16"] * len(seen)
+    for parts, edges in caches:
+        assert parts <= max(4, -(-edges // 32_768))
+    assert [s.path for s in res.levels] == ["spark"] * len(res.levels)
+    assert _labels(res.assignments) == want
 
 
 def test_weak_planted_level_not_committed(spark):

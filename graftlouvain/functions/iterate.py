@@ -1,6 +1,8 @@
-"""The one fixpoint loop, :func:`fixpoint`, that every iterative operator
-runs on: an operator supplies only its superstep body, which swaps the state
-through :func:`swap` or :func:`swap_observed` / :func:`swap_observed_multi`.
+"""The one superstep loop, :func:`converge`, that every iterative operator
+runs on, in both tiers: an operator supplies only its superstep body. Spark
+operators run it through :func:`fixpoint` and swap their state through
+:func:`swap` or :func:`swap_observed` / :func:`swap_observed_multi`; the
+local numpy kernels (Louvain levels, PageRank) run it through :func:`settle`.
 
 Every swap handles two pathologies of iterated DataFrame plans:
 
@@ -26,9 +28,9 @@ from __future__ import annotations
 import threading
 import time
 from contextlib import contextmanager
-from typing import Any, Callable, NamedTuple
+from typing import Any, Callable, Iterator, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -45,11 +47,9 @@ def materialize(df: DataFrame) -> DataFrame:
     blocks in the same pass; the LogicalRDD is built after that eager job, so
     it is stamped with the real in-memory byte size (verified: stamped stats
     stay constant across 50+ supersteps instead of snowballing). The cache is
-    then dropped — the checkpointed RDD blocks are independent storage. An
-    earlier revision ran an explicit ``count()`` between cache and checkpoint
-    (two jobs); the single-job form measured ~0.1 s/superstep faster at the
-    same stamped stats (same-session interleaved A/B, BENCH notes r3).
-    """
+    then dropped — the checkpointed RDD blocks are independent storage. (An
+    explicit ``count()`` before the checkpoint, two jobs, measured ~0.1 s
+    per superstep slower at the same stamped stats, BENCH notes r3.)"""
     cached = df.cache()
     ck = cached.localCheckpoint(eager=True)
     cached.unpersist()
@@ -123,14 +123,13 @@ def superstep_planning(spark: SparkSession, shuffle_partitions: int | None = Non
     scope only covers the superstep bodies (and the forced repartition of a
     coarse edge cache, ``louvain.coarsen``).
 
-    ``shuffle_partitions`` (r6) additionally scopes the session
-    shuffle-partition count for the loop body — pass
-    :func:`state_partitions`'s row-proportional value so V-row state
-    shuffles stop scheduling one near-empty task per session partition
-    (results are partition-invariant; pinned by the cross-parallelism
-    determinism suite and per-operator digest checks). The engine's one
-    session-config writer: a scope on another thread waits for this one to
-    restore the session, so every scope restores exactly what it found."""
+    ``shuffle_partitions`` (:func:`state_partitions`'s value) also scopes
+    the session shuffle-partition count down, so V-row state shuffles stop
+    scheduling one near-empty task per session partition (results are
+    partition-invariant, pinned by the cross-parallelism determinism suite).
+    The engine's one session-config writer: a scope on another thread waits
+    for this one to restore the session, so every scope restores exactly
+    what it found."""
     conf = spark.conf
     with _PLANNING:
         prev = conf.get("spark.sql.adaptive.enabled", "true")
@@ -190,8 +189,6 @@ def swap_observed_multi(
     """:func:`swap` observing ``sum(c)`` for SEVERAL columns in the one
     materialization pass: ``int`` for integer columns, ``float`` for
     floating ones, 0 over an empty state."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     observed = new.observe(
         obs, *[F.sum(F.col(c)).alias(f"m{i}") for i, c in enumerate(metric_cols)]
@@ -207,45 +204,66 @@ class Superstep(NamedTuple):
     wall_ms: int  # the step alone
 
 
+def converge(
+    state: Any,
+    step: Callable[[Any, int], tuple[Any, Any]],
+    max_iter: int,
+    quiet: Callable[[Any], bool] | None = None,
+    patience: int = 1,
+    start: int = 0,
+    start_streak: int = 0,
+) -> Iterator[tuple[Any, Superstep]]:
+    """THE superstep loop, over any state: run ``state, metric = step(state,
+    i)`` for ``i`` from ``start`` while ``i < max_iter``, and yield each new
+    state with its :class:`Superstep` record, timed around the step alone.
+    With ``quiet``, stop once ``quiet(metric)`` has held for ``patience``
+    consecutive supersteps, ``start_streak`` of them already run before a
+    resume (so nothing runs when ``start_streak >= patience``)."""
+    streak, i = start_streak, start
+    while i < max_iter and streak < patience:
+        t0 = time.monotonic()
+        state, metric = step(state, i)
+        yield state, Superstep(i, metric, int((time.monotonic() - t0) * 1000))
+        if quiet is not None:
+            streak = streak + 1 if quiet(metric) else 0
+        i += 1
+
+
+def settle(state: Any, step, max_iter: int, **loop) -> tuple[Any, list[Superstep]]:
+    """Run :func:`converge` to its end: the last state and every record."""
+    records = []
+    for state, rec in converge(state, step, max_iter, **loop):
+        records.append(rec)
+    return state, records
+
+
 def fixpoint(
     spark: SparkSession,
     n_rows: int,
     init: Callable[[], DataFrame],
     step: Callable[[DataFrame, int], tuple[DataFrame, Any]],
     max_iter: int,
-    quiet: Callable[[Any], bool] | None = None,
-    patience: int = 1,
-    start: int = 0,
-    start_streak: int = 0,
     after: Callable[[DataFrame, Superstep], None] | None = None,
+    **loop,
 ) -> tuple[DataFrame, list[Superstep]]:
-    """Run ``state, metric = step(state, i)`` for ``i`` from ``start`` while
-    ``i < max_iter``, from the materialized ``init()``, inside one
+    """:func:`converge` (``loop`` holds its stop and resume arguments) over
+    a DataFrame state, from the materialized ``init()``, inside one
     :func:`superstep_planning` scope sized for an ``n_rows``-row state (so
     whatever ``init`` caches is planned under it too). Return the final
     state and one :class:`Superstep` record per superstep.
 
     ``step`` swaps the state itself, through its own module's ``swap``
-    binding. With ``quiet``, the loop stops once ``quiet(metric)`` has held
-    for ``patience`` consecutive supersteps, ``start_streak`` of them
-    already run before a resume. ``after(state, record)`` runs after each
-    superstep, outside its timing. A superstep that raises releases the
-    live state."""
+    binding. ``after(state, record)`` runs after each superstep, outside its
+    timing. A superstep or an ``after`` that raises releases the live state
+    (for ``after``, the state that superstep produced)."""
     records: list[Superstep] = []
     with superstep_planning(spark, state_partitions(spark, n_rows)):
         state = swap(None, init())
-        streak, i = start_streak, start
         try:
-            while i < max_iter and streak < patience:
-                t0 = time.monotonic()
-                state, metric = step(state, i)
-                rec = Superstep(i, metric, int((time.monotonic() - t0) * 1000))
+            for state, rec in converge(state, step, max_iter, **loop):
                 records.append(rec)
                 if after is not None:
                     after(state, rec)
-                if quiet is not None:
-                    streak = streak + 1 if quiet(metric) else 0
-                i += 1
         except BaseException:
             _release(state)
             raise

@@ -20,19 +20,24 @@ tot'_C = tot_C − k_i·[C==A]:
 
 argmax over C ties broken by smallest community id; i moves iff
 score(best) > score(A) + gain_eps AND the oscillation gate passes. Two gates
-(both deterministic swap-cycle breakers from the "minimum labeling" family of
+(both deterministic swap breakers from the "minimum labeling" family of
 parallel-Louvain heuristics, cf. Lu, Halappanavar & Kalyanaraman 2015):
 
 - ``gate_mode="conflict"`` (DEFAULT, r5): every improving move applies
   UNLESS its target community is one some improving vertex is itself leaving
   AND the move would raise the label (``target > cur``) — i.e. moves into
   stable communities always apply; moves into communities that are losing a
-  member only apply in the descending-id direction. This breaks every swap
-  cycle (around a cycle of mutually-conflicting moves the labels would have
-  to strictly increase forever) while provably applying ≥ 1 improving move
-  per superstep whenever one exists (follow the blocked chain: each blocked
-  move's target is a mover's current community with a strictly larger label
-  — finite set, contradiction). Measured, supersteps-to-convergence drop
+  member only apply in the descending-id direction. Within one superstep no
+  two vertices swap communities (one of the two moves raises the label into
+  a community being left), and ≥ 1 improving move applies whenever one
+  exists (follow the blocked chain: each blocked move's target is a mover's
+  current community with a strictly larger label — finite set,
+  contradiction). Across supersteps the gate does NOT rule out cycles: on
+  the symmetrized ``perfbench.inputs.planted_edges(25, 2000, 10, 20, 0.2)``
+  at slack 0 the state after 10 supersteps equals the state after 8, and
+  level 0 runs to the 64-superstep cap with 2 moves in each (the
+  sequential oracle too; the parity gate ends it in 15); no stop rule here
+  detects such a cycle yet. Measured, supersteps-to-convergence drop
   ~35-40 % against the parity gate, which blocks half the improving moves.
 - ``gate_mode="parity"`` (r2-r4 semantics, kept fully supported): on even
   supersteps only moves to a SMALLER community id apply, on odd supersteps
@@ -67,21 +72,22 @@ it.
 
 LOCAL TIER: at the top of each level of :func:`louvain`, a level graph with
 at most ``graph.LOCAL_MAX_EDGES`` directed edges is collected ONCE to the
-driver by :meth:`LinkGraph.local_edges` (the helper and threshold PageRank's
-local tier shares), and that level and every later one run in
-:func:`_local_levels`: supersteps, coarsening, per-level Q and every stop
-rule, as numpy array operations. Coarse graphs only shrink, so once a level
+driver by :meth:`LinkGraph.local_edges` (shared with PageRank's local
+tier), and that level and every later one run in :func:`_local_levels`:
+supersteps, coarsening and per-level Q as numpy array operations, the
+supersteps on the SQL levels' loop (``functions.iterate.converge``) and
+stop rule (:func:`_level_stop`). Coarse graphs only shrink, so once a level
 is local every later level is too; large graphs keep SQL level 0 and their
-coarse levels go local. One ``createDataFrame`` join unwinds the labels. The
-kernel is a port of :func:`_superstep_cte` and :func:`louvain_level`, not a
-redesign: ids arrive compacted in sorted order (so the smallest-id
-tie-break holds), candidates come from non-self-loop edges, the stay score
-is analytic, and the score is evaluated in the statement's operation order.
-It runs on the driver rather than in an ``applyInPandas`` task: below the
-threshold all edges land in one task either way, and ``applyInPandas``
-would add a one-partition shuffle and a Python worker and would have to
-pass per-level stats back through its output schema. On a graph with no
-weight (S = 0) both tiers keep every vertex where it is.
+coarse levels go local. One ``createDataFrame`` join unwinds the labels.
+The kernel is a port of :func:`_superstep_cte`, not a redesign: ids arrive
+compacted in sorted order (so the smallest-id tie-break holds), candidates
+come from non-self-loop edges, the stay score is analytic, and the score is
+evaluated in the statement's operation order. It runs on the driver rather
+than in an ``applyInPandas`` task: below the threshold all edges land in
+one task either way, and ``applyInPandas`` would add a one-partition
+shuffle and a Python worker and would have to pass per-level stats back
+through its output schema. On a graph with no weight (S = 0) both tiers
+keep every vertex where it is.
 
 Both tiers give identical labels, Q and per-level superstep and move counts
 whenever the weights are integer-valued below 2^53 (every sum is then exact
@@ -95,7 +101,6 @@ for every level: the kernel produces no per-superstep states to save.
 from __future__ import annotations
 
 import itertools
-import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import partial
@@ -110,6 +115,7 @@ from graftlouvain.functions.iterate import (
     fixpoint,
     materialize,  # noqa: F401 (wrapped here by perfbench/trace.py)
     row_partitions,
+    settle,
     superstep_planning,
     swap,
     swap_observed_multi,
@@ -158,10 +164,6 @@ def singleton_modularity(graph: LinkGraph, reference_convention: bool = False) -
     s = 2.0 * graph.two_m if reference_convention else graph.two_m
     if s == 0:
         return 0.0
-    # r6: both scalars ride the from_edges stats pass (GraphStats
-    # sum_degree_sq / self_loop_weight) — this call is now pure driver
-    # arithmetic; the level loop previously paid two scalar-aggregate JOBS
-    # per level (plus two at louvain() start) for exactly these numbers.
     return float(graph.stats.self_loop_weight) / s - float(
         graph.stats.sum_degree_sq
     ) / (s * s)
@@ -411,18 +413,28 @@ def _superstep(
     gain_eps: float,
     gate_mode: str = "parity",
 ) -> DataFrame:
-    """One synchronous local-move superstep from state ``assignments``
-    ([id, community, k_i]) of a graph with weight: score candidates against
-    frozen state, argmax per vertex (ties → smallest community id), apply
-    strictly-improving moves that pass the oscillation gate (``gate_mode``:
-    "parity" = the even/odd direction gate keyed on ``step``; "conflict" =
-    the moved-community conflict gate, step-independent — see module
-    docstring). Default stays "parity" so the fixed-step driver queries keep
+    """One synchronous local-move superstep (:func:`_superstep_cte`) from
+    state ``assignments`` ([id, community, k_i]) of a graph with weight.
+    ``gate_mode`` defaults to "parity" so the fixed-step driver queries keep
     their pinned semantics; the production loop passes its own mode."""
     with _superstep_views(graph) as run:
         return run(assignments, partial(
             _superstep_cte, step=step, EPS=_sql_double(gain_eps), gate=gate_mode
         ))
+
+
+def _level_stop(num_vertices: int, min_moves_frac: float, gate_mode: str):
+    """THE level stop rule, ``(quiet, patience)``, of both tiers' loop
+    (``functions.iterate.converge``) and of a resume's streak: a superstep
+    is quiet when it moves at most ``min_moves_frac·V`` vertices; the level
+    ends after ``patience`` quiet ones in a row. Under the conflict gate at
+    slack 0 one zero-move superstep is the fixpoint (the gate is
+    step-independent); the parity gate needs a quiet even+odd PAIR, and a
+    slack-quiet superstep (> 0 moves) a confirming second."""
+    slack = int(min_moves_frac * max(num_vertices, 1))
+    return (lambda moves: moves <= slack), (
+        1 if gate_mode == "conflict" and slack == 0 else 2
+    )
 
 
 @dataclass
@@ -434,6 +446,12 @@ class LevelStats:
     wall_ms: list = field(default_factory=list)
     modularity: float = float("nan")
     path: str = "spark"  # "spark" (SQL supersteps) or "local" (numpy kernel)
+
+    @classmethod
+    def from_records(cls, level: int, records: list[Superstep], **kw) -> "LevelStats":
+        """A level's stats from its loop's :class:`Superstep` records."""
+        moves, wall_ms = [r.metric for r in records], [r.wall_ms for r in records]
+        return cls(level=level, supersteps=len(records), moves=moves, wall_ms=wall_ms, **kw)
 
 
 def louvain_level(
@@ -448,38 +466,22 @@ def louvain_level(
     start_streak: int = 0,
     gate_mode: str = "conflict",
 ) -> tuple[DataFrame, LevelStats]:
-    """L1 one_level (communities.rs:36-41): supersteps until quiescence or
-    ``max_supersteps``.
+    """L1 one_level (communities.rs:36-41): supersteps until the level's
+    stop rule (:func:`_level_stop`) holds or ``max_supersteps``.
 
     Each superstep is ONE ``spark.sql`` statement (:func:`_superstep_cte`)
-    over this level's temp views of the edge cache and the materialized
-    state, followed by ONE materialization that also observes the move
-    count, under either gate and for salted graphs. The edge view is
-    registered once per level; each superstep only re-points the state view
-    (:func:`_superstep_views`), and both views are released when the level
-    ends or raises.
+    over this level's temp views (:func:`_superstep_views`), followed by ONE
+    materialization that also observes the move count.
 
-    ``gate_mode="conflict"`` (default, r5 — see module docstring) applies
-    every improving move whose target community is not itself losing a
-    member (descending-id moves always apply). Quiescence = ONE zero-move
-    superstep: the gate is step-independent, so an unchanged state
-    reproduces itself and a single quiet superstep is already the fixpoint.
-    ``gate_mode="parity"`` (r2-r4 semantics) alternates the even/odd
-    direction gate and needs a full quiet even+odd PAIR (two consecutive
-    zero-move supersteps) to terminate. With ``min_moves_frac > 0`` both
-    modes require two consecutive below-slack supersteps (a slack-quiet
-    superstep does not imply a fixpoint).
-
+    ``gate_mode`` selects the oscillation gate (module docstring).
     ``min_moves_frac`` is the standard parallel-Louvain convergence slack
-    (cf. Lu, Halappanavar & Kalyanaraman 2015): the level also ends once two
-    consecutive supersteps each move fewer than ``min_moves_frac·V`` vertices
-    — dense quasi-random graphs otherwise churn to the superstep cap for
-    near-zero Q payoff. Default 0.0 keeps exact fixpoint semantics (the
-    oracle-pinned configuration). ``start_step``/``start_streak`` resume
-    mid-level from a checkpoint, preserving the even/odd gate parity AND the
-    convergence streak (without the streak, a resume into a slack-converged
-    level would run extra real supersteps and diverge from the uninterrupted
-    run when ``min_moves_frac > 0``).
+    (cf. Lu, Halappanavar & Kalyanaraman 2015): dense quasi-random graphs
+    otherwise churn to the superstep cap for near-zero Q payoff. Default 0.0
+    keeps exact fixpoint semantics (the oracle-pinned configuration).
+    ``start_step``/``start_streak`` resume mid-level from a checkpoint,
+    preserving the even/odd gate parity AND the convergence streak (without
+    the streak, a resume into a slack-converged level would run extra real
+    supersteps and diverge from the uninterrupted run).
     """
     asg = assignments if assignments is not None else singleton_assignments(graph)
     # caller-supplied ids that are not graph vertices never enter the scoring
@@ -492,10 +494,7 @@ def louvain_level(
         if assignments is not None
         else None
     )
-    move_slack = int(min_moves_frac * max(graph.stats.num_vertices, 1))
-    # conflict gate: step-independent, so one exact-zero superstep is a
-    # fixpoint; slack-quiet (> 0 moves) still needs a confirming second
-    quiet_target = 1 if (gate_mode == "conflict" and move_slack == 0) else 2
+    quiet, patience = _level_stop(graph.stats.num_vertices, min_moves_frac, gate_mode)
     # level-loop state = [id, community, k_i]: the degree is joined in ONCE
     # here and then rides through every superstep projection, so the loop
     # never shuffles graph.degrees again.
@@ -523,14 +522,11 @@ def louvain_level(
             graph.edges.sparkSession,
             2 * graph.stats.num_vertices,  # the ≤2V-row gate window is the state shuffle
             lambda: asg, superstep, max_supersteps,
-            quiet=lambda n_moves: n_moves <= move_slack, patience=quiet_target,
+            quiet=quiet, patience=patience,
             start=start_step, start_streak=start_streak,
             after=save if checkpointer is not None else None,
         )
-    stats = LevelStats(
-        level=level, supersteps=len(records), start_step=start_step,
-        moves=[r.metric for r in records], wall_ms=[r.wall_ms for r in records],
-    )
+    stats = LevelStats.from_records(level, records, start_step=start_step)
     result = state.select("id", "community")
     if extra is not None:
         result = result.unionByName(extra)
@@ -615,26 +611,18 @@ def _local_superstep(es, ed, ew, k, S, comm, step, gain_eps, gate_mode):
 
 def _local_level(s, d, w, n, level, max_supersteps, gain_eps, min_moves_frac, gate_mode):
     """numpy twin of :func:`louvain_level` from singletons on the ``n``-vertex
-    graph ``(s, d, w)``: same slack, patience and superstep cap."""
+    graph ``(s, d, w)``: the same loop, stop rule and superstep cap."""
     k = np.bincount(s, weights=w, minlength=n)
     S = float(k.sum())
     nl = s != d
     es, ed, ew = s[nl], d[nl], w[nl]
-    slack = int(min_moves_frac * max(n, 1))
-    patience = 1 if (gate_mode == "conflict" and slack == 0) else 2
-    comm = np.arange(n)
-    stats = LevelStats(level=level, path="local")
-    streak = 0
-    while stats.supersteps < max_supersteps and streak < patience:
-        t0 = time.monotonic()
-        comm, moves = _local_superstep(
-            es, ed, ew, k, S, comm, stats.supersteps, gain_eps, gate_mode
-        )
-        stats.wall_ms.append(int((time.monotonic() - t0) * 1000))
-        stats.moves.append(moves)
-        stats.supersteps += 1
-        streak = streak + 1 if moves <= slack else 0
-    return comm, stats
+    quiet, patience = _level_stop(n, min_moves_frac, gate_mode)
+    comm, records = settle(
+        np.arange(n),
+        lambda comm, step: _local_superstep(es, ed, ew, k, S, comm, step, gain_eps, gate_mode),
+        max_supersteps, quiet=quiet, patience=patience,
+    )
+    return comm, LevelStats.from_records(level, records, path="local")
 
 
 def _local_levels(
@@ -682,10 +670,7 @@ class LouvainResult:
     assignments: DataFrame  # [id, community] over ORIGINAL vertex ids
     modularity: float
     levels: list  # list[LevelStats]
-    # r6: the distinct-community count is computed LAZILY on first access —
-    # louvain() previously always paid a distinct+count job for a number most
-    # callers (the bench, the driver queries) never read. Same public
-    # ``num_communities`` attribute, same value.
+    # counted lazily, on first access: most callers never read it
     _num_communities: int | None = None
 
     @property
@@ -790,12 +775,15 @@ def louvain(
                     "community long, _new long",
                 ))
                 break
+            streak = 0
+            if start is not None:  # the quiet supersteps that end the committed run
+                quiet, _ = _level_stop(cur.stats.num_vertices, min_moves_frac, gate_mode)
+                streak = len(list(itertools.takewhile(quiet, reversed(start.moves))))
             asg, stats = louvain_level(
                 cur, assignments=start.assignments if start else None,
                 max_supersteps=max_supersteps, gain_eps=gain_eps, level=level,
                 checkpointer=checkpointer, min_moves_frac=min_moves_frac,
-                start_step=start.step if start else 0,
-                start_streak=start.streak if start else 0,
+                start_step=start.step if start else 0, start_streak=streak,
                 gate_mode=gate_mode,
             )
             start = None  # only the first level resumes

@@ -17,8 +17,9 @@ aggregation; lineage cut via localCheckpoint per iteration.
 LOCAL TIER: a graph with at most ``graph.LOCAL_MAX_EDGES`` directed edges is
 collected once by :meth:`LinkGraph.local_edges` (the helper and threshold
 Louvain's local tier shares) and iterated on the driver by
-:func:`_local_pagerank`, a port of the SQL loop: the same ``base``/``alpha``
-arithmetic, reset vector and ``tol`` rule. Its ranks come back through one
+:func:`_local_pagerank`, a port of the SQL superstep on the same loop
+(``functions.iterate.converge``): the same ``base``/``alpha`` arithmetic,
+reset vector and ``tol`` rule. Its ranks come back through one
 ``swap``, so either tier returns one loop-owned checkpoint. The tiers sum
 each vertex's incoming mass in different orders, so ranks can differ in the
 last ulps.
@@ -35,6 +36,7 @@ from graftlouvain.functions.iterate import (
     broadcast_regime,
     fixpoint,
     materialize,  # noqa: F401 (wrapped here by perfbench/trace.py)
+    settle,
     swap,
     swap_observed,
 )
@@ -139,22 +141,15 @@ def pagerank(
     shares = None
 
     def init() -> DataFrame:
-        # Cached INSIDE the loop's planning scope: cached outside it, the
-        # plan is adaptive with unknown partitioning and the dst layout is lost.
-        # LAYOUT IS SIZE-ADAPTIVE (r6, guide §2.4): while the V-row rank
-        # table broadcasts into the shares join (the same broadcast_regime
-        # decision that scoped the loop's partitions), laying shares
-        # out by DST makes the per-iteration groupBy(dst) aggregation
-        # exchange-free — the per-iteration shuffles disappear entirely
-        # (executed-plan walk: 2 ShuffleExchange nodes → 0; measured
-        # 6.3 s → 2.8 s for 10 iterations at sf0.1/local[32], rounded
-        # digest identical — the 6-dp output rounding absorbs the
-        # partial-sum reordering exactly as it absorbs the DuckDB twin's
-        # different summation order).
-        # Past the broadcast regime the src layout is kept: there the
-        # ranks join must co-partition on src, and a dst layout would
-        # re-shuffle the E-row shares EVERY iteration instead of once at
-        # build — the regime that actually matters at 100 TB.
+        # Cached INSIDE the loop's planning scope (outside it the plan is
+        # adaptive with unknown partitioning, and the dst layout is lost).
+        # While the V-row ranks broadcast (broadcast_regime, as for the
+        # loop's partitions), a DST layout makes the per-iteration
+        # groupBy(dst) exchange-free: 2 ShuffleExchange nodes → 0, 6.3 s →
+        # 2.8 s for 10 iterations at sf0.1/local[32], rounded digest
+        # identical. Past that regime the ranks join must co-partition on
+        # src, and a dst layout would re-shuffle the E-row shares EVERY
+        # iteration, so the src layout is kept.
         nonlocal shares
         shares = graph.edges.join(out_w, "src").select(
             "src", "dst",
@@ -179,25 +174,26 @@ def pagerank(
     if n_iter is not None:
         ranks, _ = fixpoint(spark, V, init, fixed_step, n_iter)
     else:
-        ranks, _ = fixpoint(spark, V, init, converging_step, max_iter, lambda d: d < tol)
+        ranks, _ = fixpoint(spark, V, init, converging_step, max_iter, quiet=lambda d: d < tol)
     shares.unpersist()
     return ranks
 
 
 def _local_pagerank(s, d, w, reset, rank, alpha, tol, max_iter, n_iter):
     """numpy twin of :func:`pagerank`'s SQL loop over compacted vertex
-    indices: ``rank ← reset + α·mass`` with the same shares, for ``n_iter``
-    steps, or until ``Σ|new − old| < tol`` after a step (``fixpoint``'s
-    rule), at most ``max_iter``. Returns the ranks and the steps run."""
+    indices, on the same loop: ``rank ← reset + α·mass`` with the same
+    shares, for ``n_iter`` steps, or until ``Σ|new − old| < tol`` after a
+    step, at most ``max_iter``. Returns the ranks and the steps run."""
     n = len(rank)
     out_w = np.bincount(s, weights=w, minlength=n)[s]
     share = np.divide(w, out_w, out=np.zeros_like(w), where=out_w > 0)
-    steps = n_iter if n_iter is not None else max_iter
-    i = 0
-    while i < steps:
+
+    def step(rank, _i):
         new = reset + alpha * np.bincount(d, weights=rank[s] * share, minlength=n)
-        delta = float(np.abs(new - rank).sum())
-        rank, i = new, i + 1
-        if n_iter is None and delta < tol:
-            break
-    return rank, i
+        return new, float(np.abs(new - rank).sum())
+
+    if n_iter is not None:
+        rank, records = settle(rank, step, n_iter)
+    else:
+        rank, records = settle(rank, step, max_iter, quiet=lambda delta: delta < tol)
+    return rank, len(records)

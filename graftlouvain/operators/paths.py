@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graftlouvain.functions.iterate import fixpoint, swap
+from graftlouvain.functions.iterate import broadcast_regime, fixpoint, swap
 from graftlouvain.operators.graph import LinkGraph
 
 
@@ -58,11 +58,16 @@ def _relax(
         )
         return swap(dist, new_dist), None
 
-    # frontier rows are (#sources x V), not V (r6 review) - sources are tiny
-    # by contract (sampled seeds), so counting them is one trivial job
-    n_src = max(sources.count(), 1)
+    # frontier rows are (#sources x V), not V (r6 review). Sources are tiny
+    # by contract (sampled seeds), but counting them is still a job, and
+    # only a V-row state that broadcasts can size the loop's partitions by
+    # it: past broadcast_regime(V), state_partitions returns the session's
+    # count for any row count >= V.
+    spark = graph.edges.sparkSession
+    V = graph.stats.num_vertices
+    rows = max(sources.count(), 1) * V if broadcast_regime(spark, V) else V
     dist, _ = fixpoint(
-        graph.edges.sparkSession, n_src * graph.stats.num_vertices,
+        spark, rows,
         lambda: sources.select("seed", F.col("seed").alias("id"), zero.alias("dist")),
         relax, rounds,
     )

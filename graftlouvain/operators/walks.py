@@ -32,44 +32,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graftlouvain.functions.iterate import materialize, state_partitions, superstep_planning
 from graftlouvain.operators.graph import LinkGraph
 
 
-def _union_frames(frames: list, eager: bool) -> DataFrame:
-    """Union the per-step output frames; in eager mode pin the result with
+def _start_walks(walks_per_vertex: int) -> "F.Column":
+    """walk_id = vertex_id · walks_per_vertex + w, exploded over w."""
+    return F.explode(F.array(*[
+        (F.col("id") * F.lit(walks_per_vertex) + F.lit(w)).alias(f"w{w}")
+        for w in range(walks_per_vertex)
+    ])).alias("walk_id")
+
+
+def _visits(state: DataFrame, step: int) -> DataFrame:
+    """[walk_id, step, vertex]: where each walk of ``state`` stands."""
+    return state.select("walk_id", F.lit(step).alias("step"), F.col("cur").alias("vertex"))
+
+
+def _union_frames(frames: list) -> DataFrame:
+    """Union the per-step output frames and pin the result with
     ``materialize`` (each frame is a projection of its step's already-
     checkpointed state, so the union is one cheap pass; the intermediate
     step checkpoints become garbage once this result exists)."""
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    if eager:
-        from graftlouvain.functions.iterate import materialize
-
-        out = materialize(out)
-    return out
-
-
-def _walk_scope(graph: LinkGraph, walks_per_vertex: int, eager: bool):
-    """r6: scope AQE off + row-proportional shuffle partitions around the
-    eager walk loops (the per-hop materializations otherwise each pay AQE's
-    near-constant re-optimization cost, and the frontier-sized state
-    shuffles schedule one near-empty task per session partition — the same
-    policy every fixpoint operator now applies via superstep_planning).
-    Lazy callers get a no-op scope: their plan executes later, outside."""
-    from contextlib import nullcontext
-
-    if not eager:
-        return nullcontext()
-    from graftlouvain.functions.iterate import state_partitions, superstep_planning
-
-    spark = graph.edges.sparkSession
-    return superstep_planning(
-        spark,
-        state_partitions(
-            spark, graph.stats.num_vertices * max(walks_per_vertex, 1)
-        ),
-    )
+    return materialize(out)
 
 
 def _choice_hash(tag: "F.Column") -> "F.Column":
@@ -92,74 +80,58 @@ def indexed_neighbors(graph: LinkGraph) -> DataFrame:
     return idx.join(deg, "dst").select("src", "idx", "dst", "dst_deg")
 
 
-def _random_walks_impl(
+def random_walks(
     graph: LinkGraph,
     length: int = 4,
     walks_per_vertex: int = 1,
     seed: int = 42,
-    eager: bool = True,
 ) -> DataFrame:
     """[walk_id, step, vertex] — ``walks_per_vertex`` seeded walks of
     ``length`` steps from every vertex (step 0 = the start vertex itself;
     walk_id = vertex_id · walks_per_vertex + w). Every vertex in a LinkGraph
     has ≥ 1 neighbor (possibly its self-loop), so walks never strand.
 
-    ``eager`` (default) MATERIALIZES each step's frontier (localCheckpoint +
-    truthful planner statistics — the superstep loop's state hygiene) and
-    pins the final union. Two pathologies force this, both rediscovered the
-    hard way on this operator (BENCH/BASELINE.md §8): a lazy chain's
-    per-step output frames share lineage and Spark inlines deterministic
-    multi-referenced subplans, so step k re-executes (length − k + 1) times
-    — quadratic in walk length; and a mere per-step ``cache()`` fixes the
-    recompute but NOT the lineage/statistics growth, which melts the driver
-    in plan optimization by L≈16 (the iterate.py statistics-snowball
-    landmine). The neighbor index is checkpointed once and shared by every
-    hop. ``eager=False`` returns the lazy (recompute-prone) plan for
-    callers that compose a SHORT chain further before one single action."""
-    from graftlouvain.functions.iterate import materialize
-
-    nbrs = indexed_neighbors(graph)
-    if eager:
-        nbrs = materialize(nbrs)
-    deg = graph.degrees.select(
-        F.col("id").alias("cur"), F.col("out_degree").alias("cur_deg")
-    )
-    start = graph.vertices.select(
-        F.explode(
-            F.array(*[
-                (F.col("id") * F.lit(walks_per_vertex) + F.lit(w)).alias(f"w{w}")
-                for w in range(walks_per_vertex)
-            ])
-        ).alias("walk_id"),
-        F.col("id").alias("cur"),
-    ).join(deg, "cur")
-    frames = [
-        start.select("walk_id", F.lit(0).alias("step"), F.col("cur").alias("vertex"))
-    ]
-    state = start
-    for t in range(1, length + 1):
-        tag = F.concat_ws(
-            ":",
-            F.lit(f"walk:{seed}"),
-            F.col("walk_id").cast("string"),
-            F.lit(str(t)),
-            F.col("cur").cast("string"),
+    Each step's frontier is MATERIALIZED (localCheckpoint + truthful planner
+    statistics — the superstep loop's state hygiene) and the final union is
+    pinned. Two pathologies force this, both rediscovered the hard way on
+    this operator (BENCH/BASELINE.md §8): a lazy chain's per-step output
+    frames share lineage and Spark inlines deterministic multi-referenced
+    subplans, so step k re-executes (length − k + 1) times — quadratic in
+    walk length; and a mere per-step ``cache()`` fixes the recompute but NOT
+    the lineage/statistics growth, which melts the driver in plan
+    optimization by L≈16 (the iterate.py statistics-snowball landmine). The
+    neighbor index is checkpointed once and shared by every hop. The loop
+    runs in one :func:`superstep_planning` scope sized for its
+    V·``walks_per_vertex``-row frontier (AQE off, row-proportional shuffle
+    partitions), as every fixpoint operator's does."""
+    spark = graph.edges.sparkSession
+    rows = graph.stats.num_vertices * walks_per_vertex
+    with superstep_planning(spark, state_partitions(spark, rows)):
+        nbrs = materialize(indexed_neighbors(graph))
+        deg = graph.degrees.select(
+            F.col("id").alias("cur"), F.col("out_degree").alias("cur_deg")
         )
-        choice = (_choice_hash(tag) % F.col("cur_deg")).alias("idx")
-        hop = state.select("walk_id", F.col("cur").alias("src"), choice).join(
-            nbrs, ["src", "idx"]
-        )
-        state = hop.select(
-            "walk_id", F.col("dst").alias("cur"), F.col("dst_deg").alias("cur_deg")
-        )
-        if eager:
-            state = materialize(state)
-        frames.append(
-            state.select(
-                "walk_id", F.lit(t).alias("step"), F.col("cur").alias("vertex")
+        state = graph.vertices.select(
+            _start_walks(walks_per_vertex), F.col("id").alias("cur")
+        ).join(deg, "cur")
+        frames = [_visits(state, 0)]
+        for t in range(1, length + 1):
+            tag = F.concat_ws(
+                ":",
+                F.lit(f"walk:{seed}"),
+                F.col("walk_id").cast("string"),
+                F.lit(str(t)),
+                F.col("cur").cast("string"),
             )
-        )
-    return _union_frames(frames, eager)
+            choice = (_choice_hash(tag) % F.col("cur_deg")).alias("idx")
+            hop = state.select("walk_id", F.col("cur").alias("src"), choice).join(
+                nbrs, ["src", "idx"]
+            )
+            state = materialize(hop.select(
+                "walk_id", F.col("dst").alias("cur"), F.col("dst_deg").alias("cur_deg")
+            ))
+            frames.append(_visits(state, t))
+        return _union_frames(frames)
 
 
 def _require_positive_totw(totals: DataFrame, totw_col: str, op: str) -> None:
@@ -201,13 +173,12 @@ def indexed_neighbors_weighted(graph: LinkGraph, scale: int = 1) -> DataFrame:
     return e.join(dst_tot, "dst").select("src", "lo", "hi", "dst", "dst_totw")
 
 
-def _weighted_random_walks_impl(
+def weighted_random_walks(
     graph: LinkGraph,
     length: int = 4,
     walks_per_vertex: int = 1,
     seed: int = 42,
     scale: int = 1,
-    eager: bool = True,
 ) -> DataFrame:
     """[walk_id, step, vertex] — like :func:`random_walks` but the next hop
     is chosen proportionally to EDGE WEIGHT: x = md5-hash mod Σwq lands in
@@ -218,61 +189,43 @@ def _weighted_random_walks_impl(
     the standard cost of weighted sampling without per-vertex alias tables.
     Callers with sub-unit FLOAT weights must raise ``scale`` so weights
     survive quantization — a vertex whose every edge rounds to 0 raises
-    (``eager=True``; see :func:`_require_positive_totw`).
-    ``eager``: same per-step materialization as :func:`random_walks` (see
-    its docstring for why a lazy chain is quadratic and a cache-only chain
-    melts the planner)."""
-    from graftlouvain.functions.iterate import materialize
-
-    nbrs = indexed_neighbors_weighted(graph, scale)
-    if eager:
-        nbrs = materialize(nbrs)
-    tot = nbrs.groupBy("src").agg(F.max("hi").alias("totw")).select(
-        F.col("src").alias("cur"), F.col("totw").alias("cur_totw")
-    )
-    if eager:
+    (:func:`_require_positive_totw`). Same per-step materialization and
+    planning scope as :func:`random_walks` (see its docstring for why a lazy
+    chain is quadratic and a cache-only chain melts the planner)."""
+    spark = graph.edges.sparkSession
+    rows = graph.stats.num_vertices * walks_per_vertex
+    with superstep_planning(spark, state_partitions(spark, rows)):
+        nbrs = materialize(indexed_neighbors_weighted(graph, scale))
+        tot = nbrs.groupBy("src").agg(F.max("hi").alias("totw")).select(
+            F.col("src").alias("cur"), F.col("totw").alias("cur_totw")
+        )
         _require_positive_totw(tot, "cur_totw", "weighted_random_walks")
-    start = graph.vertices.select(
-        F.explode(
-            F.array(*[
-                (F.col("id") * F.lit(walks_per_vertex) + F.lit(w)).alias(f"w{w}")
-                for w in range(walks_per_vertex)
-            ])
-        ).alias("walk_id"),
-        F.col("id").alias("cur"),
-    ).join(tot, "cur")
-    frames = [
-        start.select("walk_id", F.lit(0).alias("step"), F.col("cur").alias("vertex"))
-    ]
-    state = start
-    for t in range(1, length + 1):
-        tag = F.concat_ws(
-            ":",
-            F.lit(f"wwalk:{seed}"),
-            F.col("walk_id").cast("string"),
-            F.lit(str(t)),
-            F.col("cur").cast("string"),
-        )
-        x = (_choice_hash(tag) % F.col("cur_totw")).alias("x")
-        hop = (
-            state.select("walk_id", F.col("cur").alias("src"), x)
-            .join(nbrs, "src")
-            .where((F.col("x") >= F.col("lo")) & (F.col("x") < F.col("hi")))
-        )
-        state = hop.select(
-            "walk_id", F.col("dst").alias("cur"), F.col("dst_totw").alias("cur_totw")
-        )
-        if eager:
-            state = materialize(state)
-        frames.append(
-            state.select(
-                "walk_id", F.lit(t).alias("step"), F.col("cur").alias("vertex")
+        state = graph.vertices.select(
+            _start_walks(walks_per_vertex), F.col("id").alias("cur")
+        ).join(tot, "cur")
+        frames = [_visits(state, 0)]
+        for t in range(1, length + 1):
+            tag = F.concat_ws(
+                ":",
+                F.lit(f"wwalk:{seed}"),
+                F.col("walk_id").cast("string"),
+                F.lit(str(t)),
+                F.col("cur").cast("string"),
             )
-        )
-    return _union_frames(frames, eager)
+            x = (_choice_hash(tag) % F.col("cur_totw")).alias("x")
+            hop = (
+                state.select("walk_id", F.col("cur").alias("src"), x)
+                .join(nbrs, "src")
+                .where((F.col("x") >= F.col("lo")) & (F.col("x") < F.col("hi")))
+            )
+            state = materialize(hop.select(
+                "walk_id", F.col("dst").alias("cur"), F.col("dst_totw").alias("cur_totw")
+            ))
+            frames.append(_visits(state, t))
+        return _union_frames(frames)
 
 
-def _node2vec_walks_impl(
+def node2vec_walks(
     graph: LinkGraph,
     length: int = 4,
     walks_per_vertex: int = 1,
@@ -281,7 +234,6 @@ def _node2vec_walks_impl(
     bias_near: int = 4,
     bias_far: int = 8,
     scale: int = 1,
-    eager: bool = True,
 ) -> DataFrame:
     """[walk_id, step, vertex] — SECOND-ORDER biased walks (node2vec, Grover
     & Leskovec 2016 §3.2): candidate (cur → dst) weights are multiplied by
@@ -307,17 +259,16 @@ def _node2vec_walks_impl(
     Per-step cost: the frontier joins its adjacency (Σ deg(frontier) rows),
     a LEFT probe against the edge set for the (prev, dst) existence flag,
     and a per-walk window cumsum — the standard price of second-order
-    sampling without per-(prev, cur) alias tables. ``eager``: per-step
-    materialization (see :func:`random_walks`). Callers with sub-unit FLOAT
-    weights must raise ``scale`` — a vertex whose every edge quantizes to 0
-    raises up front (``eager=True``; :func:`_require_positive_totw`)."""
-    from graftlouvain.functions.iterate import materialize
-
-    nbrs = indexed_neighbors_weighted(graph, scale).select(
-        "src", "dst", (F.col("hi") - F.col("lo")).alias("wq")
-    )
-    if eager:
-        nbrs = materialize(nbrs)
+    sampling without per-(prev, cur) alias tables. Same per-step
+    materialization and planning scope as :func:`random_walks`. Callers with
+    sub-unit FLOAT weights must raise ``scale`` — a vertex whose every edge
+    quantizes to 0 raises up front (:func:`_require_positive_totw`)."""
+    spark = graph.edges.sparkSession
+    rows = graph.stats.num_vertices * walks_per_vertex
+    with superstep_planning(spark, state_partitions(spark, rows)):
+        nbrs = materialize(indexed_neighbors_weighted(graph, scale).select(
+            "src", "dst", (F.col("hi") - F.col("lo")).alias("wq")
+        ))
         # biases are >= 1, so the per-step modulus Σ(wq·bias) is 0 iff the
         # vertex's raw quantized total is 0 — one up-front check covers all
         # steps
@@ -326,117 +277,57 @@ def _node2vec_walks_impl(
             "totw",
             "node2vec_walks",
         )
-    eset = graph.edges.select(
-        F.col("src").alias("_ep"), F.col("dst").alias("_ed"), F.lit(1).alias("_near")
-    )
-    start = graph.vertices.select(
-        F.explode(
-            F.array(*[
-                (F.col("id") * F.lit(walks_per_vertex) + F.lit(w)).alias(f"w{w}")
-                for w in range(walks_per_vertex)
-            ])
-        ).alias("walk_id"),
-        F.col("id").alias("prev"),
-        F.col("id").alias("cur"),
-    )
-    frames = [
-        start.select("walk_id", F.lit(0).alias("step"), F.col("cur").alias("vertex"))
-    ]
-    state = start
-    w_cum = Window.partitionBy("walk_id").orderBy("dst").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy("walk_id")
-    for t in range(1, length + 1):
-        cands = (
-            state.select("walk_id", "prev", F.col("cur").alias("src"))
-            .join(nbrs, "src")
-            .join(
-                eset,
-                (F.col("prev") == F.col("_ep")) & (F.col("dst") == F.col("_ed")),
-                "left",
+        eset = graph.edges.select(
+            F.col("src").alias("_ep"), F.col("dst").alias("_ed"), F.lit(1).alias("_near")
+        )
+        state = graph.vertices.select(
+            _start_walks(walks_per_vertex),
+            F.col("id").alias("prev"),
+            F.col("id").alias("cur"),
+        )
+        frames = [_visits(state, 0)]
+        w_cum = Window.partitionBy("walk_id").orderBy("dst").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        w_all = Window.partitionBy("walk_id")
+        for t in range(1, length + 1):
+            cands = (
+                state.select("walk_id", "prev", F.col("cur").alias("src"))
+                .join(nbrs, "src")
+                .join(
+                    eset,
+                    (F.col("prev") == F.col("_ep")) & (F.col("dst") == F.col("_ed")),
+                    "left",
+                )
             )
-        )
-        m = (
-            F.when(F.col("dst") == F.col("prev"), F.lit(bias_return))
-            .when(F.col("_near").isNotNull(), F.lit(bias_near))
-            .otherwise(F.lit(bias_far))
-        )
-        scored = cands.select(
-            "walk_id", "prev", "src", "dst", (F.col("wq") * m).alias("ew")
-        )
-        tag = F.concat_ws(
-            ":",
-            F.lit(f"n2v:{seed}"),
-            F.col("walk_id").cast("string"),
-            F.lit(str(t)),
-            F.col("src").cast("string"),
-        )
-        ranged = scored.select(
-            "walk_id", "src", "dst", "ew",
-            F.sum("ew").over(w_cum).alias("chi"),
-            F.sum("ew").over(w_all).alias("tot"),
-        ).withColumn("x", _choice_hash(tag) % F.col("tot"))
-        state = (
-            ranged.where(
-                (F.col("x") >= F.col("chi") - F.col("ew")) & (F.col("x") < F.col("chi"))
+            m = (
+                F.when(F.col("dst") == F.col("prev"), F.lit(bias_return))
+                .when(F.col("_near").isNotNull(), F.lit(bias_near))
+                .otherwise(F.lit(bias_far))
             )
-            .select("walk_id", F.col("src").alias("prev"), F.col("dst").alias("cur"))
-        )
-        if eager:
-            state = materialize(state)
-        frames.append(
-            state.select(
-                "walk_id", F.lit(t).alias("step"), F.col("cur").alias("vertex")
+            scored = cands.select(
+                "walk_id", "prev", "src", "dst", (F.col("wq") * m).alias("ew")
             )
-        )
-    return _union_frames(frames, eager)
-
-
-def random_walks(
-    graph: LinkGraph,
-    length: int = 4,
-    walks_per_vertex: int = 1,
-    seed: int = 42,
-    eager: bool = True,
-) -> DataFrame:
-    """See :func:`_random_walks_impl`; runs under :func:`_walk_scope`."""
-    with _walk_scope(graph, walks_per_vertex, eager):
-        return _random_walks_impl(graph, length, walks_per_vertex, seed, eager)
-
-
-def weighted_random_walks(
-    graph: LinkGraph,
-    length: int = 4,
-    walks_per_vertex: int = 1,
-    seed: int = 42,
-    scale: int = 1,
-    eager: bool = True,
-) -> DataFrame:
-    """See :func:`_weighted_random_walks_impl`; runs under :func:`_walk_scope`."""
-    with _walk_scope(graph, walks_per_vertex, eager):
-        return _weighted_random_walks_impl(
-            graph, length, walks_per_vertex, seed, scale, eager
-        )
-
-
-def node2vec_walks(
-    graph: LinkGraph,
-    length: int = 4,
-    walks_per_vertex: int = 1,
-    seed: int = 42,
-    bias_return: int = 1,
-    bias_near: int = 4,
-    bias_far: int = 8,
-    scale: int = 1,
-    eager: bool = True,
-) -> DataFrame:
-    """See :func:`_node2vec_walks_impl`; runs under :func:`_walk_scope`."""
-    with _walk_scope(graph, walks_per_vertex, eager):
-        return _node2vec_walks_impl(
-            graph, length, walks_per_vertex, seed,
-            bias_return, bias_near, bias_far, scale, eager,
-        )
+            tag = F.concat_ws(
+                ":",
+                F.lit(f"n2v:{seed}"),
+                F.col("walk_id").cast("string"),
+                F.lit(str(t)),
+                F.col("src").cast("string"),
+            )
+            ranged = scored.select(
+                "walk_id", "src", "dst", "ew",
+                F.sum("ew").over(w_cum).alias("chi"),
+                F.sum("ew").over(w_all).alias("tot"),
+            ).withColumn("x", _choice_hash(tag) % F.col("tot"))
+            state = materialize(
+                ranged.where(
+                    (F.col("x") >= F.col("chi") - F.col("ew")) & (F.col("x") < F.col("chi"))
+                )
+                .select("walk_id", F.col("src").alias("prev"), F.col("dst").alias("cur"))
+            )
+            frames.append(_visits(state, t))
+        return _union_frames(frames)
 
 
 def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:

@@ -45,7 +45,7 @@ class ResumePoint(NamedTuple):
 
     level: int
     step: int
-    streak: int
+    moves: list[int]  # the level's committed move counts, in superstep order
     graph: LinkGraph
     assignments: DataFrame
     global_assignments: DataFrame | None
@@ -215,12 +215,12 @@ class CheckpointManager:
 
     def resume_point(self, graph: LinkGraph) -> ResumePoint | None:
         """Where this manager's Louvain run (:meth:`for_run`) on ``graph``
-        resumes: after the latest committed superstep, or None. The streak is
-        recounted from the level's committed moves, else a resume into a
-        slack-converged level would run extra supersteps and diverge.
-        ``ValueError`` names the fields that differ if that record is of
-        another run; a record with no fingerprint (manifest version < 3)
-        resumes unchecked."""
+        resumes: after the latest committed superstep, or None. It carries the
+        level's committed move counts in superstep order: the caller's stop
+        rule reads them, else a resume into a slack-converged level would run
+        extra supersteps and diverge. ``ValueError`` names the fields that
+        differ if that record is of another run; a record with no
+        fingerprint (manifest version < 3) resumes unchecked."""
         rec = self.latest_superstep("louvain")
         if rec is None:
             return None
@@ -242,14 +242,11 @@ class CheckpointManager:
             prev = levels["louvain", level - 1]
             global_asg = spark.read.parquet(prev["assignments_path"])
             q = float(prev["modularity"])
-        slack = int(self.run["min_moves_frac"] * max(graph.stats.num_vertices, 1))
         moves = {
             r["superstep"]: int(r["moves"]) for r in manifest
             if r["kind"] == "superstep" and r["algorithm"] == "louvain" and r["level"] == level
         }
-        streak = 0  # the below-slack supersteps that end at step - 1
-        while streak < step and moves[step - 1 - streak] <= slack:
-            streak += 1
         return ResumePoint(
-            level, step, streak, graph, self.load_assignments(spark, rec), global_asg, q
+            level, step, [m for _, m in sorted(moves.items())], graph,
+            self.load_assignments(spark, rec), global_asg, q,
         )

@@ -513,8 +513,9 @@ def _edges_cached(spark, g):
 
 def test_level_releases_superstep_views(spark, monkeypatch):
     """A level leaves no superstep temp view behind — neither when it returns
-    nor when it raises mid-loop — and releasing the views never evicts the
-    edge cache. A level that raises also leaves no state checkpoint."""
+    nor when it raises mid-loop, in a superstep or in the checkpointer's
+    save after one — and releasing the views never evicts the edge cache. A
+    level that raises also leaves no state checkpoint."""
     import graftlouvain.operators.louvain as lv
 
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
@@ -538,6 +539,28 @@ def test_level_releases_superstep_views(spark, monkeypatch):
         louvain_level(g)
     assert len(calls) == 2
     # the live state's checkpoint is released with the failure
+    assert set(rdds().keys()) - before == set()
+    assert _glouvain_views(spark) == []
+    assert _edges_cached(spark, g)
+
+    # the save after superstep 1 raises: the live state is that superstep's
+    # output, and it is released too
+    monkeypatch.setattr(lv, "swap_observed_multi", real)
+
+    class FailingCheckpointer:
+        def __init__(self):
+            self.saved = []
+
+        def save_superstep(self, superstep, **_kw):
+            if superstep == 1:
+                raise RuntimeError("injected save failure")
+            self.saved.append(superstep)
+
+    ck = FailingCheckpointer()
+    before = set(rdds().keys())
+    with pytest.raises(RuntimeError, match="injected save"):
+        louvain_level(g, checkpointer=ck)
+    assert ck.saved == [0]
     assert set(rdds().keys()) - before == set()
     assert _glouvain_views(spark) == []
     assert _edges_cached(spark, g)

@@ -230,6 +230,33 @@ def test_bfs_distances_match_python(spark):
     assert got == want and len(got) > 0
 
 
+def test_bfs_counts_no_sources_outside_broadcast_regime(spark, monkeypatch):
+    """Past the broadcast regime the loop keeps the session's partitions
+    whatever the frontier's size, so BFS runs no job to count its sources —
+    and its distances on the 5-vertex path 0-1-2-3-4 are still |i − j|."""
+    from graftlouvain.operators.paths import bfs_distances
+
+    g = LinkGraph.from_edges(to_df(spark, [(i, i + 1, 1.0) for i in range(4)]))
+    sources = spark.createDataFrame([(0,), (2,)], "seed long")
+    frame = type(sources)  # the session's concrete DataFrame class
+    real_count, counted = frame.count, []
+
+    def count(df):
+        counted.append(df)
+        return real_count(df)
+
+    monkeypatch.setattr(frame, "count", count)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "16")  # a 5-row state (48 B a row) no longer broadcasts
+        got = {(r["seed"], r["id"]): r["dist"] for r in bfs_distances(g, sources).collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert counted == []
+    assert got == {(s, v): abs(s - v) for s in (0, 2) for v in range(5)}
+
+
 def test_feature_smooth_matches_hand_computation(spark):
     """One fixed-point smoothing round on a 3-vertex path equals the hand
     result (weighted integer mean of neighbor features), and a second round

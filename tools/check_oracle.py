@@ -18,6 +18,14 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+# DuckDB defaults to 80 % of RAM and a thread per core; on the sf0.1
+# triangles_per_vertex twin (a streaming aggregate over 124.5M triangles) the
+# checking process then held ~7 GB. Measured on a 4-vCPU box: at 2 GB that
+# twin passes but the sf0.01 walk_corpus twin runs out of DuckDB memory
+# (its operators reserve far more than they touch), and at 1 GB the triangle
+# twin spills to disk; 3 GB with 4 threads runs both without spilling.
+DUCKDB_CONFIG = {"memory_limit": "3GB", "threads": 4}
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -80,7 +88,7 @@ def main():
     from graftlouvain.session import get_spark
 
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
-    con = duckdb.connect()
+    con = duckdb.connect(config=DUCKDB_CONFIG)
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'"

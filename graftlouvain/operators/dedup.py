@@ -103,21 +103,6 @@ def doc_ngrams(
     )
 
 
-def _gram_tables(
-    grams: DataFrame, max_doc_freq: int
-) -> tuple[DataFrame, DataFrame]:
-    """(rare, sizes) from an exploded (doc_id, gram) table: rare = pairs whose
-    gram appears in at most ``max_doc_freq`` docs (hot-bucket guard for pair
-    generation); sizes = full per-doc distinct-gram counts (union sizes stay
-    exact)."""
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    df_counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    rare = grams.join(
-        df_counts.where(F.col("df") <= max_doc_freq).select("gram"), "gram", "left_semi"
-    )
-    return rare, sizes
-
-
 def _jaccard_from_inter(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
     """[a, b, jaccard ≥ threshold] from per-pair rare-gram intersection counts
     plus exact per-doc set sizes."""
@@ -158,7 +143,6 @@ def ngram_jaccard_pairs(
     n: int = 8,
     threshold: float = 0.8,
     max_doc_freq: int = 100,
-    eager: bool = True,
 ) -> DataFrame:
     """Exact Jaccard over distinct char n-grams: pairs with J ≥ threshold.
     Grams appearing in more than ``max_doc_freq`` documents are excluded from
@@ -184,25 +168,18 @@ def ngram_jaccard_pairs(
     formulation (same per-gram pair contributions, no floats involved),
     so the SQL oracle is unchanged.
 
-    ``eager`` (default, r6): the exploded gram table is CACHED for the
-    evaluation and the result localCheckpoint-pinned before the cache is
-    released — the plan references grams four times (per-doc sizes twice via
-    the join in :func:`_jaccard_from_inter`, the df-count aggregate, and the
-    collect_list input), and only the aggregate exchanges that canonicalize
-    equal are deduplicated by ReuseExchange: without the cache the corpus
-    scan + gram EXPLODE — the dominant map work — re-executes per remaining
-    reference (measured ~3×). Same eager-evaluation contract as
-    :func:`minhash_lsh_pairs`; ``eager=False`` returns the lazy plan."""
-    grams = doc_ngrams(docs, id_col, text_col, n)
-    shared_cache = None
-    if eager:
-        shared_cache = grams.cache()
-        grams = shared_cache
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    if eager:
-        # referenced twice (a-side and b-side of the jaccard join) — pin the
-        # tiny V-row table so the gram-cache pass behind it runs once
-        sizes = _materialize(sizes)
+    The result is computed AT CALL TIME: the exploded gram table is CACHED
+    for the evaluation and the result localCheckpoint-pinned before the
+    cache is released — the plan references grams four times (per-doc
+    sizes twice via the join in :func:`_jaccard_from_inter`, the df-count
+    aggregate, and the collect_list input), and only the aggregate
+    exchanges that canonicalize equal are deduplicated by ReuseExchange:
+    without the cache the corpus scan + gram EXPLODE — the dominant map
+    work — re-executes per remaining reference (measured ~3×)."""
+    grams = doc_ngrams(docs, id_col, text_col, n).cache()
+    # referenced twice (a-side and b-side of the jaccard join) — pin the
+    # tiny V-row table so the gram-cache pass behind it runs once
+    sizes = _materialize(grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams")))
     rare = (
         grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -219,10 +196,8 @@ def ngram_jaccard_pairs(
         .select("p.a", "p.b")
     )
     inter = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
-    out = _jaccard_from_inter(inter, sizes, threshold)
-    if eager:
-        out = _materialize(out)
-        shared_cache.unpersist()
+    out = _materialize(_jaccard_from_inter(inter, sizes, threshold))
+    grams.unpersist()
     return out
 
 
@@ -311,7 +286,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     verify_exact: bool = True,
     max_doc_freq: int = 100,
-    eager: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs: split the signature into ``bands`` bands of
     num_hashes/bands rows; docs colliding in ANY band are candidates; with
@@ -319,21 +293,19 @@ def minhash_lsh_pairs(
     ≥ threshold (same computation as :func:`ngram_jaccard_pairs`) restricted
     to the candidate set.
 
-    ``eager`` (default) CACHES the exploded gram table once and shares it
+    With ``verify_exact`` the exploded gram table is CACHED once and shared
     between the signature pass and the verification pass — otherwise each
     pass re-scans and re-explodes the corpus (the gram explode is the
-    dominant scan cost). Eager mode computes the result AT CALL TIME (the
+    dominant scan cost) — and the result is computed AT CALL TIME (the
     output is localCheckpoint-pinned so the gram cache can be released
     immediately — the checkpoint blocks themselves are freed by GC when the
-    returned DataFrame is dropped); callers that only want a lazy plan pass
-    ``eager=False``."""
+    returned DataFrame is dropped). Without it the candidates come back as
+    a lazy plan."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     grams = doc_ngrams(docs, id_col, text_col, n)
-    shared_cache = None
-    if eager and verify_exact:
-        shared_cache = grams.cache()
-        grams = shared_cache
+    if verify_exact:
+        grams = grams.cache()
     sigs = minhash_signatures(docs, id_col, text_col, n, num_hashes, grams=grams)
     banded = sigs.select(
         "doc_id",
@@ -365,39 +337,32 @@ def minhash_lsh_pairs(
     # O(candidates × grams/doc), never the all-pairs gram self-join (which
     # would defeat LSH at scale): attach a's rare grams to each candidate
     # pair, then count how many also belong to b.
-    if eager:
-        # ``rare`` is referenced on BOTH sides of the intersection join and
-        # ``sizes`` on both sides of the jaccard join; only their
-        # canonically-equal exchanges are deduplicated by ReuseExchange, so
-        # without a pin the df-count aggregate behind ``rare`` (a full pass
-        # over the gram cache) executes twice (r6 measured). Pin the
-        # per-GRAM keep list (one row per surviving gram) rather than the
-        # doc-gram-scale ``rare`` table itself: the keep list is orders of
-        # magnitude smaller than the exploded corpus, so eager mode never
-        # holds a second gram-scale copy in storage (r6 review) — the two
-        # remaining semi probes run against the shared gram cache.
-        sizes = _materialize(
-            grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-        )
-        keep = _materialize(
-            grams.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") <= max_doc_freq)
-            .select("gram")
-        )
-        rare = grams.join(keep, "gram", "left_semi")
-    else:
-        rare, sizes = _gram_tables(grams, max_doc_freq)
+    # ``rare`` is referenced on BOTH sides of the intersection join and
+    # ``sizes`` on both sides of the jaccard join; only their
+    # canonically-equal exchanges are deduplicated by ReuseExchange, so
+    # without a pin the df-count aggregate behind ``rare`` (a full pass over
+    # the gram cache) executes twice (r6 measured). Pin the per-GRAM keep
+    # list (one row per surviving gram) rather than the doc-gram-scale
+    # ``rare`` table itself: the keep list is orders of magnitude smaller
+    # than the exploded corpus, so no second gram-scale copy is held in
+    # storage (r6 review) — the two remaining semi probes run against the
+    # shared gram cache.
+    sizes = _materialize(grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams")))
+    keep = _materialize(
+        grams.groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .where(F.col("df") <= max_doc_freq)
+        .select("gram")
+    )
+    rare = grams.join(keep, "gram", "left_semi")
     ga = cands.join(rare.select(F.col("doc_id").alias("a"), "gram"), "a")
     inter = (
         ga.join(rare.select(F.col("doc_id").alias("b"), "gram"), ["b", "gram"])
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = _jaccard_from_inter(inter, sizes, threshold)
-    if eager and verify_exact:
-        out = _materialize(out)  # one pass, computed via the shared gram cache
-        shared_cache.unpersist()  # real release — the cache, not a checkpoint
+    out = _materialize(_jaccard_from_inter(inter, sizes, threshold))
+    grams.unpersist()  # real release — the cache, not a checkpoint
     return out
 
 

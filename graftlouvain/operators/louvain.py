@@ -94,8 +94,12 @@ whenever the weights are integer-valued below 2^53 (every sum is then exact
 in any order). For other weights the two tiers sum in different orders, as
 Spark's own ``SUM`` already does across partitionings, so an exact
 ulp-level near-tie can resolve differently; ``gain_eps`` is not there to
-hide that. A checkpointed run (``checkpointer`` given) keeps the SQL tier
-for every level: the kernel produces no per-superstep states to save.
+hide that. Graph size alone picks the tier, with a ``checkpointer`` too.
+The kernel saves no superstep states: under a checkpointer it writes one
+level record, for the last level it commits, so in both tiers the last
+``louvain`` level record holds the returned assignments. A resume restarts
+after the latest committed SQL superstep; a run local from the start has
+none and reruns from the input.
 """
 
 from __future__ import annotations
@@ -727,17 +731,18 @@ def louvain(
     returns the previous assignment and Q, and the rejected level's
     :class:`LevelStats` stays in ``levels``.
 
-    Without a ``checkpointer``, the first level with at most
-    ``graph.LOCAL_MAX_EDGES`` directed edges and every level after it run in
-    the driver-side numpy kernel (module docstring, LOCAL TIER);
-    ``LevelStats.path`` records which tier ran each level.
+    The first level with at most ``graph.LOCAL_MAX_EDGES`` directed edges
+    and every level after it run in the driver-side numpy kernel (module
+    docstring, LOCAL TIER), checkpointed or not; ``LevelStats.path``
+    records which tier ran each level.
     ``gate_mode`` selects the oscillation gate ("conflict" default, "parity"
     = the r2-r4 semantics; see module docstring).
 
     ``resume=True`` (requires ``checkpointer``) restarts after the latest
     committed superstep, as :meth:`CheckpointManager.resume_point` reads it —
     the public crash-recovery path (S4; the reference round-trips state the
-    same way, communitystate.rs:890-971). Gate parity and the convergence
+    same way, communitystate.rs:890-971); a run local from the start saves
+    no superstep and reruns from the input. Gate parity and the convergence
     streak are preserved, so the labels are byte-identical to an
     uninterrupted run's. A resume with other ``gate_mode``,
     ``min_moves_frac``, ``gain_eps``, ``max_supersteps`` or input graph
@@ -761,7 +766,7 @@ def louvain(
     spark = graph.edges.sparkSession
     try:
         for level in range(start.level if start else 0, max_levels):
-            edges = cur.local_edges() if checkpointer is None else None
+            edges = cur.local_edges()
             if edges is not None:
                 # coarse graphs only shrink: this level and every later one
                 # run in the kernel, then one join unwinds them all
@@ -774,6 +779,13 @@ def louvain(
                     pd.DataFrame({"community": edges[0], "_new": labels}),
                     "community long, _new long",
                 ))
+                # a rejected last level is the one whose Q is not the run's
+                last = local[-1].level - (local[-1].modularity != q)
+                if checkpointer is not None and last >= level:
+                    checkpointer.save_level(
+                        algorithm="louvain", level=last, assignments=global_asg,
+                        degrees=None, coarse_edges=None, modularity=q,
+                    )
                 break
             streak = 0
             if start is not None:  # the quiet supersteps that end the committed run
@@ -800,23 +812,24 @@ def louvain(
             global_asg = _unwind(global_asg, asg.select(
                 F.col("id").alias("community"), F.col("community").alias("_new")
             ))
-            if checkpointer is not None:
+            more = (
+                q - q_prev >= min_q_gain and nxt.stats.num_vertices > 1
+                and level + 1 < max_levels
+            )
+            if checkpointer is not None:  # the next level's graph, if one runs
                 checkpointer.save_level(
                     algorithm="louvain", level=level, assignments=global_asg,
-                    degrees=cur.degrees, coarse_edges=None, modularity=q,
+                    degrees=cur.degrees, coarse_edges=nxt.edges if more else None,
+                    modularity=q,
                 )
             asg.unpersist()
-            if q - q_prev < min_q_gain:
+            if not more:
                 nxt.unpersist()
                 break
             q_prev = q
             if cur is not graph:
                 cur.unpersist()
             cur = nxt
-            if checkpointer is not None:
-                checkpointer.save_coarse(level + 1, cur, q)
-            if cur.stats.num_vertices <= 1:
-                break
     finally:
         # release the last coarse graph's caches (the returned assignments
         # are checkpoint-backed, never cur-backed)

@@ -1,9 +1,15 @@
 """Checkpoint sink + resume (S4 — SURVEY.md §2a, [north-star]).
 
-Per superstep/level the engine persists community labels, vertex degrees, and
-coarsened edges with a manifest recording per-partition lineage (row counts per
-Spark partition) and metrics (moves, modularity, wall time) so a run can
-resume mid-level (BASELINE.json north_star).
+A Louvain run's manifest holds two kinds of record (layout v4):
+
+- ``superstep``: one per SQL-tier superstep — the state's labels, with
+  per-partition lineage (row counts per Spark partition), moves and wall
+  time — so a run can resume mid-level (BASELINE.json north_star);
+- ``level``: one per committed level — the labels unwound to the input's
+  ids and the level's Q; a SQL level also writes its graph's degrees and,
+  when another level follows, the next level's graph (its edges). The
+  local tier writes one such record, with neither, for the last level it
+  commits, so the last level record always holds the run's labels.
 
 No Iceberg runtime jar ships in this sandbox, so the layout is
 **Parquet + a JSON-lines manifest we write ourselves** (snapshot id = the
@@ -32,8 +38,11 @@ from graftlouvain.operators.graph import LinkGraph
 # records carry manifest_version so cross-round consumers aggregating timing
 # fields can dispatch on it instead of seeing silent gaps. v1 records (no
 # version field) predate the rename. v3 records written for a Louvain run
-# carry ``run``: its parameters and its input graph's fingerprint.
-MANIFEST_VERSION = 3
+# carry ``run``: its parameters and its input graph's fingerprint. v4 folds
+# the separate record of each coarse graph into the level record before it
+# (``coarse_edges_path``) and drops the superstep records' never-set
+# ``modularity``.
+MANIFEST_VERSION = 4
 
 # the GraphStats fields that fingerprint a run's input graph (no job: from_edges
 # computes them in its one stats pass)
@@ -123,7 +132,6 @@ class CheckpointManager:
         assignments: DataFrame,
         moves: int,
         wall_ms: int,
-        modularity: float | None = None,
     ) -> None:
         rel = f"{algorithm}/level={level}/superstep={superstep}/assignments"
         path, lineage, write_ms = self._write(assignments, rel)
@@ -137,7 +145,6 @@ class CheckpointManager:
                 "path": path,
                 "lineage": lineage,
                 "moves": moves,
-                "modularity": modularity,
                 "superstep_wall_ms": wall_ms,
                 "persist_wall_ms": write_ms,
             }
@@ -174,13 +181,6 @@ class CheckpointManager:
             )
             record["coarse_edges_path"] = path
         self._append_manifest(record)
-
-    def save_coarse(self, level: int, graph: LinkGraph, modularity: float) -> None:
-        """The graph level ``level`` runs on, read back by :meth:`resume_point`."""
-        self.save_level(
-            algorithm="louvain_coarse", level=level, assignments=None,
-            degrees=graph.degrees, coarse_edges=graph.edges, modularity=modularity,
-        )
 
     # -- read / resume ----------------------------------------------------
 
@@ -220,7 +220,10 @@ class CheckpointManager:
         rule reads them, else a resume into a slack-converged level would run
         extra supersteps and diverge. ``ValueError`` names the fields that
         differ if that record is of another run; a record with no
-        fingerprint (manifest version < 3) resumes unchecked."""
+        fingerprint (manifest version < 3) resumes unchecked. A level ≥ 1
+        resumes on the coarse graph and labels of level ``level − 1``'s
+        record; a record from before version 4 has no coarse graph and
+        raises ``ValueError``."""
         rec = self.latest_superstep("louvain")
         if rec is None:
             return None
@@ -237,9 +240,15 @@ class CheckpointManager:
         level, step = int(rec["level"]), int(rec["superstep"]) + 1
         global_asg = q = None
         if level > 0:
-            coarse = levels["louvain_coarse", level]["coarse_edges_path"]
-            graph = LinkGraph.from_edges(spark.read.parquet(coarse), pre_symmetrized=True)
             prev = levels["louvain", level - 1]
+            if "coarse_edges_path" not in prev:
+                raise ValueError(
+                    f"checkpoint {self.base_dir}: the level {level - 1} record (manifest"
+                    f" version {prev.get('manifest_version', 1)}) holds no coarse graph;"
+                    f" a level {level} resume needs version {MANIFEST_VERSION}"
+                )
+            coarse = spark.read.parquet(prev["coarse_edges_path"])
+            graph = LinkGraph.from_edges(coarse, pre_symmetrized=True)
             global_asg = spark.read.parquet(prev["assignments_path"])
             q = float(prev["modularity"])
         moves = {

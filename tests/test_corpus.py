@@ -6,6 +6,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+import graftlouvain.operators.graph as graph_mod
 from graftlouvain.operators.graph import LinkGraph
 from graftlouvain.operators.louvain import louvain, louvain_level
 from graftlouvain.sources.checkpoint import CheckpointManager
@@ -129,16 +130,17 @@ def test_checkpoint_resume_one_level(spark, tmp_path):
     assert got == want
 
 
-def test_checkpoint_resume_full_louvain(spark, tmp_path):
+def test_checkpoint_resume_full_louvain(spark, tmp_path, monkeypatch):
     """Crash mid-run (manifest truncated to a committed superstep inside the
     LAST level, then a torn half of the next record), resume through the
     public ``louvain(..., resume=True)`` API — final labels byte-identical to
-    the uninterrupted run."""
+    the uninterrupted run (checkpointed run on the SQL tier)."""
     import json
 
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     want_res = louvain(g)
     want = {r["id"]: r["community"] for r in want_res.assignments.collect()}
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
 
     ckdir = str(tmp_path / "ck")
     ck = CheckpointManager(ckdir)
@@ -176,14 +178,16 @@ def test_checkpoint_resume_full_louvain(spark, tmp_path):
     assert resumed[: cut + 1] == records[: cut + 1] and len(resumed) > cut + 1
 
 
-def test_checkpoint_resume_with_slack(spark, tmp_path):
+def test_checkpoint_resume_with_slack(spark, tmp_path, monkeypatch):
     """Resume must also be byte-identical when the convergence slack is on:
     the streak is restored from the committed move counts, so a crash right
-    after a slack-converged level cannot trigger extra real supersteps."""
+    after a slack-converged level cannot trigger extra real supersteps
+    (checkpointed run on the SQL tier)."""
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     frac = 0.1
     want_res = louvain(g, min_moves_frac=frac)
     want = {r["id"]: r["community"] for r in want_res.assignments.collect()}
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
 
     ckdir = str(tmp_path / "ck")
     louvain(g, min_moves_frac=frac, checkpointer=CheckpointManager(ckdir))
@@ -207,13 +211,14 @@ def test_checkpoint_resume_with_slack(spark, tmp_path):
     assert got == want
 
 
-def test_resume_refuses_another_run(spark, tmp_path):
+def test_resume_refuses_another_run(spark, tmp_path, monkeypatch):
     """A resume whose parameters or input graph differ from the checkpointed
     run's raises, naming what differs, instead of diverging silently; a
     manifest written before records carried a fingerprint resumes as
-    before."""
+    before (SQL tier)."""
     import json
 
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     run = dict(max_levels=1, max_supersteps=2)
     ckdir = str(tmp_path / "ck")
@@ -229,10 +234,116 @@ def test_resume_refuses_another_run(spark, tmp_path):
     ck = CheckpointManager(ckdir)
     with open(ck.manifest_path) as f:
         records = [json.loads(line) for line in f]
-    assert all(r["manifest_version"] == 3 and "run" in r for r in records)
+    assert all(r["manifest_version"] == 4 and "run" in r for r in records)
     with open(ck.manifest_path, "w") as f:
         for r in records:
             r.pop("run")
             f.write(json.dumps(r) + "\n")
     res = louvain(g, min_moves_frac=0.1, checkpointer=ck, resume=True, **run)
     assert res.levels[0].start_step == 2
+
+
+def _labels(res):
+    return {r["id"]: r["community"] for r in res.assignments.collect()}
+
+
+def _cut_after(ck, keep):
+    """Cut ``ck``'s manifest after the last record ``keep`` accepts, as a
+    crash right after that record's commit would leave it."""
+    with open(ck.manifest_path) as f:
+        lines = [ln for ln in f if ln.strip()]
+    cut = max(i for i, r in enumerate(ck.manifest()) if keep(r))
+    with open(ck.manifest_path, "w") as f:
+        f.writelines(lines[: cut + 1])
+
+
+def test_checkpointed_run_stays_local(spark, tmp_path):
+    """Graph size alone picks the tier: a checkpointed karate run is local
+    throughout, with the labels and Q of a run without a checkpointer, in a
+    handful of Spark jobs; its manifest is one ``louvain`` level record
+    holding the result, and a resume on it reruns from the input."""
+    from perfbench.trace import group_counts
+
+    want_res = louvain(LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W)))
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    ck = CheckpointManager(str(tmp_path / "ck"))
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpointed-local", "checkpointed karate")
+    try:
+        res = louvain(g, checkpointer=ck)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs, _, _ = group_counts(sc, "checkpointed-local")
+    assert [s.path for s in res.levels] == ["local"] * len(res.levels)
+    assert _labels(res) == _labels(want_res) and res.modularity == want_res.modularity
+    assert jobs <= 12
+    (rec,) = ck.manifest()
+    assert (rec["kind"], rec["algorithm"]) == ("level", "louvain")
+    assert "coarse_edges_path" not in rec and "degrees_path" not in rec
+    saved = spark.read.parquet(rec["assignments_path"]).collect()
+    assert {r["id"]: r["community"] for r in saved} == _labels(res)
+    assert rec["modularity"] == res.modularity
+    again = louvain(g, checkpointer=CheckpointManager(ck.base_dir), resume=True)
+    assert _labels(again) == _labels(res)
+
+
+@pytest.mark.parametrize("frac", [0.0, 0.1])
+def test_resume_across_tier_handoff(spark, tmp_path, monkeypatch, frac):
+    """Level 0 of karate (156 directed edges) runs on SQL and the coarse
+    levels local; a crash right after level 0's last superstep resumes to
+    the uninterrupted run's labels and Q."""
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", 100)
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    ckdir = str(tmp_path / "ck")
+    want_res = louvain(g, min_moves_frac=frac, checkpointer=CheckpointManager(ckdir))
+    paths = [s.path for s in want_res.levels]
+    assert g.stats.num_directed_edges == 156
+    assert len(paths) >= 2 and paths == ["spark"] + ["local"] * (len(paths) - 1)
+    ck = CheckpointManager(ckdir)
+    levels = [r for r in ck.manifest() if r["kind"] == "level"]
+    assert "coarse_edges_path" in levels[0] and levels[-1]["level"] >= 1
+    _cut_after(ck, lambda r: r["kind"] == "superstep" and r["level"] == 0)
+    res = louvain(g, min_moves_frac=frac, checkpointer=ck, resume=True)
+    assert [s.level for s in res.levels][:1] == [0] and res.levels[0].start_step > 0
+    assert _labels(res) == _labels(want_res)
+    assert res.modularity == want_res.modularity
+
+
+def test_sql_levels_write_one_record_each(spark, tmp_path, monkeypatch):
+    """Each committed SQL level is one ``louvain`` level record, carrying the
+    next level's graph exactly when another level follows; superstep records
+    carry no Q."""
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    ck = CheckpointManager(str(tmp_path / "ck"))
+    res = louvain(g, checkpointer=ck)
+    records = ck.manifest()
+    assert {r["algorithm"] for r in records} == {"louvain"}
+    assert not any("modularity" in r for r in records if r["kind"] == "superstep")
+    levels = [r for r in records if r["kind"] == "level"]
+    assert [r["level"] for r in levels] == list(range(len(levels)))
+    assert len(res.levels) - 1 <= len(levels) <= len(res.levels)
+    for r in levels:
+        assert ("coarse_edges_path" in r) == (r["level"] + 1 < len(res.levels))
+    assert levels[-1]["modularity"] == res.modularity
+
+
+def test_resume_refuses_v3_level_record(spark, tmp_path, monkeypatch):
+    """A level ≥ 1 resume whose previous level record predates version 4
+    (no coarse graph in it) raises ``ValueError`` naming the version."""
+    import json
+
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    ck = CheckpointManager(str(tmp_path / "ck"))
+    louvain(g, max_levels=2, checkpointer=ck)
+    _cut_after(ck, lambda r: r["kind"] == "superstep" and r["level"] == 1)
+    records = ck.manifest()
+    with open(ck.manifest_path, "w") as f:
+        for r in records:
+            if r["kind"] == "level":
+                del r["coarse_edges_path"]
+                r["manifest_version"] = 3
+            f.write(json.dumps(r) + "\n")
+    with pytest.raises(ValueError, match="version 3"):
+        louvain(g, max_levels=2, checkpointer=ck, resume=True)

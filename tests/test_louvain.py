@@ -628,17 +628,18 @@ def test_superstep_planning_scopes_never_overlap(spark):
     assert left == found
 
 
-def test_checkpointed_run_writes_no_session_config(spark, tmp_path, monkeypatch):
-    """A checkpointed run keeps every level on SQL and never writes the
-    session config: every coarsen sees the session's shuffle partitions,
-    each coarse edge cache is sized by its own row count, and the labels
-    equal the local tier's."""
+def test_sql_checkpointed_run_writes_no_session_config(spark, tmp_path, monkeypatch):
+    """A checkpointed run on the SQL tier never writes the session config:
+    every coarsen sees the session's shuffle partitions, each coarse edge
+    cache is sized by its own row count, and the labels equal the local
+    tier's."""
     import graftlouvain.operators.louvain as lv
     from graftlouvain.sources.checkpoint import CheckpointManager
 
     key = "spark.sql.shuffle.partitions"
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     want = _labels(louvain(g).assignments)
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
     real, seen, caches = lv.coarsen, [], []
 
     def spy(graph, assignments):

@@ -10,13 +10,15 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
 
 # DuckDB defaults to 80 % of RAM and a thread per core; on the sf0.1
 # triangles_per_vertex twin (a streaming aggregate over 124.5M triangles) the
@@ -86,6 +88,12 @@ def main():
 
     import __spark_entry__ as entrymod
     from graftlouvain.session import get_spark
+
+    # Python UDF workers are separate processes that read PYTHONPATH, not this
+    # sys.path: without it they cannot import graftlouvain outside the checkout
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
 
     spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect(config=DUCKDB_CONFIG)

@@ -12,8 +12,8 @@ spark-submit; nothing in the package assumes local mode. Build the zip with
 
 Pipeline: corpus table (repo, path, commit, lang, content) → dense file ids →
 co-change + import + co-path edges → LinkGraph → multi-level Louvain
-(checkpointed per superstep when --checkpoint-dir is given, resumable with
---resume) → labels + per-superstep metrics written as parquet under --output.
+(checkpointed per SQL superstep and committed level when --checkpoint-dir
+is given, resumable with --resume) → labels + per-superstep metrics written as parquet under --output.
 """
 
 from __future__ import annotations

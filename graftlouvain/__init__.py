@@ -11,7 +11,8 @@ Capabilities (see SURVEY.md §2 for the full inventory mapped to the reference
   node2vec walks + skip-gram training pairs (operators.walks)
 - GNN-style feature propagation in exact fixed point (operators.features)
 - edge extraction from a source-code corpus table ``(repo, path, commit, lang, content)``
-- checkpoint/resume with per-partition lineage + metrics
+- checkpoint/resume of Louvain runs: parquet tables, one Spark job each, with
+  per-partition lineage read from the parquet footers + metrics
 - training-data pipeline operators: dedup (exact / MinHash-LSH / SimHash /
   n-gram Jaccard / embedding cosine), similarity search (brute-force /
   RH-LSH / IVF), text analysis, multimodal column plumbing, top-k edge

@@ -507,7 +507,7 @@ def louvain_level(
 
     def save(state: DataFrame, rec: Superstep) -> None:
         checkpointer.save_superstep(
-            algorithm="louvain", level=level, superstep=rec.step,
+            level=level, superstep=rec.step,
             assignments=state.select("id", "community"),
             moves=rec.metric, wall_ms=rec.wall_ms,
         )
@@ -674,16 +674,7 @@ class LouvainResult:
     assignments: DataFrame  # [id, community] over ORIGINAL vertex ids
     modularity: float
     levels: list  # list[LevelStats]
-    # counted lazily, on first access: most callers never read it
-    _num_communities: int | None = None
-
-    @property
-    def num_communities(self) -> int:
-        if self._num_communities is None:
-            self._num_communities = (
-                self.assignments.select("community").distinct().count()
-            )
-        return self._num_communities
+    num_communities: int  # distinct communities in assignments
 
     def metrics(self, spark=None) -> DataFrame:
         """Per-superstep metrics table [level, superstep, moves, wall_ms,
@@ -745,10 +736,11 @@ def louvain(
     no superstep and reruns from the input. Gate parity and the convergence
     streak are preserved, so the labels are byte-identical to an
     uninterrupted run's. A resume with other ``gate_mode``,
-    ``min_moves_frac``, ``gain_eps``, ``max_supersteps`` or input graph
-    raises ``ValueError``. ``LevelStats`` of levels completed before the
-    crash are not replayed. The run writes no session config: coarse graphs
-    size their own edge cache (:func:`coarsen`).
+    ``min_moves_frac``, ``gain_eps``, ``max_supersteps``, ``min_q_gain``,
+    ``max_levels`` or input graph raises ``ValueError``. ``LevelStats`` of
+    levels completed before the crash are not replayed. The run writes no
+    session config: coarse graphs size their own edge cache
+    (:func:`coarsen`).
     """
     global_asg, q_prev = singleton_assignments(graph), singleton_modularity(graph)
     start = None
@@ -756,9 +748,12 @@ def louvain(
         checkpointer = checkpointer.for_run(
             graph, gate_mode=gate_mode, min_moves_frac=min_moves_frac,
             gain_eps=gain_eps, max_supersteps=max_supersteps,
+            min_q_gain=min_q_gain, max_levels=max_levels,
         )
         start = checkpointer.resume_point(graph) if resume else None
     cur = graph if start is None else start.graph
+    # the last committed level graph's vertices are the run's communities
+    num_communities = cur.stats.num_vertices
     if start is not None and start.level > 0:
         global_asg, q_prev = start.global_assignments, start.modularity
     level_stats: list[LevelStats] = []
@@ -775,6 +770,7 @@ def louvain(
                     max_supersteps, gain_eps, min_q_gain, min_moves_frac, gate_mode,
                 )
                 level_stats += local
+                num_communities = len(np.unique(labels))
                 global_asg = _unwind(global_asg, spark.createDataFrame(
                     pd.DataFrame({"community": edges[0], "_new": labels}),
                     "community long, _new long",
@@ -783,8 +779,8 @@ def louvain(
                 last = local[-1].level - (local[-1].modularity != q)
                 if checkpointer is not None and last >= level:
                     checkpointer.save_level(
-                        algorithm="louvain", level=last, assignments=global_asg,
-                        degrees=None, coarse_edges=None, modularity=q,
+                        level=last, assignments=global_asg, coarse_edges=None,
+                        modularity=q,
                     )
                 break
             streak = 0
@@ -812,15 +808,15 @@ def louvain(
             global_asg = _unwind(global_asg, asg.select(
                 F.col("id").alias("community"), F.col("community").alias("_new")
             ))
+            num_communities = nxt.stats.num_vertices
             more = (
                 q - q_prev >= min_q_gain and nxt.stats.num_vertices > 1
                 and level + 1 < max_levels
             )
             if checkpointer is not None:  # the next level's graph, if one runs
                 checkpointer.save_level(
-                    algorithm="louvain", level=level, assignments=global_asg,
-                    degrees=cur.degrees, coarse_edges=nxt.edges if more else None,
-                    modularity=q,
+                    level=level, assignments=global_asg,
+                    coarse_edges=nxt.edges if more else None, modularity=q,
                 )
             asg.unpersist()
             if not more:
@@ -835,4 +831,7 @@ def louvain(
         # are checkpoint-backed, never cur-backed)
         if cur is not graph:
             cur.unpersist()
-    return LouvainResult(assignments=global_asg, modularity=q, levels=level_stats)
+    return LouvainResult(
+        assignments=global_asg, modularity=q, levels=level_stats,
+        num_communities=num_communities,
+    )

@@ -1,9 +1,9 @@
-"""Fixed StructType schemas (reference: compile-time Rust structs, no schema system —
-/root/reference/src/louvain/graph.rs:21-44, messagemanager.rs:23-64).
+"""Fixed schemas (the reference has compile-time Rust structs and no schema
+system, src/louvain/graph.rs:21-44).
 
-The engine core works on three non-null tables; the north-star ingest adds the
-corpus schema (BASELINE.json input_hint). Schemas are asserted at API
-boundaries via :func:`conform`.
+The north-star ingest reads the corpus as :data:`CORPUS_SCHEMA`
+(BASELINE.json input_hint); every edge table enters the engine through
+:func:`conform_edges`.
 """
 
 from __future__ import annotations
@@ -11,39 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# Edge(VertexID, VertexID, f64) — graph.rs:30-31
-EDGE_SCHEMA = T.StructType(
-    [
-        T.StructField("src", T.LongType(), False),
-        T.StructField("dst", T.LongType(), False),
-        T.StructField("weight", T.DoubleType(), False),
-    ]
-)
-
-# vtx_community_map — communitystate.rs:66
-ASSIGNMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("community", T.LongType(), False),
-    ]
-)
-
-# Community {id, internal_weight, total_weight} — communitystate.rs:21-28
-COMMUNITIES_SCHEMA = T.StructType(
-    [
-        T.StructField("community", T.LongType(), False),
-        T.StructField("internal_weight", T.DoubleType(), False),
-        T.StructField("total_weight", T.DoubleType(), False),
-    ]
-)
-
-DEGREES_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("degree", T.DoubleType(), False),
-    ]
-)
 
 # North-star corpus input (BASELINE.json input_hint)
 CORPUS_SCHEMA = T.StructType(
@@ -56,26 +23,13 @@ CORPUS_SCHEMA = T.StructType(
     ]
 )
 
-# Checkpoint manifest rows (FIXTURES.md §1c)
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("algorithm", T.StringType(), False),
-        T.StructField("level", T.IntegerType(), False),
-        T.StructField("superstep", T.IntegerType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("rows", T.LongType(), False),
-        T.StructField("modularity", T.DoubleType(), True),
-        T.StructField("moves", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("path", T.StringType(), False),
-    ]
-)
-
 
 def conform_edges(df: DataFrame) -> DataFrame:
     """Project/cast an arbitrary DataFrame with src/dst/weight-ish columns onto
-    EDGE_SCHEMA. Weight defaults to 1.0 when absent (unit-weight graphs, as in
-    the reference's 28-edge fixture, tests/distributed_graph.rs:29-58)."""
+    ``[src long, dst long, weight double]`` (the reference's
+    ``Edge(VertexID, VertexID, f64)``, graph.rs:30-31). Weight defaults to 1.0
+    when absent (unit-weight graphs, as in the reference's 28-edge fixture,
+    tests/distributed_graph.rs:29-58)."""
     cols = set(df.columns)
     weight = F.col("weight").cast("double") if "weight" in cols else F.lit(1.0)
     return df.select(

@@ -6,18 +6,17 @@ A Louvain run's manifest holds two kinds of record (layout v4):
   per-partition lineage (row counts per Spark partition), moves and wall
   time — so a run can resume mid-level (BASELINE.json north_star);
 - ``level``: one per committed level — the labels unwound to the input's
-  ids and the level's Q; a SQL level also writes its graph's degrees and,
-  when another level follows, the next level's graph (its edges). The
-  local tier writes one such record, with neither, for the last level it
-  commits, so the last level record always holds the run's labels.
+  ids and the level's Q; a SQL level also writes, when another level
+  follows, the next level's graph (its edges). The local tier writes one
+  such record, without it, for the last level it commits, so the last level
+  record always holds the run's labels.
 
-No Iceberg runtime jar ships in this sandbox, so the layout is
-**Parquet + a JSON-lines manifest we write ourselves** (snapshot id = the
-(algorithm, level, superstep) triple; a manifest line is appended only after
-the parquet write completes, which is the commit point — readers ignore
+The layout is **Parquet + a JSON-lines manifest we write ourselves**
+(snapshot id = the (level, superstep) pair; a manifest line is appended only
+after the parquet write completes, which is the commit point — readers ignore
 directories with no manifest line, giving atomic-enough snapshot semantics on
-a real object store too). When an Iceberg catalog IS configured,
-``table_format='iceberg'`` switches the writes to real Iceberg tables.
+a real object store too). Each table is one Spark job, the write itself; its
+lineage is read back from the written files' parquet footers.
 """
 
 from __future__ import annotations
@@ -26,23 +25,31 @@ import copy
 import json
 import os
 import time
+from collections import Counter
 from typing import NamedTuple
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from graftlouvain.operators.graph import LinkGraph
 
 # Manifest record format. v2 renamed write_wall_ms -> persist_wall_ms (the
-# timer spans materialization + lineage + file write, not just the write);
+# timer spanned materialization + lineage + file write; it now spans the
+# write plus the footer read);
 # records carry manifest_version so cross-round consumers aggregating timing
 # fields can dispatch on it instead of seeing silent gaps. v1 records (no
 # version field) predate the rename. v3 records written for a Louvain run
 # carry ``run``: its parameters and its input graph's fingerprint. v4 folds
 # the separate record of each coarse graph into the level record before it
 # (``coarse_edges_path``) and drops the superstep records' never-set
-# ``modularity``.
+# ``modularity``. An older v4 SQL level record also carries ``degrees_path``;
+# no reader ever read it, so records with or without it resume the same way
+# and the version stays 4.
 MANIFEST_VERSION = 4
+
+# the one algorithm a checkpointer records: its path prefix and the records'
+# ``algorithm`` field
+ALGORITHM = "louvain"
 
 # the GraphStats fields that fingerprint a run's input graph (no job: from_edges
 # computes them in its one stats pass)
@@ -62,9 +69,8 @@ class ResumePoint(NamedTuple):
 
 
 class CheckpointManager:
-    def __init__(self, base_dir: str, table_format: str = "parquet"):
+    def __init__(self, base_dir: str):
         self.base_dir = base_dir
-        self.table_format = table_format
         os.makedirs(base_dir, exist_ok=True)
         self.manifest_path = os.path.join(base_dir, "manifest.jsonl")
         self.run: dict = {}  # stamped on every record; see for_run
@@ -79,27 +85,21 @@ class CheckpointManager:
     # -- write ------------------------------------------------------------
 
     def _write(self, df: DataFrame, rel: str) -> tuple[str, list[dict], int]:
+        """Write ``df`` under ``rel`` in one Spark job and return its path, its
+        lineage and the wall time of write plus footer read (the manifest's
+        ``persist_wall_ms``). The lineage is the rows per Spark partition as
+        the files hold them: a part file's index is the id of the partition
+        that wrote it, and a zero-row file (Spark writes one for an empty
+        DataFrame) holds no partition's rows."""
         path = os.path.join(self.base_dir, rel)
         t0 = time.monotonic()
-        # Cache first, derive lineage from the cache, then write FROM the
-        # cache: one compute + one write, and the lineage describes the exact
-        # partition layout that lands in the files (a recompute after the
-        # write could lay partitions out differently under shuffle/AQE).
-        # The timer therefore spans materialization + lineage + file write —
-        # the manifest records it as persist_wall_ms to say exactly that.
-        cached = df.cache()
-        lineage = [
-            {"partition_id": int(r["pid"]), "rows": int(r["rows"])}
-            for r in cached.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
-        writer = cached.write.mode("overwrite")
-        if self.table_format == "iceberg":
-            writer.format("iceberg").save(path)
-        else:
-            writer.parquet(path)
-        cached.unpersist()
+        df.write.mode("overwrite").parquet(path)
+        rows = Counter()
+        for name in os.listdir(path):
+            if name.startswith("part-"):
+                footer = pq.ParquetFile(os.path.join(path, name)).metadata
+                rows[int(name[5:10])] += footer.num_rows
+        lineage = [{"partition_id": p, "rows": n} for p, n in sorted(rows.items()) if n]
         wall_ms = int((time.monotonic() - t0) * 1000)
         return path, lineage, wall_ms
 
@@ -126,20 +126,19 @@ class CheckpointManager:
 
     def save_superstep(
         self,
-        algorithm: str,
         level: int,
         superstep: int,
         assignments: DataFrame,
         moves: int,
         wall_ms: int,
     ) -> None:
-        rel = f"{algorithm}/level={level}/superstep={superstep}/assignments"
+        rel = f"{ALGORITHM}/level={level}/superstep={superstep}/assignments"
         path, lineage, write_ms = self._write(assignments, rel)
         self._append_manifest(
             {
                 "manifest_version": MANIFEST_VERSION,
                 "kind": "superstep",
-                "algorithm": algorithm,
+                "algorithm": ALGORITHM,
                 "level": level,
                 "superstep": superstep,
                 "path": path,
@@ -152,32 +151,27 @@ class CheckpointManager:
 
     def save_level(
         self,
-        algorithm: str,
         level: int,
         assignments: DataFrame | None,
-        degrees: DataFrame | None,
         coarse_edges: DataFrame | None,
         modularity: float | None,
     ) -> None:
         record = {
             "manifest_version": MANIFEST_VERSION,
             "kind": "level",
-            "algorithm": algorithm,
+            "algorithm": ALGORITHM,
             "level": level,
             "modularity": modularity,
         }
         if assignments is not None:
             path, lineage, _ = self._write(
-                assignments, f"{algorithm}/level={level}/final_assignments"
+                assignments, f"{ALGORITHM}/level={level}/final_assignments"
             )
             record["assignments_path"] = path
             record["assignments_lineage"] = lineage
-        if degrees is not None:
-            path, lineage, _ = self._write(degrees, f"{algorithm}/level={level}/degrees")
-            record["degrees_path"] = path
         if coarse_edges is not None:
             path, lineage, _ = self._write(
-                coarse_edges, f"{algorithm}/level={level}/coarse_edges"
+                coarse_edges, f"{ALGORITHM}/level={level}/coarse_edges"
             )
             record["coarse_edges_path"] = path
         self._append_manifest(record)
@@ -199,18 +193,16 @@ class CheckpointManager:
             pass
         return records
 
-    def latest_superstep(self, algorithm: str) -> dict | None:
+    def latest_superstep(self) -> dict | None:
         """The most recent completed superstep record (commit point = manifest
         line), i.e. where resume restarts."""
         records = [
             r for r in self.manifest()
-            if r["kind"] == "superstep" and r["algorithm"] == algorithm
+            if r["kind"] == "superstep" and r["algorithm"] == ALGORITHM
         ]
         return max(records, key=lambda r: (r["level"], r["superstep"]), default=None)
 
     def load_assignments(self, spark: SparkSession, record: dict) -> DataFrame:
-        if self.table_format == "iceberg":
-            return spark.read.format("iceberg").load(record["path"])
         return spark.read.parquet(record["path"])
 
     def resume_point(self, graph: LinkGraph) -> ResumePoint | None:
@@ -219,20 +211,22 @@ class CheckpointManager:
         level's committed move counts in superstep order: the caller's stop
         rule reads them, else a resume into a slack-converged level would run
         extra supersteps and diverge. ``ValueError`` names the fields that
-        differ if that record is of another run; a record with no
-        fingerprint (manifest version < 3) resumes unchecked. A level ≥ 1
-        resumes on the coarse graph and labels of level ``level − 1``'s
-        record; a record from before version 4 has no coarse graph and
-        raises ``ValueError``."""
-        rec = self.latest_superstep("louvain")
+        differ if that record is of another run. Only the fields the
+        record's fingerprint holds are compared: a record with none
+        (manifest version < 3) resumes unchecked, and one written before
+        ``min_q_gain`` and ``max_levels`` were stamped resumes unchecked on
+        those two. A level ≥ 1 resumes on the coarse graph and labels of
+        level ``level − 1``'s record; a record from before version 4 has no
+        coarse graph and raises ``ValueError``."""
+        rec = self.latest_superstep()
         if rec is None:
             return None
-        theirs = rec.get("run", self.run)
-        diff = [k for k in self.run if theirs.get(k) != self.run[k]]
+        theirs = rec.get("run", {})
+        diff = [k for k in self.run if k in theirs and theirs[k] != self.run[k]]
         if diff:
             raise ValueError(
                 f"checkpoint {self.base_dir} is of another run; differing: "
-                + ", ".join(f"{k} ({theirs.get(k)!r} != {self.run[k]!r})" for k in diff)
+                + ", ".join(f"{k} ({theirs[k]!r} != {self.run[k]!r})" for k in diff)
             )
         manifest = self.manifest()
         levels = {(r["algorithm"], r["level"]): r for r in manifest if r["kind"] == "level"}
@@ -240,7 +234,7 @@ class CheckpointManager:
         level, step = int(rec["level"]), int(rec["superstep"]) + 1
         global_asg = q = None
         if level > 0:
-            prev = levels["louvain", level - 1]
+            prev = levels[ALGORITHM, level - 1]
             if "coarse_edges_path" not in prev:
                 raise ValueError(
                     f"checkpoint {self.base_dir}: the level {level - 1} record (manifest"
@@ -253,7 +247,7 @@ class CheckpointManager:
             q = float(prev["modularity"])
         moves = {
             r["superstep"]: int(r["moves"]) for r in manifest
-            if r["kind"] == "superstep" and r["algorithm"] == "louvain" and r["level"] == level
+            if r["kind"] == "superstep" and r["algorithm"] == ALGORITHM and r["level"] == level
         }
         return ResumePoint(
             level, step, [m for _, m in sorted(moves.items())], graph,

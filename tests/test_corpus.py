@@ -114,12 +114,24 @@ def test_checkpoint_resume_one_level(spark, tmp_path):
     full_asg, full_stats = louvain_level(g)
     want = {r["id"]: r["community"] for r in full_asg.collect()}
 
-    ck = CheckpointManager(str(tmp_path / "ck"))
+    written = []  # each saved state's rows per Spark partition
+
+    class Spy(CheckpointManager):
+        def save_superstep(self, **kw):
+            rows = kw["assignments"].groupBy(F.spark_partition_id().alias("p")).count()
+            written.append(sorted(tuple(r) for r in rows.collect()))
+            super().save_superstep(**kw)
+
+    ck = Spy(str(tmp_path / "ck"))
     # run only the first 2 supersteps, checkpointing each ("crash" after)
     partial_asg, _ = louvain_level(g, max_supersteps=2, checkpointer=ck)
-    rec = ck.latest_superstep("louvain")
+    rec = ck.latest_superstep()
     assert rec is not None and rec["superstep"] == 1
     assert rec["lineage"] and sum(p["rows"] for p in rec["lineage"]) == 34
+    # the lineage read from the files is the written state's partitioning
+    assert [
+        [(p["partition_id"], p["rows"]) for p in r["lineage"]] for r in ck.manifest()
+    ] == written
 
     resumed, _ = louvain_level(
         g,
@@ -226,6 +238,12 @@ def test_resume_refuses_another_run(spark, tmp_path, monkeypatch):
     with pytest.raises(ValueError, match=r"differing: min_moves_frac \(0\.0 != 0\.1\)$"):
         louvain(g, min_moves_frac=0.1, checkpointer=CheckpointManager(ckdir),
                 resume=True, **run)
+    with pytest.raises(ValueError, match=r"differing: min_q_gain \(1e-07 != 1\.0\)$"):
+        louvain(g, min_q_gain=1.0, checkpointer=CheckpointManager(ckdir),
+                resume=True, **run)
+    with pytest.raises(ValueError, match=r"differing: max_levels \(1 != 2\)$"):
+        louvain(g, checkpointer=CheckpointManager(ckdir), resume=True,
+                **{**run, "max_levels": 2})
     other = LinkGraph.from_edges(to_df(spark, FIXTURE_28_W))
     with pytest.raises(ValueError, match="num_vertices") as err:
         louvain(other, checkpointer=CheckpointManager(ckdir), resume=True, **run)
@@ -235,10 +253,21 @@ def test_resume_refuses_another_run(spark, tmp_path, monkeypatch):
     with open(ck.manifest_path) as f:
         records = [json.loads(line) for line in f]
     assert all(r["manifest_version"] == 4 and "run" in r for r in records)
-    with open(ck.manifest_path, "w") as f:
-        for r in records:
-            r.pop("run")
-            f.write(json.dumps(r) + "\n")
+
+    def rewrite(strip):
+        with open(ck.manifest_path, "w") as f:
+            for r in records:
+                strip(r)
+                f.write(json.dumps(r) + "\n")
+
+    # a record stamped before min_q_gain and max_levels were: only the
+    # fields it holds are compared
+    rewrite(lambda r: [r["run"].pop(k) for k in ("min_q_gain", "max_levels")])
+    with pytest.raises(ValueError, match=r"differing: min_moves_frac \(0\.0 != 0\.1\)$"):
+        louvain(g, min_moves_frac=0.1, checkpointer=ck, resume=True, **run)
+    res = louvain(g, min_q_gain=1.0, checkpointer=ck, resume=True, **run)
+    assert res.levels[0].start_step == 2
+    rewrite(lambda r: r.pop("run"))
     res = louvain(g, min_moves_frac=0.1, checkpointer=ck, resume=True, **run)
     assert res.levels[0].start_step == 2
 
@@ -347,3 +376,144 @@ def test_resume_refuses_v3_level_record(spark, tmp_path, monkeypatch):
             f.write(json.dumps(r) + "\n")
     with pytest.raises(ValueError, match="version 3"):
         louvain(g, max_levels=2, checkpointer=ck, resume=True)
+
+
+def test_checkpoint_write_is_one_job(spark, tmp_path):
+    """Every checkpoint table write is one Spark job, the write itself: the
+    lineage comes from the written files' parquet footers, and an empty
+    state's lineage is empty."""
+    from graftlouvain.functions.iterate import materialize
+    from perfbench.trace import group_counts
+
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    state = materialize(louvain_level(g, max_supersteps=2)[0])
+    ck = CheckpointManager(str(tmp_path / "ck"))
+    sc = spark.sparkContext
+
+    def jobs(group, save, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            save(**kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return group_counts(sc, group)[0]
+
+    assert jobs("save-superstep", ck.save_superstep, level=0, superstep=0,
+                assignments=state, moves=0, wall_ms=0) == 1
+    assert jobs("save-level", ck.save_level, level=0, assignments=state,
+                coarse_edges=g.edges, modularity=0.0) == 2
+    assert jobs("save-empty", ck.save_superstep, level=0, superstep=1,
+                assignments=state.limit(0), moves=0, wall_ms=0) == 1
+    sup, level, empty = ck.manifest()
+    rows = state.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    assert [(p["partition_id"], p["rows"]) for p in sup["lineage"]] == sorted(map(tuple, rows))
+    assert sup["lineage"] == level["assignments_lineage"]
+    assert empty["lineage"] == []
+    assert "degrees_path" not in level and "coarse_edges_path" in level
+
+
+@pytest.fixture(scope="module")
+def sql_karate(spark):
+    """The uninterrupted karate run on the SQL tier: (labels, Q)."""
+    default = graph_mod.LOCAL_MAX_EDGES
+    graph_mod.LOCAL_MAX_EDGES = -1
+    try:
+        res = louvain(LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W)))
+        assert {s.path for s in res.levels} == {"spark"}
+        return _labels(res), res.modularity
+    finally:
+        graph_mod.LOCAL_MAX_EDGES = default
+
+
+# A checkpointed karate run on the SQL tier that dies inside the manifest
+# append of level 1's first superstep record, after that record's parquet
+# files are written: before its line (argv[2] "before") or after flushing
+# half of it ("torn").
+_KILLED_RUN = """
+import os, sys
+import graftlouvain.operators.graph as graph_mod
+import graftlouvain.sources.checkpoint as ck
+from graftlouvain import LinkGraph, get_spark, louvain
+from tests.fixtures import FIXTURE_KARATE_W, to_df
+
+base_dir, point = sys.argv[1:]
+graph_mod.LOCAL_MAX_EDGES = -1
+append = ck.CheckpointManager._append_manifest
+
+
+class Dying:
+    def __init__(self, f):
+        self.f = f
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return self.f.__exit__(*exc)
+
+    def __getattr__(self, name):
+        return getattr(self.f, name)
+
+    def write(self, line):
+        if point == "torn":
+            self.f.write(line[: len(line) // 2])
+            self.f.flush()
+        os._exit(17)
+
+
+def dying_append(self, record):
+    if record["kind"] == "superstep" and (record["level"], record["superstep"]) == (1, 0):
+        ck.open = lambda *a, **kw: Dying(open(*a, **kw))
+    append(self, record)
+
+
+ck.CheckpointManager._append_manifest = dying_append
+spark = get_spark(master="local[4]", shuffle_partitions=4)
+louvain(LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W)),
+        checkpointer=ck.CheckpointManager(base_dir))
+sys.exit(3)
+"""
+
+
+@pytest.mark.parametrize("point", ["before", "torn"])
+def test_resume_after_kill(spark, tmp_path, monkeypatch, sql_karate, point):
+    """A process killed inside the manifest append of level 1's first
+    superstep record, before its line or after half of it, leaves a
+    checkpoint that resumes to the uninterrupted run's labels and Q."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        filter(None, [root, os.environ.get("PYTHONPATH")])
+    ))
+    ckdir = str(tmp_path / "ck")
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _KILLED_RUN, ckdir, point], cwd=root, env=env,
+        stdout=subprocess.DEVNULL, stderr=subprocess.PIPE, start_new_session=True,
+    )
+    try:
+        _, err = proc.communicate(timeout=600)
+    finally:
+        try:  # the child's JVM, if it outlived the child
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        proc.wait()
+    assert proc.returncode == 17, err.decode(errors="replace")[-3000:]
+
+    ck = CheckpointManager(ckdir)
+    records = ck.manifest()
+    assert records[-1]["kind"] == "level" and records[-1]["level"] == 0
+    assert os.listdir(os.path.join(ckdir, "louvain", "level=1", "superstep=0", "assignments"))
+    with open(ck.manifest_path, "rb") as f:
+        assert f.read().endswith(b"\n") == (point == "before")
+
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    res = louvain(g, checkpointer=ck, resume=True)
+    want, q = sql_karate
+    assert _labels(res) == want and res.modularity == q
+    assert res.num_communities == len(set(want.values()))

@@ -104,6 +104,29 @@ def test_karate_modularity_quality(spark):
     assert 2 <= result.num_communities <= 8
 
 
+def test_num_communities_is_a_field(spark, monkeypatch):
+    """``LouvainResult.num_communities`` is the distinct community count of
+    the assignments on both tiers, filled by ``louvain()`` from counts the
+    driver holds: reading it launches no Spark job, and the result
+    constructs with it."""
+    from graftlouvain.operators.louvain import LouvainResult
+    from perfbench.trace import group_counts
+
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    sc = spark.sparkContext
+    for tier in tiers(monkeypatch):
+        r = louvain(g)
+        sc.setJobGroup(f"num-communities-{tier}", tier)
+        try:
+            n = r.num_communities
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert group_counts(sc, f"num-communities-{tier}")[0] == 0, tier
+        assert n == r.assignments.select("community").distinct().count(), tier
+    kept = LouvainResult(r.assignments, r.modularity, r.levels, num_communities=3)
+    assert kept.num_communities == 3
+
+
 def test_modularity_preserved_under_coarsening(spark):
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     asg, _ = louvain_level(g)
@@ -418,6 +441,7 @@ def test_q_lowering_level_not_committed(spark, monkeypatch, seed, n_max, gate_mo
         assert r.modularity == pytest.approx(modularity(g, r.assignments), abs=1e-12), tier
         assert _labels(r.assignments) == want, tier
         assert r.modularity == pytest.approx(q_want, abs=1e-9), tier
+        assert r.num_communities == len(set(want.values())), tier
 
 
 def test_zero_weight_graph_keeps_singletons(spark, monkeypatch):

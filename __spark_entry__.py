@@ -602,7 +602,7 @@ def q_louvain_supersteps_fixed(spark, sf):
         st = materialize(asg)
         for step in range(LOUVAIN_FIXED_STEPS):
             st = materialize(
-                _superstep(g, st, step, 1e-12).select("id", "community", "k_i")
+                _superstep(g, st, step).select("id", "community", "k_i")
             )
     return st.select("id", "community")
 
@@ -631,7 +631,7 @@ def q_louvain_supersteps_part(spark, sf):
         st = materialize(asg)
         for step in range(LOUVAIN_FIXED_STEPS):
             st = materialize(
-                _superstep(g, st, step, 1e-12, gate_mode="conflict").select(
+                _superstep(g, st, step, gate_mode="conflict").select(
                     "id", "community", "k_i"
                 )
             )
@@ -662,7 +662,7 @@ def q_louvain_level2_fixed(spark, sf):
         st = materialize(asg)
         for step in range(LOUVAIN_FIXED_STEPS):
             st = materialize(
-                _superstep(g, st, step, 1e-12).select("id", "community", "k_i")
+                _superstep(g, st, step).select("id", "community", "k_i")
             )
         fine = st.select("id", "community")
         cg = coarsen(g, fine)
@@ -673,7 +673,7 @@ def q_louvain_level2_fixed(spark, sf):
         )
         for step in range(LOUVAIN_FIXED_STEPS):
             cst = materialize(
-                _superstep(cg, cst, step, 1e-12).select("id", "community", "k_i")
+                _superstep(cg, cst, step).select("id", "community", "k_i")
             )
     return fine.join(
         cst.select(F.col("id").alias("community"), F.col("community").alias("c2")),

@@ -25,10 +25,11 @@ checkpoint blocks.
 
 from __future__ import annotations
 
+import itertools
 import threading
 import time
 from contextlib import contextmanager
-from typing import Any, Callable, Iterator, NamedTuple
+from typing import Any, Callable, Iterator, NamedTuple, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -210,16 +211,18 @@ def converge(
     max_iter: int,
     quiet: Callable[[Any], bool] | None = None,
     patience: int = 1,
-    start: int = 0,
-    start_streak: int = 0,
+    done: Sequence[Any] = (),
 ) -> Iterator[tuple[Any, Superstep]]:
     """THE superstep loop, over any state: run ``state, metric = step(state,
-    i)`` for ``i`` from ``start`` while ``i < max_iter``, and yield each new
-    state with its :class:`Superstep` record, timed around the step alone.
-    With ``quiet``, stop once ``quiet(metric)`` has held for ``patience``
-    consecutive supersteps, ``start_streak`` of them already run before a
-    resume (so nothing runs when ``start_streak >= patience``)."""
-    streak, i = start_streak, start
+    i)`` for ``i`` from ``len(done)`` while ``i < max_iter``, and yield each
+    new state with its :class:`Superstep` record, timed around the step
+    alone. With ``quiet``, stop once ``quiet(metric)`` has held for
+    ``patience`` consecutive supersteps. ``done`` holds the metrics of the
+    supersteps committed before a resume, and the quiet run that ends it
+    counts toward ``patience`` (so nothing runs when it is that long)."""
+    i, streak = len(done), 0
+    if quiet is not None:
+        streak = sum(1 for _ in itertools.takewhile(quiet, reversed(done)))
     while i < max_iter and streak < patience:
         t0 = time.monotonic()
         state, metric = step(state, i)

@@ -103,7 +103,6 @@ class LinkGraph:
         raw_edges: DataFrame,
         num_partitions: int | None = None,
         pre_symmetrized: bool = False,
-        cache: bool = True,
     ) -> "LinkGraph":
         """Build the canonical graph from any (src, dst[, weight]) DataFrame.
 
@@ -152,9 +151,7 @@ class LinkGraph:
             parted = sym.repartition(num_partitions, "src")
         else:
             parted = sym.repartition("src")
-        agg = parted.groupBy("src", "dst").agg(F.sum("weight").alias("weight"))
-        if cache:
-            agg = agg.cache()
+        agg = parted.groupBy("src", "dst").agg(F.sum("weight").alias("weight")).cache()
 
         degrees = agg.groupBy(F.col("src").alias("id")).agg(
             F.sum("weight").alias("degree"),
@@ -167,9 +164,7 @@ class LinkGraph:
                     F.lit(0.0)
                 )
             ).alias("self_weight"),
-        )
-        if cache:
-            degrees = degrees.cache()
+        ).cache()
         vertices = degrees.select("id")
 
         # ALL scalar stats come from one pass over the (tiny) degrees table —
@@ -235,11 +230,6 @@ class LinkGraph:
             for a in self._local:
                 a.setflags(write=False)
         return self._local
-
-    def neighbors_of(self, vertex_id: int) -> DataFrame:
-        """A2 neighbors(v) (graph.rs:402-407) — test/debug helper only; hot
-        paths always join the whole edge table instead."""
-        return self.edges.where(F.col("src") == F.lit(vertex_id)).select("dst", "weight")
 
     def unpersist(self) -> None:
         self.edges.unpersist()

@@ -19,7 +19,7 @@ tot'_C = tot_C − k_i·[C==A]:
     score(C) = k_{i→C} − tot'_C · k_i / S          (S = Σ degrees = 2m)
 
 argmax over C ties broken by smallest community id; i moves iff
-score(best) > score(A) + gain_eps AND the oscillation gate passes. Two gates
+score(best) > score(A) + GAIN_EPS AND the oscillation gate passes. Two gates
 (both deterministic swap breakers from the "minimum labeling" family of
 parallel-Louvain heuristics, cf. Lu, Halappanavar & Kalyanaraman 2015):
 
@@ -93,18 +93,22 @@ Both tiers give identical labels, Q and per-level superstep and move counts
 whenever the weights are integer-valued below 2^53 (every sum is then exact
 in any order). For other weights the two tiers sum in different orders, as
 Spark's own ``SUM`` already does across partitionings, so an exact
-ulp-level near-tie can resolve differently; ``gain_eps`` is not there to
+ulp-level near-tie can resolve differently; ``GAIN_EPS`` is not there to
 hide that. Graph size alone picks the tier, with a ``checkpointer`` too.
 The kernel saves no superstep states: under a checkpointer it writes one
 level record, for the last level it commits, so in both tiers the last
-``louvain`` level record holds the returned assignments. A resume restarts
-after the latest committed SQL superstep; a run local from the start has
-none and reruns from the input.
+``louvain`` level record holds the returned assignments. A resume continues
+after the manifest's last committed record (``sources.checkpoint``): a SQL
+level goes on from its last committed superstep, the level after a
+committed SQL level starts from singletons on that level's coarse graph,
+and a finished run, local from the start or not, returns its last level
+record's labels and Q without running a level.
 """
 
 from __future__ import annotations
 
 import itertools
+from collections.abc import Sequence
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from functools import partial
@@ -116,6 +120,7 @@ from pyspark.sql import functions as F
 
 from graftlouvain.functions.iterate import (
     Superstep,
+    _release,
     fixpoint,
     materialize,  # noqa: F401 (wrapped here by perfbench/trace.py)
     row_partitions,
@@ -190,6 +195,11 @@ def _auto_salt(graph: LinkGraph) -> int:
     ):
         return SKEW_SALT_BUCKETS
     return 1
+
+
+# a move applies only if it beats staying by more than this (both tiers, the
+# sequential oracle and the DuckDB twins)
+GAIN_EPS = 1e-12
 
 
 def _scoring_cte(e: str, st: str, S: str, salt_buckets: int = 1) -> str:
@@ -414,7 +424,6 @@ def _superstep(
     graph: LinkGraph,
     assignments: DataFrame,
     step: int,
-    gain_eps: float,
     gate_mode: str = "parity",
 ) -> DataFrame:
     """One synchronous local-move superstep (:func:`_superstep_cte`) from
@@ -423,7 +432,7 @@ def _superstep(
     their pinned semantics; the production loop passes its own mode."""
     with _superstep_views(graph) as run:
         return run(assignments, partial(
-            _superstep_cte, step=step, EPS=_sql_double(gain_eps), gate=gate_mode
+            _superstep_cte, step=step, EPS=_sql_double(GAIN_EPS), gate=gate_mode
         ))
 
 
@@ -462,12 +471,10 @@ def louvain_level(
     graph: LinkGraph,
     assignments: DataFrame | None = None,
     max_supersteps: int = 64,
-    gain_eps: float = 1e-12,
     level: int = 0,
     checkpointer=None,
     min_moves_frac: float = 0.0,
-    start_step: int = 0,
-    start_streak: int = 0,
+    done: Sequence[int] = (),
     gate_mode: str = "conflict",
 ) -> tuple[DataFrame, LevelStats]:
     """L1 one_level (communities.rs:36-41): supersteps until the level's
@@ -482,28 +489,32 @@ def louvain_level(
     (cf. Lu, Halappanavar & Kalyanaraman 2015): dense quasi-random graphs
     otherwise churn to the superstep cap for near-zero Q payoff. Default 0.0
     keeps exact fixpoint semantics (the oracle-pinned configuration).
-    ``start_step``/``start_streak`` resume mid-level from a checkpoint,
-    preserving the even/odd gate parity AND the convergence streak (without
-    the streak, a resume into a slack-converged level would run extra real
-    supersteps and diverge from the uninterrupted run).
+    ``done`` resumes mid-level from a checkpoint: the move counts of the
+    supersteps committed before ``assignments``. Supersteps continue from
+    index ``len(done)`` (the parity gate's even/odd step) and the quiet ones
+    that end ``done`` count toward the stop rule, so a resume into a
+    slack-converged level runs no extra superstep.
     """
-    asg = assignments if assignments is not None else singleton_assignments(graph)
-    # caller-supplied ids that are not graph vertices never enter the scoring
-    # dataflow (no edge rows) — carry them through unchanged so the output
-    # covers exactly the input's id set
-    extra = (
-        assignments.select("id", "community").join(
-            graph.degrees.select("id"), "id", "left_anti"
-        )
-        if assignments is not None
-        else None
-    )
-    quiet, patience = _level_stop(graph.stats.num_vertices, min_moves_frac, gate_mode)
     # level-loop state = [id, community, k_i]: the degree is joined in ONCE
     # here and then rides through every superstep projection, so the loop
-    # never shuffles graph.degrees again.
-    if "k_i" not in asg.columns:
-        asg = asg.join(graph.degrees.select("id", F.col("degree").alias("k_i")), "id")
+    # never shuffles graph.degrees again. Singletons come straight off the
+    # degrees: joining them to themselves would plan one side as a clone
+    # that misses the degrees cache and recomputes a coarse graph from the
+    # previous level's (released) state.
+    extra = None
+    if assignments is None:
+        asg = graph.degrees.select(
+            "id", F.col("id").alias("community"), F.col("degree").alias("k_i")
+        )
+    else:
+        # caller-supplied ids that are not graph vertices never enter the
+        # scoring dataflow (no edge rows) — carry them through unchanged so
+        # the output covers exactly the input's id set
+        extra = assignments.select("id", "community").join(
+            graph.degrees.select("id"), "id", "left_anti"
+        )
+        asg = assignments.join(graph.degrees.select("id", F.col("degree").alias("k_i")), "id")
+    quiet, patience = _level_stop(graph.stats.num_vertices, min_moves_frac, gate_mode)
 
     def save(state: DataFrame, rec: Superstep) -> None:
         checkpointer.save_superstep(
@@ -512,7 +523,7 @@ def louvain_level(
             moves=rec.metric, wall_ms=rec.wall_ms,
         )
 
-    EPS = _sql_double(gain_eps)
+    EPS = _sql_double(GAIN_EPS)
     with _superstep_views(graph) as run:
 
         def superstep(state: DataFrame, step: int) -> tuple[DataFrame, int]:
@@ -526,11 +537,10 @@ def louvain_level(
             graph.edges.sparkSession,
             2 * graph.stats.num_vertices,  # the ≤2V-row gate window is the state shuffle
             lambda: asg, superstep, max_supersteps,
-            quiet=quiet, patience=patience,
-            start=start_step, start_streak=start_streak,
+            quiet=quiet, patience=patience, done=done,
             after=save if checkpointer is not None else None,
         )
-    stats = LevelStats.from_records(level, records, start_step=start_step)
+    stats = LevelStats.from_records(level, records, start_step=len(done))
     result = state.select("id", "community")
     if extra is not None:
         result = result.unionByName(extra)
@@ -558,6 +568,13 @@ def coarsen(graph: LinkGraph, assignments: DataFrame) -> LinkGraph:
         .groupBy(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
         .agg(F.sum("weight").alias("weight"))
     )
+    return _coarse_graph(coarse_edges)
+
+
+def _coarse_graph(coarse_edges: DataFrame) -> LinkGraph:
+    """The graph of a coarse level's symmetric edge table (:func:`coarsen`'s,
+    or a checkpoint's copy of it), its edge cache cut to
+    :func:`row_partitions` of its edges."""
     built = LinkGraph.from_edges(coarse_edges, pre_symmetrized=True)
     p = built.edges.rdd.getNumPartitions()  # the built cache's layout: no job
     want = row_partitions(built.stats.num_directed_edges, p)
@@ -575,7 +592,7 @@ def coarsen(graph: LinkGraph, assignments: DataFrame) -> LinkGraph:
     )
 
 
-def _local_superstep(es, ed, ew, k, S, comm, step, gain_eps, gate_mode):
+def _local_superstep(es, ed, ew, k, S, comm, step, gate_mode):
     """numpy twin of :func:`_superstep_cte` over compact vertex indices
     (index order = id order, so smallest index = smallest id): ``es``,
     ``ed``, ``ew`` are the non-self-loop edges, ``k`` the degrees, ``comm``
@@ -601,7 +618,7 @@ def _local_superstep(es, ed, ew, k, S, comm, step, gain_eps, gate_mode):
     stay_kic = np.zeros(n)
     stay_kic[src[own]] = k_ic[own]
     stay = stay_kic[v] - (tot[cur] - k[v]) * k[v] / S
-    prelim = (best != cur) & (best_score > stay + gain_eps)
+    prelim = (best != cur) & (best_score > stay + GAIN_EPS)
     if gate_mode == "conflict":
         leaving = np.zeros(n, dtype=bool)
         leaving[cur[prelim]] = True
@@ -613,7 +630,7 @@ def _local_superstep(es, ed, ew, k, S, comm, step, gain_eps, gate_mode):
     return out, int(gate.sum())
 
 
-def _local_level(s, d, w, n, level, max_supersteps, gain_eps, min_moves_frac, gate_mode):
+def _local_level(s, d, w, n, level, max_supersteps, min_moves_frac, gate_mode):
     """numpy twin of :func:`louvain_level` from singletons on the ``n``-vertex
     graph ``(s, d, w)``: the same loop, stop rule and superstep cap."""
     k = np.bincount(s, weights=w, minlength=n)
@@ -623,7 +640,7 @@ def _local_level(s, d, w, n, level, max_supersteps, gain_eps, min_moves_frac, ga
     quiet, patience = _level_stop(n, min_moves_frac, gate_mode)
     comm, records = settle(
         np.arange(n),
-        lambda comm, step: _local_superstep(es, ed, ew, k, S, comm, step, gain_eps, gate_mode),
+        lambda comm, step: _local_superstep(es, ed, ew, k, S, comm, step, gate_mode),
         max_supersteps, quiet=quiet, patience=patience,
     )
     return comm, LevelStats.from_records(level, records, path="local")
@@ -632,8 +649,7 @@ def _local_level(s, d, w, n, level, max_supersteps, gain_eps, min_moves_frac, ga
 def _local_levels(
     ids: np.ndarray, s: np.ndarray, d: np.ndarray, w: np.ndarray,
     first_level: int, max_levels: int, q_prev: float,
-    max_supersteps: int, gain_eps: float, min_q_gain: float,
-    min_moves_frac: float, gate_mode: str,
+    max_supersteps: int, min_q_gain: float, min_moves_frac: float, gate_mode: str,
 ) -> tuple[np.ndarray, float, list]:
     """Run levels ``first_level``.. of :func:`louvain` on the level graph
     collected by :meth:`LinkGraph.local_edges`: supersteps, coarsening,
@@ -645,8 +661,7 @@ def _local_levels(
     q = q_prev
     for level in range(first_level, max_levels):
         comm, stats = _local_level(
-            s, d, w, len(vid), level, max_supersteps, gain_eps, min_moves_frac,
-            gate_mode,
+            s, d, w, len(vid), level, max_supersteps, min_moves_frac, gate_mode,
         )
         levels.append(stats)
         # coarsen: communities become vertices, renumbered in id order; the
@@ -708,7 +723,6 @@ def louvain(
     graph: LinkGraph,
     max_levels: int = 20,
     max_supersteps: int = 64,
-    gain_eps: float = 1e-12,
     min_q_gain: float = 1e-7,
     checkpointer=None,
     min_moves_frac: float = 0.0,
@@ -729,45 +743,50 @@ def louvain(
     ``gate_mode`` selects the oscillation gate ("conflict" default, "parity"
     = the r2-r4 semantics; see module docstring).
 
-    ``resume=True`` (requires ``checkpointer``) restarts after the latest
-    committed superstep, as :meth:`CheckpointManager.resume_point` reads it —
+    ``resume=True`` (requires ``checkpointer``) continues after the last
+    committed record, as :meth:`CheckpointManager.resume_point` reads it —
     the public crash-recovery path (S4; the reference round-trips state the
-    same way, communitystate.rs:890-971); a run local from the start saves
-    no superstep and reruns from the input. Gate parity and the convergence
-    streak are preserved, so the labels are byte-identical to an
-    uninterrupted run's. A resume with other ``gate_mode``,
-    ``min_moves_frac``, ``gain_eps``, ``max_supersteps``, ``min_q_gain``,
+    same way, communitystate.rs:890-971): mid-level from a superstep record,
+    at the next level from a level record, and not at all once the run had
+    finished, returning the last level record's labels and Q with empty
+    ``levels``. Gate parity and the convergence streak are preserved, so the
+    labels are byte-identical to an uninterrupted run's. A resume with other
+    ``gate_mode``, ``min_moves_frac``, ``max_supersteps``, ``min_q_gain``,
     ``max_levels`` or input graph raises ``ValueError``. ``LevelStats`` of
     levels completed before the crash are not replayed. The run writes no
     session config: coarse graphs size their own edge cache
     (:func:`coarsen`).
     """
     global_asg, q_prev = singleton_assignments(graph), singleton_modularity(graph)
-    start = None
+    cur, first, state, done = graph, 0, None, []
+    spark = graph.edges.sparkSession
     if checkpointer is not None:
         checkpointer = checkpointer.for_run(
             graph, gate_mode=gate_mode, min_moves_frac=min_moves_frac,
-            gain_eps=gain_eps, max_supersteps=max_supersteps,
-            min_q_gain=min_q_gain, max_levels=max_levels,
+            max_supersteps=max_supersteps, min_q_gain=min_q_gain, max_levels=max_levels,
         )
-        start = checkpointer.resume_point(graph) if resume else None
-    cur = graph if start is None else start.graph
+        start = checkpointer.resume_point(spark) if resume else None
+        if start is not None:
+            first, state, done = start.level, start.state, start.moves
+        if start is not None and start.level > 0:
+            global_asg, q_prev = start.global_assignments, start.modularity
+            if start.coarse_edges is None:  # the run had finished
+                n = global_asg.select("community").distinct().count()
+                return LouvainResult(global_asg, q_prev, [], n)
+            cur = _coarse_graph(start.coarse_edges)
     # the last committed level graph's vertices are the run's communities
     num_communities = cur.stats.num_vertices
-    if start is not None and start.level > 0:
-        global_asg, q_prev = start.global_assignments, start.modularity
     level_stats: list[LevelStats] = []
     q = q_prev
-    spark = graph.edges.sparkSession
     try:
-        for level in range(start.level if start else 0, max_levels):
+        for level in range(first, max_levels):
             edges = cur.local_edges()
             if edges is not None:
                 # coarse graphs only shrink: this level and every later one
                 # run in the kernel, then one join unwinds them all
                 labels, q, local = _local_levels(
                     *edges, level, max_levels, q_prev,
-                    max_supersteps, gain_eps, min_q_gain, min_moves_frac, gate_mode,
+                    max_supersteps, min_q_gain, min_moves_frac, gate_mode,
                 )
                 level_stats += local
                 num_communities = len(np.unique(labels))
@@ -783,18 +802,12 @@ def louvain(
                         modularity=q,
                     )
                 break
-            streak = 0
-            if start is not None:  # the quiet supersteps that end the committed run
-                quiet, _ = _level_stop(cur.stats.num_vertices, min_moves_frac, gate_mode)
-                streak = len(list(itertools.takewhile(quiet, reversed(start.moves))))
             asg, stats = louvain_level(
-                cur, assignments=start.assignments if start else None,
-                max_supersteps=max_supersteps, gain_eps=gain_eps, level=level,
-                checkpointer=checkpointer, min_moves_frac=min_moves_frac,
-                start_step=start.step if start else 0, start_streak=streak,
+                cur, assignments=state, max_supersteps=max_supersteps, level=level,
+                checkpointer=checkpointer, min_moves_frac=min_moves_frac, done=done,
                 gate_mode=gate_mode,
             )
-            start = None  # only the first level resumes
+            state, done = None, []  # only the first level resumes
             # the level's Q is the coarse graph's singleton Q: exactly equal,
             # and no join over the fine graph (see singleton_modularity)
             nxt = coarsen(cur, asg)
@@ -803,6 +816,7 @@ def louvain(
             level_stats.append(stats)
             if q < q_prev:  # never commit a level that lowers Q
                 q = q_prev
+                _release(asg)
                 nxt.unpersist()
                 break
             global_asg = _unwind(global_asg, asg.select(
@@ -818,7 +832,7 @@ def louvain(
                     level=level, assignments=global_asg,
                     coarse_edges=nxt.edges if more else None, modularity=q,
                 )
-            asg.unpersist()
+            _release(asg)
             if not more:
                 nxt.unpersist()
                 break

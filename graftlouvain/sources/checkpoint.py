@@ -11,6 +11,12 @@ A Louvain run's manifest holds two kinds of record (layout v4):
   such record, without it, for the last level it commits, so the last level
   record always holds the run's labels.
 
+A resume continues after the manifest's last committed record
+(:meth:`CheckpointManager.resume_point`): a superstep record's level goes on
+from its state, a level record with a coarse graph is followed by the next
+level from singletons, and one without ends a finished run, whose labels and
+Q it holds. A committed level therefore never runs twice.
+
 The layout is **Parquet + a JSON-lines manifest we write ourselves**
 (snapshot id = the (level, superstep) pair; a manifest line is appended only
 after the parquet write completes, which is the commit point — readers ignore
@@ -57,13 +63,15 @@ FINGERPRINT = ("num_vertices", "num_directed_edges", "total_weight", "sum_degree
 
 
 class ResumePoint(NamedTuple):
-    """A Louvain level to continue; the last two fields are None at level 0."""
+    """Level ``level`` continues from ``state`` (None: singletons) after the
+    committed supersteps ``moves``, on ``coarse_edges`` past level 0, from
+    the labels and Q committed before it (None at level 0); past level 0
+    without ``coarse_edges`` the run had finished, with those as its result."""
 
     level: int
-    step: int
-    moves: list[int]  # the level's committed move counts, in superstep order
-    graph: LinkGraph
-    assignments: DataFrame
+    moves: list[int]
+    state: DataFrame | None
+    coarse_edges: DataFrame | None
     global_assignments: DataFrame | None
     modularity: float | None
 
@@ -193,34 +201,18 @@ class CheckpointManager:
             pass
         return records
 
-    def latest_superstep(self) -> dict | None:
-        """The most recent completed superstep record (commit point = manifest
-        line), i.e. where resume restarts."""
-        records = [
-            r for r in self.manifest()
-            if r["kind"] == "superstep" and r["algorithm"] == ALGORITHM
-        ]
-        return max(records, key=lambda r: (r["level"], r["superstep"]), default=None)
-
-    def load_assignments(self, spark: SparkSession, record: dict) -> DataFrame:
-        return spark.read.parquet(record["path"])
-
-    def resume_point(self, graph: LinkGraph) -> ResumePoint | None:
-        """Where this manager's Louvain run (:meth:`for_run`) on ``graph``
-        resumes: after the latest committed superstep, or None. It carries the
-        level's committed move counts in superstep order: the caller's stop
-        rule reads them, else a resume into a slack-converged level would run
-        extra supersteps and diverge. ``ValueError`` names the fields that
-        differ if that record is of another run. Only the fields the
-        record's fingerprint holds are compared: a record with none
-        (manifest version < 3) resumes unchecked, and one written before
-        ``min_q_gain`` and ``max_levels`` were stamped resumes unchecked on
-        those two. A level ≥ 1 resumes on the coarse graph and labels of
-        level ``level − 1``'s record; a record from before version 4 has no
-        coarse graph and raises ``ValueError``."""
-        rec = self.latest_superstep()
-        if rec is None:
+    def resume_point(self, spark: SparkSession) -> ResumePoint | None:
+        """Where this manager's Louvain run (:meth:`for_run`) continues after
+        its last committed record (module docstring), or None. ``ValueError``
+        names the fields that differ if that record is of another run, on the
+        fields its fingerprint holds (none before manifest version 3, neither
+        ``min_q_gain`` nor ``max_levels`` before they were stamped); a record
+        from before version 4 holds no coarse graph, so a level ≥ 1 resume on
+        it raises ``ValueError`` too."""
+        records = [r for r in self.manifest() if r["algorithm"] == ALGORITHM]
+        if not records:
             return None
+        rec = records[-1]
         theirs = rec.get("run", {})
         diff = [k for k in self.run if k in theirs and theirs[k] != self.run[k]]
         if diff:
@@ -228,28 +220,26 @@ class CheckpointManager:
                 f"checkpoint {self.base_dir} is of another run; differing: "
                 + ", ".join(f"{k} ({theirs[k]!r} != {self.run[k]!r})" for k in diff)
             )
-        manifest = self.manifest()
-        levels = {(r["algorithm"], r["level"]): r for r in manifest if r["kind"] == "level"}
-        spark = graph.edges.sparkSession
-        level, step = int(rec["level"]), int(rec["superstep"]) + 1
-        global_asg = q = None
-        if level > 0:
-            prev = levels[ALGORITHM, level - 1]
-            if "coarse_edges_path" not in prev:
-                raise ValueError(
-                    f"checkpoint {self.base_dir}: the level {level - 1} record (manifest"
-                    f" version {prev.get('manifest_version', 1)}) holds no coarse graph;"
-                    f" a level {level} resume needs version {MANIFEST_VERSION}"
-                )
-            coarse = spark.read.parquet(prev["coarse_edges_path"])
-            graph = LinkGraph.from_edges(coarse, pre_symmetrized=True)
-            global_asg = spark.read.parquet(prev["assignments_path"])
-            q = float(prev["modularity"])
-        moves = {
-            r["superstep"]: int(r["moves"]) for r in manifest
-            if r["kind"] == "superstep" and r["algorithm"] == ALGORITHM and r["level"] == level
-        }
+        if rec["kind"] == "superstep":
+            level, state = int(rec["level"]), spark.read.parquet(rec["path"])
+            moves = [
+                int(r["moves"]) for r in records
+                if r["kind"] == "superstep" and r["level"] == level
+            ]
+            if level == 0:
+                return ResumePoint(0, moves, state, None, None, None)
+            prev = {r["level"]: r for r in records if r["kind"] == "level"}[level - 1]
+        else:
+            level, state, moves, prev = int(rec["level"]) + 1, None, [], rec
+        version = prev.get("manifest_version", 1)
+        if "coarse_edges_path" not in prev and (prev is not rec or version < 4):
+            raise ValueError(
+                f"checkpoint {self.base_dir}: the level {level - 1} record (manifest"
+                f" version {version}) holds no coarse graph; a level {level} resume"
+                f" needs version {MANIFEST_VERSION}"
+            )
+        coarse = prev.get("coarse_edges_path")
         return ResumePoint(
-            level, step, [m for _, m in sorted(moves.items())], graph,
-            self.load_assignments(spark, rec), global_asg, q,
+            level, moves, state, spark.read.parquet(coarse) if coarse else None,
+            spark.read.parquet(prev["assignments_path"]), float(prev["modularity"]),
         )

@@ -109,7 +109,7 @@ def test_combined_edges_louvain_recovers_repos(spark, corpus, files):
 
 def test_checkpoint_resume_one_level(spark, tmp_path):
     """Kill after superstep k of level 0, resume through the PUBLIC louvain_level
-    API (start_step + loaded assignments), final labels identical."""
+    API (the committed moves + loaded assignments), final labels identical."""
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     full_asg, full_stats = louvain_level(g)
     want = {r["id"]: r["community"] for r in full_asg.collect()}
@@ -125,8 +125,8 @@ def test_checkpoint_resume_one_level(spark, tmp_path):
     ck = Spy(str(tmp_path / "ck"))
     # run only the first 2 supersteps, checkpointing each ("crash" after)
     partial_asg, _ = louvain_level(g, max_supersteps=2, checkpointer=ck)
-    rec = ck.latest_superstep()
-    assert rec is not None and rec["superstep"] == 1
+    rec = ck.manifest()[-1]
+    assert rec["kind"] == "superstep" and rec["superstep"] == 1
     assert rec["lineage"] and sum(p["rows"] for p in rec["lineage"]) == 34
     # the lineage read from the files is the written state's partitioning
     assert [
@@ -135,8 +135,8 @@ def test_checkpoint_resume_one_level(spark, tmp_path):
 
     resumed, _ = louvain_level(
         g,
-        assignments=ck.load_assignments(spark, rec),
-        start_step=rec["superstep"] + 1,
+        assignments=spark.read.parquet(rec["path"]),
+        done=[r["moves"] for r in ck.manifest()],
     )
     got = {r["id"]: r["community"] for r in resumed.collect()}
     assert got == want
@@ -234,7 +234,7 @@ def test_resume_refuses_another_run(spark, tmp_path, monkeypatch):
     g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
     run = dict(max_levels=1, max_supersteps=2)
     ckdir = str(tmp_path / "ck")
-    louvain(g, checkpointer=CheckpointManager(ckdir), **run)
+    first = louvain(g, checkpointer=CheckpointManager(ckdir), **run)
     with pytest.raises(ValueError, match=r"differing: min_moves_frac \(0\.0 != 0\.1\)$"):
         louvain(g, min_moves_frac=0.1, checkpointer=CheckpointManager(ckdir),
                 resume=True, **run)
@@ -265,11 +265,12 @@ def test_resume_refuses_another_run(spark, tmp_path, monkeypatch):
     rewrite(lambda r: [r["run"].pop(k) for k in ("min_q_gain", "max_levels")])
     with pytest.raises(ValueError, match=r"differing: min_moves_frac \(0\.0 != 0\.1\)$"):
         louvain(g, min_moves_frac=0.1, checkpointer=ck, resume=True, **run)
+    # the run had finished (max_levels=1): a resume returns its result
     res = louvain(g, min_q_gain=1.0, checkpointer=ck, resume=True, **run)
-    assert res.levels[0].start_step == 2
+    assert res.levels == [] and _labels(res) == _labels(first)
     rewrite(lambda r: r.pop("run"))
     res = louvain(g, min_moves_frac=0.1, checkpointer=ck, resume=True, **run)
-    assert res.levels[0].start_step == 2
+    assert res.levels == [] and _labels(res) == _labels(first)
 
 
 def _labels(res):
@@ -290,7 +291,7 @@ def test_checkpointed_run_stays_local(spark, tmp_path):
     """Graph size alone picks the tier: a checkpointed karate run is local
     throughout, with the labels and Q of a run without a checkpointer, in a
     handful of Spark jobs; its manifest is one ``louvain`` level record
-    holding the result, and a resume on it reruns from the input."""
+    holding the result, and a resume on it returns that result."""
     from perfbench.trace import group_counts
 
     want_res = louvain(LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W)))
@@ -410,6 +411,44 @@ def test_checkpoint_write_is_one_job(spark, tmp_path):
     assert sup["lineage"] == level["assignments_lineage"]
     assert empty["lineage"] == []
     assert "degrees_path" not in level and "coarse_edges_path" in level
+
+
+def test_resume_after_level_record_skips_committed_level(
+    spark, tmp_path, monkeypatch, sql_karate
+):
+    """A crash right after level 0's level record resumes at level 1 on the
+    record's coarse graph: level 0 runs no superstep and is recorded once,
+    and the labels and Q are the uninterrupted run's (SQL tier)."""
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    ck = CheckpointManager(str(tmp_path / "ck"))
+    louvain(g, checkpointer=ck)
+    _cut_after(ck, lambda r: r["kind"] == "level" and r["level"] == 0)
+    res = louvain(g, checkpointer=ck, resume=True)
+    assert res.levels[0].level == 1
+    assert [r["level"] for r in ck.manifest() if r["kind"] == "level"].count(0) == 1
+    want, q = sql_karate
+    assert _labels(res) == want and res.modularity == q
+
+
+@pytest.mark.parametrize("tier", ["spark", "local"])
+def test_resume_of_finished_run_runs_no_level(spark, tmp_path, monkeypatch, tier):
+    """Resuming a run that had finished runs no level and appends no record:
+    it returns the last level record's labels and Q, on either tier."""
+    if tier == "spark":
+        monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    ck = CheckpointManager(str(tmp_path / "ck"))
+    want = louvain(g, checkpointer=ck)
+    assert {s.path for s in want.levels} == {tier}
+    with open(ck.manifest_path, "rb") as f:
+        manifest = f.read()
+    res = louvain(g, checkpointer=ck, resume=True)
+    assert res.levels == []
+    with open(ck.manifest_path, "rb") as f:
+        assert f.read() == manifest
+    assert _labels(res) == _labels(want) and res.modularity == want.modularity
+    assert res.num_communities == want.num_communities
 
 
 @pytest.fixture(scope="module")

@@ -1,5 +1,6 @@
 """The shared superstep loop (``functions.iterate.converge``) without Spark:
-the bound, the quiet/patience streak, the resume offset and the records."""
+the bound, the quiet/patience streak, the resume from committed metrics and
+the records."""
 
 from graftlouvain.functions.iterate import converge, settle
 
@@ -31,12 +32,13 @@ def test_start_streak_at_patience_runs_nothing():
     def step(state, i):
         raise AssertionError("no superstep may run")
 
-    state, records = settle("s", step, 10, quiet=lambda m: True, patience=2, start_streak=2)
+    # the committed supersteps end in a quiet run as long as the patience
+    state, records = settle("s", step, 10, quiet=lambda m: m == 0, patience=2, done=[3, 0, 0])
     assert (state, records) == ("s", [])
 
 
 def test_records_numbered_from_start():
-    state, records = settle(0, _counting_step(list(range(10))), 7, start=4)
+    state, records = settle(0, _counting_step(list(range(10))), 7, done=[0, 1, 2, 3])
     assert [(r.step, r.metric) for r in records] == [(4, 4), (5, 5), (6, 6)]
     assert state == 3
 
@@ -50,9 +52,10 @@ def test_max_iter_caps_loop():
 
 
 def test_resumed_streak_counts_toward_patience():
-    # one quiet superstep already ran before the resume: one more ends it
+    # the committed run ends in one quiet superstep (the earlier one is
+    # broken off by a loud one): one more ends it
     state, records = settle(
         0, _counting_step([0] * 10), 10, quiet=lambda m: m == 0, patience=2,
-        start=3, start_streak=1,
+        done=[0, 1, 0],
     )
     assert [r.step for r in records] == [3]

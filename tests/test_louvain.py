@@ -241,7 +241,7 @@ def test_superstep_tot_double_exec_diagnosis(spark):
     )
     with superstep_planning(spark):
         st = materialize(asg)
-        out = _superstep(g, st, 0, 1e-12)
+        out = _superstep(g, st, 0)
         sp = out._jdf.queryExecution().executedPlan()
     tot_bx = []
 
@@ -509,7 +509,7 @@ def test_fused_conflict_superstep_plan_shape(spark):
         st = materialize(asg)
         counts = {}
         for mode in ("parity", "conflict"):
-            out = _superstep(g, st, 0, 1e-12, gate_mode=mode)
+            out = _superstep(g, st, 0, gate_mode=mode)
             sp = out._jdf.queryExecution().executedPlan()
             found = []
 
@@ -588,6 +588,20 @@ def test_level_releases_superstep_views(spark, monkeypatch):
     assert set(rdds().keys()) - before == set()
     assert _glouvain_views(spark) == []
     assert _edges_cached(spark, g)
+
+
+def test_sql_louvain_releases_level_states(spark, monkeypatch):
+    """Each SQL level's final state is released once the run has unwound it:
+    a run adds exactly one persistent RDD, the checkpoint of the assignments
+    it returns."""
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keys())
+    res = louvain(g)
+    assert len(res.levels) >= 2
+    checkpoint = res.assignments._jdf.queryExecution().analyzed()
+    assert set(rdds().keys()) - before == {checkpoint.rdd().id()}
 
 
 def test_concurrent_levels_share_session(spark):

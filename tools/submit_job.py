@@ -32,7 +32,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--format", default="auto", choices=["auto", "parquet", "iceberg"])
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--resume", action="store_true",
-                    help="resume from the latest committed superstep in --checkpoint-dir")
+                    help="continue after the last committed record in --checkpoint-dir")
     ap.add_argument("--min-moves-frac", type=float, default=0.0)
     ap.add_argument("--max-supersteps", type=int, default=64)
     ap.add_argument("--max-levels", type=int, default=20)

@@ -1,6 +1,5 @@
-"""Document deduplication operators for training-data pipelines.
-
-Five variants over a documents table [doc_id: long, text: string]:
+"""Document deduplication operators for training-data pipelines, over a
+documents table [doc_id: long, text: string]:
 
 - :func:`exact_dedup` — sha256 grouping, keep the smallest doc_id per hash.
 - :func:`ngram_jaccard_pairs` — EXACT character-n-gram Jaccard similarity via
@@ -11,15 +10,19 @@ Five variants over a documents table [doc_id: long, text: string]:
   buckets; candidate pairs post-verified with exact Jaccard restricted to the
   candidate set. The 100 TB-scale path: cost ≈ O(docs × grams) + bucket joins
   + O(candidates) verification.
-- :func:`simhash64` — 64-bit SimHash (Charikar 2002) over md5 token hashes,
-  computed entirely with JVM bit expressions; near-dups = signatures at
-  small Hamming distance, bucketed by 4 × 16-bit bands (Manku et al. 2007).
-- :func:`embedding_cosine_pairs` — near-duplicate detection on an embedding
-  column (array<float>), exact cosine over a (optionally LSH-bucketed) join.
+- :func:`simhash64` / :func:`simhash_near_dup_pairs` — 64-bit SimHash
+  (Charikar 2002) over md5 token hashes, computed entirely with JVM bit
+  expressions; near-dups = signatures at small Hamming distance, bucketed by
+  4 × 16-bit bands (Manku et al. 2007).
 - :func:`substring_dup_spans` / :func:`mask_duplicate_spans` — substring-level
   exact dedup (Lee et al. 2021): maximal cross-document duplicated token
   spans via positional shingle match + island merge, and the intervention
   that rewrites the corpus with those spans removed keep-first.
+- :func:`contamination_flags` — benchmark decontamination by shared
+  n-token shingles.
+
+Near-duplicate detection on an embedding column lives in
+:mod:`graftlouvain.operators.similarity`.
 
 Common scale guards: n-grams deduplicated per document before hashing; gram
 join filtered by document-frequency cap (drops stop-grams that would create
@@ -35,12 +38,10 @@ from graftlouvain.operators.textstats import WS_RE as _WS_RE
 from graftlouvain.functions.iterate import materialize as _materialize
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """[doc_id, content_sha, canonical_id, is_duplicate] — canonical = min id
     per exact content hash."""
-    hashed = docs.select(
-        F.col(id_col).alias("doc_id"), F.sha2(F.col(text_col), 256).alias("content_sha")
-    )
+    hashed = docs.select("doc_id", F.sha2(F.col("text"), 256).alias("content_sha"))
     canon = hashed.groupBy("content_sha").agg(F.min("doc_id").alias("canonical_id"))
     return (
         hashed.join(canon, "content_sha")
@@ -79,10 +80,10 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _char_ngrams(text_col: str, n: int) -> "F.Column":
+def _char_ngrams(n: int) -> "F.Column":
     """Distinct character n-grams of lower-cased text, as an array column —
     built with sequence+transform (whole-stage codegen, no UDF)."""
-    t = F.lower(F.col(text_col))
+    t = F.lower(F.col("text"))
     # docs shorter than n contribute their whole text as one (short) gram —
     # deterministic, replicated verbatim by the SQL oracles
     return F.array_distinct(
@@ -93,14 +94,9 @@ def _char_ngrams(text_col: str, n: int) -> "F.Column":
     )
 
 
-def doc_ngrams(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 8
-) -> DataFrame:
+def doc_ngrams(docs: DataFrame, n: int = 8) -> DataFrame:
     """Exploded distinct (doc_id, gram) pairs."""
-    grams = _char_ngrams(text_col, n)
-    return _spread(docs).select(
-        F.col(id_col).alias("doc_id"), F.explode(grams).alias("gram")
-    )
+    return _spread(docs).select("doc_id", F.explode(_char_ngrams(n)).alias("gram"))
 
 
 def _jaccard_from_inter(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
@@ -138,8 +134,6 @@ def _pairs_of_sorted(ids_col: "F.Column") -> "F.Column":
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
     threshold: float = 0.8,
     max_doc_freq: int = 100,
@@ -176,7 +170,7 @@ def ngram_jaccard_pairs(
     exchanges that canonicalize equal are deduplicated by ReuseExchange:
     without the cache the corpus scan + gram EXPLODE — the dominant map
     work — re-executes per remaining reference (measured ~3×)."""
-    grams = doc_ngrams(docs, id_col, text_col, n).cache()
+    grams = doc_ngrams(docs, n).cache()
     # referenced twice (a-side and b-side of the jaccard join) — pin the
     # tiny V-row table so the gram-cache pass behind it runs once
     sizes = _materialize(grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams")))
@@ -230,8 +224,6 @@ def minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
 
 def minhash_signatures(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
     num_hashes: int = 64,
     grams: DataFrame | None = None,
@@ -259,7 +251,7 @@ def minhash_signatures(
     seed — measured 568 s vs seconds at sf0.1.
     """
     if grams is None:
-        grams = doc_ngrams(docs, id_col, text_col, n)
+        grams = doc_ngrams(docs, n)
     h1, h2 = _md5_pair(F.col("gram"))
     p = F.lit(MINHASH_P)
     hashed = grams.select("doc_id", (h1 % p).alias("h1"), (h2 % p).alias("h2"))
@@ -278,35 +270,29 @@ def minhash_signatures(
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
-    verify_exact: bool = True,
     max_doc_freq: int = 100,
 ) -> DataFrame:
     """LSH candidate pairs: split the signature into ``bands`` bands of
-    num_hashes/bands rows; docs colliding in ANY band are candidates; with
-    ``verify_exact`` the candidates are post-filtered by exact n-gram Jaccard
-    ≥ threshold (same computation as :func:`ngram_jaccard_pairs`) restricted
-    to the candidate set.
+    num_hashes/bands rows; docs colliding in ANY band are candidates, and
+    the candidates are post-filtered by exact n-gram Jaccard ≥ threshold
+    (same computation as :func:`ngram_jaccard_pairs`) restricted to the
+    candidate set.
 
-    With ``verify_exact`` the exploded gram table is CACHED once and shared
-    between the signature pass and the verification pass — otherwise each
-    pass re-scans and re-explodes the corpus (the gram explode is the
-    dominant scan cost) — and the result is computed AT CALL TIME (the
-    output is localCheckpoint-pinned so the gram cache can be released
-    immediately — the checkpoint blocks themselves are freed by GC when the
-    returned DataFrame is dropped). Without it the candidates come back as
-    a lazy plan."""
+    The exploded gram table is CACHED once and shared between the
+    signature pass and the verification pass — otherwise each pass
+    re-scans and re-explodes the corpus (the gram explode is the dominant
+    scan cost) — and the result is computed AT CALL TIME (the output is
+    localCheckpoint-pinned so the gram cache can be released immediately —
+    the checkpoint blocks themselves are freed by GC when the returned
+    DataFrame is dropped)."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    grams = doc_ngrams(docs, id_col, text_col, n)
-    if verify_exact:
-        grams = grams.cache()
-    sigs = minhash_signatures(docs, id_col, text_col, n, num_hashes, grams=grams)
+    grams = doc_ngrams(docs, n).cache()
+    sigs = minhash_signatures(docs, n, num_hashes, grams=grams)
     banded = sigs.select(
         "doc_id",
         F.explode(
@@ -331,8 +317,6 @@ def minhash_lsh_pairs(
         .select("a", "b")
         .distinct()
     )
-    if not verify_exact:
-        return cands
     # Exact-Jaccard verification restricted to CANDIDATE pairs — cost
     # O(candidates × grams/doc), never the all-pairs gram self-join (which
     # would defeat LSH at scale): attach a's rare grams to each candidate
@@ -366,9 +350,7 @@ def minhash_lsh_pairs(
     return out
 
 
-def simhash64(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """[doc_id, simhash: long, band0..band3: int] — 64-bit SimHash over
     whitespace tokens; bands are the four 16-bit slices used for Hamming-
     distance bucketing (Manku et al. 2007 uses permuted tables; fixed slices
@@ -386,9 +368,9 @@ def simhash64(
     # a \x0B-carrying document differently and break bit-exact parity.
     h1, h2 = _md5_pair(F.col("token"))
     tok = _spread(docs).select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), _WS_RE), lambda t: t != "")
+            F.filter(F.split(F.lower(F.col("text")), _WS_RE), lambda t: t != "")
         ).alias("token"),
     ).select("doc_id", h1.alias("h1"), h2.alias("h2"))
 
@@ -412,7 +394,7 @@ def simhash64(
         sim = term if sim is None else sim.bitwiseXOR(term)  # disjoint bits: XOR == OR
     sims = votes.select("doc_id", sim.alias("simhash"))
     out = (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(sims, "doc_id", "left")
         .select("doc_id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash"))
     )
@@ -424,8 +406,7 @@ def simhash64(
     return out
 
 
-def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", max_hamming: int = 3) -> DataFrame:
+def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate pairs sharing any 16-bit band, verified by exact Hamming
     distance ≤ max_hamming (bit_count of XOR — JVM-side).
 
@@ -433,7 +414,7 @@ def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
     simhash) rows — one self-join on (band, bucket) instead of four joins
     against a cached signature table (no lingering cache, signatures computed
     once feeding the explode)."""
-    sigs = simhash64(docs, id_col, text_col)
+    sigs = simhash64(docs)
     banded = sigs.select(
         "doc_id",
         "simhash",
@@ -475,16 +456,14 @@ def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
 # maximal spans with one window over the matched rows only.
 
 
-def token_shingles(
-    docs: DataFrame, n: int, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def token_shingles(docs: DataFrame, n: int) -> DataFrame:
     """[doc_id, pos, h] — md5 of each n-token window (whitespace tokens,
     ``textstats.WS_RE`` char class so Spark and SQL oracles split
     identically), pos = 0-based token index of the window start. Documents
     shorter than n tokens yield no rows. JVM-only (regexp_replace + split +
     transform/slice) — no Python in the hot path."""
-    toks = F.split(F.trim(F.regexp_replace(F.col(text_col), _WS_RE, " ")), " ")
-    t = _spread(docs.select(F.col(id_col).alias("doc_id"), toks.alias("t")))
+    toks = F.split(F.trim(F.regexp_replace(F.col("text"), _WS_RE, " ")), " ")
+    t = _spread(docs.select("doc_id", toks.alias("t")))
     return (
         t.where(F.size("t") >= n)
         .select(
@@ -505,8 +484,6 @@ def substring_dup_spans(
     docs: DataFrame,
     n: int = 8,
     max_doc_freq: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Maximal cross-document duplicated token spans (Lee et al. 2021 family):
     [doc_a, doc_b, a_start, b_start, n_grams, span_tokens] with doc_a < doc_b.
@@ -522,7 +499,7 @@ def substring_dup_spans(
     span_tokens = n_grams + n − 1 (n_grams adjacent windows overlap n−1)."""
     from pyspark.sql import Window
 
-    sh = token_shingles(docs, n, id_col, text_col)
+    sh = token_shingles(docs, n)
     keep = (
         sh.groupBy("h")
         .agg(F.count_distinct("doc_id").alias("df"))
@@ -562,8 +539,6 @@ def contamination_flags(
     benchmark: DataFrame,
     n: int = 13,
     min_hits: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination (the standard 13-gram pre-training hygiene
     step, e.g. GPT-3 appendix C / PaLM): [doc_id, n_hits, contaminated] for
@@ -574,8 +549,8 @@ def contamination_flags(
     BROADCAST — the corpus shingle stream is probed map-side, no shuffle of
     corpus rows at all; the per-doc count-distinct aggregate runs only on
     the matched residue."""
-    sh = token_shingles(docs, n, id_col, text_col)
-    bench = token_shingles(benchmark, n, id_col, text_col).select("h").distinct()
+    sh = token_shingles(docs, n)
+    bench = token_shingles(benchmark, n).select("h").distinct()
     return (
         sh.join(F.broadcast(bench), "h")
         .groupBy("doc_id")
@@ -593,8 +568,6 @@ def mask_duplicate_spans(
     n: int = 8,
     max_doc_freq: int = 16,
     min_span_tokens: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """The Lee et al. 2021 INTERVENTION (not just detection): rewrite every
     document with cross-document duplicated token spans REMOVED from all but
@@ -623,9 +596,7 @@ def mask_duplicate_spans(
     from pyspark.sql import Window
 
     min_span = n if min_span_tokens is None else min_span_tokens
-    spans = substring_dup_spans(
-        docs, n=n, max_doc_freq=max_doc_freq, id_col=id_col, text_col=text_col
-    ).where(F.col("span_tokens") >= min_span)
+    spans = substring_dup_spans(docs, n=n, max_doc_freq=max_doc_freq).where(F.col("span_tokens") >= min_span)
     iv = spans.select(
         F.col("doc_b").alias("doc_id"),
         F.col("b_start").alias("s"),
@@ -656,8 +627,8 @@ def mask_duplicate_spans(
     ivs = merged.groupBy("doc_id").agg(
         F.sort_array(F.collect_list(F.struct("s", "e"))).alias("ivs")
     )
-    toks = F.split(F.trim(F.regexp_replace(F.col(text_col), _WS_RE, " ")), " ")
-    base = docs.select(F.col(id_col).alias("doc_id"), toks.alias("t"))
+    toks = F.split(F.trim(F.regexp_replace(F.col("text"), _WS_RE, " ")), " ")
+    base = docs.select("doc_id", toks.alias("t"))
     kept = F.expr(
         "CASE WHEN ivs IS NULL THEN t "
         "ELSE filter(t, (x, i) -> NOT exists(ivs, iv -> i >= iv.s AND i < iv.e)) END"

@@ -22,7 +22,9 @@ partial sums. Each round's state is MATERIALIZED (localCheckpoint +
 truthful planner statistics — the superstep/walk-chain hygiene): a lazy
 chain re-executes under subplan inlining and a cache-only chain leaves
 lineage/statistics growing until the planner melts at depth (measured on
-the walk operators, BENCH/BASELINE.md §8).
+the walk operators, BENCH/BASELINE.md §8). Each round swaps its state
+(``functions.iterate.swap``), releasing the previous round's checkpoint,
+so a call leaves one checkpoint: the one the result reads.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graftlouvain.functions.iterate import swap
 from graftlouvain.operators.graph import LinkGraph
 
 
@@ -37,8 +40,6 @@ def feature_smooth(
     graph: LinkGraph,
     features: DataFrame,
     rounds: int = 2,
-    id_col: str = "id",
-    vec_col: str = "q",
 ) -> DataFrame:
     """[id, pos, val] — ``rounds`` of exact fixed-point neighbor smoothing of
     integer feature vectors (``features``: [id, array<long>]). Vertices keep
@@ -56,14 +57,12 @@ def feature_smooth(
     and DuckDB's integer ``//`` does the SAME (−7 // 2 = −3 in both) — so
     the bit-identical cross-engine claim holds for NEGATIVE features too
     (pinned by tests/test_features.py's negative-feature case)."""
-    from graftlouvain.functions.iterate import materialize
-
     edges = graph.edges.select(
         "src", "dst", F.col("weight").cast("long").alias("w")
     )
     feat = features.select(
-        F.col(id_col).alias("dst"),
-        F.posexplode(F.col(vec_col)).alias("pos", "x"),
+        F.col("id").alias("dst"),
+        F.posexplode(F.col("q")).alias("pos", "x"),
     )
     for _ in range(rounds):
         joined = edges.join(feat, "dst")
@@ -76,9 +75,7 @@ def feature_smooth(
             "pos",
             F.expr("num div den").alias("x2"),
         )
-        feat = materialize(
-            feat.join(smoothed, ["dst", "pos"], "left").select(
-                "dst", "pos", F.coalesce("x2", "x").alias("x")
-            )
-        )
+        feat = swap(feat, feat.join(smoothed, ["dst", "pos"], "left").select(
+            "dst", "pos", F.coalesce("x2", "x").alias("x")
+        ))
     return feat.select(F.col("dst").alias("id"), "pos", F.col("x").alias("val"))

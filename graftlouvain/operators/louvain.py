@@ -161,7 +161,7 @@ def modularity(
     return float(row["q"] or 0.0)
 
 
-def singleton_modularity(graph: LinkGraph, reference_convention: bool = False) -> float:
+def singleton_modularity(graph: LinkGraph) -> float:
     """Modularity of the all-singletons partition, closed form:
     Q₀ = Σ_selfloops w / S − Σ_v (k_v/S)². Zero jobs (both sums ride the
     from_edges stats pass) instead of
@@ -170,7 +170,7 @@ def singleton_modularity(graph: LinkGraph, reference_convention: bool = False) -
     ``singleton_modularity(coarsen(g, asg)) == modularity(g, asg)``, which is
     how the level loop evaluates per-level Q without touching the fine graph
     twice."""
-    s = 2.0 * graph.two_m if reference_convention else graph.two_m
+    s = graph.two_m
     if s == 0:
         return 0.0
     return float(graph.stats.self_loop_weight) / s - float(
@@ -489,7 +489,9 @@ def louvain_level(
     (cf. Lu, Halappanavar & Kalyanaraman 2015): dense quasi-random graphs
     otherwise churn to the superstep cap for near-zero Q payoff. Default 0.0
     keeps exact fixpoint semantics (the oracle-pinned configuration).
-    ``done`` resumes mid-level from a checkpoint: the move counts of the
+    ``assignments`` ([id, community], default singletons) is a checkpointed
+    state of this level over the graph's own vertices; ``done`` resumes
+    mid-level from it: the move counts of the
     supersteps committed before ``assignments``. Supersteps continue from
     index ``len(done)`` (the parity gate's even/odd step) and the quiet ones
     that end ``done`` count toward the stop rule, so a resume into a
@@ -501,18 +503,11 @@ def louvain_level(
     # degrees: joining them to themselves would plan one side as a clone
     # that misses the degrees cache and recomputes a coarse graph from the
     # previous level's (released) state.
-    extra = None
     if assignments is None:
         asg = graph.degrees.select(
             "id", F.col("id").alias("community"), F.col("degree").alias("k_i")
         )
     else:
-        # caller-supplied ids that are not graph vertices never enter the
-        # scoring dataflow (no edge rows) — carry them through unchanged so
-        # the output covers exactly the input's id set
-        extra = assignments.select("id", "community").join(
-            graph.degrees.select("id"), "id", "left_anti"
-        )
         asg = assignments.join(graph.degrees.select("id", F.col("degree").alias("k_i")), "id")
     quiet, patience = _level_stop(graph.stats.num_vertices, min_moves_frac, gate_mode)
 
@@ -541,10 +536,7 @@ def louvain_level(
             after=save if checkpointer is not None else None,
         )
     stats = LevelStats.from_records(level, records, start_step=len(done))
-    result = state.select("id", "community")
-    if extra is not None:
-        result = result.unionByName(extra)
-    return result, stats
+    return state.select("id", "community"), stats
 
 
 def coarsen(graph: LinkGraph, assignments: DataFrame) -> LinkGraph:

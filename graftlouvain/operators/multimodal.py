@@ -23,29 +23,19 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("blob", T.BinaryType(), False),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, sha string, features array<double>"
 )
 
 
-def media_from_docs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def media_from_docs(docs: DataFrame) -> DataFrame:
     """Demo media table: utf-8 blobs from document text (real binary column,
     real plumbing; contents are stand-ins for image/audio bytes)."""
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("blob"),
+        F.encode(F.col("text"), "utf-8").alias("blob"),
         F.create_map(F.lit("codec"), F.lit("fake/utf8")).alias("meta"),
     )
 

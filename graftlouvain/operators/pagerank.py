@@ -79,7 +79,7 @@ def pagerank(
             if n_seeds == 0:
                 raise ValueError("personalized pagerank requires a non-empty seed set")
             reset = np.where(on, (1.0 - alpha) / n_seeds, 0.0)
-            start = np.where(reset > 0, 1.0 / n_seeds, 0.0)
+            start = np.where(on, 1.0 / n_seeds, 0.0)
         ranks, _ = _local_pagerank(s, d, w, reset, start, alpha, tol, max_iter, n_iter)
         return swap(None, spark.createDataFrame(
             pd.DataFrame({"id": ids, "rank": ranks}), "id long, rank double"
@@ -97,19 +97,16 @@ def pagerank(
         if n_seeds == 0:
             raise ValueError("personalized pagerank requires a non-empty seed set")
         # reset vector: (1−α)/|S| on seeds, 0 elsewhere; initial distribution
-        # likewise uniform on seeds
-        reset = graph.vertices.join(
-            seed_set.withColumn("_s", F.lit(1)), "id", "left"
-        ).select(
-            "id",
-            F.when(F.col("_s").isNotNull(), F.lit((1.0 - alpha) / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("reset"),
+        # likewise uniform on seeds, read off seed membership (at α = 1 the
+        # reset is 0 everywhere)
+        member = graph.vertices.join(seed_set.withColumn("_s", F.lit(1)), "id", "left")
+        on = F.col("_s").isNotNull()
+        reset = member.select(
+            "id", F.when(on, F.lit((1.0 - alpha) / n_seeds)).otherwise(F.lit(0.0)).alias("reset")
         )
-        init_rank = F.when(F.col("reset") > 0, F.lit(1.0 / n_seeds)).otherwise(
-            F.lit(0.0)
+        start = member.select(
+            "id", F.when(on, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("rank")
         )
-        start = reset.select("id", init_rank.alias("rank"))
     else:
         reset = None
         start = graph.vertices.select("id", F.lit(1.0 / V).alias("rank"))

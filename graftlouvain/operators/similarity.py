@@ -44,29 +44,23 @@ def _cosine6(a: "F.Column", b: "F.Column") -> "F.Column":
     return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
 
 
-def with_cosine(joined: DataFrame, a_col: str = "qv", b_col: str = "cv") -> DataFrame:
-    return joined.withColumn("cosine", _cosine6(F.col(a_col), F.col(b_col)))
+def with_cosine(joined: DataFrame) -> DataFrame:
+    return joined.withColumn("cosine", _cosine6(F.col("qv"), F.col("cv")))
 
 
-def _as_double(df: DataFrame, vec_col: str) -> "F.Column":
-    return F.transform(F.col(vec_col), lambda x: x.cast("double"))
+def _embedding() -> "F.Column":
+    return F.transform(F.col("embedding"), lambda x: x.cast("double"))
 
 
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """[query_id, vec_id, cosine, rank] — exact top-k neighbors per query
     (self-matches by id excluded). Ties broken by ascending vec_id."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(queries, vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(corpus, vec_col).alias("cv")
-    )
+    q = queries.select(F.col("vec_id").alias("query_id"), _embedding().alias("qv"))
+    c = corpus.select("vec_id", _embedding().alias("cv"))
     scored = (
         with_cosine(F.broadcast(q).crossJoin(c))
         .where(F.col("query_id") != F.col("vec_id"))
@@ -101,8 +95,6 @@ def lsh_bucketed(
     n_bits: int = 12,
     n_tables: int = 4,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """[vec_id, table, bucket, v] — one row per (vector, table): bucket =
     packed sign bits of the vector against that table's hyperplanes
@@ -124,8 +116,7 @@ def lsh_bucketed(
     ptab = vectors.sparkSession.createDataFrame(
         list(enumerate(planes)), "table int, planes array<array<double>>"
     )
-    v = _as_double(vectors, vec_col)
-    base = vectors.select(F.col(id_col).alias("vec_id"), v.alias("v"))
+    base = vectors.select("vec_id", _embedding().alias("v"))
     bits = F.transform(
         F.col("planes"),
         lambda plane: F.when(_dot(F.col("v"), plane) > 0, F.lit(1).cast("long"))
@@ -151,13 +142,11 @@ def lsh_topk(
     n_bits: int = 10,
     n_tables: int = 6,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: bucket-join across ``n_tables`` LSH tables, exact
     cosine re-rank of candidates. Same output schema as :func:`cosine_topk`."""
-    qb = lsh_bucketed(queries, dim, n_bits, n_tables, seed, id_col, vec_col)
-    cb = lsh_bucketed(corpus, dim, n_bits, n_tables, seed, id_col, vec_col)
+    qb = lsh_bucketed(queries, dim, n_bits, n_tables, seed)
+    cb = lsh_bucketed(corpus, dim, n_bits, n_tables, seed)
     cands = (
         qb.select("table", "bucket", F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
         .join(
@@ -184,8 +173,6 @@ def lsh_topk(
 def ivf_cells(
     vectors: DataFrame,
     n_centroids: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     refine_iters: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned) — IVF coarse quantizer with deterministic
@@ -204,8 +191,7 @@ def ivf_cells(
     order, so the refined build is pytest-recall-verified rather than
     SQL-hash-oracled (the ``ivf_topk`` driver query stays on the
     deterministic md5 init)."""
-    v = _as_double(vectors, vec_col)
-    base = vectors.select(F.col(id_col).alias("vec_id"), v.alias("v"))
+    base = vectors.select("vec_id", _embedding().alias("v"))
     pick = base.select(
         "vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("_h")
     ).orderBy("_h").limit(n_centroids)
@@ -259,8 +245,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 64,
     n_probe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     refine_iters: int = 0,
 ) -> DataFrame:
     """IVF approximate top-k: corpus partitioned into Voronoi cells of
@@ -269,12 +253,8 @@ def ivf_topk(
     as :func:`cosine_topk`. Complements :func:`lsh_topk` — IVF gives tunable
     probe/recall and cell-local data locality (cells are the natural
     partitioning key for a 100 TB corpus)."""
-    centroids, assigned = ivf_cells(
-        corpus, n_centroids, id_col, vec_col, refine_iters=refine_iters
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(queries, vec_col).alias("qv")
-    )
+    centroids, assigned = ivf_cells(corpus, n_centroids, refine_iters=refine_iters)
+    qv = queries.select(F.col("vec_id").alias("query_id"), _embedding().alias("qv"))
     qcells = (
         qv.crossJoin(F.broadcast(centroids))
         .withColumn("sim", _cosine6(F.col("qv"), F.col("cv")))
@@ -306,8 +286,6 @@ def embedding_near_dup_pairs_lsh(
     n_bits: int = 8,
     n_tables: int = 8,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Near-duplicate pairs via LSH bucketing + exact cosine re-check — the
     scale path (no cross join: candidates are bucket-local self-joins across
@@ -316,7 +294,7 @@ def embedding_near_dup_pairs_lsh(
     probability is (1 − (1 − θ/π)^n_bits)^n_tables — ≈ 8e-5 for cosine ≥ 0.99
     with the defaults — and a recall test pins parity with the exact baseline
     on planted near-dups."""
-    b = lsh_bucketed(vectors, dim, n_bits, n_tables, seed, id_col, vec_col)
+    b = lsh_bucketed(vectors, dim, n_bits, n_tables, seed)
     cands = (
         b.select("table", "bucket", F.col("vec_id").alias("a"), F.col("v").alias("qv"))
         .join(
@@ -334,18 +312,13 @@ def embedding_near_dup_pairs_lsh(
     )
 
 
-def embedding_near_dup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_near_dup_pairs(vectors: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Exact near-duplicate pairs (cosine ≥ threshold) over the full cross
     product — the small-N / oracle baseline;
     :func:`embedding_near_dup_pairs_lsh` is the scale path the public query
     surface routes through."""
-    a = vectors.select(F.col(id_col).alias("a"), _as_double(vectors, vec_col).alias("qv"))
-    b = vectors.select(F.col(id_col).alias("b"), _as_double(vectors, vec_col).alias("cv"))
+    a = vectors.select(F.col("vec_id").alias("a"), _embedding().alias("qv"))
+    b = vectors.select(F.col("vec_id").alias("b"), _embedding().alias("cv"))
     return (
         with_cosine(a.crossJoin(b))
         .where((F.col("a") < F.col("b")) & (F.col("cosine") >= threshold))

@@ -51,7 +51,6 @@ def file_table(corpus: DataFrame) -> DataFrame:
 def pairs_by_key(
     keyed: DataFrame,
     key_col: str,
-    id_col: str = "id",
     max_group: int = 1000,
 ) -> DataFrame:
     """Generic co-occurrence pair expansion: rows (key, id) → undirected edges
@@ -60,7 +59,7 @@ def pairs_by_key(
     The reference's closest analogue is its edge routing (graph.rs:263-325);
     this operator is the [north-star] "files sharing commits/paths" builder.
     """
-    k = keyed.select(F.col(key_col).alias("k"), F.col(id_col).alias("id")).distinct()
+    k = keyed.select(F.col(key_col).alias("k"), "id").distinct()
     sizes = k.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
     keep = sizes.where((F.col("n") >= 2) & (F.col("n") <= max_group)).select("k")
     k = k.join(keep, "k", "left_semi")

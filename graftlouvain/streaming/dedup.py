@@ -39,14 +39,15 @@ def dedup_stream(
     watermark_col: str | None = None,
     watermark: str = "1 hour",
     schema: T.StructType | None = None,
-    id_col: str | None = None,
 ) -> DataFrame:
     """readStream over a documents directory → every non-``text`` input column
     plus ``content_sha``, one row per distinct content hash (first
-    occurrence). Feeds with an ingestion timestamp pass their own ``schema``
-    (which must include that column) and ``watermark_col`` — the operator then
-    uses ``dropDuplicatesWithinWatermark`` and state is bounded by the
-    watermark horizon instead of growing with distinct hashes."""
+    occurrence). ``content_sha`` follows the first non-``text`` column, the
+    id column in every schema this operator is fed. Feeds with an ingestion
+    timestamp pass their own ``schema`` (which must include that column)
+    and ``watermark_col`` — the operator then uses
+    ``dropDuplicatesWithinWatermark`` and state is bounded by the watermark
+    horizon instead of growing with distinct hashes."""
     schema = schema or DOCUMENTS_SCHEMA
     if "text" not in schema.fieldNames():
         raise ValueError(
@@ -60,16 +61,10 @@ def dedup_stream(
     reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 2)
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    # content_sha is anchored right AFTER the id column (the documented
-    # positional contract for sinks). ``id_col`` names that column explicitly;
-    # default is the schema's first non-text field — custom schemas whose id
-    # is not first should pass id_col rather than rely on position.
+    # content_sha is anchored right AFTER the id column, the schema's first
+    # non-text field (the documented positional contract for sinks)
     names = [f.name for f in schema.fields if f.name != "text"]
-    anchor = id_col if id_col is not None else names[0]
-    if anchor not in names:
-        raise ValueError(f"id_col {anchor!r} not in schema fields {names}")
-    i = names.index(anchor) + 1
-    keep = names[:i] + ["content_sha"] + names[i:]
+    keep = names[:1] + ["content_sha"] + names[1:]
     stream = reader.parquet(docs_dir).withColumn(
         "content_sha", F.sha2(F.col("text"), 256)
     ).select(*keep)

@@ -40,20 +40,6 @@ def _sessionize(
 ) -> Iterator[pd.DataFrame]:
     gap = 1800
     (user_id,) = key
-    if state.hasTimedOut:
-        start, last, n, v = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_start": [pd.Timestamp(start, unit="s")],
-                "session_end": [pd.Timestamp(last, unit="s")],
-                "n_events": [n],
-                "sum_value": [v],
-            }
-        )
-        return
-
     # (ts, event_id) ordering matches the batch twin's window tiebreak.
     # ACROSS micro-batches the operator assumes in-order arrival: an event
     # landing in a later micro-batch with ts earlier than the open session's
@@ -80,10 +66,6 @@ def _sessionize(
         n += 1
         v += float(val)
     state.update((start, last, n, v))
-    try:
-        state.setTimeoutDuration(gap * 1000)
-    except Exception:
-        pass  # NoTimeout mode: timeouts not permitted; tails remain in state
     if out:
         yield pd.DataFrame(
             {
@@ -110,9 +92,6 @@ def _sessionize_buffered(
     can still arrive)."""
     gap = 1800
     (user_id,) = key
-    if state.hasTimedOut:  # not reachable under NoTimeout; guard for reuse
-        state.remove()
-        return
     rows = pd.concat(list(batches))
     if state.exists:
         start, last, n, v, b_ts, b_eid, b_val = state.get
@@ -161,14 +140,11 @@ def sessionize_stream(
     spark: SparkSession,
     events_dir: str,
     glob: str | None = None,
-    use_timeout: bool = False,
 ) -> DataFrame:
     """readStream → per-user stateful sessionization. Closed sessions are
-    appended; the open tail session stays in state. ``use_timeout=True``
-    flushes idle tails via processing-time timeouts — only for genuinely
-    continuous streams: with a finite input the pending timeouts keep the
-    micro-batch engine spinning, so the default (NoTimeout) leaves tails in
-    state and tests account for them.
+    appended; the open tail session stays in state (no timeout: with a
+    finite input, pending processing-time timeouts would keep the
+    micro-batch engine spinning), and tests account for it.
 
     In-order-input assumption: within a micro-batch events are sorted by
     (ts, event_id) — the batch twin's exact tiebreak — but events that arrive
@@ -180,10 +156,6 @@ def sessionize_stream(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     stream = reader.parquet(events_dir).withColumn("ts", F.col("ts").cast("timestamp"))
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout if use_timeout
-        else GroupStateTimeout.NoTimeout
-    )
     return (
         stream.select("user_id", "ts", "event_id", "value")
         .groupBy("user_id")
@@ -192,7 +164,7 @@ def sessionize_stream(
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 

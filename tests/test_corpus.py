@@ -431,6 +431,38 @@ def test_resume_after_level_record_skips_committed_level(
     assert _labels(res) == want and res.modularity == q
 
 
+def test_resumed_level_releases_its_state(spark, tmp_path, monkeypatch):
+    """A resume into level 1 on the SQL tier (session partitions 16)
+    releases the resumed level's state once the run has unwound it: the
+    resume adds exactly one loop-owned checkpoint, the one behind the labels
+    it returns, and ends at the uninterrupted run's labels and Q."""
+    from graftlouvain.functions.iterate import _STATE_RDD
+
+    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
+    jsc = spark.sparkContext._jsc
+
+    def states():
+        return {i for i, r in jsc.getPersistentRDDs().items() if r.name() == _STATE_RDD}
+
+    key = "spark.sql.shuffle.partitions"
+    found = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
+        ck = CheckpointManager(str(tmp_path / "ck"))
+        want = louvain(g, checkpointer=ck)
+        _cut_after(ck, lambda r: r["kind"] == "superstep"
+                   and (r["level"], r["superstep"]) == (1, 0))
+        before = states()
+        res = louvain(g, checkpointer=ck, resume=True)
+        gained = states() - before
+    finally:
+        spark.conf.set(key, found)
+    assert [s.level for s in res.levels][:1] == [1]
+    assert gained == {res.assignments._jdf.queryExecution().analyzed().rdd().id()}
+    assert _labels(res) == _labels(want) and res.modularity == want.modularity
+
+
 @pytest.mark.parametrize("tier", ["spark", "local"])
 def test_resume_of_finished_run_runs_no_level(spark, tmp_path, monkeypatch, tier):
     """Resuming a run that had finished runs no level and appends no record:

@@ -380,21 +380,6 @@ def test_salted_level_labels_identical(spark, monkeypatch):
         assert stats.supersteps == steps, gate_mode
 
 
-def test_level_preserves_non_graph_ids(spark):
-    """Caller-supplied assignment rows whose id has no edge in the graph pass
-    through a level unchanged (they can never be scored)."""
-    from pyspark.sql import functions as F
-
-    g = LinkGraph.from_edges(to_df(spark, FIXTURE_W5))
-    asg = singleton_assignments(g).unionByName(
-        spark.createDataFrame([(999, 7)], "id long, community long")
-    )
-    out, _ = louvain_level(g, assignments=asg)
-    labels = _labels(out)
-    assert labels[999] == 7
-    assert set(labels) == set(_labels(asg))
-
-
 def test_random_graphs_match_oracle(spark, monkeypatch):
     """Property sweep: 6 seeded random weighted graphs (Erdős–Rényi-ish,
     12-24 vertices, integer weights 1-5, self-loops allowed) — FULL

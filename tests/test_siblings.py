@@ -85,15 +85,17 @@ def test_pagerank_matches_oracle(spark, edges, monkeypatch):
     _assert_tiers_agree(runs)
 
 
-def test_personalized_pagerank_matches_python(spark, monkeypatch):
+@pytest.mark.parametrize("alpha", [0.85, 1.0])
+def test_personalized_pagerank_matches_python(spark, monkeypatch, alpha):
     """PPR (random walk with restart, seed-restricted teleport) vs a direct
     Python power iteration on karate, on both tiers; seeds outside the graph
-    are ignored in the normalizer."""
+    are ignored in the normalizer. At α = 1 there is no teleport, and the
+    walk still starts uniform on the seeds."""
     edges = FIXTURE_KARATE_W
     g = LinkGraph.from_edges(to_df(spark, edges))
     seeds = [0, 33, 999]  # 999 is not a vertex — must not affect mass
     seed_df = spark.createDataFrame([(s,) for s in seeds], "id long")
-    runs = _pagerank_tiers(monkeypatch, g, alpha=0.85, n_iter=10, seeds=seed_df)
+    runs = _pagerank_tiers(monkeypatch, g, alpha=alpha, n_iter=10, seeds=seed_df)
     # python twin
     nbrs, w = {}, {}
     for a, b, wt in edges:
@@ -111,7 +113,7 @@ def test_personalized_pagerank_matches_python(spark, monkeypatch):
         for (a, b), wt in w.items():
             mass[b] += rank[a] * wt / out_w[a]
         rank = {
-            v: (0.15 / len(s_eff) if v in s_eff else 0.0) + 0.85 * mass[v]
+            v: ((1.0 - alpha) / len(s_eff) if v in s_eff else 0.0) + alpha * mass[v]
             for v in vs
         }
     for tier, (got, n) in runs.items():

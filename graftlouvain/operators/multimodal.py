@@ -124,45 +124,3 @@ def decode_features(media: DataFrame, fake: bool = False, n_features: int = 8) -
             )
 
     return media.mapInPandas(extract, schema=FEATURE_SCHEMA)
-
-
-def resize_ppm(blob: bytes, out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbor resize of a P6 blob → new P6 blob (pure numpy) — the
-    decode→transform→re-encode step of an image-preprocessing pipeline."""
-    px = _decode_ppm(blob)
-    h, w = px.shape[:2]
-    ri = (np.arange(out_h) * h) // out_h
-    ci = (np.arange(out_w) * w) // out_w
-    out = (px[np.ix_(ri, ci)] * 255.0).round().astype(np.uint8)
-    return ppm_encode(out_w, out_h, out)
-
-
-def resize_media(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
-    """[media_id, kind, blob, meta] with every P6 blob resized to
-    (out_w, out_h) — same Arrow mapInPandas plumbing as decode_features, so
-    the resized table can feed decode_features(fake=False) directly."""
-
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["blob"] = pdf["blob"].map(
-                lambda b: resize_ppm(bytes(b), out_w, out_h)
-            )
-            yield out
-
-    return media.mapInPandas(rs, schema=media.schema)
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: explodes per-media frame indices from
-    metadata (``meta['n_frames']``) without decoding — the shuffle-shaping step
-    that precedes a real decoder. Frames are sampled every ``every_n``."""
-    n_frames = F.coalesce(
-        F.element_at(F.col("meta"), "n_frames").cast("int"), F.lit(1)
-    )
-    return media.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )

@@ -173,7 +173,6 @@ def lsh_topk(
 def ivf_cells(
     vectors: DataFrame,
     n_centroids: int = 64,
-    refine_iters: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned) — IVF coarse quantizer with deterministic
     centroid init: the ``n_centroids`` corpus vectors with the smallest
@@ -181,16 +180,7 @@ def ivf_cells(
     ``centroids`` = [cell, cv]; ``assigned`` = [vec_id, v, cell] with
     cell = argmax cosine against the (broadcast) centroid table. Assignment
     cost is N × C rows — the standard IVF build; C is small, so the join is
-    a broadcast with no corpus shuffle.
-
-    ``refine_iters`` runs that many spherical-k-means Lloyd passes after
-    init (assign → per-cell element-wise mean → L2-normalize; Dhillon &
-    Modha 2001): tighter cells cut the probes needed for a given recall.
-    Each pass is one posexplode + two aggregations over N·dim rows — linear,
-    no pairwise work. Refined centroid means depend on float summation
-    order, so the refined build is pytest-recall-verified rather than
-    SQL-hash-oracled (the ``ivf_topk`` driver query stays on the
-    deterministic md5 init)."""
+    a broadcast with no corpus shuffle."""
     base = vectors.select("vec_id", _embedding().alias("v"))
     pick = base.select(
         "vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("_h")
@@ -199,43 +189,13 @@ def ivf_cells(
         F.col("vec_id").alias("cell"), F.col("v").alias("cv")
     )
 
-    def assign(cent: DataFrame) -> DataFrame:
-        scored = base.crossJoin(F.broadcast(cent)).withColumn(
-            "sim", _cosine6(F.col("v"), F.col("cv"))
-        )
-        return scored.groupBy("vec_id").agg(
-            F.max_by(
-                "cell", F.struct(F.col("sim"), (-F.col("cell")).alias("neg"))
-            ).alias("cell"),
-            F.first("v").alias("v"),
-        )
-
-    assigned = assign(centroids)
-    for _ in range(refine_iters):
-        means = (
-            assigned.select("cell", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm")
-            )
-            .select("cell", F.transform("pm", lambda s: s["m"]).alias("cv"))
-        )
-        # spherical k-means: normalize so the cosine argmax is the mean's
-        # direction; empty cells simply drop out (standard Lloyd behavior).
-        # Each pass MATERIALIZES its centroids (localCheckpoint + truthful
-        # stats — the iterative-chain hygiene of BENCH/BASELINE.md §8):
-        # without it the Lloyd chain's lineage and planner statistics grow
-        # per pass and deep refinements melt the optimizer.
-        from graftlouvain.functions.iterate import materialize
-
-        centroids = materialize(
-            means.select(
-                "cell", F.transform("cv", lambda x: x / _norm(F.col("cv"))).alias("cv")
-            )
-        )
-        assigned = assign(centroids)
+    scored = base.crossJoin(F.broadcast(centroids)).withColumn(
+        "sim", _cosine6(F.col("v"), F.col("cv"))
+    )
+    assigned = scored.groupBy("vec_id").agg(
+        F.max_by("cell", F.struct(F.col("sim"), (-F.col("cell")).alias("neg"))).alias("cell"),
+        F.first("v").alias("v"),
+    )
     return centroids, assigned
 
 
@@ -245,7 +205,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 64,
     n_probe: int = 8,
-    refine_iters: int = 0,
 ) -> DataFrame:
     """IVF approximate top-k: corpus partitioned into Voronoi cells of
     deterministic centroids; each query probes its ``n_probe`` nearest cells
@@ -253,7 +212,7 @@ def ivf_topk(
     as :func:`cosine_topk`. Complements :func:`lsh_topk` — IVF gives tunable
     probe/recall and cell-local data locality (cells are the natural
     partitioning key for a 100 TB corpus)."""
-    centroids, assigned = ivf_cells(corpus, n_centroids, refine_iters=refine_iters)
+    centroids, assigned = ivf_cells(corpus, n_centroids)
     qv = queries.select(F.col("vec_id").alias("query_id"), _embedding().alias("qv"))
     qcells = (
         qv.crossJoin(F.broadcast(centroids))

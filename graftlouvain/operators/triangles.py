@@ -18,7 +18,7 @@ in chunks of at most ``LOCAL_MAX_EDGES``, so driver memory is O(E + chunk)
 whatever the wedge count. Measured on local[4] (4-vCPU box):
 ``triangles_per_vertex`` on the ~35k-edge ``graph_suite`` graphs 0.19-0.28 s
 vs 1.39-2.04 s in SQL, and on K₁₀₂₄ (1,047,552 edges, 178M oriented wedges)
-9.2 s vs 24.2 s, digest included. :func:`triangle_list` stays on SQL.
+9.2 s vs 24.2 s, digest included.
 """
 
 from __future__ import annotations
@@ -73,45 +73,6 @@ def _oriented_with_adjacency(graph: LinkGraph):
     return edges_lo, hi_n
 
 
-def triangle_list(graph: LinkGraph) -> DataFrame:
-    """Returns each triangle once as [a, b, c] (orientation order).
-
-    r6 rewrite (guide §1.2 step 1 — fix the distributed algorithm before the
-    constants): triangles are enumerated by ADJACENCY-ARRAY INTERSECTION
-    instead of the wedge join.  The r5 wedge plan generated every oriented
-    wedge as a ROW — on the ~91 %-dense sf0.1 supplier graph ~1.6e9 rows
-    streamed through two joins and a semi-join probe, and that row machinery
-    (copy, hash, probe per wedge) was the entire 17-24 s cost; the work is
-    unavoidable in wedge COUNT but not in per-wedge row overhead.  Here each
-    oriented edge (a, b) instead carries the sorted oriented-adjacency
-    arrays of its endpoints, and ``array_intersect`` emits exactly the
-    closing vertices c: per edge one O(deg⁺(a) + deg⁺(b)) JVM hash-set
-    intersection, total Σ(deg⁺) over edges = the SAME wedge-count work, but
-    as tight array loops with only the true triangles (124.5M here, not
-    1.6e9 wedges) ever becoming rows.  Triple identity: a triangle with
-    orientation order v₁→v₂→v₃ is found exactly once, at edge (v₁, v₂) with
-    c = v₃ ∈ N⁺(v₁) ∩ N⁺(v₂) — the identical (a, b, c) the wedge
-    formulation emitted (digest-equal, pinned by test).  Vertices with no
-    outgoing oriented edge have no adjacency row; the inner join drops
-    their (·, hi) edges, which lose nothing — a triangle at base (a, b)
-    needs c ∈ N⁺(b), so an empty N⁺(b) contributes no triangles.
-
-    Scale shape: when the adjacency table's stamped size fits the broadcast
-    threshold both attaches are broadcasts and the edge list never shuffles;
-    past it they become shuffle joins moving O(E) rows — the arrays are
-    attached in the probe projection, not carried through an exchange."""
-    edges_lo, hi_n = _oriented_with_adjacency(graph)
-    return (
-        edges_lo.join(hi_n, "hi")
-        .select(
-            F.col("lo").alias("a"),
-            F.col("hi").alias("b"),
-            F.explode(F.array_intersect("_n_lo", "_n_hi")).alias("c"),
-        )
-        .select("a", "b", "c")
-    )
-
-
 def _local_triangles(ids, s, d, w, chunk: int = LOCAL_MAX_EDGES) -> np.ndarray:
     """Per-vertex triangle counts (``int64``, aligned with ``ids``) of the
     compacted edge arrays of :meth:`LinkGraph.local_edges`. ``w`` is
@@ -156,25 +117,32 @@ def _local_triangles(ids, s, d, w, chunk: int = LOCAL_MAX_EDGES) -> np.ndarray:
     return counts
 
 
-def triangle_count(graph: LinkGraph) -> int:
-    local = graph.local_edges()
-    if local is not None:
-        return int(_local_triangles(*local).sum()) // 3
-    return triangle_list(graph).count()
-
-
 def triangles_per_vertex(graph: LinkGraph) -> DataFrame:
     """Returns [id, triangles] — every vertex of every triangle credited once
     per triangle; vertices in no triangle get 0.
 
-    Fused credit pass over the intersection form (see :func:`triangle_list`):
-    for each oriented edge (a, b) with closing set C = N⁺(a) ∩ N⁺(b), the
+    Triangles are found by ADJACENCY-ARRAY INTERSECTION, never as wedge
+    rows: on the ~91 %-dense sf0.1 supplier graph a wedge join streams
+    ~1.6e9 rows through two joins and a semi-join probe, and that per-row
+    overhead measured as its entire 17-24 s cost. Each oriented edge (a, b)
+    carries the sorted oriented-adjacency arrays of its endpoints, and
+    ``array_intersect`` yields exactly the closing vertices
+    C = N⁺(a) ∩ N⁺(b): per edge one O(deg⁺(a) + deg⁺(b)) hash-set
+    intersection, the same total work as the wedge count, with no wedge
+    ever a row. A triangle with orientation order v₁→v₂→v₃ is found exactly
+    once, at edge (v₁, v₂) with c = v₃. A vertex with no outgoing oriented
+    edge has no adjacency row, and the inner join drops its (·, hi) edges
+    without loss: a triangle at base (a, b) needs c ∈ N⁺(b).
+
+    Fused credit pass: for each oriented edge (a, b) with closing set C, the
     endpoints a and b are credited |C| with ONE row each and only the top
     corners c ∈ C are exploded — 2·E + T credit rows instead of the 3·T rows
     of exploding whole triples (T = 124.5M at sf0.1, so the explode volume
     drops ~3×); partial aggregation collapses them map-side before the V-row
-    shuffle. Counts are identical: each triangle credits each of its three
-    corners exactly once, exactly as before (digest-pinned).
+    shuffle. Each triangle credits each of its three corners exactly once.
+    While the adjacency table's stamped size fits the broadcast threshold
+    both attaches are broadcasts and the edge list never shuffles; past it
+    they become shuffle joins moving O(E) rows.
 
     A graph with at most ``graph.LOCAL_MAX_EDGES`` directed edges is counted
     by :func:`_local_triangles` instead (module docstring)."""

@@ -24,15 +24,22 @@ the O(V·walks) frontier against it — no shuffle of the edge table beyond its
 resident partitioning, no UDF, frontier size constant in walk length. The
 walk length unrolls into the plan (length is small and fixed in practice:
 DeepWalk uses 40, driver-gate tests use 4), with the output accumulated as
-one union of per-step frames.
+one union of per-step frames. All three walks run the one hop loop
+:func:`_walk`, which pins the neighbor index and every hop's frontier until
+that union is pinned, then releases them: a call leaves only its output
+pinned.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graftlouvain.functions.iterate import materialize, state_partitions, superstep_planning
+from graftlouvain.functions.iterate import (
+    _release, materialize, state_partitions, superstep_planning, swap,
+)
 from graftlouvain.operators.graph import LinkGraph
 
 
@@ -44,26 +51,60 @@ def _start_walks(walks_per_vertex: int) -> "F.Column":
     ])).alias("walk_id")
 
 
-def _visits(state: DataFrame, step: int) -> DataFrame:
-    """[walk_id, step, vertex]: where each walk of ``state`` stands."""
-    return state.select("walk_id", F.lit(step).alias("step"), F.col("cur").alias("vertex"))
-
-
-def _union_frames(frames: list) -> DataFrame:
-    """Union the per-step output frames and pin the result with
-    ``materialize`` (each frame is a projection of its step's already-
-    checkpointed state, so the union is one cheap pass; the intermediate
-    step checkpoints become garbage once this result exists)."""
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return materialize(out)
-
-
 def _choice_hash(tag: "F.Column") -> "F.Column":
     """60-bit nonnegative integer from md5(tag) — first 15 hex chars, the
     cross-engine-exact parse (dedup._md5_pair convention)."""
     return F.conv(F.substring(F.md5(tag), 1, 15), 16, 10).cast("long")
+
+
+def _hop_tag(kind: str, seed: int, t: int, col: str) -> "F.Column":
+    """``kind:seed:walk_id:t:<col>`` — the md5 input of hop ``t``'s choice."""
+    return F.concat_ws(
+        ":", F.lit(f"{kind}:{seed}"), F.col("walk_id").cast("string"),
+        F.lit(str(t)), F.col(col).cast("string"),
+    )
+
+
+def _walk(
+    graph: LinkGraph,
+    walks_per_vertex: int,
+    length: int,
+    index: DataFrame,
+    start: Callable[[DataFrame, DataFrame], DataFrame],
+    hop: Callable[[DataFrame, DataFrame, int], DataFrame],
+) -> DataFrame:
+    """[walk_id, step, vertex]: the hop loop of every walk operator. It pins
+    the neighbor ``index``; ``start(walks, nbrs)`` turns the [walk_id, cur]
+    start rows into the step-0 frontier, and ``hop(state, nbrs, t)`` maps
+    step t−1's frontier to step t's. Each hop's frontier is pinned, the
+    per-step [walk_id, step, vertex] frames are unioned into the one
+    materialized output, and then the index and every frontier are released
+    (also when a step or the zero-weight guard raises).
+
+    Not :func:`fixpoint`: it releases each superseded state, but the union
+    reads every frontier, and a fixed-length walk has no stop rule."""
+    spark = graph.edges.sparkSession
+    rows = graph.stats.num_vertices * walks_per_vertex
+
+    def visits(state: DataFrame, t: int) -> DataFrame:
+        return state.select("walk_id", F.lit(t).alias("step"), F.col("cur").alias("vertex"))
+
+    pinned: list[DataFrame] = []
+    with superstep_planning(spark, state_partitions(spark, rows)):
+        try:
+            nbrs = swap(None, index)
+            pinned.append(nbrs)
+            walks = graph.vertices.select(_start_walks(walks_per_vertex), F.col("id").alias("cur"))
+            state = start(walks, nbrs)
+            out = visits(state, 0)
+            for t in range(1, length + 1):
+                state = swap(None, hop(state, nbrs, t))
+                pinned.append(state)
+                out = out.unionByName(visits(state, t))
+            return materialize(out)
+        finally:
+            for df in pinned:
+                _release(df)
 
 
 def indexed_neighbors(graph: LinkGraph) -> DataFrame:
@@ -100,38 +141,25 @@ def random_walks(
     walk length; and a mere per-step ``cache()`` fixes the recompute but NOT
     the lineage/statistics growth, which melts the driver in plan
     optimization by L≈16 (the iterate.py statistics-snowball landmine). The
-    neighbor index is checkpointed once and shared by every hop. The loop
-    runs in one :func:`superstep_planning` scope sized for its
+    neighbor index is checkpointed once and shared by every hop. The index
+    and every frontier are released once the output is pinned. The loop runs
+    in one :func:`superstep_planning` scope sized for its
     V·``walks_per_vertex``-row frontier (AQE off, row-proportional shuffle
     partitions), as every fixpoint operator's does."""
-    spark = graph.edges.sparkSession
-    rows = graph.stats.num_vertices * walks_per_vertex
-    with superstep_planning(spark, state_partitions(spark, rows)):
-        nbrs = materialize(indexed_neighbors(graph))
-        deg = graph.degrees.select(
-            F.col("id").alias("cur"), F.col("out_degree").alias("cur_deg")
-        )
-        state = graph.vertices.select(
-            _start_walks(walks_per_vertex), F.col("id").alias("cur")
-        ).join(deg, "cur")
-        frames = [_visits(state, 0)]
-        for t in range(1, length + 1):
-            tag = F.concat_ws(
-                ":",
-                F.lit(f"walk:{seed}"),
-                F.col("walk_id").cast("string"),
-                F.lit(str(t)),
-                F.col("cur").cast("string"),
-            )
-            choice = (_choice_hash(tag) % F.col("cur_deg")).alias("idx")
-            hop = state.select("walk_id", F.col("cur").alias("src"), choice).join(
-                nbrs, ["src", "idx"]
-            )
-            state = materialize(hop.select(
-                "walk_id", F.col("dst").alias("cur"), F.col("dst_deg").alias("cur_deg")
-            ))
-            frames.append(_visits(state, t))
-        return _union_frames(frames)
+    deg = graph.degrees.select(
+        F.col("id").alias("cur"), F.col("out_degree").alias("cur_deg")
+    )
+
+    def hop(state: DataFrame, nbrs: DataFrame, t: int) -> DataFrame:
+        choice = _choice_hash(_hop_tag("walk", seed, t, "cur")) % F.col("cur_deg")
+        return state.select("walk_id", F.col("cur").alias("src"), choice.alias("idx")).join(
+            nbrs, ["src", "idx"]
+        ).select("walk_id", F.col("dst").alias("cur"), F.col("dst_deg").alias("cur_deg"))
+
+    return _walk(
+        graph, walks_per_vertex, length, indexed_neighbors(graph),
+        lambda walks, _nbrs: walks.join(deg, "cur"), hop,
+    )
 
 
 def _require_positive_totw(totals: DataFrame, totw_col: str, op: str) -> None:
@@ -192,37 +220,25 @@ def weighted_random_walks(
     (:func:`_require_positive_totw`). Same per-step materialization and
     planning scope as :func:`random_walks` (see its docstring for why a lazy
     chain is quadratic and a cache-only chain melts the planner)."""
-    spark = graph.edges.sparkSession
-    rows = graph.stats.num_vertices * walks_per_vertex
-    with superstep_planning(spark, state_partitions(spark, rows)):
-        nbrs = materialize(indexed_neighbors_weighted(graph, scale))
+    def start(walks: DataFrame, nbrs: DataFrame) -> DataFrame:
         tot = nbrs.groupBy("src").agg(F.max("hi").alias("totw")).select(
             F.col("src").alias("cur"), F.col("totw").alias("cur_totw")
         )
         _require_positive_totw(tot, "cur_totw", "weighted_random_walks")
-        state = graph.vertices.select(
-            _start_walks(walks_per_vertex), F.col("id").alias("cur")
-        ).join(tot, "cur")
-        frames = [_visits(state, 0)]
-        for t in range(1, length + 1):
-            tag = F.concat_ws(
-                ":",
-                F.lit(f"wwalk:{seed}"),
-                F.col("walk_id").cast("string"),
-                F.lit(str(t)),
-                F.col("cur").cast("string"),
-            )
-            x = (_choice_hash(tag) % F.col("cur_totw")).alias("x")
-            hop = (
-                state.select("walk_id", F.col("cur").alias("src"), x)
-                .join(nbrs, "src")
-                .where((F.col("x") >= F.col("lo")) & (F.col("x") < F.col("hi")))
-            )
-            state = materialize(hop.select(
-                "walk_id", F.col("dst").alias("cur"), F.col("dst_totw").alias("cur_totw")
-            ))
-            frames.append(_visits(state, t))
-        return _union_frames(frames)
+        return walks.join(tot, "cur")
+
+    def hop(state: DataFrame, nbrs: DataFrame, t: int) -> DataFrame:
+        x = _choice_hash(_hop_tag("wwalk", seed, t, "cur")) % F.col("cur_totw")
+        return (
+            state.select("walk_id", F.col("cur").alias("src"), x.alias("x"))
+            .join(nbrs, "src")
+            .where((F.col("x") >= F.col("lo")) & (F.col("x") < F.col("hi")))
+            .select("walk_id", F.col("dst").alias("cur"), F.col("dst_totw").alias("cur_totw"))
+        )
+
+    return _walk(
+        graph, walks_per_vertex, length, indexed_neighbors_weighted(graph, scale), start, hop
+    )
 
 
 def node2vec_walks(
@@ -263,12 +279,15 @@ def node2vec_walks(
     materialization and planning scope as :func:`random_walks`. Callers with
     sub-unit FLOAT weights must raise ``scale`` — a vertex whose every edge
     quantizes to 0 raises up front (:func:`_require_positive_totw`)."""
-    spark = graph.edges.sparkSession
-    rows = graph.stats.num_vertices * walks_per_vertex
-    with superstep_planning(spark, state_partitions(spark, rows)):
-        nbrs = materialize(indexed_neighbors_weighted(graph, scale).select(
-            "src", "dst", (F.col("hi") - F.col("lo")).alias("wq")
-        ))
+    eset = graph.edges.select(
+        F.col("src").alias("_ep"), F.col("dst").alias("_ed"), F.lit(1).alias("_near")
+    )
+    w_cum = Window.partitionBy("walk_id").orderBy("dst").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    w_all = Window.partitionBy("walk_id")
+
+    def start(walks: DataFrame, nbrs: DataFrame) -> DataFrame:
         # biases are >= 1, so the per-step modulus Σ(wq·bias) is 0 iff the
         # vertex's raw quantized total is 0 — one up-front check covers all
         # steps
@@ -277,57 +296,39 @@ def node2vec_walks(
             "totw",
             "node2vec_walks",
         )
-        eset = graph.edges.select(
-            F.col("src").alias("_ep"), F.col("dst").alias("_ed"), F.lit(1).alias("_near")
+        return walks.select("walk_id", F.col("cur").alias("prev"), "cur")
+
+    def hop(state: DataFrame, nbrs: DataFrame, t: int) -> DataFrame:
+        cands = (
+            state.select("walk_id", "prev", F.col("cur").alias("src"))
+            .join(nbrs, "src")
+            .join(
+                eset,
+                (F.col("prev") == F.col("_ep")) & (F.col("dst") == F.col("_ed")),
+                "left",
+            )
         )
-        state = graph.vertices.select(
-            _start_walks(walks_per_vertex),
-            F.col("id").alias("prev"),
-            F.col("id").alias("cur"),
+        m = (
+            F.when(F.col("dst") == F.col("prev"), F.lit(bias_return))
+            .when(F.col("_near").isNotNull(), F.lit(bias_near))
+            .otherwise(F.lit(bias_far))
         )
-        frames = [_visits(state, 0)]
-        w_cum = Window.partitionBy("walk_id").orderBy("dst").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
+        scored = cands.select(
+            "walk_id", "prev", "src", "dst", (F.col("wq") * m).alias("ew")
         )
-        w_all = Window.partitionBy("walk_id")
-        for t in range(1, length + 1):
-            cands = (
-                state.select("walk_id", "prev", F.col("cur").alias("src"))
-                .join(nbrs, "src")
-                .join(
-                    eset,
-                    (F.col("prev") == F.col("_ep")) & (F.col("dst") == F.col("_ed")),
-                    "left",
-                )
-            )
-            m = (
-                F.when(F.col("dst") == F.col("prev"), F.lit(bias_return))
-                .when(F.col("_near").isNotNull(), F.lit(bias_near))
-                .otherwise(F.lit(bias_far))
-            )
-            scored = cands.select(
-                "walk_id", "prev", "src", "dst", (F.col("wq") * m).alias("ew")
-            )
-            tag = F.concat_ws(
-                ":",
-                F.lit(f"n2v:{seed}"),
-                F.col("walk_id").cast("string"),
-                F.lit(str(t)),
-                F.col("src").cast("string"),
-            )
-            ranged = scored.select(
-                "walk_id", "src", "dst", "ew",
-                F.sum("ew").over(w_cum).alias("chi"),
-                F.sum("ew").over(w_all).alias("tot"),
-            ).withColumn("x", _choice_hash(tag) % F.col("tot"))
-            state = materialize(
-                ranged.where(
-                    (F.col("x") >= F.col("chi") - F.col("ew")) & (F.col("x") < F.col("chi"))
-                )
-                .select("walk_id", F.col("src").alias("prev"), F.col("dst").alias("cur"))
-            )
-            frames.append(_visits(state, t))
-        return _union_frames(frames)
+        ranged = scored.select(
+            "walk_id", "src", "dst", "ew",
+            F.sum("ew").over(w_cum).alias("chi"),
+            F.sum("ew").over(w_all).alias("tot"),
+        ).withColumn("x", _choice_hash(_hop_tag("n2v", seed, t, "src")) % F.col("tot"))
+        return ranged.where(
+            (F.col("x") >= F.col("chi") - F.col("ew")) & (F.col("x") < F.col("chi"))
+        ).select("walk_id", F.col("src").alias("prev"), F.col("dst").alias("cur"))
+
+    index = indexed_neighbors_weighted(graph, scale).select(
+        "src", "dst", (F.col("hi") - F.col("lo")).alias("wq")
+    )
+    return _walk(graph, walks_per_vertex, length, index, start, hop)
 
 
 def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:

@@ -575,20 +575,6 @@ def test_level_releases_superstep_views(spark, monkeypatch):
     assert _edges_cached(spark, g)
 
 
-def test_sql_louvain_releases_level_states(spark, monkeypatch):
-    """Each SQL level's final state is released once the run has unwound it:
-    a run adds exactly one persistent RDD, the checkpoint of the assignments
-    it returns."""
-    monkeypatch.setattr(graph_mod, "LOCAL_MAX_EDGES", -1)
-    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
-    rdds = spark.sparkContext._jsc.getPersistentRDDs
-    before = set(rdds().keys())
-    res = louvain(g)
-    assert len(res.levels) >= 2
-    checkpoint = res.assignments._jdf.queryExecution().analyzed()
-    assert set(rdds().keys()) - before == {checkpoint.rdd().id()}
-
-
 def test_concurrent_levels_share_session(spark):
     """Two levels running at once on one SparkSession each return the labels
     of their serial run: superstep view names are unique per run."""

@@ -324,22 +324,6 @@ def test_feature_smooth_carry_and_negative_cross_engine(spark):
     assert {(d, p): x for d, p, x in twin} == got
 
 
-def test_feature_smooth_keeps_one_checkpoint(spark):
-    """Each round releases the round before it: a 3-round call on karate
-    adds exactly one persistent RDD, the checkpoint the result reads."""
-    from graftlouvain.operators.features import feature_smooth
-
-    g = LinkGraph.from_edges(to_df(spark, FIXTURE_KARATE_W))
-    feats = spark.createDataFrame(
-        [(v, [v, 2 * v, 3 * v]) for v in range(34)], "id long, q array<long>"
-    )
-    rdds = spark.sparkContext._jsc.getPersistentRDDs
-    before = set(rdds().keys())
-    out = feature_smooth(g, feats, rounds=3)
-    checkpoint = out._jdf.queryExecution().analyzed().child()  # under the select
-    assert set(rdds().keys()) - before == {checkpoint.rdd().id()}
-
-
 def test_weighted_walk_zero_weight_guard(spark):
     """A vertex whose every edge quantizes to weight 0 raises up front with
     the raise-`scale` guidance (instead of silently dropping walks), and

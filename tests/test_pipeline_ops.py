@@ -13,7 +13,7 @@ from graftlouvain.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
-from graftlouvain.operators.multimodal import decode_features, frame_sample_plan, media_from_docs
+from graftlouvain.operators.multimodal import decode_features, media_from_docs
 from graftlouvain.operators.similarity import (
     cosine_topk,
     embedding_near_dup_pairs,
@@ -259,33 +259,6 @@ def test_ppm_decode_real_path(spark):
         _decode_ppm(ppm_encode(4, 4, np.zeros((4, 4, 3)))[:-5])
 
 
-def test_ppm_resize_roundtrip(spark):
-    """resize_media: P6 → nearest-neighbor (2×2) → still-valid P6 that the
-    real decoder accepts, with the resized dims in its features."""
-    from graftlouvain.operators.multimodal import resize_media
-
-    media = _ppm_media(spark)
-    small = resize_media(media, out_w=2, out_h=2)
-    rows = {r["media_id"]: r for r in decode_features(small, fake=False).collect()}
-    assert all(r["features"][0] == 2.0 and r["features"][1] == 2.0 for r in rows.values())
-    # constant-color image survives resize exactly
-    import numpy as np
-    from graftlouvain.operators.multimodal import _decode_ppm, resize_ppm
-    const = np.full((5, 7, 3), 128, dtype=np.uint8)
-    from graftlouvain.operators.multimodal import ppm_encode
-    out = _decode_ppm(resize_ppm(ppm_encode(7, 5, const), 3, 3))
-    assert np.allclose(out, 128 / 255.0)
-
-
-def test_frame_sample_plan(spark):
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(b"xx"), {"n_frames": "25"})],
-        "media_id long, kind string, blob binary, meta map<string,string>",
-    )
-    frames = [r["frame_idx"] for r in frame_sample_plan(media, every_n=10).collect()]
-    assert sorted(frames) == [0, 10, 20]
-
-
 def test_hash_sample_deterministic(spark):
     """md5-bucket sampling must be identical across evaluations and
     partition layouts (unlike F.rand)."""
@@ -318,28 +291,6 @@ def test_whitespace_class_cross_engine(spark):
         r" '[^ \t\n\x0B\f\r]+'))"
     ).fetchone()[0]
     assert got == want == 3  # \x0B splits in BOTH engines (bare \S+ gives 2 in RE2)
-
-
-def test_ivf_kmeans_refinement(spark, vectors):
-    """Spherical-k-means refinement keeps the IVF structure sound: recall vs
-    brute force stays high, the same top-k schema comes back, and every
-    corpus vector stays assigned to exactly one cell."""
-    from graftlouvain.operators.similarity import cosine_topk, ivf_cells, ivf_topk
-
-    exact = {
-        (r["query_id"], r["vec_id"])
-        for r in cosine_topk(vectors.where("vec_id < 3"), vectors, k=4).collect()
-    }
-    approx = ivf_topk(
-        vectors.where("vec_id < 3"), vectors, k=4,
-        n_centroids=16, n_probe=8, refine_iters=2,
-    )
-    got = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
-    assert len(exact & got) / len(exact) >= 0.75
-    _cent, assigned = ivf_cells(vectors, n_centroids=16, refine_iters=2)
-    rows = assigned.collect()
-    assert len(rows) == vectors.count()  # partition of the corpus
-    assert len({r["vec_id"] for r in rows}) == len(rows)
 
 
 def test_approx_quantiles_tolerance(spark):
